@@ -66,6 +66,28 @@ def _add_common(p: argparse.ArgumentParser) -> None:
     p.add_argument("--shuffle-partitions", type=int, default=None)
 
 
+def _parquet_rows(spark, path: str) -> int:
+    """Row count of a just-written export from the parquet FOOTERS -
+    metadata-only reads, not a second full scan of the output. Local
+    paths only; URI-scheme outputs (hdfs://, s3a://, file:/), and plain
+    paths the local glob cannot see (a non-local ``fs.defaultFS``
+    resolves them on the cluster filesystem), fall back to a Spark count
+    so a remote export never reports rows: 0 just because pathlib can't
+    see it."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    local = (
+        []
+        if "://" in path or path.startswith("file:")
+        else list(Path(path).glob("*.parquet"))
+    )
+    if not local:
+        return spark.read.parquet(path).count()
+    return sum(pq.ParquetFile(str(f)).metadata.num_rows for f in local)
+
+
 def main(argv: list[str] | None = None) -> int:
     parser = argparse.ArgumentParser(prog="dataingestion_spark")
     sub = parser.add_subparsers(dest="cmd", required=True)
@@ -544,23 +566,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--num-buckets", type=int, default=32)
     p.add_argument("--write-mode", default="cow", choices=["cow", "mor"])
 
-    def _parquet_rows(path: str) -> int:
-        """Row count of a just-written export from the parquet FOOTERS -
-        metadata-only reads, not a second full scan of the output. Local
-        paths only; URI-scheme outputs (hdfs://, s3a://, file:/) fall
-        back to a Spark metadata count so a remote export never reports
-        rows: 0 just because pathlib can't see it."""
-        from pathlib import Path as _P
-
-        import pyarrow.parquet as pq
-
-        if "://" in path or path.startswith("file:"):
-            return spark.read.parquet(path).count()
-        return sum(
-            pq.ParquetFile(str(f)).metadata.num_rows
-            for f in _P(path).glob("*.parquet")
-        )
-
     a = parser.parse_args(argv)
     spark = build_session(
         app_name=f"cdc-{a.cmd}",
@@ -932,7 +937,7 @@ def main(argv: list[str] | None = None) -> int:
             )
         if a.output:
             df.write.mode("overwrite").parquet(a.output)
-            n = _parquet_rows(a.output)
+            n = _parquet_rows(spark, a.output)
             print(json.dumps({"rows": n, "output": a.output}))
         else:
             for line in df.toJSON().take(a.limit):
@@ -952,7 +957,7 @@ def main(argv: list[str] | None = None) -> int:
             )
         if a.output:
             df.write.mode("overwrite").parquet(a.output)
-            n = _parquet_rows(a.output)
+            n = _parquet_rows(spark, a.output)
             print(json.dumps({"rows": n, "output": a.output}))
         else:
             for line in df.toJSON().take(a.limit):

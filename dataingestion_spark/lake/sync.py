@@ -16,9 +16,15 @@ re-reads the same version range and is skipped whole; a crash before it
 replays the same diff (the diff is a pure function of two immutable
 snapshots, so the retry is byte-identical).
 
-Scale shape: each hop costs one `read_changes` (bucket-pruned to the
-source manifests that changed since the last sync, never a table scan)
-plus one ordinary MERGE of the net diff. Because the diff is NET, a key
+Scale shape: each hop costs one `read_changes` plus one ordinary MERGE
+of the net diff. The diff is priced by the range's change volume: it
+reads only the buckets whose manifests changed since the last sync, and
+when the range holds only merges and compactions it ships just the keys
+those merges wrote through one pk exchange; any other commit in the
+range (DML, append, rollback, rebucket, publish), a null lsn, an event
+at or below an lsn the last synced snapshot already stores, or a
+change volume as large as the changed buckets makes it exchange those
+buckets whole, never the table. Because the diff is NET, a key
 updated k times between syncs crosses the wire once — downstream write
 amplification is bounded by the net change rate, not the upstream event
 rate.
@@ -307,8 +313,8 @@ def sync_aggregate(
         )
     # persist (NOT checkpoint): the diff feeds the group-delta
     # aggregate, the affected-group point lookup, and the merge's
-    # multi-pass batch evaluation - cache the two-snapshot join once
-    # per consumer while staying recoverable under executor loss
+    # multi-pass batch evaluation - cache the diff once instead of
+    # once per consumer while staying recoverable under executor loss
     # (lost cache blocks recompute via lineage; unpersisted in the
     # finally below).
     diff = (
@@ -581,10 +587,10 @@ def sync_scd2(
             f"scd2 cursor v{last} expired from source history "
             f"(oldest retained: v{retained[0]}); re-seed the history"
         )
-    # persist (NOT checkpoint): the diff (a bucket-pruned two-snapshot
-    # full-outer join) feeds BOTH the closures' key lookup and the
+    # persist (NOT checkpoint): the diff (one pk exchange over the
+    # changed buckets' rows) feeds BOTH the closures' key lookup and the
     # opens, and the merge evaluates its batch more than once - cache
-    # the join once instead of re-running it per consumer, while a lost
+    # the diff once instead of re-running it per consumer, while a lost
     # executor's blocks recompute via lineage (a checkpoint's would
     # fail the sync unrecoverably).
     diff = src.read_changes(last, cur).persist(StorageLevel.MEMORY_AND_DISK)

@@ -110,6 +110,41 @@ _TUNE_LOCK = threading.Lock()
 _BRANCH_NAME_RE = re.compile(r"^[A-Za-z0-9_.]+$")
 
 
+# The read-time LWW policy of merge-on-read, shared by every resolved read
+# (LakeTable._resolved) and the changelog diff (LakeTable._diff_images).
+def _lww_pref(delta: bool) -> Column:
+    """The commit ordinal in a row's read-time LWW rank: 0 for base rows,
+    the committing snapshot's version for delta rows, so equal-lsn rows
+    for one key resolve to the newest commit - the COW join's "newer
+    source wins ties" rule (s.lsn >= t._lsn)."""
+    ordinal = F.coalesce(F.col(DELTA_SEQ_COL), F.lit(1)) if delta else F.lit(0)
+    return ordinal.cast("long")
+
+
+def _lww_ord(pref: Column) -> Column:
+    """A row's read-time LWW rank: ``(coalesce(_lsn, -1), pref)``, with
+    ``pref`` from :func:`_lww_pref`. Append-originated rows (null
+    ``_lsn``) rank lowest; the stored ``_lsn`` is untouched. A plan that
+    exchanges the rows anyway can ship ``pref`` flat and build the struct
+    after the exchange, so ``_lsn`` does not ride twice."""
+    return F.struct(
+        F.coalesce(F.col(LSN_COL), F.lit(-1)).alias("l"), pref.alias("p")
+    )
+
+
+def _lww_barrier(pk: list[str], rows: Column | None = None) -> Column:
+    """Per key (a window over ``pk``), the ``_ord`` of the newest FULL row
+    - base row, full delta row or tombstone - among ``rows``: partial
+    overlays count only when ranked above it."""
+    full = ~F.col(PARTIAL_COL) if rows is None else rows & ~F.col(PARTIAL_COL)
+    return F.max(F.when(full, F.col("_ord"))).over(Window.partitionBy(*pk))
+
+
+def _lww_overlay(barrier: Column) -> Column:
+    """A partial overlay row ranked after its key's ``barrier``."""
+    return F.col(PARTIAL_COL) & (F.col("_ord") > barrier)
+
+
 @dataclass
 class Snapshot:
     version: int
@@ -917,7 +952,6 @@ class LakeTable:
         snap: Snapshot,
         buckets: list[int] | None,
         schema: T.StructType | None = None,
-        renames: dict[str, list[str]] | None = None,
         file_map: dict[str, list[str]] | None = None,
         delta_map: dict[str, list[str]] | None = None,
     ) -> DataFrame:
@@ -926,14 +960,11 @@ class LakeTable:
         tombstones included. Equal to the base read for pure-COW tables.
 
         Ordering is deterministic across epochs: every delta write stamps
-        its rows with the committing snapshot's version (DELTA_SEQ_COL), so
-        equal-lsn rows for one key resolve to the newest commit - the same
-        "newer source wins ties" rule the COW join applies (s.lsn >= t._lsn).
-        Base rows order as ordinal 0. The LWW runs on transient ordering
-        columns; stored ``_lsn`` values (incl. nulls from append mode) pass
-        through unchanged."""
-        base = self._read_files(snap, buckets, schema, file_map=file_map,
-                                renames=renames)
+        its rows with the committing snapshot's version (DELTA_SEQ_COL),
+        and the LWW ranks rows by :func:`_lww_ord` on transient columns;
+        stored ``_lsn`` values (incl. nulls from append mode) pass through
+        unchanged."""
+        base = self._read_files(snap, buckets, schema, file_map=file_map)
         effective_deltas = snap.deltas if delta_map is None else delta_map
         has_deltas = any(
             fl
@@ -950,20 +981,16 @@ class LakeTable:
         )
         deltas = self._read_files(
             snap, buckets, schema, file_map=effective_deltas, with_seq=True,
-            with_partial=has_partial, renames=renames,
+            with_partial=has_partial,
         )
         if has_partial:
             return self._resolve_partial(snap, base, deltas, schema)
-        union = base.withColumn(
-            "_pref", F.lit(0).cast("long")
-        ).unionByName(
-            deltas.withColumn(
-                "_pref", F.coalesce(F.col(DELTA_SEQ_COL), F.lit(1)).cast("long")
-            ).drop(DELTA_SEQ_COL)
+        union = base.withColumn("_pref", _lww_pref(False)).unionByName(
+            deltas.withColumn("_pref", _lww_pref(True)).drop(DELTA_SEQ_COL)
         )
-        # append-originated rows carry null _lsn -> lowest precedence, via a
-        # TRANSIENT ordering column only (the stored _lsn stays null).
-        union = union.withColumn("_lsn_ord", F.coalesce(F.col(LSN_COL), F.lit(-1)))
+        # the rank as flat columns in _lww_ord's order: lww_dedupe ships its
+        # payload and its order struct, so a nested rank would ride twice
+        union = union.withColumn("_lsn_ord", _lww_ord(F.col("_pref"))["l"])
         resolved = lww_dedupe(
             union, snap.pk_fields, ["_lsn_ord", "_pref"], tiebreak_fields=[]
         )
@@ -989,28 +1016,20 @@ class LakeTable:
             if f.name not in snap.pk_fields
         ]
         pk = snap.pk_fields
-        union = base.withColumn("_pref", F.lit(0).cast("long")).withColumn(
-            PARTIAL_COL, F.lit(False)
+        union = base.withColumns(
+            {"_pref": _lww_pref(False), PARTIAL_COL: F.lit(False)}
         ).unionByName(
-            deltas.withColumn(
-                "_pref", F.coalesce(F.col(DELTA_SEQ_COL), F.lit(1)).cast("long")
-            )
-            .withColumn(PARTIAL_COL, F.coalesce(F.col(PARTIAL_COL), F.lit(False)))
-            .drop(DELTA_SEQ_COL)
+            deltas.withColumns(
+                {
+                    "_pref": _lww_pref(True),
+                    PARTIAL_COL: F.coalesce(F.col(PARTIAL_COL), F.lit(False)),
+                }
+            ).drop(DELTA_SEQ_COL)
         )
-        union = union.withColumn(
-            "_ord",
-            F.struct(
-                F.coalesce(F.col(LSN_COL), F.lit(-1)).alias("l"),
-                F.col("_pref").alias("p"),
-            ),
-        )
+        union = union.withColumn("_ord", _lww_ord(F.col("_pref")))
         is_full = ~F.col(PARTIAL_COL)
-        w = Window.partitionBy(*pk)
-        union = union.withColumn(
-            "_b_ord", F.max(F.when(is_full, F.col("_ord"))).over(w)
-        )
-        after_barrier = F.col(PARTIAL_COL) & (F.col("_ord") > F.col("_b_ord"))
+        union = union.withColumn("_b_ord", _lww_barrier(pk))
+        after_barrier = _lww_overlay(F.col("_b_ord"))
         agg = union.groupBy(*pk).agg(
             F.max_by(
                 F.struct(
@@ -1127,18 +1146,113 @@ class LakeTable:
             changed.append(int(b))
         return sorted(changed)
 
+    # Commit operations a key-pruned diff may span: every row they change
+    # carries an lsn of the committing batch (merges) or keeps its stored
+    # lsn (compaction). Anything else - DML, append, rollback, rebucket,
+    # renames, fork/publish - sends the diff down the unpruned path.
+    _HULL_OPS = frozenset(
+        {"merge", "merge-mor", "merge-partial", "merge-mor-partial", "compact"}
+    )
+
+    def _change_hull(
+        self, snap_a: Snapshot, snap_b: Snapshot, changed: list[int]
+    ) -> tuple[int, int] | None | bool:
+        """The lsn hull ``(lo, hi)`` of the batches committed in
+        ``(a, b]`` when it provably covers every key whose live image
+        changed, and the range's change volume is small enough that
+        pruning to those keys pays (fewer events than b's base and delta
+        rows in the changed buckets, and within the broadcast key cap);
+        ``None`` otherwise (diff unpruned). ``False`` means the range
+        provably changed no live row (only state-preserving compactions).
+
+        Sound because each range commit is a merge - whose written rows
+        carry their batch's lsns, while carried-over rows keep older ones
+        - or a compaction, which preserves lsns. So a key whose image
+        differs between a and b has a row with an lsn inside the hull in
+        a file b lists and a does not. Bounded because the hull must lie
+        above every lsn stored in a's changed buckets: then no carried-over
+        row falls inside it, every row inside it was written by the range,
+        and K holds at most the range's event count of keys. A re-delivered
+        or late event below a stored lsn therefore sends the diff down the
+        unpruned path (a COW merge carries the rest of its rewritten
+        bucket over with the stored lsns, and K would take them all).
+
+        Requires, per commit metadata and stats sidecars only (no Spark
+        job): b's parent chain reaches a through retained snapshots, every
+        commit is in ``_HULL_OPS``, every merge recorded its hull and had
+        no null lsn (a null-lsn row is invisible to the hull), no
+        compaction purged tombstones at or above the hull's low end (a
+        purged delete would leave no trace in b), and every file a lists
+        in the changed buckets has ``_lsn`` stats below the hull."""
+        lo = hi = None
+        events = 0
+        purges = []
+        v = snap_b.version
+        while v != snap_a.version:
+            path = self._snapshot_path(v)
+            if v < snap_a.version or not path.is_file():
+                return None
+            d = json.loads(path.read_text())
+            s = d.get("summary", {})
+            if d.get("operation") not in self._HULL_OPS:
+                return None
+            if d["operation"] == "compact":
+                purges.append(s.get("purged_below_lsn"))
+            elif s.get("batch_lsn_nulls", 1) or "batch_events" not in s:
+                return None
+            elif s["batch_events"]:
+                b_lo, b_hi = s["batch_lsn_min"], s["batch_lsn_max"]
+                lo = b_lo if lo is None else min(lo, b_lo)
+                hi = b_hi if hi is None else max(hi, b_hi)
+                events += int(s["batch_events"])
+                if events > self.BROADCAST_KEYS_MAX:
+                    return None
+            v = d.get("parent")
+            if v is None:
+                return None
+        if lo is None:
+            return False
+        if any(p is not None and p > lo for p in purges):
+            return None
+        stored = [
+            f
+            for b in changed
+            for m in (snap_a.files, snap_a.deltas)
+            for f in m.get(str(b), [])
+        ]
+        stats = self._stats_for(stored)
+        for rel in stored:
+            s = stats.get(rel, {}).get(LSN_COL)
+            if not s or not isinstance(s[1], (int, float)) or s[1] >= lo:
+                return None
+        rows = self._base_rows(snap_b, changed, with_deltas=True)
+        if rows is None or events >= rows:
+            return None
+        return lo, hi
+
     def _diff_images(
         self, from_version: int, snap_b: "Snapshot"
     ) -> tuple[DataFrame, Column, Column, Column] | None:
         """Shared core of the changelog readers (:meth:`read_changes` and
-        :meth:`read_changes_envelope`): the pk-keyed full-outer join of the
-        two snapshots' live states, bucket-pruned to :meth:`changed_buckets`
-        via exact manifest lists. Returns ``(joined, is_insert, is_delete,
-        is_update)`` where ``joined`` carries the coalesced pk columns plus
-        ``_a_pay`` / ``_b_pay`` pre-/post-image payload structs, or ``None``
-        when the range provably contains no changed buckets. Classification
-        predicates are returned (not applied) so each caller projects its
-        own output shape off ONE join."""
+        :meth:`read_changes_envelope`): both snapshots' live images of
+        every changed key, computed in ONE hash exchange on the pk.
+        Returns ``(images, is_insert, is_delete, is_update)`` where
+        ``images`` carries the pk columns plus ``_a_pay`` / ``_b_pay``
+        pre-/post-image payload structs, or ``None`` when the range
+        provably changed nothing. Classification predicates are returned
+        (not applied) so each caller projects its own output shape.
+
+        Plan: the base and delta files of :meth:`changed_buckets` are read
+        ONCE, each tagged by which snapshot lists it (a-only, b-only or
+        both); when :meth:`_change_hull` proves a range's change volume
+        small, the rows are first semi-joined to a broadcast candidate-key
+        set K (the pks of b-only rows whose lsn lies in the range's lsn
+        hull; at most the range's event count), so unchanged carried-over
+        rows never reach the exchange. Then one grouped pass per pk
+        computes each side's read-time LWW image - max over
+        :func:`_lww_ord`, with partial-update overlays folded after their
+        barrier by the same helpers :meth:`_resolve_partial` uses - and the
+        insert/update/delete classification follows from the two images."""
         snap_a = self.snapshot(from_version)
         if snap_a.version > snap_b.version:
             raise ValueError(
@@ -1155,31 +1269,122 @@ class LakeTable:
         )
         if not changed:
             return None
+        hull = self._change_hull(snap_a, snap_b, changed)
+        if hull is False:
+            return None
+        has_partial = any(
+            int(b) in changed
+            for s in (snap_a, snap_b)
+            for b in s.properties.get("partial_delta_buckets", [])
+        )
+        # the `to` side's prior-name map covers renames that happened
+        # anywhere in the range, so the `from` side's files read
+        # correctly under the `to` schema's (renamed) column names
+        renames = snap_b.properties.get("renames", {})
 
-        def _live(snap: Snapshot) -> DataFrame:
-            # the `to` side's prior-name map covers renames that happened
-            # anywhere in the range, so the `from` side's files read
-            # correctly under the `to` schema's (renamed) column names
-            df = self._resolved(
-                snap, changed, schema=schema,
-                renames=snap_b.properties.get("renames", {}),
+        # file classes, as the tag each row carries: listed by a only (1),
+        # by b only (2), or by both snapshots (3)
+        classes = {"a": 1, "b": 2, "ab": 3}
+
+        def _scan(files: list[str], delta: bool, tag: int):
+            df = self._read_files(
+                snap_b, None, schema, file_map={"": files}, with_seq=delta,
+                with_partial=delta and has_partial, renames=renames,
             )
-            df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-            return df.select(*pk, *payload)
+            cols = {"_p": _lww_pref(delta), "_tag": F.lit(tag)}
+            if has_partial:
+                cols[PARTIAL_COL] = (
+                    F.coalesce(F.col(PARTIAL_COL), F.lit(False))
+                    if delta
+                    else F.lit(False)
+                )
+            return df.withColumns(cols).drop(BUCKET_COL, DELTA_SEQ_COL)
 
-        a = _live(snap_a).withColumn("_a_present", F.lit(True))
-        b = _live(snap_b).withColumn("_b_present", F.lit(True))
-        a = a.select(
-            *pk,
-            F.struct(*[F.col(c).alias(c) for c in payload]).alias("_a_pay"),
-            "_a_present",
+        parts = {}
+        for delta, m_a, m_b in (
+            (False, snap_a.files, snap_b.files),
+            (True, snap_a.deltas, snap_b.deltas),
+        ):
+            fa = {f for b in changed for f in m_a.get(str(b), [])}
+            fb = {f for b in changed for f in m_b.get(str(b), [])}
+            for cls, files in (("a", fa - fb), ("b", fb - fa), ("ab", fa & fb)):
+                if files:
+                    parts.setdefault(cls, []).append(
+                        _scan(sorted(files), delta, classes[cls])
+                    )
+        if not parts:
+            return None
+
+        def _union(dfs: list[DataFrame]) -> DataFrame:
+            out = dfs[0]
+            for df in dfs[1:]:
+                out = out.unionByName(df)
+            return out
+
+        rows = _union([df for dfs in parts.values() for df in dfs])
+        if hull is not None:
+            if "b" not in parts:
+                return None
+            keys = _union(parts["b"]).filter(F.col(LSN_COL).between(*hull))
+            rows = rows.join(F.broadcast(keys.select(*pk)), on=pk, how="left_semi")
+
+        # The ONE exchange ships the rows themselves: a key's rows sit in
+        # different files, so a map-side partial aggregate would combine
+        # almost nothing and cost a second sort. Each side's LWW image is
+        # the greater of its own class's and the shared class's winner;
+        # max over struct(_ord, payload...) orders by _ord first.
+        rows = rows.repartition(*pk).withColumn("_ord", _lww_ord(F.col("_p")))
+        is_full = ~F.col(PARTIAL_COL) if has_partial else F.lit(True)
+        in_side = {
+            "a": F.col("_tag") != classes["b"], "b": F.col("_tag") != classes["a"]
+        }
+        image = F.struct(
+            F.col("_ord"), *[F.col(c) for c in payload], F.col(DELETED_COL)
         )
-        b = b.select(
-            *pk,
-            F.struct(*[F.col(c).alias(c) for c in payload]).alias("_b_pay"),
-            "_b_present",
+        aggs = [
+            F.max(F.when((F.col("_tag") == tag) & is_full, image)).alias(f"_m_{cls}")
+            for cls, tag in classes.items()
+        ]
+        if has_partial:
+            # each side's overlays after its barrier contribute their
+            # non-null columns, as in _resolve_partial
+            for s, cond in in_side.items():
+                rows = rows.withColumn(f"_{s}_bar", _lww_barrier(pk, cond))
+            aggs += [
+                F.max_by(
+                    F.col(c),
+                    F.when(
+                        cond & _lww_overlay(F.col(f"_{s}_bar"))
+                        & F.col(c).isNotNull(),
+                        F.col("_ord"),
+                    ),
+                ).alias(f"_{s}_u_{c}")
+                for s, cond in in_side.items()
+                for c in payload
+            ]
+        images = rows.groupBy(*pk).agg(*aggs)
+
+        def _side(s: str) -> list[Column]:
+            img = F.greatest(F.col(f"_m_{s}"), F.col("_m_ab"))
+            pay = (
+                F.struct(
+                    *[
+                        F.coalesce(F.col(f"_{s}_u_{c}"), img[c]).alias(c)
+                        for c in payload
+                    ]
+                )
+                if has_partial
+                else img.dropFields("_ord", DELETED_COL)
+            )
+            live = img.isNotNull() & ~F.coalesce(img[DELETED_COL], F.lit(False))
+            return [
+                pay.alias(f"_{s}_pay"),
+                F.when(live, F.lit(True)).alias(f"_{s}_present"),
+            ]
+
+        j = images.select(*pk, *_side("a"), *_side("b")).filter(
+            F.col("_a_present") | F.col("_b_present")
         )
-        j = a.join(b, on=pk, how="full_outer")
         is_insert = F.col("_a_present").isNull()
         is_delete = F.col("_b_present").isNull()
         # null-safe struct equality: one comparison covers every payload col
@@ -1208,12 +1413,23 @@ class LakeTable:
             ``update_postimage`` (new row), the Delta CDF convention;
           * ``delete`` - key live in ``from`` only (pre-image).
 
-        Scale shape: both states are read bucket-pruned to
-        :meth:`changed_buckets` via exact manifest file lists, then one
-        pk-keyed full-outer join classifies rows - for a single-epoch diff
-        on a 100 TB table that is the epoch's touched buckets, not a table
-        scan. Schema evolution across the range is handled by reading the
-        ``from`` side under the ``to`` snapshot's (wider) schema, the same
+        Scale shape: priced by the range's change volume. The changed
+        buckets' files (:meth:`changed_buckets`, exact manifest lists) are
+        read once; when every commit in the range is a merge or
+        compaction with a recorded lsn hull (:meth:`_change_hull`), their
+        rows are semi-joined to a broadcast set of the keys the range
+        wrote, so only those keys' rows cross the ONE pk exchange that
+        builds both images - a single-epoch diff on a 100 TB table ships
+        the epoch's keys, not its touched buckets. It falls back to
+        exchanging every row of the changed buckets when the range holds
+        any other commit (DML, append, rollback, rebucket, rename,
+        publish), a null-lsn batch, a tombstone purge inside the hull, an
+        event at or below an lsn the ``from`` side already stores in the
+        changed buckets (a re-delivered or late event), or an expired
+        snapshot; or when its events reach the changed buckets' row
+        count. Schema evolution across the range is handled
+        by reading the ``from`` side under the ``to`` snapshot's (wider)
+        schema, the same
         null-fill/widen path time travel uses; a row that differs only in
         a column added after ``from`` diffs as an update whose pre-image
         value for that column is null, matching what a reader of ``from``
@@ -1291,8 +1507,8 @@ class LakeTable:
         millis (pre-image for deletes), null when the table has no such
         column - deterministic event time, never emit wall-clock.
 
-        Same scale shape as :meth:`read_changes`: ONE bucket-pruned
-        pk-keyed full-outer join, then a pure projection - the JSON
+        Same scale shape as :meth:`read_changes`: ONE key-pruned pk
+        exchange over the changed buckets, then a pure projection - the JSON
         rendering is ``to_json`` (JVM codegen, ``ignoreNullFields=false``
         so the envelope carries explicit ``"before": null`` like Debezium
         does). Round-trip contract (tested): ``parse_debezium`` over this
@@ -1385,9 +1601,11 @@ class LakeTable:
         missing = [c for c in pk if c not in keys.columns]
         if missing:
             raise ValueError(f"keys relation lacks pk columns {missing}")
+        # a NULL key matches nothing under the equi semi-join; dropping it
+        # here keeps it out of the non-nullable literal probe below
         keys = keys.select(
             *[F.col(c).cast(snap.schema[c].dataType).alias(c) for c in pk]
-        ).distinct()
+        ).dropna(subset=pk).distinct()
         keyed = keys.withColumn(
             BUCKET_COL,
             bucket_expr(pk[0], snap.num_buckets, key_type=snap.schema[pk[0]].dataType),
@@ -1523,9 +1741,10 @@ class LakeTable:
                     f"keys relation lacks the leading pk column {pk[0]!r}"
                 )
         prefix = pk[:k]
+        # NULL prefixes match nothing (same as read_keys)
         keys = keys.select(
             *[F.col(c).cast(snap.schema[c].dataType).alias(c) for c in prefix]
-        ).distinct()
+        ).dropna(subset=prefix).distinct()
         keyed = keys.withColumn(
             BUCKET_COL,
             bucket_expr(pk[0], snap.num_buckets, key_type=snap.schema[pk[0]].dataType),
@@ -2526,14 +2745,16 @@ class LakeTable:
                 stats[rel] = cols
         (commit_dir / ".stats.json").write_text(json.dumps(stats))
 
-    def _base_rows(self, snap: Snapshot, buckets: list[int]) -> int | None:
-        """Exact row count of the BASE files under ``buckets``, from the
-        stats sidecars - driver-side, O(files), cached per commit dir.
-        None when any file predates row-count sidecars (legacy commits):
-        the caller must then assume nothing about table size."""
-        rels = [
-            f for b in buckets for f in snap.files.get(str(b), [])
-        ]
+    def _base_rows(
+        self, snap: Snapshot, buckets: list[int], with_deltas: bool = False
+    ) -> int | None:
+        """Exact row count of the BASE files (plus the MOR delta files with
+        ``with_deltas``) under ``buckets``, from the stats sidecars -
+        driver-side, O(files), cached per commit dir. None when any file
+        predates row-count sidecars (legacy commits): the caller must then
+        assume nothing about table size."""
+        maps = (snap.files, snap.deltas) if with_deltas else (snap.files,)
+        rels = [f for b in buckets for m in maps for f in m.get(str(b), [])]
         if not rels:
             return 0
         stats = self._stats_for(rels)
@@ -3816,11 +4037,20 @@ class LakeTable:
         # The pre-scan hashes the pk CAST TO THE RESOLVED TABLE TYPE so it
         # agrees with the conformed winners' bucket assignment even across a
         # pk type widening (xxhash64(int) != xxhash64(long) for equal values).
+        # The same aggregate carries the batch's lsn hull and null-lsn count
+        # (the stored _lsn cast) into the commit summary, where
+        # read_changes uses them to key-prune a range's diff.
+        batch_lsn = F.col(lsn_src).cast("long")
         bucket_stats = changes.groupBy(
             bucket_expr(
                 pk[0], snap.num_buckets, key_type=schema[pk[0]].dataType
             ).alias(BUCKET_COL)
-        ).agg(F.count(F.lit(1)).alias("_n"))
+        ).agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.min(batch_lsn).alias("_lo"),
+            F.max(batch_lsn).alias("_hi"),
+            F.count(F.when(batch_lsn.isNull(), 1)).alias("_nulls"),
+        )
         file_stats: list[dict] | None = None
         if collect_file_stats and file_col in changes.columns:
             # Fused into the SAME driver action as the pre-scan: the two
@@ -3837,6 +4067,9 @@ class LakeTable:
                 F.lit("b").alias("_t"),
                 F.col(BUCKET_COL),
                 F.col("_n"),
+                F.col("_lo"),
+                F.col("_hi"),
+                F.col("_nulls"),
                 F.lit(None).cast("string").alias("_f"),
                 F.lit(None).cast("long").alias("_min_lsn"),
                 F.lit(None).cast("long").alias("_max_lsn"),
@@ -3845,6 +4078,9 @@ class LakeTable:
                     F.lit("f").alias("_t"),
                     F.lit(None).cast("int").alias(BUCKET_COL),
                     F.col("_n"),
+                    F.lit(None).cast("long").alias("_lo"),
+                    F.lit(None).cast("long").alias("_hi"),
+                    F.lit(None).cast("long").alias("_nulls"),
                     F.col("_f"),
                     F.col("_min_lsn"),
                     F.col("_max_lsn"),
@@ -3906,8 +4142,21 @@ class LakeTable:
         # batch_events (pre-LWW submitted rows) rides into every commit
         # summary alongside applied_events: the pair is the per-epoch
         # submitted-vs-won lineage a DLQ requeue or an ops dashboard needs,
-        # and it is free - the pre-scan already counted it.
-        lineage = {**(lineage or {}), "batch_events": int(batch_events)}
+        # and it is free - the pre-scan already counted it. The lsn hull and
+        # null-lsn count come from the same rows (see _change_hull).
+        lineage = {
+            **(lineage or {}),
+            "batch_events": int(batch_events),
+            "batch_lsn_min": min(
+                (r["_lo"] for r in raw_stats if r["_lo"] is not None),
+                default=None,
+            ),
+            "batch_lsn_max": max(
+                (r["_hi"] for r in raw_stats if r["_hi"] is not None),
+                default=None,
+            ),
+            "batch_lsn_nulls": int(sum(r["_nulls"] for r in raw_stats)),
+        }
 
         # (3) the conformed source relation: op -> tombstone flag, lsn
         # column, cast to the (possibly evolved) table schema, bucketed.

@@ -892,11 +892,12 @@ def parse_sqlserver_cdc(
     )
     q_hi, q_lo = _mssql_hex_limbs(F.col("`__$seqval`"))
     seqv = _mssql_decimal(q_hi, q_lo)
-    off = (
-        seqv
-        - F.lit(base_val).cast("decimal(25,0)")
-        + F.lit(_MSSQL_SLACK).cast("decimal(25,0)")
+    # the base is built from its 40-bit limbs like the seqval: a literal
+    # of 2^63 or more (VLF >= 0x8000) does not fit F.lit's long
+    base_dec = _mssql_decimal(
+        F.lit(base_val >> 40), F.lit(base_val & ((1 << 40) - 1))
     )
+    off = seqv - base_dec + F.lit(_MSSQL_SLACK).cast("decimal(25,0)")
     off_ok = (off >= 0) & (off <= F.lit(_I64_MAX).cast("decimal(25,0)"))
     lsn = (
         F.when(q_hi.isNull(), F.lit(None).cast("long"))
@@ -935,7 +936,9 @@ def parse_sqlserver_cdc(
 # CockroachDB HLC: "<wall-nanos>.<logical-10-digits>".  The fold below
 # reserves 10 bits for the logical counter, so the rebased wall budget
 # is 2^53 ns ~ 104 days of changefeed - past that the loud guard asks
-# for a re-subscription with a fresh hlc_base.
+# for a re-subscription with a fresh hlc_base. A logical counter past
+# 1023 is a different failure: no base can fit it, so its guard names
+# the field width instead.
 _CRDB_LOGICAL_BITS = 10
 _CRDB_WALL_BITS = 53
 
@@ -976,7 +979,9 @@ def parse_cockroach_changefeed(
         days of feed) and the logical counter 10 bits, both enforced by
         ``raise_error`` - a changefeed outliving its base fails FAST
         with a re-subscribe instruction instead of silently
-        dead-lettering (the round-4 DynamoDB bug class).
+        dead-lettering (the round-4 DynamoDB bug class); a logical
+        counter past 1023 fails with its own message, since
+        re-subscribing cannot shrink it.
       * ts_ms = wall / 10^6 (absolute, not rebased).
     """
     base = str(hlc_base).strip()
@@ -998,16 +1003,16 @@ def parse_cockroach_changefeed(
     wall = F.get(F.split(updated, r"\."), 0).try_cast("long")
     logical = F.get(F.split(updated, r"\."), 1).try_cast("long")
     wall_off = wall - F.lit(base_val)
-    ok = (
-        (wall_off >= 0)
-        & (wall_off < F.lit(1 << _CRDB_WALL_BITS))
-        & (logical >= 0)
-        & (logical < F.lit(1 << _CRDB_LOGICAL_BITS))
-    )
+    wall_ok = (wall_off >= 0) & (wall_off < F.lit(1 << _CRDB_WALL_BITS))
+    logical_ok = (logical >= 0) & (logical < F.lit(1 << _CRDB_LOGICAL_BITS))
     lsn = (
         F.when(wall.isNull() | logical.isNull(), F.lit(None).cast("long"))
-        .when(ok, wall_off * F.lit(1 << _CRDB_LOGICAL_BITS) + logical)
-        .otherwise(
+        .when(
+            wall_ok & logical_ok,
+            wall_off * F.lit(1 << _CRDB_LOGICAL_BITS) + logical,
+        )
+        .when(
+            ~wall_ok,
             F.raise_error(
                 F.format_string(
                     "cockroach HLC %s does not map into the 64-bit lsn "
@@ -1015,6 +1020,20 @@ def parse_cockroach_changefeed(
                     + (base or "0")
                     + "; re-subscribe with the changefeed cursor as "
                     "hlc_base",
+                    updated,
+                )
+            ),
+        )
+        .otherwise(
+            F.raise_error(
+                F.format_string(
+                    "cockroach HLC %s has a logical counter outside the "
+                    f"lsn fold's {_CRDB_LOGICAL_BITS}-bit field (0.."
+                    f"{(1 << _CRDB_LOGICAL_BITS) - 1}); no hlc_base can "
+                    "fit it, so re-subscribing will not help. Move bits "
+                    "from _CRDB_WALL_BITS to _CRDB_LOGICAL_BITS in "
+                    "sources/cdc_formats.py (each bit moved halves the "
+                    "~104-day wall budget)",
                     updated,
                 )
             )

@@ -1460,3 +1460,67 @@ def test_detect_action_keyed_stranger_still_refuses(spark):
     )
     with pytest.raises(ValueError, match="no known format"):
         detect_cdc_format(df)
+
+
+def test_sqlserver_lsn_base_at_or_above_2_63(spark):
+    """A 20-hex-digit lsn_base with VLF >= 0x8000 is 2^63 or more; it is
+    built from 40-bit limbs, so it rebases instead of overflowing the
+    literal."""
+    from dataingestion_spark.sources.cdc_formats import (
+        _MSSQL_SLACK,
+        parse_sqlserver_cdc,
+    )
+
+    base = 0x8000 << 48
+    assert base >= 1 << 63
+    df = spark.createDataFrame(
+        [(_mssql_hex(base + 9), _mssql_hex(base + 5), 2, 1),
+         (_mssql_hex(base + 9), _mssql_hex(base - 3), 4, 1)],
+        "`__$start_lsn` string, `__$seqval` string, `__$operation` int, "
+        "id long",
+    )
+    got = parse_sqlserver_cdc(
+        df, payload_fields=[], key_fields=[("id", "long")],
+        lsn_base=_mssql_hex(base),
+    ).orderBy("lsn").collect()
+    assert [r["lsn"] for r in got] == [_MSSQL_SLACK - 3, _MSSQL_SLACK + 5]
+    top = (1 << 80) - 1
+    assert parse_sqlserver_cdc(
+        df.limit(0), payload_fields=[], key_fields=[("id", "long")],
+        lsn_base=_mssql_hex(top),
+    ).collect() == []
+
+
+def test_cockroach_logical_counter_bounds(spark):
+    """Logical 1023 is the largest counter the 10-bit field folds; 1024
+    fails loudly with the field-width message, not the re-subscribe
+    one (no hlc_base can shrink a logical counter)."""
+    from pyspark.errors import SparkRuntimeException
+
+    from dataingestion_spark.sources.cdc_formats import (
+        parse_cockroach_changefeed,
+    )
+
+    b = 1_700_000_000_000_000_000
+
+    def _feed(logical):
+        return spark.createDataFrame(
+            [('{"after": {"id": 1}, "key": [1], '
+              f'"updated": "{b + 7}.{logical:010d}"}}',)],
+            "value string",
+        )
+
+    got = parse_cockroach_changefeed(
+        _feed(1023), payload_fields=[], key_fields=[("id", "long")],
+        hlc_base=str(b),
+    ).collect()
+    assert got[0]["lsn"] == 7 * 1024 + 1023
+    with pytest.raises(SparkRuntimeException) as err:
+        parse_cockroach_changefeed(
+            _feed(1024), payload_fields=[], key_fields=[("id", "long")],
+            hlc_base=str(b),
+        ).collect()
+    msg = str(err.value)
+    assert "logical counter" in msg and "10-bit" in msg
+    assert "re-subscribing will not help" in msg
+    assert "re-subscribe with the changefeed cursor" not in msg

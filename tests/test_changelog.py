@@ -6,6 +6,10 @@ states (demo/test_pipeline.sh:225-286); the changelog generalizes that
 comparison into a queryable operator, and the invariant test here applies
 a diff to the older state and requires the newer state back."""
 
+import json
+from collections import Counter
+from datetime import datetime
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -258,3 +262,287 @@ def test_changelog_across_schema_evolution(spark, tmp_table_dir):
     pre = pre.set_index("change_type")
     assert pd.isna(pre.loc["update_preimage", "model"])
     assert pre.loc["update_postimage", "model"] == "claude-3"
+
+
+# ---------------------------------------------------------------------
+# The diff core against a pandas net diff of read() at both versions.
+# read_changes key-prunes a range only when every commit in it is a merge
+# or compaction with a recorded lsn hull (LakeTable._change_hull); each
+# case below pins which path it takes, and both must return the same rows.
+# ---------------------------------------------------------------------
+
+PAYLOAD = ["role", "text", "tool", "ts"]
+
+
+def _state(tbl, v) -> pd.DataFrame:
+    pdf = tbl.read(version=v).toPandas()
+    return pdf.astype(object).where(pdf.notna(), None)
+
+
+def _net_diff(tbl, v_a, v_b) -> Counter:
+    """(change_type, pk..., payload...) rows of the net diff of read()."""
+    pk = ["conv_id", "turn_idx"]
+    j = _state(tbl, v_a).merge(
+        _state(tbl, v_b), on=pk, how="outer", suffixes=("_a", "_b"),
+        indicator=True,
+    )
+    out = Counter()
+    for r in j.to_dict("records"):
+        k = (r["conv_id"], r["turn_idx"])
+        a = tuple(r[f"{c}_a"] for c in PAYLOAD)
+        b = tuple(r[f"{c}_b"] for c in PAYLOAD)
+        if r["_merge"] == "right_only":
+            out[("insert", *k, *b)] += 1
+        elif r["_merge"] == "left_only":
+            out[("delete", *k, *a)] += 1
+        elif a != b:
+            out[("update", *k, *b)] += 1
+    return out
+
+
+def _envelope_rows(tbl, v_a, v_b) -> Counter:
+    """The envelope feed mapped onto the net-diff row shape (ts as the
+    envelope's ts_ms)."""
+    kind = {"c": "insert", "u": "update", "d": "delete"}
+    out = Counter()
+    for r in tbl.read_changes_envelope(v_a, v_b).collect():
+        e = json.loads(r["value"])
+        img = e["before"] if e["op"] == "d" else e["after"]
+        key = json.loads(r["key"])
+        out[(kind[e["op"]], key["conv_id"], key["turn_idx"], img["role"],
+             img["text"], img["tool"], e["ts_ms"])] += 1
+    return out
+
+
+def _ts_ms(rows: Counter) -> Counter:
+    return Counter(
+        {
+            (*r[:-1], None if r[-1] is None else r[-1].value // 10**6): n
+            for r, n in rows.items()
+        }
+    )
+
+
+def _assert_diff(tbl, v_a, v_b, pruned: bool) -> None:
+    snap_a, snap_b = tbl.snapshot(v_a), tbl.snapshot(v_b)
+    hull = tbl._change_hull(snap_a, snap_b, tbl.changed_buckets(v_a, v_b))
+    assert (hull not in (None, False)) == pruned, hull
+    want = _net_diff(tbl, v_a, v_b)
+    got = tbl.read_changes(v_a, v_b).toPandas()
+    got = got.astype(object).where(got.notna(), None)
+    got = Counter(
+        tuple(r[c] for c in ["change_type", "conv_id", "turn_idx", *PAYLOAD])
+        for r in got.to_dict("records")
+    )
+    assert got == want
+    assert _envelope_rows(tbl, v_a, v_b) == _ts_ms(want)
+
+
+def _grown(spark, path):
+    """A 4-bucket table grown by one 600-event merge (lsns below 10^6), so
+    hand-written batches at lsn >= 10^6 are small against it."""
+    tbl = _make_table(spark, path, num_buckets=4)
+    tbl.merge(
+        gen_changes(spark, n_events=600, n_convs=30, seed=11),
+        pipeline_id="t", epoch_id=0,
+    )
+    keys = sorted(
+        (r["conv_id"], r["turn_idx"])
+        for r in tbl.read().select("conv_id", "turn_idx").collect()
+    )
+    return tbl, keys
+
+
+def _upsert(spark, rows, lsn0):
+    """(op, key, text) triples -> a change batch at lsns lsn0, lsn0+1, ..."""
+    return _batch(
+        spark,
+        [
+            (op, k[0], k[1], None if op == "DELETE" else "user",
+             None if op == "DELETE" else text, None, 1_000 + i, lsn0 + i, "h")
+            for i, (op, k, text) in enumerate(rows)
+        ],
+    )
+
+
+def test_diff_cow_and_mor_merges(spark, tmp_table_dir):
+    """Key-pruned ranges over COW merges, MOR delta merges, and a range
+    spanning both with a (non-purging) compaction in between."""
+    tbl, keys = _grown(spark, tmp_table_dir)
+    v0 = tbl.current_version()
+    edits = [("UPDATE", keys[0], "u0"), ("DELETE", keys[1], None),
+             ("INSERT", ("new_a", 0), "n0"), ("UPDATE", keys[7], "u7")]
+    tbl.merge(_upsert(spark, edits, 10**6), pipeline_id="t", epoch_id=1)
+    v1 = tbl.current_version()
+    _assert_diff(tbl, v0, v1, pruned=True)
+    mor = [("UPDATE", keys[0], "m0"), ("DELETE", keys[2], None),
+           ("INSERT", ("new_b", 1), "n1"), ("DELETE", ("new_a", 0), None)]
+    tbl.merge(_upsert(spark, mor, 2 * 10**6), pipeline_id="t", epoch_id=2,
+              write_mode="mor")
+    v2 = tbl.current_version()
+    _assert_diff(tbl, v1, v2, pruned=True)
+    tbl.compact()
+    tbl.merge(_upsert(spark, [("UPDATE", keys[3], "c3")], 3 * 10**6),
+              pipeline_id="t", epoch_id=3, write_mode="mor")
+    _assert_diff(tbl, v0, tbl.current_version(), pruned=True)
+    _assert_diff(tbl, v2, v2 + 1, pruned=False)  # compaction alone: no rows
+
+
+def test_diff_partial_update_overlays(spark, tmp_table_dir):
+    """Partial-update MOR overlays: an overlay keeps the columns it leaves
+    null, an overlay on a missing key stays invisible, and a later full
+    row becomes the new barrier."""
+    tbl, keys = _grown(spark, tmp_table_dir)
+    v0 = tbl.current_version()
+    overlay = _batch(
+        spark,
+        [
+            ("UPDATE", keys[0][0], keys[0][1], None, "patched", None, 2000,
+             10**6, "p"),
+            ("UPDATE", "ghost", 0, None, "nobody", None, 2001, 10**6 + 1, "p"),
+            ("UPDATE", keys[4][0], keys[4][1], "system", None, "t_1", 2002,
+             10**6 + 2, "p"),
+        ],
+    )
+    tbl.merge(overlay, pipeline_id="t", epoch_id=1, write_mode="mor",
+              update_mode="partial")
+    v1 = tbl.current_version()
+    assert tbl.snapshot(v1).properties.get("partial_delta_buckets")
+    _assert_diff(tbl, v0, v1, pruned=True)
+    tbl.merge(
+        _upsert(spark, [("INSERT", ("ghost", 0), "born"),
+                        ("DELETE", keys[4], None)], 2 * 10**6),
+        pipeline_id="t", epoch_id=2, write_mode="mor",
+    )
+    _assert_diff(tbl, v1, tbl.current_version(), pruned=True)
+    _assert_diff(tbl, v0, tbl.current_version(), pruned=True)
+
+
+def test_diff_purging_compaction_falls_back(spark, tmp_table_dir):
+    """A compaction that purges tombstones the range itself wrote leaves no
+    trace of those deletes in b - the diff must read whole buckets."""
+    tbl, keys = _grown(spark, tmp_table_dir)
+    v0 = tbl.current_version()
+    tbl.merge(
+        _upsert(spark, [("DELETE", keys[0], None), ("UPDATE", keys[5], "x")],
+                10**6),
+        pipeline_id="t", epoch_id=1,
+    )
+    tbl.compact(purge_tombstones_below_lsn=10**6 + 10)
+    _assert_diff(tbl, v0, tbl.current_version(), pruned=False)
+    # a purge watermark at or below the range's lowest lsn purged nothing
+    # the range wrote: still prunable
+    v2 = tbl.current_version()
+    tbl.merge(_upsert(spark, [("DELETE", keys[6], None)], 2 * 10**6),
+              pipeline_id="t", epoch_id=2)
+    tbl.compact(purge_tombstones_below_lsn=2 * 10**6)
+    _assert_diff(tbl, v2, tbl.current_version(), pruned=True)
+
+
+def test_diff_rollback_dml_and_append_fall_back(spark, tmp_table_dir):
+    """Rollback, predicate DML and append (null _lsn) write rows no merge
+    hull covers: ranges containing them take the unpruned path."""
+    tbl, keys = _grown(spark, tmp_table_dir)
+    v0 = tbl.current_version()
+    tbl.merge(_upsert(spark, [("UPDATE", keys[0], "r")], 10**6),
+              pipeline_id="t", epoch_id=1)
+    v1 = tbl.current_version()
+    tbl.rollback(v0)
+    _assert_diff(tbl, v1, tbl.current_version(), pruned=False)
+    v2 = tbl.current_version()
+    tbl.delete_where(f"conv_id = '{keys[3][0]}'")
+    _assert_diff(tbl, v2, tbl.current_version(), pruned=False)
+    v3 = tbl.current_version()
+    tbl.update_where(f"conv_id = '{keys[-1][0]}'", {"text": "redacted"})
+    _assert_diff(tbl, v3, tbl.current_version(), pruned=False)
+    v4 = tbl.current_version()
+    tbl.append(
+        spark.createDataFrame(
+            [("appended", 0, "user", "a", None, datetime(2024, 1, 1))],
+            TRANSCRIPT_SCHEMA,
+        )
+    )
+    tbl.merge(_upsert(spark, [("UPDATE", keys[9], "after")], 2 * 10**6),
+              pipeline_id="t", epoch_id=2)
+    _assert_diff(tbl, v4, tbl.current_version(), pruned=False)
+    _assert_diff(tbl, v0, tbl.current_version(), pruned=False)
+
+
+def test_diff_null_and_out_of_order_lsns(spark, tmp_table_dir):
+    """A batch with a null lsn falls back (its rows escape any hull);
+    lsns arriving out of order across two merges widen the hull, and a
+    stale update that loses LWW emits nothing. The later merge alone lies
+    below an lsn its range's start already stores, so it reads whole
+    buckets."""
+    tbl, keys = _grown(spark, tmp_table_dir)
+    v0 = tbl.current_version()
+    tbl.merge(
+        _upsert(spark, [("UPDATE", keys[0], "hi"), ("INSERT", ("z", 0), "z")],
+                5 * 10**6),
+        pipeline_id="t", epoch_id=1,
+    )
+    tbl.merge(
+        _upsert(spark, [("UPDATE", keys[0], "stale"), ("UPDATE", keys[8], "lo"),
+                        ("INSERT", ("z", 1), "z1")], 2 * 10**6),
+        pipeline_id="t", epoch_id=2,
+    )
+    v2 = tbl.current_version()
+    _assert_diff(tbl, v0, v2, pruned=True)
+    _assert_diff(tbl, v0 + 1, v2, pruned=False)
+    nulls = _batch(
+        spark,
+        [("UPDATE", keys[10][0], keys[10][1], "user", "nolsn", None, 3000,
+          None, "n"),
+         ("UPDATE", keys[11][0], keys[11][1], "user", "lsn", None, 3001,
+          6 * 10**6, "n")],
+    )
+    tbl.merge(nulls, pipeline_id="t", epoch_id=3)
+    assert tbl.snapshot().summary["batch_lsn_nulls"] == 1
+    _assert_diff(tbl, v2, tbl.current_version(), pruned=False)
+
+
+def test_diff_redelivered_old_lsn_falls_back(spark, tmp_table_dir):
+    """A COW merge whose batch re-delivers one event at an old lsn: the
+    rewritten buckets carry their other rows over with stored lsns inside
+    the range's hull, so a key set drawn from the hull would hold most of
+    the table. The diff must take the unpruned path and stay exact."""
+    tbl, keys = _grown(spark, tmp_table_dir)
+    v0 = tbl.current_version()
+    stored = tbl.read(include_system=True).agg(F.min("_lsn"), F.max("_lsn")).first()
+    assert stored[0] < stored[1] < 10**6
+    late = [("UPDATE", keys[0], "fresh"), ("INSERT", ("late_a", 0), "n")]
+    batch = _upsert(spark, late, 10**6).unionByName(
+        _upsert(spark, [("UPDATE", keys[5], "replayed")], stored[0])
+    )
+    tbl.merge(batch, pipeline_id="t", epoch_id=1)
+    v1 = tbl.current_version()
+    assert tbl.snapshot(v1).summary["batch_lsn_min"] == stored[0]
+    _assert_diff(tbl, v0, v1, pruned=False)
+    # the same change at fresh lsns only is key-pruned
+    tbl.merge(_upsert(spark, late, 2 * 10**6), pipeline_id="t", epoch_id=2)
+    _assert_diff(tbl, v1, tbl.current_version(), pruned=True)
+
+
+def test_diff_branch_and_expired_ranges(spark, tmp_table_dir):
+    """A branch's own range is an ancestor range (pruned); main's range
+    across the publish of that branch, and a range whose intermediate
+    snapshot expired, cannot walk the parent chain and read whole
+    buckets."""
+    tbl, keys = _grown(spark, tmp_table_dir)
+    v0 = tbl.current_version()
+    wap = tbl.create_branch("wap")
+    wap.merge(_upsert(spark, [("UPDATE", keys[0], "staged"),
+                              ("DELETE", keys[1], None)], 10**6),
+              pipeline_id="w", epoch_id=1)
+    _assert_diff(wap, v0, wap.current_version(), pruned=True)
+    tbl.publish_branch("wap")
+    v1 = tbl.current_version()
+    assert tbl.snapshot(v1).operation == "publish"
+    _assert_diff(tbl, v0, v1, pruned=False)
+    tbl.tag("before", v1)
+    for e in range(2, 4):
+        tbl.merge(_upsert(spark, [("UPDATE", keys[e], f"e{e}")], e * 10**6),
+                  pipeline_id="t", epoch_id=e)
+    tbl.expire_snapshots(keep_last=1)
+    assert tbl.retained_versions() == [v1, tbl.current_version()]
+    _assert_diff(tbl, v1, tbl.current_version(), pruned=False)

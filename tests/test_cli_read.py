@@ -154,3 +154,29 @@ def test_cli_detect_formats(spark, tmp_path, capsys):
     out = _out_lines(capsys)
     assert rc == 1 and out[-1]["detected"] is None
     assert "no known format" in out[-1]["error"]
+
+
+def test_parquet_rows_counts_footers_and_falls_back_to_spark(spark, tmp_path):
+    """Export row counts come from local parquet footers; a plain path the
+    local glob cannot see (a non-local fs.defaultFS resolves it on the
+    cluster filesystem) falls back to a Spark count instead of 0."""
+    from dataingestion_spark.cli import _parquet_rows
+
+    out = str(tmp_path / "export")
+    spark.range(37).write.parquet(out)
+    assert _parquet_rows(spark, out) == 37
+
+    class _Remote:
+        """Stands in for a session whose default filesystem is remote."""
+
+        def __init__(self):
+            self.read = self
+            self.paths = []
+
+        def parquet(self, path):
+            self.paths.append(path)
+            return spark.range(5)
+
+    remote = _Remote()
+    assert _parquet_rows(remote, "/warehouse/exports/run1") == 5
+    assert remote.paths == ["/warehouse/exports/run1"]

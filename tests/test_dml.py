@@ -405,3 +405,21 @@ def test_point_lookup_broadcast_gated_by_measured_count(spark, tmp_path, monkeyp
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert sorted(map(tuple, small.collect())) == sorted(map(tuple, big.collect()))
     assert sorted(map(tuple, smallp.collect())) == sorted(map(tuple, bigp.collect()))
+
+
+def test_keyed_reads_ignore_null_keys(spark, tmp_table_dir):
+    """A NULL pk in the keys frame (a sync feeds these reads with keys
+    from a diff) matches nothing instead of failing the literal probe."""
+    tbl, oracle = _seeded(spark, tmp_table_dir)
+    conv = sorted(oracle["conv_id"].unique())[0]
+    turn = int(oracle[oracle["conv_id"] == conv]["turn_idx"].min())
+    keys = spark.createDataFrame(
+        [(conv, turn), (None, turn), (conv, None), (None, None)],
+        "conv_id string, turn_idx int",
+    )
+    got = tbl.read_keys(keys).collect()
+    assert [(r["conv_id"], r["turn_idx"]) for r in got] == [(conv, turn)]
+    want = int((oracle["conv_id"] == conv).sum())
+    assert tbl.read_prefix(keys.select("conv_id")).count() == want
+    assert tbl.read_prefix(keys).count() == 1
+    assert tbl.read_keys([(None, turn)]).count() == 0

@@ -154,3 +154,44 @@ def test_inverted_index_is_two_hash_aggregates(spark):
     plan = _plan(entry.q_doc_inverted_index(spark, SF))
     assert "HashAggregate" in plan or "ObjectHashAggregate" in plan
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
+
+
+def test_pruned_changelog_diff_is_one_exchange(spark, tmp_path):
+    """A small epoch's diff over a grown table: the changed buckets' rows
+    are semi-joined to ONE broadcast candidate-key set and exchanged ONCE
+    on the pk - no sort-merge join of two whole snapshots."""
+    import re
+
+    from dataingestion_spark.lake import LakeTable
+    from dataingestion_spark.sources.datagen import gen_changes
+    from tests.util import TRANSCRIPT_SCHEMA
+
+    tbl = LakeTable.create(
+        spark, tmp_path / "t", TRANSCRIPT_SCHEMA,
+        pk_fields=["conv_id", "turn_idx"], order_fields=["lsn", "ts"],
+        num_buckets=4,
+    )
+    tbl.merge(
+        gen_changes(spark, n_events=2_000, n_convs=40, seed=60),
+        pipeline_id="p", epoch_id=0,
+    )
+    v = tbl.current_version()
+    tbl.merge(
+        gen_changes(spark, n_events=40, n_convs=40, seed=61).withColumn(
+            "lsn", F.col("lsn") + 10**6
+        ),
+        pipeline_id="p", epoch_id=1,
+    )
+    diff = tbl.read_changes(v)
+    assert diff.collect()
+    # the executed (AQE final) plan: the pushed-down semi-joins share one
+    # broadcast through exchange reuse
+    final = diff._sc._jvm.PythonSQLUtils.explainString(
+        diff._jdf.queryExecution(), "simple"
+    ).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert "SortMergeJoin" not in final
+    pk_exchange = r"Exchange hashpartitioning\(conv_id#\d+, turn_idx"
+    assert len(re.findall(pk_exchange, final)) == 1
+    assert len(re.findall(r"[-:] BroadcastExchange ", final)) == 1
+    assert "LeftSemi" in final
