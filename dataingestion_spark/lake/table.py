@@ -28,10 +28,11 @@ Scale design points (10^10-event replay, SURVEY.md §4/§7):
     ``_bucket = pmod(xxhash64(conv_id), num_buckets)``. A MERGE touches
     only the buckets present in the change batch - bucket pruning bounds
     the copy-on-write rewrite to touched data, independent of table size.
-  * The MERGE's probe of batch-vs-table is a single full-outer equi-join
-    on the primary key over *touched buckets only*; AQE handles residual
-    skew and the write side is explicitly salted for hot conversations
-    (operators/salting.py) so no single reducer owns a hot bucket.
+  * The MERGE's probe of batch-vs-table is a single LWW aggregate over
+    (batch UNION current rows) of the *touched buckets only*; skew is
+    handled in the operator, not by AQE: the exchange is explicitly
+    salted for hot conversations (operators/salting.py) so no single
+    reducer owns a hot bucket.
   * Late/duplicate events: the table persists ``_lsn`` per row and MERGE
     only lets a source row win when ``s.lsn >= t._lsn``; deletes write
     tombstones (``_deleted = true``) rather than removing rows, so an
@@ -55,7 +56,6 @@ import json
 import os
 import re
 import shutil
-import threading
 import time
 import uuid
 from collections import OrderedDict
@@ -90,20 +90,6 @@ SYSTEM_COLS = [LSN_COL, DELETED_COL, BUCKET_COL]
 class CommitConflictError(RuntimeError):
     """Another writer committed the same snapshot version first."""
 
-
-# Serializes the merge's session-conf tuned window (AQE off + pinned shuffle
-# partitions for small epochs). Spark has no per-query AQE toggle, so the
-# tuning necessarily goes through session-global conf; without coordination
-# a concurrent merge could capture the OTHER merge's overrides as "session
-# values" and restore them permanently. The lock makes conf save/restore
-# race-free: exactly one merge holds the tuned window at a time, and a
-# merge that finds the lock taken simply runs UNDER THE SESSION CONF
-# (correct, marginally slower for small epochs) instead of waiting.
-# Caveat (documented contract): while a holder has AQE off, unrelated
-# queries planned concurrently on the same SparkSession also plan with AQE
-# off - a perf effect only, never correctness. Pipelines that need full
-# isolation should use one SparkSession per pipeline.
-_TUNE_LOCK = threading.Lock()
 
 # Branch names: no dashes (the snapshot filename grammar B-<name>-v<N>.json
 # must parse unambiguously), no path separators.
@@ -210,17 +196,6 @@ def bucket_expr(key_col: str, num_buckets: int, key_type: T.DataType | None = No
 
 class LakeTable:
     """Handle to one lake table rooted at a directory."""
-
-    # Below this many change events per epoch, merge jobs run with AQE off
-    # and shuffle partitions pinned to the bucket count: AQE's per-stage
-    # shuffle materialization + re-planning adds several fixed-latency jobs
-    # per epoch, which dominates micro-batch apply (measured ~1.6x on 250k
-    # event epochs at local[32]) while buying nothing - skew is already
-    # handled by explicit salting, and a small batch cannot produce the
-    # oversized partitions AQE exists to split. Large epochs keep the
-    # session's AQE/partition settings: there the materialization cost
-    # amortizes and runtime coalesce/skew-split earn their keep.
-    SMALL_EPOCH_EVENTS = 20_000_000
 
     # COW broadcast-probe merge (the local analog of Iceberg's
     # storage-partitioned join, SCALE.md "COW join shuffles the table
@@ -3856,8 +3831,8 @@ class LakeTable:
         never set a column back to NULL, and cross-epoch ordering assumes
         per-key in-order delivery (the binlog guarantee; the reference
         oracle likewise replays in delivery order). COW partial merges use
-        one fold+join plan at every epoch size - the single-max_by union
-        plan cannot express per-column folds.
+        a fold+join plan - the single-max_by union plan cannot express
+        per-column folds.
 
         ``write_mode="mor"`` (merge-on-read, the Hudi-MOR analog) replaces
         steps 5-6 with an append of the batch winners as per-bucket DELTA
@@ -3871,17 +3846,6 @@ class LakeTable:
         Returns the committed Snapshot, or None if the epoch was already
         applied (idempotent replay).
         """
-        import sys
-
-        debug = os.environ.get("SPARK_CDC_DEBUG_TIMING")
-        t_start = time.time()
-
-        def _tick(label, t0=[t_start]):
-            if debug:
-                now = time.time()
-                print(f"merge[{epoch_id}] {label}: {now - t0[0]:.2f}s", file=sys.stderr)
-                t0[0] = now
-
         if update_mode not in ("full", "partial"):
             raise ValueError(f"unknown update_mode: {update_mode!r}")
         snap = self.snapshot()
@@ -3895,92 +3859,6 @@ class LakeTable:
         pk = snap.pk_fields
         order_fields = snap.order_fields
         lsn_src = order_fields[0]
-
-        # Small-epoch tuning (see SMALL_EPOCH_EVENTS): start in the tuned
-        # regime - the pre-scan is always a tiny collect - and restore the
-        # session settings for the write once the pre-scan proves the epoch
-        # is large. The tuned window is guarded by _TUNE_LOCK (see its
-        # comment): only the lock holder mutates session conf, so the
-        # capture/restore pair can never race with a concurrent merge. A
-        # merge that cannot take the lock runs untuned under the session
-        # conf - same results, small epochs just pay AQE's fixed latency.
-        conf = self.spark.conf
-        tuned = False
-        locked = _TUNE_LOCK.acquire(blocking=False)
-        sess_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-        sess_sp = conf.get("spark.sql.shuffle.partitions", "200")
-
-        def _tune_small():
-            # Pre-scan phase: its shuffle output is O(distinct keys) rows,
-            # so reduce-task count is pure scheduling overhead - 8 tasks
-            # measured ~2x faster than 32 at 250k-event epochs (the write
-            # phase re-sizes via _tune_write once the pre-scan reports the
-            # batch size).
-            nonlocal tuned
-            if not locked:
-                return
-            conf.set("spark.sql.adaptive.enabled", "false")
-            conf.set("spark.sql.shuffle.partitions", str(min(int(sess_sp), 8)))
-            tuned = True
-
-        def _tune_write(batch_events: int):
-            # Write phase: size the LWW exchange by BATCH VOLUME, not the
-            # bucket count - at micro-batch scale (<=1M events) 16 reduce
-            # tasks beat 32+ (measured ~0.65s vs ~1.0s per 500k-row LWW at
-            # local[32]); large batches grow toward the session setting.
-            if not tuned:
-                return
-            conf.set(
-                "spark.sql.shuffle.partitions",
-                str(min(int(sess_sp), max(16, batch_events // 16_000))),
-            )
-
-        def _restore():
-            nonlocal tuned, locked
-            if tuned:
-                conf.set("spark.sql.adaptive.enabled", sess_aqe)
-                conf.set("spark.sql.shuffle.partitions", sess_sp)
-                tuned = False
-            if locked:
-                _TUNE_LOCK.release()
-                locked = False
-
-        _tune_small()
-        try:
-            return self._merge_impl(
-                changes, snap, pk, order_fields, lsn_src, pipeline_id,
-                epoch_id, op_col, fail_on_breaking, evolution_policy,
-                hot_key_threshold, hot_key_min_rows, salt_buckets, lineage,
-                write_mode, update_mode, collect_file_stats, file_col,
-                _tick, _restore, _tune_write,
-            )
-        finally:
-            _restore()
-
-    def _merge_impl(
-        self,
-        changes: DataFrame,
-        snap: Snapshot,
-        pk: list[str],
-        order_fields: list[str],
-        lsn_src: str,
-        pipeline_id: str | None,
-        epoch_id: int | None,
-        op_col: str,
-        fail_on_breaking: bool,
-        evolution_policy: str,
-        hot_key_threshold: float,
-        hot_key_min_rows: int | None,
-        salt_buckets: int,
-        lineage: dict | None,
-        write_mode: str,
-        update_mode: str,
-        collect_file_stats: bool,
-        file_col: str,
-        _tick,
-        _restore,
-        _tune_write,
-    ) -> Snapshot | None:
 
         # Payload schema of the batch = everything except op/ordering/source
         # metadata (ts is both ordering tiebreak and payload - kept) and
@@ -4014,7 +3892,6 @@ class LakeTable:
         # current schema" holds at every other time.
         pk_widened = snap.schema[pk[0]].dataType != schema[pk[0]].dataType
 
-        _tick("plan+schema gate")
         # (4) touched-bucket pruning + hot-key detection, cheapest-first:
         # job 1 groups the raw batch by BUCKET only - the map side combines
         # to <= num_buckets rows per partition, so the shuffle is O(maps x
@@ -4106,11 +3983,6 @@ class LakeTable:
             # full rebucket: every OLD bucket must be read and every NEW
             # bucket is a legal write target
             touched = list(range(snap.num_buckets))
-        _tick("bucket/key pre-scan")
-        if batch_events >= self.SMALL_EPOCH_EVENTS:
-            _restore()  # large epoch: AQE coalesce/skew-split pay for themselves
-        else:
-            _tune_write(batch_events)
 
         hot: list[str] = []
         min_rows = (
@@ -4137,7 +4009,6 @@ class LakeTable:
                 .select("_k")
                 .collect()
             ]
-        _tick("hot-key detect")
 
         # batch_events (pre-LWW submitted rows) rides into every commit
         # summary alongside applied_events: the pair is the per-epoch
@@ -4172,13 +4043,11 @@ class LakeTable:
         obs = Observation(f"merge_applied_{uuid.uuid4().hex[:8]}")
 
         if update_mode == "partial":
-            snap2 = self._merge_partial(
+            return self._merge_partial(
                 src, snap, schema, schema_version, pk, touched, hot,
                 salt_buckets, "cow" if pk_widened else write_mode,
                 pipeline_id, epoch_id, evo, file_stats, lineage, obs,
             )
-            _tick("partial fold + write")
-            return snap2
 
         if write_mode == "mor" and not pk_widened:
             # (5'/6') in-batch LWW winners appended as delta files - no
@@ -4207,7 +4076,6 @@ class LakeTable:
                 winners, target_partitions=target_parts, pre_partitioned=True
             )
             applied = int(obs.get["applied"]) if touched else 0
-            _tick("LWW + delta write")
             deltas = {k: list(v) for k, v in snap.deltas.items()}
             for b, fl in new_files.items():
                 deltas.setdefault(b, [])
@@ -4266,158 +4134,65 @@ class LakeTable:
             (time.time(), batch_events) if bcast_eligible else None
         )
         if bcast_eligible and self._choose_cow_plan(snap) == "broadcast":
-            snap2 = self._merge_cow_broadcast(
+            return self._merge_cow_broadcast(
                 src, snap, schema, schema_version, pk, order_fields,
                 touched, bucket_counts, pipeline_id, epoch_id, evo,
                 file_stats, lineage, plan_timing=plan_timing,
             )
-            _tick("LWW-broadcast + rewrite")
-            return snap2
 
-        # (5) COW plan selection - two physically different plans with
-        # identical semantics, chosen by epoch size (same threshold as the
-        # AQE regime; both measured, see SCALE.md):
-        #
-        #   * SMALL epochs - ONE map-side-combining LWW aggregate over
-        #     (batch ∪ resolved current rows of touched buckets): in-batch
-        #     dedup, batch-vs-table probe and the lsn guard collapse into a
-        #     single max_by ordered by (lsn, source-over-table, ts). One
-        #     shuffle, minimal stage count - wins where fixed per-stage
-        #     latency dominates (measured ~1.2x at 250k-event epochs).
-        #   * LARGE epochs - classic dedup-then-full-outer-join: the
-        #     aggregate's hash state carries the FULL row per key, which
-        #     stops fitting the hash-agg memory budget at multi-million-row
-        #     epochs (sort-based fallback + spill of wide structs measured
-        #     2.6x slower at 8M-event epochs); the join instead streams
-        #     sorted narrow-keyed runs and scales with data, not state.
-        #
-        # Both: equal-lsn ties go to the batch row (the "s.lsn >= t._lsn"
-        # rule of a guarded MERGE); a DELETE winner IS the tombstone row.
+        # (5) ONE map-side-combining LWW aggregate over (batch ∪ resolved
+        # current rows of touched buckets): in-batch dedup, batch-vs-table
+        # probe and the lsn guard collapse into a single max_by ordered by
+        # (lsn, source-over-table, ts). Equal-lsn ties go to the batch row
+        # (the "s.lsn >= t._lsn" rule of a guarded MERGE); a DELETE winner
+        # IS the tombstone row.
         current = self._resolved(snap, touched, schema=schema)
         # Recompute the bucket under the CURRENT schema type (a no-op
         # whenever the stored-bucket invariant holds; the healing step of
-        # the pk-widening rebucket otherwise) - the union plan groups by
-        # it, so both sides must agree for every key.
+        # the pk-widening rebucket otherwise) - the union groups by it, so
+        # both sides must agree for every key.
         current = current.withColumn(
             BUCKET_COL,
             bucket_expr(pk[0], snap.num_buckets, key_type=schema[pk[0]].dataType),
         )
-        if batch_events < self.SMALL_EPOCH_EVENTS:
-            # SINGLE-exchange plan (round 3): repartition ONCE by the
-            # write-layout keys, then run the LWW aggregate GROUPED BY
-            # (layout keys + pk). Because the partitioning keys are a
-            # subset of the grouping keys, Catalyst proves the exchange
-            # satisfies the aggregate's distribution and inserts no second
-            # shuffle - the same exchange that co-locates keys for the
-            # fold also lays rows out for the per-bucket file write
-            # (pre_partitioned=True). Measured ~1.2x per epoch over the
-            # former agg-exchange + write-repartition pair at 250k-event
-            # epochs.
-            union = src.withColumn("_pref", F.lit(1)).unionByName(
-                current.withColumn("_pref", F.lit(0))
-            )
-            union = union.withColumn(
-                "_lsn_ord", F.coalesce(F.col(LSN_COL), F.lit(-1))
-            )
-            union, group_prefix, target_parts = self._single_exchange_layout(
-                union, pk, touched, hot, salt_buckets
-            )
-            merged = lww_dedupe(
-                union,
-                group_prefix + pk,
-                ["_lsn_ord", "_pref"] + list(order_fields[1:]),
-                tiebreak_fields=[],
-            )
-            # applied = keys whose winner came from THIS batch, observed
-            # inside the write job (no extra action).
-            merged = merged.observe(obs, F.sum("_pref").alias("applied"))
-            merged = merged.drop("_pref", "_lsn_ord")
-            new_files = self._write_data_files(
-                merged, target_partitions=target_parts, pre_partitioned=True
-            )
-            applied = int(obs.get["applied"] or 0) if touched else 0
-            _tick("LWW-union + rewrite")
-            return self._finish_cow_commit(
-                snap, schema, schema_version, touched, hot, new_files,
-                applied, pipeline_id, epoch_id, evo, file_stats,
-                {**(lineage or {}), "merge_plan": "cow-union"},
-                plan_timing=plan_timing,
-            )
-        else:
-            # In-batch fold on a COALESCED lsn ordinal (null lsn -> -1) so
-            # the two plans order null-lsn rows identically (a null-lsn
-            # change row is reachable, e.g. a CDC adapter failing to parse
-            # an lsn field - parse_mongo_change_stream's regexp_extract).
-            winners = lww_dedupe(
-                src.withColumn("_lsn_ord", F.coalesce(F.col(LSN_COL), F.lit(-1))),
-                pk,
-                ["_lsn_ord"] + list(order_fields[1:]),
-                strategy="agg",
-            ).drop("_lsn_ord")
-            winners = winners.observe(obs, F.count(F.lit(1)).alias("applied"))
-            payload_cols = [
-                f.name for f in schema.fields if f.name not in pk
-            ]
-            s = winners.select(
-                *pk,
-                *[F.col(c).alias(f"_s_{c}") for c in payload_cols],
-                F.col(LSN_COL).alias("_s_lsn"),
-                F.col(DELETED_COL).alias("_s_deleted"),
-                F.col(BUCKET_COL).alias("_s_bucket"),
-            )
-            t = current.select(
-                *pk,
-                *[F.col(c).alias(f"_t_{c}") for c in payload_cols],
-                F.col(LSN_COL).alias("_t_lsn"),
-                F.col(DELETED_COL).alias("_t_deleted"),
-                F.col(BUCKET_COL).alias("_t_bucket"),
-            )
-            joined = s.join(t, on=pk, how="full_outer")
-            # Row presence is tested on the bucket columns (never null for
-            # a present row - pmod(xxhash64) is non-null even for null pk),
-            # NOT on lsn: the null-lsn rule must match the small-epoch
-            # union plan exactly - null lsn orders as -1, so a null-lsn
-            # batch row loses to any real target lsn but beats a null-lsn
-            # (append-originated) target row via batch preference. Without
-            # this a batch's visible result would depend on which side of
-            # SMALL_EPOCH_EVENTS it landed.
-            source_wins = F.col("_s_bucket").isNotNull() & (
-                F.col("_t_bucket").isNull()
-                | (
-                    F.coalesce(F.col("_s_lsn"), F.lit(-1))
-                    >= F.coalesce(F.col("_t_lsn"), F.lit(-1))
-                )
-            )
-            merged = joined.select(
-                *pk,
-                *[
-                    F.when(source_wins, F.col(f"_s_{c}"))
-                    .otherwise(F.col(f"_t_{c}"))
-                    .alias(c)
-                    for c in payload_cols
-                ],
-                F.when(source_wins, F.col("_s_lsn"))
-                .otherwise(F.col("_t_lsn"))
-                .alias(LSN_COL),
-                F.when(source_wins, F.col("_s_deleted"))
-                .otherwise(F.coalesce(F.col("_t_deleted"), F.lit(False)))
-                .alias(DELETED_COL),
-                F.coalesce(F.col("_s_bucket"), F.col("_t_bucket")).alias(
-                    BUCKET_COL
-                ),
-            )
-
-        # (6) salted rewrite of touched buckets; outstanding deltas of
-        # those buckets are folded in (the join read them) and cleared.
-        salted = with_salt(merged, hot, salt_buckets, key=pk[0], sub_key=pk[1] if len(pk) > 1 else pk[0])
-        target_parts = max(len(touched), 1) * (salt_buckets if hot else 1)
-        new_files = self._write_data_files(salted, target_partitions=target_parts)
+        # SINGLE-exchange plan (round 3): repartition ONCE by the
+        # write-layout keys, then run the LWW aggregate GROUPED BY (layout
+        # keys + pk). Because the partitioning keys are a subset of the
+        # grouping keys, Catalyst proves the exchange satisfies the
+        # aggregate's distribution and inserts no second shuffle - the same
+        # exchange that co-locates keys for the fold also lays rows out for
+        # the per-bucket file write (pre_partitioned=True). Measured ~1.2x
+        # per epoch over the former agg-exchange + write-repartition pair
+        # at 250k-event epochs. (6) outstanding deltas of the touched
+        # buckets are folded in (the resolved read includes them) and
+        # cleared at commit.
+        union = src.withColumn("_pref", F.lit(1)).unionByName(
+            current.withColumn("_pref", F.lit(0))
+        )
+        union = union.withColumn(
+            "_lsn_ord", F.coalesce(F.col(LSN_COL), F.lit(-1))
+        )
+        union, group_prefix, target_parts = self._single_exchange_layout(
+            union, pk, touched, hot, salt_buckets
+        )
+        merged = lww_dedupe(
+            union,
+            group_prefix + pk,
+            ["_lsn_ord", "_pref"] + list(order_fields[1:]),
+            tiebreak_fields=[],
+        )
+        # applied = keys whose winner came from THIS batch, observed inside
+        # the write job (no extra action).
+        merged = merged.observe(obs, F.sum("_pref").alias("applied"))
+        merged = merged.drop("_pref", "_lsn_ord")
+        new_files = self._write_data_files(
+            merged, target_partitions=target_parts, pre_partitioned=True
+        )
         applied = int(obs.get["applied"] or 0) if touched else 0
-        _tick("LWW-join + rewrite")
         return self._finish_cow_commit(
-            snap, schema, schema_version, touched, hot, new_files, applied,
-            pipeline_id, epoch_id, evo, file_stats,
-            {**(lineage or {}), "merge_plan": "cow-join"},
+            snap, schema, schema_version, touched, hot, new_files,
+            applied, pipeline_id, epoch_id, evo, file_stats,
+            {**(lineage or {}), "merge_plan": "cow-union"},
             plan_timing=plan_timing,
         )
 
@@ -4483,8 +4258,8 @@ class LakeTable:
         any epoch size: 100 TB of table behind 10^4 buckets still streams
         scan->join->write with the day's changes broadcast group by group.
 
-        Semantics are EXACTLY the full-outer-join plan's: same winners
-        fold (in-batch LWW on coalesced lsn ordinal), same source-wins
+        Semantics are EXACTLY the union plan's: same winners fold
+        (in-batch LWW on coalesced lsn ordinal), same source-wins
         guard (s.lsn >= t.lsn on -1-coalesced lsns, so a null-lsn batch
         row loses to any real table lsn), same tombstone carry (a DELETE
         winner IS the tombstone row; an unmatched DELETE inserts one).

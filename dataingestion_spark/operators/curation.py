@@ -135,8 +135,8 @@ def decontaminate(
     because the synthetic vocabulary is tiny).
 
     Scale shape: the eval side collapses to its distinct 60-bit gram
-    hashes - benchmark suites are millions of grams at most, so Spark
-    broadcasts them (AQE picks the broadcast; the join key is an int64,
+    hashes - benchmark suites are millions of grams at most, so the join
+    broadcasts them explicitly (``F.broadcast``; the join key is an int64,
     not the gram string). The doc side is one scan + explode with NO
     shuffle on the raw grams; only the per-doc distinct-overlap count
     aggregates, and that input is already filtered to eval hits.

@@ -1,7 +1,7 @@
 """Explicit skew salting for hot conversations (SURVEY.md §4).
 
-AQE's skew-join splitting handles moderate skew at runtime, but the north
-rule requires hot conversations to be *explicitly* salted into
+The engine's session runs with AQE off, so nothing splits skewed
+partitions at runtime: hot conversations are *explicitly* salted into
 sub-partitions and reconciled. The mechanism:
 
   * ``detect_hot_keys`` - sample-based frequency estimate of per-conv_id

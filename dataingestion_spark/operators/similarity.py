@@ -115,8 +115,8 @@ def lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's sign bucket.
     The bucket equi-join replaces the nested loop - candidate count drops
-    ~2^n_planes-fold; per-bucket skew is bounded because buckets are
-    single-integer keys AQE can split."""
+    ~2^n_planes-fold. A crowded sign bucket stays one task: the engine's
+    session runs with AQE off, so nothing splits it at runtime."""
     q = queries.select(
         F.col(query_id_col),
         _as_double(vec_col).alias("_qvec"),

@@ -4,8 +4,9 @@ sessionization.
 Both are one-shuffle compositions of existing DataFrame ops (union +
 window / lag + running sum) - no UDFs, no per-row Python - so they keep
 whole-stage codegen and scale exactly like the LWW window: shuffle keyed
-on the entity, sorted runs within partitions, skew handled by the same
-AQE regime as everything else.
+on the entity, sorted runs within partitions. The engine's session runs
+with AQE off, so nothing splits a skewed partition: all of one entity's
+rows land in one task.
 
 As-of join (the kdb / pandas merge_asof / DuckDB ASOF JOIN semantic):
 for each left row, the single right row with the greatest right_ts <=

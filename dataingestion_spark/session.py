@@ -3,8 +3,11 @@
 Mirrors the capability of the reference's optimized session builder
 (/root/reference/spark/src/main/scala/com/example/core/SparkUtils.scala:25-42:
 Kryo, AQE, partition coalescing, checkpoint compression) restated for
-PySpark: AQE + coalescing + skew-join handling, Arrow for pandas UDFs,
-UTC session timezone for deterministic cross-engine comparison.
+PySpark, with one deliberate departure: AQE is OFF. The engine sizes its
+merge exchanges explicitly and handles skew by salting, so it does not
+rely on AQE's runtime re-planning, which costs a job per query stage.
+Also: Arrow for pandas UDFs, UTC session timezone for deterministic
+cross-engine comparison.
 """
 
 from __future__ import annotations
@@ -27,11 +30,9 @@ def build_session(
     if master:
         builder = builder.master(master)
     conf: dict[str, str] = {
-        # Catalyst runtime re-planning: coalesce tiny post-shuffle
-        # partitions and split skewed ones (hot conversations).
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
+        # Each AQE query stage is its own job; skew is handled by
+        # explicit salting (operators/salting.py).
+        "spark.sql.adaptive.enabled": "false",
         # Arrow transfer for every pandas UDF (no per-row Python anywhere).
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # Deterministic timestamps across Spark / DuckDB / pandas.

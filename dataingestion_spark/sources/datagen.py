@@ -27,8 +27,10 @@ operation, primary key, payload, binlog position (here `lsn`), binlog file
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
+import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -253,4 +255,10 @@ def write_change_files(df: DataFrame, out_dir: str | Path) -> list[Path]:
                 dest = out / f"{chunk}{suffix}.parquet"
                 shutil.move(str(part), dest)
                 written.append(dest)
+    # The file source tails a directory oldest-first by modification time,
+    # and chunks written by concurrent tasks can share one: stamp them one
+    # second apart in chunk order.
+    base = time.time() - len(written)
+    for i, dest in enumerate(written):
+        os.utime(dest, (base + i, base + i))
     return written

@@ -120,41 +120,10 @@ def test_compaction_preserves_state_and_purges_tombstones(spark, tmp_table_dir):
     assert raw.filter(F.col("_deleted")).count() == 0
 
 
-def test_join_plan_cow_matches_oracle_and_union_plan(spark, tmp_table_dir):
-    """The large-epoch COW plan (dedup + full-outer join) must produce the
-    same state as the small-epoch union-LWW plan and the replay oracle.
-    Forced by dropping the plan-selection threshold to 0 on one table."""
-    changes = gen_changes(
-        spark, n_events=6_000, n_convs=50, max_turns=25, n_files=4, seed=47,
-        dup_frac=0.1,
-    )
-    changes.persist()
-    expected = oracle.replay(changes.toPandas())
-    lsns = sorted(r[0] for r in changes.select("lsn").distinct().collect())
-    cut = lsns[len(lsns) // 2]
-
-    from pathlib import Path
-    join_tbl = _make_table(spark, Path(tmp_table_dir) / "join")
-    join_tbl.SMALL_EPOCH_EVENTS = 0  # force the join plan (+ session AQE)
-    union_tbl = _make_table(spark, Path(tmp_table_dir) / "union")
-    for e, part in enumerate(
-        [changes.filter(F.col("lsn") <= cut), changes.filter(F.col("lsn") > cut)]
-    ):
-        join_tbl.merge(part, pipeline_id="j", epoch_id=e)
-        union_tbl.merge(part, pipeline_id="u", epoch_id=e)
-
-    assert_table_equals_oracle(join_tbl.read(), expected)
-    assert_table_equals_oracle(union_tbl.read(), expected)
-    a = join_tbl.read().toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    b = union_tbl.read().toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
-
-
 def test_join_plan_late_delete_and_evolution(spark, tmp_table_dir):
-    """Join-plan edge cases: late lower-lsn event below an applied DELETE
-    stays dead; schema evolution mid-stream under the join plan."""
+    """Late lower-lsn event below an applied DELETE stays dead; schema
+    evolution mid-stream."""
     tbl = _make_table(spark, tmp_table_dir, num_buckets=4)
-    tbl.SMALL_EPOCH_EVENTS = 0
     v1 = gen_changes(spark, n_events=2_000, n_convs=25, seed=48)
     v2 = gen_changes(
         spark, n_events=2_000, n_convs=25, seed=48, schema_version=2,

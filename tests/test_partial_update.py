@@ -1,6 +1,6 @@
 """update_mode='partial': the reference replay oracle's dict-merge
 semantics (/root/reference/demo/test_pipeline.sh:244-262) through the real
-lake merge - COW (fold+join plan, both AQE regimes), MOR (overlay delta
+lake merge - COW (fold+join plan), MOR (overlay delta
 rows + read-time resolution), compaction, and the Mongo $set adapter
 end-to-end. Golden state: oracle.replay_partial (the engine-independent
 Python replay)."""
@@ -80,16 +80,6 @@ def _check_against_oracle(spark, tbl, changes):
 
 
 def test_partial_cow_multi_epoch_matches_dict_replay(spark, tmp_path):
-    changes = _replay_stream(spark)
-    tbl = _mk(spark, tmp_path / "t")
-    _apply_epochs(tbl, changes, 6_000)
-    _check_against_oracle(spark, tbl, changes)
-
-
-def test_partial_cow_large_epoch_regime(spark, tmp_path, monkeypatch):
-    """Same stream under the large-epoch conf regime (AQE restored after
-    pre-scan): the partial plan is size-invariant, results must be too."""
-    monkeypatch.setattr(LakeTable, "SMALL_EPOCH_EVENTS", 0)
     changes = _replay_stream(spark)
     tbl = _mk(spark, tmp_path / "t")
     _apply_epochs(tbl, changes, 6_000)

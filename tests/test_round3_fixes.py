@@ -1,5 +1,5 @@
-"""Round-3 hardening: null-lsn plan parity, conf-tuning concurrency
-safety, bounded snapshot cache, trigger/rate-limit surface, and the
+"""Round-3 hardening: the null-lsn rule, merges that write no session
+conf, bounded snapshot cache, trigger/rate-limit surface, and the
 transformer-loading contract for explicit paths.
 
 Each test pins a behavior flagged in round-2 review (VERDICT.md "What's
@@ -84,16 +84,45 @@ def test_null_lsn_rule_small_epoch_union_plan(spark, tmp_path):
     )
 
 
-def test_null_lsn_rule_large_epoch_join_plan(spark, tmp_path, monkeypatch):
-    """The dedup+full-outer-join plan (forced via SMALL_EPOCH_EVENTS=0)
-    must produce byte-identical state to the union plan for null-lsn
-    rows - the same batch may land on either side of the size threshold
-    (ADVICE.md lake/table.py:960)."""
-    monkeypatch.setattr(LakeTable, "SMALL_EPOCH_EVENTS", 0)
-    assert (
-        _null_lsn_scenario(spark, tmp_path / "t_large")
-        == EXPECTED_NULL_LSN_STATE
+def test_merges_never_write_session_conf(spark, tmp_path, monkeypatch):
+    """No merge plan sets or unsets session conf, so a query running
+    beside a merge on the same SparkSession plans under the conf it was
+    given: COW (union and broadcast-probe), MOR, partial-update and
+    merge_into."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    writes: list[tuple] = []
+    orig_set, orig_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def rec_set(self, key, value):
+        writes.append(("set", key, value))
+        return orig_set(self, key, value)
+
+    def rec_unset(self, key):
+        writes.append(("unset", key))
+        return orig_unset(self, key)
+
+    monkeypatch.setattr(RuntimeConfig, "set", rec_set)
+    monkeypatch.setattr(RuntimeConfig, "unset", rec_unset)
+
+    grow = gen_changes(spark, n_events=2_000, n_convs=40, seed=31)
+    small = gen_changes(spark, n_events=100, n_convs=40, seed=32).withColumn(
+        "lsn", F.col("lsn") + 10**6
     )
+    cow = _mk_table(spark, str(tmp_path / "cow"))
+    cow.merge(grow, pipeline_id="p", epoch_id=0)
+    cow.merge(small, pipeline_id="p", epoch_id=1)
+    assert {s.summary.get("merge_plan") for s in cow.history()} >= {
+        "cow-union", "cow-broadcast",
+    }
+    mor = _mk_table(spark, str(tmp_path / "mor"))
+    mor.merge(grow, pipeline_id="p", epoch_id=0, write_mode="mor")
+    partial = _mk_table(spark, str(tmp_path / "partial"))
+    partial.merge(grow, pipeline_id="p", epoch_id=0, update_mode="partial")
+    src = cow.read().limit(5).withColumn("text", F.lit("merged-into"))
+    cow.merge_into(src, when_matched_update=True)
+    assert cow.read().filter(F.col("text") == "merged-into").count() == 5
+    assert writes == []
 
 
 def test_concurrent_merges_two_tables_one_session(spark, tmp_path):

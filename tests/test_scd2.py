@@ -211,3 +211,37 @@ def test_scd2_rejects_mismatched_destination(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="not the SCD2 history"):
         sync_scd2(src, str(tmp_path / "other"))
+
+
+def test_scd2_retention_drops_only_closed_versions_before_cutoff(spark, tmp_path):
+    """apply_retention on valid_to_lsn ages out closed row-versions whose
+    interval ended before the cutoff; open (is_current, NULL valid_to_lsn)
+    rows never compare below a cutoff, so they all survive."""
+    src = _src(spark, tmp_path)
+    ch = gen_changes(spark, n_events=3_000, n_convs=40, seed=7)
+    hist_path = str(tmp_path / "hist")
+    for epoch, (lo, hi) in enumerate([(0, 1_000), (1_000, 2_000), (2_000, 3_100)]):
+        src.merge(
+            ch.filter((F.col("lsn") >= lo * 2) & (F.col("lsn") < hi * 2)),
+            pipeline_id="p", epoch_id=epoch,
+        )
+        sync_scd2(src, hist_path, num_buckets=4)
+    hist = LakeTable(spark, hist_path)
+    cutoff = src.current_version()  # the last sync's closures stay
+    key = ("conv_id", "turn_idx", "valid_from_lsn")
+    before = hist.read()
+    aged = _rows(before.filter(F.col("valid_to_lsn") < cutoff), key)
+    kept = _rows(before.filter(~(F.col("valid_to_lsn") < cutoff)
+                               | F.col("valid_to_lsn").isNull()), key)
+    current = _rows(before.filter(F.col("is_current")), key)
+    assert aged and current
+    # closed versions at the cutoff itself are kept
+    assert before.filter(F.col("valid_to_lsn") == cutoff).count() > 0
+
+    assert hist.apply_retention("valid_to_lsn", cutoff) is not None
+    after = hist.read()
+    assert _rows(after, key) == kept
+    assert _rows(after.filter(F.col("is_current")), key) == current
+    assert after.filter(F.col("valid_to_lsn") < cutoff).count() == 0
+    fsck = hist.verify_integrity()
+    assert fsck["ok"], fsck["errors"]
