@@ -888,7 +888,7 @@ class LakeTable:
                 list(phys.fields) + [T.StructField(PARTIAL_COL, T.BooleanType(), True)]
             )
         if not files:
-            return self.spark.createDataFrame([], phys)
+            return self._empty(phys)
         if renames is None:
             renames = snap.properties.get("renames", {})
         cur_names = {f.name for f in phys.fields}
@@ -1418,10 +1418,8 @@ class LakeTable:
         payload = [f.name for f in snap_b.schema.fields if f.name not in pk]
         joined = self._diff_images(from_version, snap_b)
         if joined is None:
-            out_fields = [
-                T.StructField("change_type", T.StringType(), False)
-            ] + list(snap_b.schema.fields)
-            return self.spark.createDataFrame([], T.StructType(out_fields))
+            chg = T.StructField("change_type", T.StringType(), False)
+            return self._empty(T.StructType([chg, *snap_b.schema.fields]))
         j, is_insert, is_delete, is_update = joined
 
         def _tagged(tag: str, side: str):
@@ -1492,15 +1490,11 @@ class LakeTable:
         snap_b = self.snapshot(to_version)
         pk = list(snap_b.pk_fields)
         payload = [f.name for f in snap_b.schema.fields if f.name not in pk]
-        out_schema = T.StructType(
-            [
-                T.StructField("key", T.StringType(), False),
-                T.StructField("value", T.StringType(), False),
-            ]
-        )
         joined = self._diff_images(from_version, snap_b)
         if joined is None:
-            return self.spark.createDataFrame([], out_schema)
+            return self._empty(T.StructType(
+                [T.StructField(c, T.StringType(), False) for c in ("key", "value")]
+            ))
         j, is_insert, is_delete, is_update = joined
 
         def _image(side: str) -> Column:
@@ -1549,127 +1543,20 @@ class LakeTable:
         use_bloom: bool = True,
     ) -> DataFrame:
         """Point lookups: the live rows for an explicit key set - the
-        serving-side read of a CDC-fed table ("fetch these conversations"),
-        priced by the KEYS' buckets, never the table.
+        serving-side read of a CDC-fed table ("fetch these turns"). k keys
+        touch at most min(k, num_buckets) buckets, whatever the table size.
 
         ``keys`` is a DataFrame carrying the pk columns (extra columns are
-        ignored) or a list of tuples/values in pk order. The first pk
-        field's bucket transform prunes the scan to the buckets the keys
-        can live in - O(distinct buckets) driver-side, each bucket's files
-        read through the normal manifest/MOR-resolution path - then a
-        semi-join keeps exactly the requested keys. Inside each file,
-        clustered compaction's pk sort lets parquet row-group pruning cut
-        further. ``broadcast_keys`` (default) hints the key set to every
-        executor - right for serving-size lookups; pass False when joining
-        a huge key relation, which then shuffles instead.
-
-        Scale shape at 100 TB: k keys over B buckets touch at most
-        min(k, B) buckets; for a handful of conversations that is a few
-        file reads regardless of table size."""
+        ignored) or a list of tuples/values in pk order. This is
+        :meth:`read_prefix` at full pk width plus the file-level bloom
+        consult (``use_bloom``); :meth:`_keyed_read` has the plan."""
         snap = self.snapshot(version)
-        pk = list(snap.pk_fields)
-        if not isinstance(keys, DataFrame):
-            rows = [k if isinstance(k, tuple) else (k,) for k in keys]
-            keys = self.spark.createDataFrame(
-                rows, T.StructType([snap.schema[c] for c in pk])
-            )
-        missing = [c for c in pk if c not in keys.columns]
+        keys, _ = self._key_prefix(snap, keys)
+        missing = [c for c in snap.pk_fields if c not in keys.columns]
         if missing:
             raise ValueError(f"keys relation lacks pk columns {missing}")
-        # a NULL key matches nothing under the equi semi-join; dropping it
-        # here keeps it out of the non-nullable literal probe below
-        keys = keys.select(
-            *[F.col(c).cast(snap.schema[c].dataType).alias(c) for c in pk]
-        ).dropna(subset=pk).distinct()
-        keyed = keys.withColumn(
-            BUCKET_COL,
-            bucket_expr(pk[0], snap.num_buckets, key_type=snap.schema[pk[0]].dataType),
-        )
-        # driver memory stays bounded at ANY key count: the tuple
-        # collect is capped, and past the cap only the distinct bucket
-        # set (<= num_buckets rows) and a capped pk0 sample come back.
-        # The serving-size path (the common case) stays ONE driver job.
-        kdist = (
-            keyed.select(BUCKET_COL, *pk)
-            .limit(self.PUSHDOWN_MAX_KEYS + 1)
-            .collect()
-        )
-        small = len(kdist) <= self.PUSHDOWN_MAX_KEYS
-        if small:
-            buckets = sorted({int(r[0]) for r in kdist})
-            pk0_vals = sorted({r[1] for r in kdist if r[1] is not None})
-        else:
-            buckets = sorted(
-                int(r[0])
-                for r in keyed.select(BUCKET_COL).distinct().collect()
-            )
-            # composite pks: many tuples can still span FEW first-pk
-            # values (one conversation, many turns) - sample pk0
-            # separately so the scan pushdown survives past the cap
-            pk0_rows = (
-                keyed.select(pk[0])
-                .distinct()
-                .limit(self.PUSHDOWN_MAX_KEYS + 1)
-                .collect()
-            )
-            pk0_vals = (
-                sorted(r[0] for r in pk0_rows if r[0] is not None)
-                if len(pk0_rows) <= self.PUSHDOWN_MAX_KEYS
-                else []
-            )
-        if not buckets:
-            return self.spark.createDataFrame([], snap.schema)
-        if small:
-            # build the probe from the COLLECTED tuples, not the lazy
-            # relation: the bucket list, bloom consult, and pushdown all
-            # derive from this one sample, and re-evaluating a caller's
-            # possibly-nondeterministic keys lineage for the semi-join
-            # could produce keys whose buckets were never opened. A
-            # local literal relation pins all four consumers to the SAME
-            # key set - and costs the caller's lineage exactly once.
-            probe = self.spark.createDataFrame(
-                [tuple(r[1:]) for r in kdist],
-                T.StructType([snap.schema[c] for c in pk]),
-            )
-            if broadcast_keys:
-                probe = F.broadcast(probe)
-        else:
-            probe = keyed.select(*pk)
-            # explicit broadcast hints bypass autoBroadcastJoinThreshold:
-            # a change-volume-sized key relation (the sync paths)
-            # shuffles instead of being funneled through the driver onto
-            # every executor. (Past the cap the key relation must be
-            # deterministic - same contract as any repeated-read input.)
-            if broadcast_keys and keyed.count() <= self.BROADCAST_KEYS_MAX:
-                probe = F.broadcast(probe)
-        file_map = delta_map = None
-        if use_bloom and small:
-            # File-level bloom skipping (lake/bloom.py, Hudi bloom-index
-            # analog): drop candidate files that provably hold none of the
-            # keys BEFORE the scan is planned. Unindexed files stay.
-            pruned = self._bloom_prune(
-                snap, buckets, [tuple(r[1:]) for r in kdist]
-            )
-            if pruned is not None:
-                file_map, delta_map, _ = pruned
-                if not any(file_map.values()) and not any(delta_map.values()):
-                    # every candidate file proven key-free
-                    return self.spark.createDataFrame([], snap.schema)
-        df = self._resolved(
-            snap, buckets, file_map=file_map, delta_map=delta_map
-        ).filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-        if pk0_vals:
-            # Key-predicate pushdown: an IN(<first pk>) filter reaches the
-            # parquet scan, where clustered compaction's pk sort (row-group
-            # min/max), dictionary pages, and the pk bloom filters written
-            # at compaction each skip row groups that provably lack the
-            # keys - the file is opened but its data pages mostly aren't
-            # read. The semi-join below stays the exact filter (composite
-            # pks: IN on pk[0] is a superset). Above the cap the literal
-            # list stops paying for itself; the semi-join alone is exact.
-            df = df.filter(F.col(pk[0]).isin(pk0_vals))
-        return df.join(probe, on=pk, how="left_semi").select(
-            *[f.name for f in snap.schema.fields]
+        return self._keyed_read(
+            snap, keys, list(snap.pk_fields), broadcast_keys, use_bloom
         )
 
     def read_prefix(
@@ -1679,107 +1566,123 @@ class LakeTable:
         broadcast_keys: bool = True,
     ) -> DataFrame:
         """Live rows whose LEADING pk fields match any key in the set -
-        "fetch these whole conversations" for a (conv_id, turn_idx)
-        table, the serving read :meth:`read_keys` cannot express (it
-        requires every pk field). Priced identically: the bucket
-        transform hashes ONLY the first pk field, so a prefix is exactly
-        as bucket-prunable as a full key - k prefixes touch at most
-        min(k, num_buckets) buckets regardless of table size.
+        "fetch these whole conversations" for a (conv_id, turn_idx) table,
+        which :meth:`read_keys` (every pk field) cannot express. The bucket
+        transform hashes ONLY the first pk field, so k prefixes touch at
+        most min(k, num_buckets) buckets, like full keys.
 
-        ``keys`` is a DataFrame carrying the first k pk columns (k =
-        the longest leading run of pk fields present; other columns are
-        ignored) or a list of scalars/tuples in pk order. The file-level
-        pk bloom index is NOT consulted (its bitmaps hash full pk
-        tuples, so a prefix can prove nothing); the IN(<first pk>)
-        pushdown still prunes row groups inside each opened file."""
+        ``keys`` is a DataFrame carrying the first k pk columns (k = the
+        longest leading run of pk fields present; other columns are
+        ignored) or a list of scalars/tuples in pk order. The pk bloom
+        index is NOT consulted: its bitmaps hash full pk tuples, so a
+        prefix proves nothing."""
         snap = self.snapshot(version)
-        pk = list(snap.pk_fields)
-        if not isinstance(keys, DataFrame):
-            rows = [k if isinstance(k, tuple) else (k,) for k in keys]
-            widths = {len(r) for r in rows}
-            if len(widths) > 1:
-                raise ValueError(f"mixed prefix widths {sorted(widths)}")
-            k = widths.pop() if widths else 1
-            if not 1 <= k <= len(pk):
-                raise ValueError(
-                    f"prefix width {k} outside 1..{len(pk)} (pk {pk})"
-                )
-            keys = self.spark.createDataFrame(
-                rows, T.StructType([snap.schema[c] for c in pk[:k]])
+        keys, cols = self._key_prefix(snap, keys)
+        if not cols:
+            raise ValueError(
+                f"keys relation lacks the leading pk column {snap.pk_fields[0]!r}"
             )
-        else:
-            k = 0
-            while k < len(pk) and pk[k] in keys.columns:
-                k += 1
-            if k == 0:
-                raise ValueError(
-                    f"keys relation lacks the leading pk column {pk[0]!r}"
-                )
-        prefix = pk[:k]
-        # NULL prefixes match nothing (same as read_keys)
-        keys = keys.select(
-            *[F.col(c).cast(snap.schema[c].dataType).alias(c) for c in prefix]
-        ).dropna(subset=prefix).distinct()
-        keyed = keys.withColumn(
+        return self._keyed_read(snap, keys, cols, broadcast_keys, False)
+
+    def _key_prefix(self, snap: Snapshot, keys) -> tuple[DataFrame, list[str]]:
+        """``keys`` as a DataFrame plus the leading pk fields it carries; a
+        list of scalars/tuples in pk order becomes a frame of that width."""
+        pk = list(snap.pk_fields)
+        if isinstance(keys, DataFrame):
+            k = next((i for i, c in enumerate(pk) if c not in keys.columns), len(pk))
+            return keys, pk[:k]
+        rows = [k if isinstance(k, tuple) else (k,) for k in keys]
+        widths = {len(r) for r in rows}
+        if len(widths) > 1:
+            raise ValueError(f"mixed prefix widths {sorted(widths)}")
+        k = widths.pop() if widths else len(pk)
+        if not 1 <= k <= len(pk):
+            raise ValueError(f"prefix width {k} outside 1..{len(pk)} (pk {pk})")
+        schema = T.StructType([snap.schema[c] for c in pk[:k]])
+        return self.spark.createDataFrame(rows, schema), pk[:k]
+
+    def _keyed_read(
+        self,
+        snap: Snapshot,
+        keys: DataFrame,
+        cols: list[str],
+        broadcast_keys: bool,
+        use_bloom: bool,
+    ) -> DataFrame:
+        """The core of :meth:`read_keys` and :meth:`read_prefix`: live rows
+        whose leading pk fields ``cols`` match a row of ``keys``. Up to
+        ``PUSHDOWN_MAX_KEYS`` keys, ONE capped job collects them, and the
+        buckets, bloom consult, IN(<first pk>) scan filter (row-group
+        pruning) and probe all derive from that sample, so the keys lineage
+        runs once. At width 1 the IN filter is exact and is the whole
+        probe; wider keys semi-join a literal relation of the tuples,
+        broadcast if ``broadcast_keys``. Past the cap, one job counts keys
+        per bucket, a capped pk0 sample feeds the IN filter, and the lazy
+        key relation is the probe, broadcast within BROADCAST_KEYS_MAX."""
+        pk = list(snap.pk_fields)
+        cap = self.PUSHDOWN_MAX_KEYS
+        # a NULL key matches nothing; dropping it keeps it out of the
+        # non-nullable literal probe and the IN list
+        keyed = keys.select(
+            *[F.col(c).cast(snap.schema[c].dataType).alias(c) for c in cols]
+        ).dropna(subset=cols).distinct().withColumn(
             BUCKET_COL,
             bucket_expr(pk[0], snap.num_buckets, key_type=snap.schema[pk[0]].dataType),
         )
-        # same shape as read_keys: ONE capped collect serves the bucket
-        # list, the pk0 pushdown, AND (when complete) the semi-join
-        # probe as a local literal relation - pinning every consumer to
-        # the same sample and costing the caller's lineage exactly once.
-        # Past the cap, driver memory stays bounded: the bucket-set
-        # collect is <= num_buckets rows and the pk0 sample is capped -
-        # a multi-million-conversation sync must not funnel every key
-        # through the driver just to learn which buckets to open.
-        kdist = (
-            keyed.select(BUCKET_COL, *prefix)
-            .distinct()
-            .limit(self.PUSHDOWN_MAX_KEYS + 1)
-            .collect()
-        )
-        small = len(kdist) <= self.PUSHDOWN_MAX_KEYS
-        if small:
+
+        def capped(df: DataFrame) -> list | None:
+            # coalesce(1) makes it one job: a bare limit plans as
+            # CollectLimit, whose incremental take runs two
+            rows = df.limit(cap + 1).coalesce(1).collect()
+            return rows if len(rows) <= cap else None
+
+        kdist = capped(keyed.select(BUCKET_COL, *cols))
+        if kdist is not None:
             buckets = sorted({int(r[0]) for r in kdist})
-            pk0_vals = sorted({r[1] for r in kdist if r[1] is not None})
-        else:
-            buckets = sorted(
-                {int(r[0]) for r in keyed.select(BUCKET_COL).distinct().collect()}
-            )
-            pk0_rows = (
-                keyed.select(pk[0])
-                .distinct()
-                .limit(self.PUSHDOWN_MAX_KEYS + 1)
-                .collect()
-            )
-            pk0_vals = (
-                sorted(r[0] for r in pk0_rows if r[0] is not None)
-                if len(pk0_rows) <= self.PUSHDOWN_MAX_KEYS
-                else []
-            )
+            tuples = [tuple(r[1:]) for r in kdist]
+            pk0_vals = sorted({t[0] for t in tuples})
+        else:  # per-bucket key counts: <= num_buckets rows
+            per_bucket = keyed.groupBy(BUCKET_COL).count().collect()
+            buckets = sorted(int(r[0]) for r in per_bucket)
+            n_keys = sum(r[1] for r in per_bucket)
+            pk0_rows = capped(keyed.select(pk[0]).distinct())
+            pk0_vals = [] if pk0_rows is None else sorted(r[0] for r in pk0_rows)
         if not buckets:
-            return self.spark.createDataFrame([], snap.schema)
-        if small:
-            probe = self.spark.createDataFrame(
-                [tuple(r[1:]) for r in kdist],
-                T.StructType([snap.schema[c] for c in prefix]),
-            )
-            if broadcast_keys:
-                probe = F.broadcast(probe)
-        else:
-            probe = keyed.select(*prefix)
-            # explicit hints bypass autoBroadcastJoinThreshold - gate on
-            # the measured count so change-volume key sets shuffle-join
-            if broadcast_keys and keyed.count() <= self.BROADCAST_KEYS_MAX:
-                probe = F.broadcast(probe)
-        df = self._resolved(snap, buckets).filter(
-            ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-        )
+            return self._empty(snap.schema)
+        file_map = delta_map = None
+        if use_bloom and kdist is not None:
+            # file-level bloom skipping (lake/bloom.py): drop candidate
+            # files that provably hold none of the keys; unindexed stay
+            pruned = self._bloom_prune(snap, buckets, tuples)
+            if pruned is not None:
+                file_map, delta_map, _ = pruned
+                if not any(file_map.values()) and not any(delta_map.values()):
+                    return self._empty(snap.schema)
+        df = self._resolved(
+            snap, buckets, file_map=file_map, delta_map=delta_map
+        ).filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
         if pk0_vals:
             df = df.filter(F.col(pk[0]).isin(pk0_vals))
-        return df.join(probe, on=prefix, how="left_semi").select(
-            *[f.name for f in snap.schema.fields]
-        )
+        if kdist is None:
+            probe = keyed.select(*cols)
+            if broadcast_keys and n_keys <= self.BROADCAST_KEYS_MAX:
+                probe = F.broadcast(probe)
+            df = df.join(probe, on=cols, how="left_semi")
+        elif len(cols) > 1:  # at width 1 the IN filter is already exact
+            probe = self.spark.createDataFrame(
+                tuples, T.StructType([snap.schema[c] for c in cols])
+            )
+            df = df.join(
+                F.broadcast(probe) if broadcast_keys else probe,
+                on=cols, how="left_semi",
+            )
+        return df.select(*[f.name for f in snap.schema.fields])
+
+    def _empty(self, schema: T.StructType) -> DataFrame:
+        """An empty frame that collects with no job: a bare empty
+        ``createDataFrame`` is an RDD of empty partitions, and collecting
+        it runs a job; ``limit(0)`` plans as an empty LocalRelation."""
+        return self.spark.createDataFrame([], schema).limit(0)
 
     # ------------------------------------------------------------------
     # file-level bloom index (Hudi bloom-index / metadata-table analog)
@@ -2162,7 +2065,7 @@ class LakeTable:
             raise ValueError(f"no such column: {col!r}")
         values = list(values)
         if not values:
-            return self.spark.createDataFrame([], snap.schema)
+            return self._empty(snap.schema)
         buckets, file_map = None, None
         if use_index:
             pruned = self._secondary_prune(snap, col, values)
@@ -2173,7 +2076,7 @@ class LakeTable:
                 {int(b) for b in snap.files} | {int(b) for b in snap.deltas}
             )
         if not buckets:
-            return self.spark.createDataFrame([], snap.schema)
+            return self._empty(snap.schema)
         df = self._resolved(snap, buckets, file_map=file_map).filter(
             ~F.coalesce(F.col(DELETED_COL), F.lit(False))
         )
@@ -2609,19 +2512,16 @@ class LakeTable:
     # degrade to "no pruning for those files" - never a wrong answer.
     COLLECT_FILE_STATS = True
 
-    # read_keys pushes IN(<first pk>) to the scan up to this many distinct
-    # values; beyond it the literal list costs more than it prunes and the
-    # exact semi-join carries alone.
+    # the keyed reads collect up to this many distinct keys to the driver
+    # and push IN(<first pk>) to the scan; beyond it the literal list
+    # costs more than it prunes and the lazy key relation is the probe.
     PUSHDOWN_MAX_KEYS = 10_000
 
-    # read_keys/read_prefix honor broadcast_keys only up to this many
-    # keys (measured on the materialized key relation): an explicit
-    # broadcast hint bypasses autoBroadcastJoinThreshold, and a
-    # change-volume-sized key set (sync_scd2/sync_aggregate route whole
-    # epochs' dirty keys through these reads) must shuffle-join rather
-    # than be funneled through the driver onto every executor. 10^6
-    # short key rows is a few tens of MB broadcast - comfortably inside
-    # executor memory at any table size.
+    # past that cap the keyed reads broadcast the key relation only up to
+    # this many keys (measured): an explicit hint bypasses
+    # autoBroadcastJoinThreshold, and a sync's change-volume key set must
+    # shuffle-join instead. 10^6 short key rows is a few tens of MB.
+    # _change_hull caps its broadcast key set at the same size.
     BROADCAST_KEYS_MAX = 1_000_000
 
     @staticmethod

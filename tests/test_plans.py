@@ -87,12 +87,12 @@ def test_merge_read_prunes_to_manifest_files(spark, tmp_path):
     assert pruned.filter(F.col("_bucket") != some_bucket).count() == 0
 
 
-def test_cow_join_plan_shape_no_python_in_hot_path(spark, tmp_path):
-    """Dedup + full-outer join of a batch against the table (the shape of
-    the partial-update COW plan): the in-batch dedup keeps its partial
-    (map-side) combine, the batch-vs-table probe is a real join (not a
-    nested loop), and no Python eval appears anywhere in the job."""
-    from pyspark.sql import types as T
+def test_cow_join_plan_shape_no_python_in_hot_path(spark, tmp_path, monkeypatch):
+    """The partial-update COW merge's real plan (the fold + full-outer
+    join that `_merge_partial` hands to the file writer): the in-batch
+    fold keeps its partial (map-side) combine, the batch-vs-table probe
+    is a real join (not a nested loop), and no Python eval appears
+    anywhere in the job."""
     from dataingestion_spark.lake import LakeTable
     from dataingestion_spark.sources.datagen import gen_changes
     from tests.util import TRANSCRIPT_SCHEMA
@@ -106,27 +106,25 @@ def test_cow_join_plan_shape_no_python_in_hot_path(spark, tmp_path):
         gen_changes(spark, n_events=500, n_convs=10, seed=50),
         pipeline_id="p", epoch_id=0,
     )
-    # conform + winners + full-outer join
-    snap = tbl.snapshot()
-    schema = snap.schema
-    changes = gen_changes(spark, n_events=500, n_convs=10, seed=51)
-    from dataingestion_spark.lake.table import (
-        BUCKET_COL, DELETED_COL, LSN_COL, bucket_expr,
-    )
-    from dataingestion_spark.operators.lww import lww_dedupe
+    plans = []
+    write = LakeTable._write_data_files
 
-    src = (
-        changes.withColumn(DELETED_COL, F.col("op") == "DELETE")
-        .withColumn(LSN_COL, F.col("lsn").cast("long"))
+    def spy(self, df, *args, **kw):
+        plans.append(_plan(df))
+        return write(self, df, *args, **kw)
+
+    monkeypatch.setattr(LakeTable, "_write_data_files", spy)
+    tbl.merge(
+        gen_changes(spark, n_events=500, n_convs=10, seed=51).withColumn(
+            "lsn", F.col("lsn") + 10**6
+        ),
+        pipeline_id="p", epoch_id=1, update_mode="partial",
     )
-    src = tbl._conform(src, schema).withColumn(
-        BUCKET_COL, bucket_expr("conv_id", snap.num_buckets)
-    )
-    winners = lww_dedupe(src, ["conv_id", "turn_idx"], [LSN_COL, "ts"])
-    current = tbl._resolved(snap, None, schema=schema)
-    joined = winners.join(current, ["conv_id", "turn_idx"], "full_outer")
-    plan = _plan(joined)
-    assert "partial_max_by" in plan, "in-batch dedup lost map-side combine"
+    assert tbl.snapshot().operation == "merge-partial"
+    assert len(plans) == 1
+    plan = plans[0]
+    assert "FullOuter" in plan
+    assert "partial_max_by" in plan, "in-batch fold lost map-side combine"
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -195,3 +193,71 @@ def test_pruned_changelog_diff_is_one_exchange(spark, tmp_path):
     assert len(re.findall(pk_exchange, final)) == 1
     assert len(re.findall(r"[-:] BroadcastExchange ", final)) == 1
     assert "LeftSemi" in final
+
+
+def test_keyed_reads_job_budget(spark, tmp_path):
+    """Keyed serving reads run only the jobs that do work: one job for
+    the capped key collect, a broadcast job only for a composite probe,
+    the caller's collect, and none at all for a provably empty answer.
+    The count runs from before each call (the key collect is eager) to
+    after its collect."""
+    from dataingestion_spark.lake import LakeTable
+    from dataingestion_spark.sources.datagen import gen_changes
+    from tests.util import TRANSCRIPT_SCHEMA
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        tbl = LakeTable.create(
+            spark, tmp_path / "t", TRANSCRIPT_SCHEMA,
+            pk_fields=["conv_id", "turn_idx"], order_fields=["lsn", "ts"],
+            num_buckets=4,
+        )
+        tbl.merge(
+            gen_changes(spark, n_events=3_000, n_convs=40, seed=31),
+            pipeline_id="p", epoch_id=0, write_mode="mor",
+        )
+        tbl.merge(
+            gen_changes(spark, n_events=300, n_convs=40, seed=32).withColumn(
+                "lsn", F.col("lsn") + 10**6
+            ),
+            pipeline_id="p", epoch_id=1, write_mode="mor",
+        )
+        assert tbl.update_bloom_index()["applied"]
+        state = tbl.read()
+        scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+
+        def run(read):
+            before = scheduler.numTotalJobs()
+            rows = read().collect()
+            return scheduler.numTotalJobs() - before, sorted(map(tuple, rows))
+
+        def want(df):
+            return sorted(map(tuple, df.collect()))
+
+        pk = ["conv_id", "turn_idx"]
+        # one key of each of six conversations, so the keys span buckets
+        firsts = state.groupBy("conv_id").agg(F.min("turn_idx")).orderBy("conv_id")
+        present = [tuple(r) for r in firsts.limit(6).collect()]
+        absent = [("conv_absent_1", 1), ("conv_absent_2", 3)]
+        jobs, got = run(lambda: tbl.read_keys(present + absent))
+        assert jobs <= 3, jobs
+        hit = F.struct(*pk).isin([F.struct(F.lit(c), F.lit(t)) for c, t in present])
+        assert got == want(state.filter(hit)) and len(got) == len(present)
+
+        jobs, got = run(lambda: tbl.read_keys([("conv_absent_1", 1)]))
+        assert jobs <= 1, jobs
+        assert got == []
+
+        convs = [c for c, _ in present[:2]]
+        jobs, got = run(lambda: tbl.read_prefix(convs))
+        assert jobs <= 2, jobs
+        assert got == want(state.filter(F.col("conv_id").isin(convs)))
+
+        v = tbl.current_version()
+        tbl.compact()
+        jobs, got = run(lambda: tbl.read_changes(v))
+        assert jobs == 0, jobs
+        assert got == []
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
