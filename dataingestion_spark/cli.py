@@ -88,6 +88,20 @@ def _parquet_rows(spark, path: str) -> int:
     return sum(pq.ParquetFile(str(f)).metadata.num_rows for f in local)
 
 
+def _print_sync(src, dst, key: str, snap) -> None:
+    """A sync command's report: the source version, the destination
+    version under ``key``, and whether this call committed."""
+    print(
+        json.dumps(
+            {
+                "src_version": src.current_version(),
+                key: dst.current_version(),
+                "applied": snap is not None,
+            }
+        )
+    )
+
+
 def main(argv: list[str] | None = None) -> int:
     parser = argparse.ArgumentParser(prog="dataingestion_spark")
     sub = parser.add_subparsers(dest="cmd", required=True)
@@ -706,16 +720,7 @@ def main(argv: list[str] | None = None) -> int:
             maxs=[c.strip() for c in (a.max_cols or "").split(",") if c.strip()],
             pipeline_id=a.pipeline_id,
         )
-        dst = LakeTable(spark, a.out)
-        print(
-            json.dumps(
-                {
-                    "src_version": src.current_version(),
-                    "view_version": dst.current_version(),
-                    "applied": snap is not None,
-                }
-            )
-        )
+        _print_sync(src, LakeTable(spark, a.out), "view_version", snap)
     elif a.cmd == "lshindex":
         from dataingestion_spark.lake.sync import sync_band_index
 
@@ -730,16 +735,7 @@ def main(argv: list[str] | None = None) -> int:
             num_bands=a.num_bands,
             pipeline_id=a.pipeline_id,
         )
-        dst = LakeTable(spark, a.out)
-        print(
-            json.dumps(
-                {
-                    "src_version": src.current_version(),
-                    "index_version": dst.current_version(),
-                    "applied": snap is not None,
-                }
-            )
-        )
+        _print_sync(src, LakeTable(spark, a.out), "index_version", snap)
     elif a.cmd == "bloomindex":
         cfg = DatasetConfig.load(a.config)
         tbl = LakeTable(spark, cfg.table_path)
@@ -1028,15 +1024,7 @@ def main(argv: list[str] | None = None) -> int:
             src, dst, pipeline_id=a.pipeline_id,
             write_mode=a.write_mode or getattr(cfg, "write_mode", "cow"),
         )
-        print(
-            json.dumps(
-                {
-                    "src_version": src.current_version(),
-                    "dst_version": dst.current_version(),
-                    "applied": snap is not None,
-                }
-            )
-        )
+        _print_sync(src, dst, "dst_version", snap)
     elif a.cmd == "detect":
         from dataingestion_spark.sources.cdc_formats import detect_cdc_format
 
@@ -1063,16 +1051,7 @@ def main(argv: list[str] | None = None) -> int:
             src, a.out, pipeline_id=a.pipeline_id,
             num_buckets=a.num_buckets, write_mode=a.write_mode,
         )
-        dst = LakeTable(spark, a.out)
-        print(
-            json.dumps(
-                {
-                    "src_version": src.current_version(),
-                    "history_version": dst.current_version(),
-                    "applied": snap is not None,
-                }
-            )
-        )
+        _print_sync(src, LakeTable(spark, a.out), "history_version", snap)
     elif a.cmd == "subscribe":
 
         def _fields(spec: str) -> list[tuple[str, str]]:

@@ -9,6 +9,15 @@ The reference ships one hop (Kafka → lake,
 /root/reference/spark/src/main/scala/com/example/Phase2Job.scala); this
 operator makes the lake itself a change SOURCE so hops compose.
 
+Every sync here (mirror, aggregate view, SCD2 history, band index) runs
+one protocol, written once in :func:`_sync`: pin the source head
+snapshot, open the destination and gate it against the shape derived
+from that snapshot (:func:`_derived_table`), stop when the destination's
+cursor is current, refuse an expired cursor, and merge a SEED batch of
+the full state (first sync) or a STEP batch of the persisted diff since
+the cursor. A destination that lags only by new or widened source
+columns is evolved by the sync's own merge; any other drift refuses.
+
 Exactly-once without a new mechanism: the SOURCE SNAPSHOT VERSION is the
 downstream epoch id, so the destination's existing epoch-marker
 idempotency dedupes redeliveries — a crash after the destination commit
@@ -35,25 +44,38 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from dataingestion_spark.lake.table import LakeTable, Snapshot
+from dataingestion_spark.schema.evolution import ChangeType, compare_schemas
 
 
 RESERVED_BATCH_COLS = ("op", "lsn", "source_file")
 
 
-def _check_reserved(cols, context: str) -> None:
+def _check_reserved(cols, context: str, reserved=RESERVED_BATCH_COLS) -> None:
     """The change-batch envelope appends literal op/lsn/source_file
-    columns; a source whose USER schema already carries any of these
-    names would yield duplicate columns and ambiguous references in the
-    downstream merge. Fail fast with the fix instead."""
-    clash = [c for c in RESERVED_BATCH_COLS if c in cols]
+    columns (an SCD2 history also its validity columns); a source whose
+    USER schema already carries any of these names would yield duplicate
+    columns and ambiguous references in the downstream merge. Fail fast
+    with the fix instead."""
+    clash = [c for c in reserved if c in cols]
     if clash:
         raise ValueError(
             f"{context}: source schema already contains reserved "
-            f"change-batch column(s) {clash}; rename them before syncing"
+            f"column(s) {clash}; rename them before syncing"
         )
+
+
+def _stamp(rows: DataFrame, v: int, kind: str) -> DataFrame:
+    """Finish op-tagged rows as a change batch of source version ``v``:
+    the version is the batch-wide ``lsn`` and ``{kind}@v{v}`` the
+    ``source_file`` tag."""
+    return rows.select(
+        "*",
+        F.lit(v).cast("long").alias("lsn"),
+        F.lit(f"{kind}@v{v}").alias("source_file"),
+    )
 
 
 def changes_to_batch(diff: DataFrame, lsn: int) -> DataFrame:
@@ -63,18 +85,94 @@ def changes_to_batch(diff: DataFrame, lsn: int) -> DataFrame:
     the batch-wide lsn. One row per key (net diff), so in-batch LWW is
     trivially satisfied; across syncs the version is strictly increasing,
     so late redeliveries order correctly."""
-    _check_reserved(
-        [c for c in diff.columns if c != "change_type"], "changes_to_batch"
-    )
-    return diff.select(
+    payload = [c for c in diff.columns if c != "change_type"]
+    _check_reserved(payload, "changes_to_batch")
+    rows = diff.select(
         F.when(F.col("change_type") == "insert", F.lit("INSERT"))
         .when(F.col("change_type") == "update", F.lit("UPDATE"))
         .otherwise(F.lit("DELETE"))
         .alias("op"),
-        *[c for c in diff.columns if c != "change_type"],
-        F.lit(lsn).cast("long").alias("lsn"),
-        F.lit(f"sync@v{lsn}").alias("source_file"),
+        *payload,
     )
+    return _stamp(rows, lsn, "sync")
+
+
+def _derived_table(
+    src: LakeTable, snap: Snapshot, dst: "LakeTable | str", schema,
+    pk: list[str], what: str, num_buckets: int, properties: dict | None = None,
+) -> LakeTable:
+    """Open ``dst`` (a table, or a path created with ``schema``/``pk``)
+    and gate it against ``schema``, derived from the pinned source
+    ``snap``: the pk must match, and the drift (`compare_schemas`) may
+    only add or widen SOURCE columns - the sync's merge evolves those.
+    A BREAKING drift (dropped, renamed or narrowed column) or an added
+    non-source column (an aggregate spec change: a new ``sum_x``) refuses."""
+    if isinstance(dst, str) or hasattr(dst, "__fspath__"):
+        probe = LakeTable(src.spark, dst)
+        dst = probe if probe.exists() else LakeTable.create(
+            src.spark, dst, schema, pk_fields=list(pk), order_fields=["lsn"],
+            num_buckets=num_buckets, properties=properties,
+        )
+    have = dst.snapshot()
+    cmp = compare_schemas(have.schema, schema)
+    foreign = [c for c in cmp.added if c not in snap.schema.names]
+    breaking = cmp.change_type == ChangeType.BREAKING
+    if list(have.pk_fields) != list(pk) or breaking or foreign:
+        raise ValueError(
+            f"destination is not the {what} (pk {have.pk_fields} vs "
+            f"{list(pk)}; {cmp.describe()}); if the source renamed a "
+            "column, apply the same rename_column to the destination, "
+            "else match the original spec, or point at a fresh path as "
+            "the last resort"
+        )
+    return dst
+
+
+def _sync(
+    src: LakeTable, open_dst: Callable[[Snapshot], LakeTable],
+    pipeline_id: str, kind: str, write_mode: str,
+    seed: Callable[[LakeTable, Snapshot, DataFrame], DataFrame],
+    step: Callable[[LakeTable, Snapshot, DataFrame], DataFrame],
+    preimages: bool = False,
+) -> Snapshot | None:
+    """The sync protocol (module docstring): pin the source head
+    ``snap``, ``open_dst(snap)``, and merge ``seed(dst, snap, state)`` or
+    ``step(dst, snap, diff)`` - both return batches stamped ``kind`` - with
+    the source version as epoch id and ``{kind}_from``/``{kind}_to``
+    lineage. ``preimages`` asks the diff for update pre-images."""
+    cur = src.current_version()
+    snap = src.snapshot(cur)
+    dst = open_dst(snap)
+    last = dst.last_applied_epoch(pipeline_id)
+    if last >= cur:
+        return None
+    lineage = {f"{kind}_from": None if last == -1 else last, f"{kind}_to": cur}
+
+    def _merge(batch: DataFrame) -> Snapshot | None:
+        return dst.merge(batch, pipeline_id=pipeline_id, epoch_id=cur,
+                         write_mode=write_mode, lineage=lineage)
+
+    if last == -1:
+        return _merge(seed(dst, snap, src.read(version=cur)))
+    retained = src.retained_versions()
+    if last not in retained:
+        raise ValueError(
+            f"{kind} cursor v{last} expired from source history "
+            f"(oldest retained: v{retained[0]}); re-seed into a fresh "
+            "destination path (its first sync copies the full state)"
+        )
+    # persist (NOT checkpoint): the diff feeds every consumer of the
+    # step batch, and the merge evaluates its batch more than once -
+    # cache the diff once instead of re-running it per consumer, while a
+    # lost executor's blocks recompute via lineage (a checkpoint's would
+    # fail the sync unrecoverably).
+    diff = src.read_changes(last, cur, include_preimages=preimages).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    try:
+        return _merge(step(dst, snap, diff))
+    finally:
+        diff.unpersist()
 
 
 def sync_incremental(
@@ -94,45 +192,20 @@ def sync_incremental(
     caller's responsibility to keep consistent across updates.
 
     Returns the destination snapshot, or None when the source has no new
-    commits. The FIRST sync seeds the destination with the source's full
-    current state (as INSERTs), so it is correct even when the source's
-    early snapshots have been expired; later syncs are incremental and
-    raise if the cursor predates the source's retained history
-    (expire_snapshots outran this consumer — the Kafka retention-loss
-    analog; drop the destination's cursor to re-seed)."""
-    cur = src.current_version()
-    last = dst.last_applied_epoch(pipeline_id)
-    if last >= cur:
-        return None
-    if last == -1:
-        # initial seed: full state at cur, op=INSERT
-        state = src.read(version=cur)
+    commits. The FIRST sync seeds the source's full current state (as
+    INSERTs); later syncs are incremental (module docstring: a cursor
+    the source's history no longer holds raises)."""
+    finish = transform or (lambda batch: batch)
+
+    def seed(_dst, snap, state):
         _check_reserved(state.columns, "sync_incremental seed")
-        batch = state.select(
-            F.lit("INSERT").alias("op"),
-            *state.columns,
-            F.lit(cur).cast("long").alias("lsn"),
-            F.lit(f"sync@v{cur}").alias("source_file"),
-        )
-        from_v = None
-    else:
-        retained = src.retained_versions()
-        if last not in retained:
-            raise ValueError(
-                f"sync cursor v{last} expired from source history "
-                f"(oldest retained: v{retained[0]}); re-seed the destination"
-            )
-        from_v = last
-        batch = changes_to_batch(src.read_changes(from_v, cur), lsn=cur)
-    if transform is not None:
-        batch = transform(batch)
-    return dst.merge(
-        batch,
-        pipeline_id=pipeline_id,
-        epoch_id=cur,
-        write_mode=write_mode,
-        lineage={"sync_from": from_v, "sync_to": cur},
-    )
+        rows = state.select(F.lit("INSERT").alias("op"), "*")
+        return finish(_stamp(rows, snap.version, "sync"))
+
+    def step(_dst, snap, diff):
+        return finish(changes_to_batch(diff, lsn=snap.version))
+
+    return _sync(src, lambda snap: dst, pipeline_id, "sync", write_mode, seed, step)
 
 
 # ----------------------------------------------------------------------
@@ -154,8 +227,6 @@ def aggregate_schema(
     plain groupBy().agg() would produce) - and one min_/max_ column per
     extremum-tracked column, typed as the source column (min/max preserve
     type)."""
-    from pyspark.sql import types as T
-
     fields = [src_schema[c] for c in group_cols]
     fields.append(T.StructField(count_col, T.LongType(), True))
     for c in sums:
@@ -216,12 +287,10 @@ def sync_aggregate(
     semi-join of the dirty group keys against the source (change-bounded
     group count, but a full scan; prefer pk-prefix groupings at scale).
 
-    Exactly-once rides the same mechanism as :func:`sync_incremental`:
-    the source snapshot version is the destination epoch id (and the
-    batch lsn), so crash-replays are skipped whole and the retried diff
-    is byte-identical. The first sync seeds with a full groupBy at the
-    current version. Rows whose group key is NULL are excluded (a lake
-    pk cannot be null; SQL oracles should filter the same way).
+    Exactly-once, seeding and cursor expiry follow the shared protocol
+    (module docstring); the seed is a full groupBy at the pinned version.
+    Rows whose group key is NULL are excluded (a lake pk cannot be null;
+    SQL oracles should filter the same way).
 
     Caveat: sums over floating columns accumulate the usual FP
     reassociation drift relative to a fresh recompute; counts and
@@ -230,39 +299,17 @@ def sync_aggregate(
     sums = list(sums or [])
     mins = list(mins or [])
     maxs = list(maxs or [])
-    if isinstance(dst, (str,)) or hasattr(dst, "__fspath__"):
-        path = dst
-        probe = LakeTable(src.spark, path)
-        if probe.exists():
-            dst = probe
-        else:
-            dst = LakeTable.create(
-                src.spark,
-                path,
-                aggregate_schema(
-                    src.snapshot().schema, group_cols, sums, count_col,
-                    mins=mins, maxs=maxs,
-                ),
-                pk_fields=list(group_cols),
-                order_fields=["lsn"],
-                num_buckets=num_buckets,
-            )
-    want_cols = {f.name for f in aggregate_schema(
-        src.snapshot().schema, group_cols, sums, count_col,
-        mins=mins, maxs=maxs,
-    ).fields}
-    have_cols = {f.name for f in dst.snapshot().schema.fields}
-    if list(dst.snapshot().pk_fields) != list(group_cols) or want_cols != have_cols:
-        raise ValueError(
-            "destination is not the aggregate view this call describes "
-            f"(pk {dst.snapshot().pk_fields} vs group {group_cols}, "
-            f"columns {sorted(have_cols)} vs {sorted(want_cols)}); "
-            "point at a fresh path or match the original group/sum spec"
+
+    def view_schema(snap: Snapshot):
+        return aggregate_schema(
+            snap.schema, group_cols, sums, count_col, mins=mins, maxs=maxs
         )
-    cur = src.current_version()
-    last = dst.last_applied_epoch(pipeline_id)
-    if last >= cur:
-        return None
+
+    def open_view(snap: Snapshot) -> LakeTable:
+        return _derived_table(
+            src, snap, dst, view_schema(snap), group_cols,
+            "aggregate view this call describes", num_buckets,
+        )
 
     key_ok = None
     for c in group_cols:
@@ -272,57 +319,31 @@ def sync_aggregate(
     sum_cols = [f"sum_{c}" for c in sums]
     ext_cols = [f"min_{c}" for c in mins] + [f"max_{c}" for c in maxs]
 
-    def _merge_totals(totals: DataFrame) -> Snapshot | None:
-        batch = totals.select(
-            F.when(F.col(count_col) > 0, F.lit("UPSERT"))
-            .otherwise(F.lit("DELETE"))
-            .alias("op"),
+    def totals_batch(snap: Snapshot, totals: DataFrame) -> DataFrame:
+        # typed as the view: the count long, each sum long or double
+        types = view_schema(snap)
+        live = F.col(count_col) > 0
+        rows = totals.select(
+            F.when(live, F.lit("UPSERT")).otherwise(F.lit("DELETE")).alias("op"),
             *group_cols,
             *[
-                F.when(F.col(count_col) > 0, F.col(c)).alias(c)
+                F.when(live, F.col(c)).cast(types[c].dataType).alias(c)
                 for c in [count_col, *sum_cols, *ext_cols]
             ],
-            F.lit(cur).cast("long").alias("lsn"),
-            F.lit(f"aggsync@v{cur}").alias("source_file"),
         )
-        return dst.merge(
-            batch,
-            pipeline_id=pipeline_id,
-            epoch_id=cur,
-            write_mode=write_mode,
-            lineage={"aggsync_from": None if last == -1 else last, "aggsync_to": cur},
-        )
+        return _stamp(rows, snap.version, "aggsync")
 
-    if last == -1:
-        state = src.read(version=cur).filter(key_ok)
-        totals = state.groupBy(*group_cols).agg(
+    def seed(_view, snap, state):
+        totals = state.filter(key_ok).groupBy(*group_cols).agg(
             F.count(F.lit(1)).alias(count_col),
-            *[F.sum(F.col(c)).cast(
-                aggregate_schema(src.snapshot().schema, group_cols, [c], count_col)[f"sum_{c}"].dataType
-            ).alias(f"sum_{c}") for c in sums],
+            *[F.sum(F.col(c)).alias(f"sum_{c}") for c in sums],
             *[F.min(F.col(c)).alias(f"min_{c}") for c in mins],
             *[F.max(F.col(c)).alias(f"max_{c}") for c in maxs],
         )
-        return _merge_totals(totals)
+        return totals_batch(snap, totals)
 
-    retained = src.retained_versions()
-    if last not in retained:
-        raise ValueError(
-            f"aggregate-sync cursor v{last} expired from source history "
-            f"(oldest retained: v{retained[0]}); re-seed the destination"
-        )
-    # persist (NOT checkpoint): the diff feeds the group-delta
-    # aggregate, the affected-group point lookup, and the merge's
-    # multi-pass batch evaluation - cache the diff once instead of
-    # once per consumer while staying recoverable under executor loss
-    # (lost cache blocks recompute via lineage; unpersisted in the
-    # finally below).
-    diff = (
-        src.read_changes(last, cur, include_preimages=True)
-        .filter(key_ok)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
+    def step(view, snap, diff):
+        diff = diff.filter(key_ok)
         sign = F.when(
             F.col("change_type").isin("insert", "update_postimage"), F.lit(1)
         ).otherwise(F.lit(-1))
@@ -355,20 +376,19 @@ def sync_aggregate(
         # no-op) flows through as an EMPTY batch, and the merge's existing
         # empty-batch path commits the epoch marker - the take(1) probe would
         # re-run the whole delta aggregate once per sync just to decide this.
-        old = dst.read_keys(deltas.select(*group_cols))
-        agg_types = aggregate_schema(src.snapshot().schema, group_cols, sums, count_col)
+        old = view.read_keys(deltas.select(*group_cols))
         joined = old.join(deltas, on=list(group_cols), how="full_outer")
         totals = joined.select(
             *group_cols,
             (
                 F.coalesce(F.col(count_col), F.lit(0))
                 + F.coalesce(F.col("_d_count"), F.lit(0))
-            ).cast("long").alias(count_col),
+            ).alias(count_col),
             *[
                 (
                     F.coalesce(F.col(f"sum_{c}"), F.lit(0))
                     + F.coalesce(F.col(f"_d_sum_{c}"), F.lit(0))
-                ).cast(agg_types[f"sum_{c}"].dataType).alias(f"sum_{c}")
+                ).alias(f"sum_{c}")
                 for c in sums
             ],
             # least/greatest skip nulls: a brand-new group takes the add-side
@@ -390,15 +410,15 @@ def sync_aggregate(
         )
         if mins or maxs:
             dirty = totals.filter(F.col("_dirty") == 1).select(*group_cols)
-            pk_prefix = list(src.snapshot().pk_fields)[: len(group_cols)]
+            pk_prefix = list(snap.pk_fields)[: len(group_cols)]
             if list(group_cols) == pk_prefix:
                 # the bucket transform hashes the first pk field, so the
                 # recompute is pruned to exactly the dirty groups' buckets
-                rows = src.read_prefix(dirty, version=cur)
+                rows = src.read_prefix(dirty, version=snap.version)
             else:
                 # non-pk grouping: change-bounded group count, but a source
                 # scan (broadcast semi-join keeps only the dirty groups)
-                rows = src.read(version=cur).join(
+                rows = src.read(version=snap.version).join(
                     F.broadcast(dirty), on=list(group_cols), how="left_semi"
                 )
             rec = rows.filter(key_ok).groupBy(*group_cols).agg(
@@ -422,9 +442,12 @@ def sync_aggregate(
                     for c in maxs
                 ],
             )
-        return _merge_totals(totals)
-    finally:
-        diff.unpersist()
+        return totals_batch(snap, totals)
+
+    return _sync(
+        src, open_view, pipeline_id, "aggsync", write_mode, seed, step,
+        preimages=True,
+    )
 
 
 # ----------------------------------------------------------------------
@@ -442,8 +465,6 @@ def scd2_schema(src_schema):
     version that superseded it; NULL while current) and the conventional
     ``is_current`` flag (redundant with valid_to IS NULL, kept because
     every Kimball-style consumer filters on it)."""
-    from pyspark.sql import types as T
-
     return T.StructType(
         [
             *src_schema.fields,
@@ -496,127 +517,60 @@ def sync_scd2(
     so the history records exactly the sequence of states the source
     table actually exposed.
 
-    Exactly-once rides the source-version-as-epoch mechanism of
-    :func:`sync_incremental`: a crash after the destination commit is
-    skipped whole; a crash before replays a byte-identical batch (pure
-    function of two immutable snapshots). The first sync seeds the
-    history with the source's full current state (all current, opened at
-    the seed version); an expired cursor raises (re-seed at a fresh
-    path). Cost per sync scales with the change volume - one changelog
-    read, one prefix lookup of the changed keys, one merge - never with
-    the accumulated history size."""
-    if isinstance(dst, (str,)) or hasattr(dst, "__fspath__"):
-        path = dst
-        probe = LakeTable(src.spark, path)
-        if probe.exists():
-            dst = probe
-        else:
-            _check_reserved(
-                [f.name for f in src.snapshot().schema.fields],
-                "sync_scd2",
-            )
-            clash = [
-                c for c in SCD2_COLS
-                if c in {f.name for f in src.snapshot().schema.fields}
-            ]
-            if clash:
-                raise ValueError(
-                    f"sync_scd2: source schema already carries {clash}; "
-                    "rename them before building a history table"
-                )
-            dst = LakeTable.create(
-                src.spark,
-                path,
-                scd2_schema(src.snapshot().schema),
-                pk_fields=[*src.snapshot().pk_fields, "valid_from_lsn"],
-                order_fields=["lsn"],
-                num_buckets=num_buckets,
-            )
-    src_pk = list(src.snapshot().pk_fields)
-    want_pk = [*src_pk, "valid_from_lsn"]
-    want = {f.name for f in scd2_schema(src.snapshot().schema).fields}
-    have = {f.name for f in dst.snapshot().schema.fields}
-    if list(dst.snapshot().pk_fields) != want_pk or want != have:
-        raise ValueError(
-            "destination is not the SCD2 history of this source "
-            f"(pk {dst.snapshot().pk_fields} vs {want_pk}, "
-            f"columns {sorted(have)} vs {sorted(want)}); "
-            "point at a fresh path"
+    A column the source gains is added by the next sync: row-versions
+    written before it read NULL there, new opens carry its value. A
+    source rename refuses until the history gets the same rename_column.
+
+    Exactly-once, seeding and cursor expiry follow the shared protocol
+    (module docstring); the seed opens the whole current state at the
+    seed version. Cost per sync scales with the change volume - one
+    changelog read, one prefix lookup of the changed keys, one merge -
+    never with the accumulated history size."""
+
+    def open_history(snap: Snapshot) -> LakeTable:
+        _check_reserved(snap.schema.names, "sync_scd2", RESERVED_BATCH_COLS + SCD2_COLS)
+        return _derived_table(
+            src, snap, dst, scd2_schema(snap.schema),
+            [*snap.pk_fields, "valid_from_lsn"],
+            "SCD2 history of this source", num_buckets,
         )
-    cur = src.current_version()
-    last = dst.last_applied_epoch(pipeline_id)
-    if last >= cur:
-        return None
 
-    src_cols = [f.name for f in src.snapshot().schema.fields]
-
-    def _envelope(rows: DataFrame, op: str) -> DataFrame:
+    def opens(snap: Snapshot, rows: DataFrame) -> DataFrame:
         return rows.select(
-            F.lit(op).alias("op"),
-            *[c for c in rows.columns],
-            F.lit(cur).cast("long").alias("lsn"),
-            F.lit(f"scd2sync@v{cur}").alias("source_file"),
-        )
-
-    def _merge(batch: DataFrame) -> Snapshot | None:
-        return dst.merge(
-            batch,
-            pipeline_id=pipeline_id,
-            epoch_id=cur,
-            write_mode=write_mode,
-            lineage={
-                "scd2sync_from": None if last == -1 else last,
-                "scd2sync_to": cur,
-            },
-        )
-
-    def _open(rows: DataFrame) -> DataFrame:
-        return rows.select(
-            *src_cols,
-            F.lit(cur).cast("long").alias("valid_from_lsn"),
+            F.lit("INSERT").alias("op"),
+            *snap.schema.names,
+            F.lit(snap.version).cast("long").alias("valid_from_lsn"),
             F.lit(None).cast("long").alias("valid_to_lsn"),
             F.lit(True).alias("is_current"),
         )
 
-    if last == -1:
-        return _merge(_envelope(_open(src.read(version=cur)), "INSERT"))
+    def seed(_hist, snap, state):
+        return _stamp(opens(snap, state), snap.version, "scd2sync")
 
-    retained = src.retained_versions()
-    if last not in retained:
-        raise ValueError(
-            f"scd2 cursor v{last} expired from source history "
-            f"(oldest retained: v{retained[0]}); re-seed the history"
-        )
-    # persist (NOT checkpoint): the diff (one pk exchange over the
-    # changed buckets' rows) feeds BOTH the closures' key lookup and the
-    # opens, and the merge evaluates its batch more than once - cache
-    # the diff once instead of re-running it per consumer, while a lost
-    # executor's blocks recompute via lineage (a checkpoint's would
-    # fail the sync unrecoverably).
-    diff = src.read_changes(last, cur).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    def step(hist, snap, diff):
         # CLOSE the superseded versions: the changed keys' current rows,
         # found via a bucket-pruned prefix lookup (the history pk leads
-        # with the source pk), rewritten with the closing interval bound
-        changed = diff.filter(F.col("change_type") != "insert").select(*src_pk)
+        # with the source pk), rewritten with the closing interval bound.
+        # They carry the history's columns: a column the source gained
+        # since they opened is filled NULL by the union below.
+        changed = diff.filter(F.col("change_type") != "insert").select(
+            *snap.pk_fields
+        )
         closures = (
-            dst.read_prefix(changed)
+            hist.read_prefix(changed)
             .filter(F.col("is_current"))
-            .select(
-                *src_cols,
-                "valid_from_lsn",
-                F.lit(cur).cast("long").alias("valid_to_lsn"),
-                F.lit(False).alias("is_current"),
-            )
+            .withColumn("valid_to_lsn", F.lit(snap.version).cast("long"))
+            .withColumn("is_current", F.lit(False))
+            .select(F.lit("UPSERT").alias("op"), "*")
         )
         # OPEN the new versions at (key, cur)
-        opens = _open(diff.filter(F.col("change_type") != "delete"))
-        batch = _envelope(closures, "UPSERT").unionByName(
-            _envelope(opens, "INSERT")
+        batch = closures.unionByName(
+            opens(snap, diff.filter(F.col("change_type") != "delete")),
+            allowMissingColumns=True,
         )
-        return _merge(batch)
-    finally:
-        diff.unpersist()
+        return _stamp(batch, snap.version, "scd2sync")
+
+    return _sync(src, open_history, pipeline_id, "scd2sync", write_mode, seed, step)
 
 
 # ----------------------------------------------------------------------
@@ -627,8 +581,6 @@ def sync_scd2(
 def band_index_schema(src_schema, id_col: str):
     """Destination schema for a band index: the doc id (type from the
     source), the band ordinal, and the band hash."""
-    from pyspark.sql import types as T
-
     return T.StructType(
         [
             src_schema[id_col],
@@ -673,93 +625,42 @@ def sync_band_index(
     the CHANGE volume (shingling is per changed doc, the merge is
     bucket-pruned by the index's own layout), never the corpus.
 
-    Exactly-once rides the source-version-as-epoch mechanism of
-    :func:`sync_incremental`; the first sync seeds from the full current
-    state; an expired cursor raises (re-seed at a fresh path). The
-    (n, num_hashes, num_bands, text_col) spec is RECORDED in the index
-    table's snapshot properties at creation and validated on every later
-    sync - a call with a different spec raises instead of silently
-    mixing hash families in one index."""
+    Exactly-once, seeding and cursor expiry follow the shared protocol
+    (module docstring). The (n, num_hashes, num_bands, text_col) spec
+    is RECORDED in the index table's snapshot properties at creation and
+    validated on every later sync - a call with a different spec raises
+    instead of silently mixing hash families in one index."""
     from dataingestion_spark.operators.dedup import band_relation
 
     spec = {
         "id_col": id_col, "text_col": text_col,
         "n": n, "num_hashes": num_hashes, "num_bands": num_bands,
     }
-    if isinstance(dst, (str,)) or hasattr(dst, "__fspath__"):
-        path = dst
-        probe = LakeTable(src.spark, path)
-        if probe.exists():
-            dst = probe
-        else:
-            dst = LakeTable.create(
-                src.spark,
-                path,
-                band_index_schema(src.snapshot().schema, id_col),
-                pk_fields=[id_col, "band_idx"],
-                order_fields=["lsn"],
-                num_buckets=num_buckets,
-                properties={"lsh_spec": spec},
+
+    def open_index(snap: Snapshot) -> LakeTable:
+        index = _derived_table(
+            src, snap, dst, band_index_schema(snap.schema, id_col),
+            [id_col, "band_idx"], "band index this call describes",
+            num_buckets, properties={"lsh_spec": spec},
+        )
+        stored = index.snapshot().properties.get("lsh_spec")
+        if stored is not None and stored != spec:
+            raise ValueError(
+                f"band index at {index.root} was built with spec {stored}; "
+                f"this call passed {spec} - one index, one hash family "
+                "(use a fresh path for a new spec)"
             )
-    want = {f.name for f in band_index_schema(src.snapshot().schema, id_col).fields}
-    have = {f.name for f in dst.snapshot().schema.fields}
-    if list(dst.snapshot().pk_fields) != [id_col, "band_idx"] or want != have:
-        raise ValueError(
-            "destination is not the band index this call describes "
-            f"(pk {dst.snapshot().pk_fields} vs [{id_col!r}, 'band_idx'], "
-            f"columns {sorted(have)} vs {sorted(want)}); "
-            "point at a fresh path or match the original spec"
-        )
-    stored = dst.snapshot().properties.get("lsh_spec")
-    if stored is not None and stored != spec:
-        raise ValueError(
-            f"band index at {dst.root} was built with spec {stored}; "
-            f"this call passed {spec} - one index, one hash family "
-            "(use a fresh path for a new spec)"
-        )
-    cur = src.current_version()
-    last = dst.last_applied_epoch(pipeline_id)
-    if last >= cur:
-        return None
+        return index
 
-    def _merge(batch: DataFrame) -> Snapshot | None:
-        return dst.merge(
-            batch,
-            pipeline_id=pipeline_id,
-            epoch_id=cur,
-            write_mode=write_mode,
-            lineage={
-                "lshsync_from": None if last == -1 else last,
-                "lshsync_to": cur,
-            },
-        )
+    def bands(rows: DataFrame) -> DataFrame:
+        return band_relation(rows, id_col, text_col, n, num_hashes, num_bands)
 
-    def _envelope(rows: DataFrame, op: str) -> DataFrame:
-        return rows.select(
-            F.lit(op).alias("op"),
-            *[c for c in rows.columns],
-            F.lit(cur).cast("long").alias("lsn"),
-            F.lit(f"lshsync@v{cur}").alias("source_file"),
-        )
+    def seed(_index, snap, state):
+        rows = bands(state).select(F.lit("INSERT").alias("op"), "*")
+        return _stamp(rows, snap.version, "lshsync")
 
-    if last == -1:
-        state = src.read(version=cur)
-        bands = band_relation(state, id_col, text_col, n, num_hashes, num_bands)
-        return _merge(_envelope(bands, "INSERT"))
-
-    retained = src.retained_versions()
-    if last not in retained:
-        raise ValueError(
-            f"band-index cursor v{last} expired from source history "
-            f"(oldest retained: v{retained[0]}); re-seed the destination"
-        )
-    # persist, not checkpoint: the diff feeds both the re-banded live
-    # rows and the retired-key anti-join, each evaluated again inside
-    # the merge; unpersisted in the finally below.
-    diff = src.read_changes(last, cur).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        live = diff.filter(F.col("change_type") != "delete")
-        new_bands = band_relation(live, id_col, text_col, n, num_hashes, num_bands)
+    def step(_index, snap, diff):
+        new_bands = bands(diff.filter(F.col("change_type") != "delete"))
         # Changed keys with no new band rows (deleted, or text degraded to
         # null/short): retire ALL their band keys. num_bands is a small
         # constant, so the explode is O(changed keys).
@@ -767,17 +668,16 @@ def sync_band_index(
             diff.select(id_col)
             .join(new_bands.select(id_col).distinct(), id_col, "left_anti")
             .select(
+                F.lit("DELETE").alias("op"),
                 F.col(id_col),
                 F.explode(F.sequence(F.lit(0), F.lit(num_bands - 1))).alias("band_idx"),
                 F.lit(None).cast("string").alias("band_hash"),
             )
         )
-        batch = _envelope(new_bands, "UPSERT").unionByName(
-            _envelope(dead, "DELETE")
-        )
-        return _merge(batch)
-    finally:
-        diff.unpersist()
+        rows = new_bands.select(F.lit("UPSERT").alias("op"), "*").unionByName(dead)
+        return _stamp(rows, snap.version, "lshsync")
+
+    return _sync(src, open_index, pipeline_id, "lshsync", write_mode, seed, step)
 
 
 def emit_feed(

@@ -261,3 +261,77 @@ def test_keyed_reads_job_budget(spark, tmp_path):
         assert got == []
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_incremental_sync_job_budget(spark, tmp_path):
+    """One incremental hop of each diff-driven sync runs a pinned number
+    of Spark jobs (2k-event source, 4 shuffle partitions): SCD2 history
+    <= 6, aggregate view <= 4, mirror <= 3 - each hop reads its persisted
+    diff once for all of its consumers. The 600-event tail keeps every
+    hop's COW merge on the union plan (too large a batch for the
+    broadcast arm), so the counts measure the sync, not the merge's plan
+    choice. Every result equals a recompute from the source."""
+    from dataingestion_spark.lake import LakeTable, sync_incremental
+    from dataingestion_spark.lake.sync import sync_aggregate, sync_scd2
+    from dataingestion_spark.sources.datagen import gen_changes
+    from tests.util import TRANSCRIPT_SCHEMA
+
+    pk = ["conv_id", "turn_idx"]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        src, mirror = (
+            LakeTable.create(
+                spark, tmp_path / name, TRANSCRIPT_SCHEMA, pk_fields=pk,
+                order_fields=["lsn", "ts"], num_buckets=4,
+            )
+            for name in ("src", "mirror")
+        )
+        hist_path, view_path = str(tmp_path / "hist"), str(tmp_path / "view")
+        hops = {
+            "scd2": lambda: sync_scd2(src, hist_path, num_buckets=4),
+            "aggregate": lambda: sync_aggregate(
+                src, view_path, ["conv_id"], sums=["turn_idx"], num_buckets=4
+            ),
+            "mirror": lambda: sync_incremental(src, mirror),
+        }
+        src.merge(
+            gen_changes(spark, n_events=2_000, n_convs=30, seed=41),
+            pipeline_id="p", epoch_id=0,
+        )
+        for hop in hops.values():
+            assert hop() is not None  # the seeds
+        src.merge(
+            gen_changes(spark, n_events=600, n_convs=30, seed=42).withColumn(
+                "lsn", F.col("lsn") + 10**6
+            ),
+            pipeline_id="p", epoch_id=1,
+        )
+        scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+        jobs = {}
+        for name, hop in hops.items():
+            before = scheduler.numTotalJobs()
+            assert hop() is not None
+            jobs[name] = scheduler.numTotalJobs() - before
+        assert jobs["scd2"] <= 6 and jobs["aggregate"] <= 4, jobs
+        assert jobs["mirror"] <= 3, jobs
+
+        state = src.read()
+
+        def rows(df):
+            return sorted(map(tuple, df.select(*state.columns).collect()))
+
+        assert rows(mirror.read()) == rows(state)
+        hist = LakeTable(spark, hist_path).read()
+        assert rows(hist.filter(F.col("is_current"))) == rows(state)
+        view = LakeTable(spark, view_path).read()
+        want = state.groupBy("conv_id").agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("turn_idx").cast("long").alias("sum_turn_idx"),
+        )
+        cols = ["conv_id", "n_rows", "sum_turn_idx"]
+        assert sorted(map(tuple, view.select(*cols).collect())) == sorted(
+            map(tuple, want.select(*cols).collect())
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

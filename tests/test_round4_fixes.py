@@ -12,8 +12,6 @@
   * read(where=) with a non-numeric bound behaves identically whether or
     not the table carries MOR deltas (advice low: used to raise
     TypeError only on the delta-free path).
-  * sync rejects sources whose user schema collides with the reserved
-    change-batch columns op/lsn/source_file (advice low).
   * the quarantine gate canonicalizes op to upper-case on the valid side
     so the merge's case-sensitive DELETE classification agrees with the
     gate's case-insensitive acceptance (advice low).
@@ -23,8 +21,10 @@
   * assign_cells falls back to a broadcast-packed argmax above the
     centroid literal budget, result-equal to the inlined path (verdict
     item 3).
-  * sync_aggregate no longer burns a take(1) probe job per sync
-    (verdict item 4).
+
+The round's sync pins live with their component suites:
+test_changes_to_batch_rejects_reserved_columns in tests/test_sync.py and
+test_sync_aggregate_runs_no_take_probe in tests/test_sync_aggregate.py.
 """
 
 import datetime
@@ -32,7 +32,7 @@ import datetime
 import duckdb
 import pandas as pd
 import pytest
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
 from dataingestion_spark.lake.table import LakeTable
 from dataingestion_spark.oracle import replay
@@ -214,26 +214,6 @@ def test_quarantine_normalizes_op_case_for_the_merge(spark, tmp_table_dir):
 
 
 # ----------------------------------------------------------------------
-# sync reserved-column guard
-# ----------------------------------------------------------------------
-
-
-def test_changes_to_batch_rejects_reserved_columns(spark):
-    from dataingestion_spark.lake.sync import changes_to_batch
-
-    diff = spark.createDataFrame(
-        [("insert", "k1", "x")], "change_type string, id string, op string"
-    )
-    with pytest.raises(ValueError, match="reserved"):
-        changes_to_batch(diff, lsn=1)
-    ok = spark.createDataFrame(
-        [("insert", "k1", "x")], "change_type string, id string, v string"
-    )
-    out = changes_to_batch(ok, lsn=1)
-    assert set(out.columns) == {"op", "id", "v", "lsn", "source_file"}
-
-
-# ----------------------------------------------------------------------
 # sessionize exact decimal sum (verdict item 2)
 # ----------------------------------------------------------------------
 
@@ -330,70 +310,3 @@ def test_assign_cells_budget_fallback_matches_inline(spark, monkeypatch):
     emb.unpersist()
     pd.testing.assert_frame_equal(inline_cells, packed_cells)
     pd.testing.assert_frame_equal(inline_topk, packed_topk)
-
-
-# ----------------------------------------------------------------------
-# sync_aggregate probe removal (verdict item 4)
-# ----------------------------------------------------------------------
-
-
-def test_sync_aggregate_runs_no_take_probe(spark, tmp_path, monkeypatch):
-    """The per-sync emptiness probe is gone: no DataFrame.take anywhere
-    in an incremental aggregate sync, and a no-net-change sync still
-    moves the cursor through the merge's empty-batch marker path."""
-    from dataingestion_spark.lake.sync import sync_aggregate
-
-    src = _make_table(spark, str(tmp_path / "src"), num_buckets=4)
-    batch = spark.createDataFrame(
-        [
-            ("INSERT", "c1", 0, "user", "a", None, 1, 1, "f"),
-            ("INSERT", "c1", 1, "assistant", "b", None, 2, 2, "f"),
-            ("INSERT", "c2", 0, "user", "c", None, 3, 3, "f"),
-        ],
-        CHANGE_DDL,
-    ).withColumn("ts", F.timestamp_seconds("ts"))
-    src.merge(batch, pipeline_id="p", epoch_id=0)
-    view_path = str(tmp_path / "view")
-    sync_aggregate(src, view_path, group_cols=["role"], sums=["turn_idx"])
-
-    src.merge(
-        batch.withColumn("lsn", F.col("lsn") + 10),
-        pipeline_id="p",
-        epoch_id=1,
-    )
-
-    calls = {"take": 0}
-    orig_take = DataFrame.take
-
-    def counting_take(self, n):
-        calls["take"] += 1
-        return orig_take(self, n)
-
-    monkeypatch.setattr(DataFrame, "take", counting_take)
-    view = LakeTable(spark, view_path)
-    sync_aggregate(src, view, group_cols=["role"], sums=["turn_idx"])
-    assert calls["take"] == 0
-
-    # a version bump with NO net row change (idempotent redelivery merged
-    # under a new epoch id produces an empty changelog... use a no-op DML)
-    before = view.last_applied_epoch("aggsync")
-    src.delete_where("role = 'nobody'")  # matches nothing: no commit
-    snap = src.compact()  # rewrites files: version advances, same rows
-    assert snap is not None
-    sync_aggregate(src, view, group_cols=["role"], sums=["turn_idx"])
-    assert view.last_applied_epoch("aggsync") > before
-    assert calls["take"] == 0
-    # view still equals a fresh recompute
-    got = view.read().toPandas().sort_values("role").reset_index(drop=True)
-    want = (
-        src.read()
-        .groupBy("role")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("turn_idx").cast("long").alias("sum_turn_idx"),
-        )
-        .toPandas()
-        .sort_values("role")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)

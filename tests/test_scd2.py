@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataingestion_spark.lake import LakeTable
-from dataingestion_spark.lake.sync import sync_scd2
+from dataingestion_spark.lake.sync import sync_aggregate, sync_scd2
 from dataingestion_spark.sources.datagen import gen_changes
 from tests.util import TRANSCRIPT_SCHEMA
 
@@ -245,3 +245,53 @@ def test_scd2_retention_drops_only_closed_versions_before_cutoff(spark, tmp_path
     assert after.filter(F.col("valid_to_lsn") < cutoff).count() == 0
     fsck = hist.verify_integrity()
     assert fsck["ok"], fsck["errors"]
+
+
+def test_scd2_follows_nonbreaking_source_evolution(spark, tmp_path):
+    """A source that gains nullable columns (schema v2 adds tool_meta and
+    latency_ms) keeps its history: the next sync evolves the history,
+    row-versions closed by it read NULL in the new columns and new opens
+    carry them. An aggregate view still refuses a spec change (a new sum
+    is not a source column). A source rename refuses until the history
+    gets the same rename_column, then the sync continues."""
+    src = _src(spark, tmp_path)
+    hist_path, view_path = str(tmp_path / "hist"), str(tmp_path / "view")
+    src.merge(gen_changes(spark, n_events=1_000, n_convs=20, seed=5),
+              pipeline_id="p", epoch_id=0)
+    sync_scd2(src, hist_path)
+    sync_aggregate(src, view_path, ["conv_id"], sums=["turn_idx"])
+    src.merge(
+        gen_changes(spark, n_events=1_000, n_convs=20, seed=6,
+                    schema_version=2, lsn_offset=10**6),
+        pipeline_id="p", epoch_id=1,
+    )
+    assert {"tool_meta", "latency_ms"} <= set(src.snapshot().schema.names)
+    assert sync_scd2(src, hist_path) is not None
+    hist = LakeTable(spark, hist_path)
+    full = hist.read()
+    meta = F.col("tool_meta").isNotNull()
+    assert full.filter(~F.col("is_current") & meta).count() == 0
+    assert full.filter(F.col("is_current") & meta).count() > 0
+    cols = ("conv_id", "turn_idx", "role", "text", "tool", "ts",
+            "tool_meta", "latency_ms")
+    assert _rows(full.filter(F.col("is_current")), cols) == _rows(src.read(), cols)
+
+    assert sync_aggregate(src, view_path, ["conv_id"], sums=["turn_idx"])
+    with pytest.raises(ValueError, match="not the aggregate view"):
+        sync_aggregate(src, view_path, ["conv_id"],
+                       sums=["turn_idx", "latency_ms"])
+
+    src.rename_column("tool", "tool_name")
+    with pytest.raises(ValueError, match="rename_column"):
+        sync_scd2(src, hist_path)
+    hist.rename_column("tool", "tool_name")
+    src.merge(
+        gen_changes(spark, n_events=500, n_convs=20, seed=7,
+                    schema_version=2, lsn_offset=2 * 10**6)
+        .withColumnRenamed("tool", "tool_name"),
+        pipeline_id="p", epoch_id=2,
+    )
+    assert sync_scd2(src, hist_path) is not None
+    cols = tuple("tool_name" if c == "tool" else c for c in cols)
+    cur = hist.read().filter(F.col("is_current"))
+    assert _rows(cur, cols) == _rows(src.read(), cols)

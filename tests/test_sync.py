@@ -161,3 +161,18 @@ def test_sync_seeds_after_source_expiry_and_raises_on_lost_cursor(spark, tmp_pat
     dst2 = _make_table(spark, tmp_path / "dst2")
     sync_incremental(src, dst2, pipeline_id="hop")
     _assert_same_state(src.read(), dst2.read())
+
+
+def test_changes_to_batch_rejects_reserved_columns(spark):
+    from dataingestion_spark.lake.sync import changes_to_batch
+
+    diff = spark.createDataFrame(
+        [("insert", "k1", "x")], "change_type string, id string, op string"
+    )
+    with pytest.raises(ValueError, match="reserved"):
+        changes_to_batch(diff, lsn=1)
+    ok = spark.createDataFrame(
+        [("insert", "k1", "x")], "change_type string, id string, v string"
+    )
+    out = changes_to_batch(ok, lsn=1)
+    assert set(out.columns) == {"op", "id", "v", "lsn", "source_file"}
