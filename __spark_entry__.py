@@ -1248,9 +1248,10 @@ def q_cdc_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cdc_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serving-side point lookups: replay the flagship binlog, then fetch
     a deterministic key subset (conversations whose id ends in '0') with
-    LakeTable.read_keys - bucket-pruned to the keys' buckets, broadcast
-    semi-join, never a table scan. Oracle: the portable replay filtered
-    to the same conversations."""
+    LakeTable.read_keys - bucket-pruned to the keys' buckets and filtered
+    by the collected keys as parsed literals (IN(conv_id) pushdown plus
+    the exact tuple IN, no join), never a table scan. Oracle: the
+    portable replay filtered to the same conversations."""
     tbl = _flagship_table(spark, "cdc_ptlk_")
     keys = tbl.read().filter("conv_id LIKE '%0'").select("conv_id", "turn_idx")
     return tbl.read_keys(keys).orderBy("conv_id", "turn_idx")

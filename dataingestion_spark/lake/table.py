@@ -194,6 +194,57 @@ def bucket_expr(key_col: str, num_buckets: int, key_type: T.DataType | None = No
     return F.pmod(F.xxhash64(col), F.lit(num_buckets)).cast("int")
 
 
+# key types rendered as SQL literals; integral ones: (suffix, bit width)
+_LITERALS = {T.StringType(): None, T.ByteType(): ("Y", 8), T.ShortType(): ("S", 16),
+             T.IntegerType(): ("", 32), T.LongType(): ("L", 64)}
+
+
+def _sql_literal(v, f: T.StructField) -> str:
+    """``v`` as a SQL literal of exactly ``f``'s type, checked as
+    ``createDataFrame`` verifies a row. A string holding a quote, a
+    backslash or ``$`` (variable substitution) renders as UTF-8 hex, so
+    no key parses as SQL under any parser setting."""
+    t = f.dataType
+    if type(v) is not (str if _LITERALS[t] is None else int):
+        raise TypeError(f"field {f.name}: {t} can not accept {v!r} ({type(v)})")
+    if type(v) is str:
+        plain = not any(ch in v for ch in "'\\$")
+        return f"'{v}'" if plain else f"CAST(X'{v.encode().hex()}' AS STRING)"
+    suffix, bits = _LITERALS[t]
+    if not -(1 << bits - 1) <= v < 1 << bits - 1:
+        raise ValueError(f"field {f.name}: {v} out of range for {t}")
+    return f"{v}{suffix}"
+
+
+def key_literals(
+    spark: SparkSession, fields: list[T.StructField], tuples: list[tuple]
+) -> tuple[DataFrame, list[Column], DataFrame | None]:
+    """Distinct, NULL-free key tuples (values in ``fields`` order) as a
+    relation carrying their first field, the filters that match them, and
+    the probe a keyed read must still semi-join (None when the filters are
+    exact). String and integral keys cross into Spark as parsed SQL text,
+    not one py4j call per value: a ``VALUES`` LocalRelation of the
+    distinct first fields (collecting a projection of it runs no job), a
+    first-field IN and, at width > 1, an exact tuple IN. Any other type
+    takes ``createDataFrame`` and a first-field ``isin``; at width > 1
+    that relation, broadcast, is the probe, since a struct IN of ``F.lit``
+    tuples takes minutes to plan at 10k tuples."""
+    names = [f.name for f in fields]
+    if all(f.dataType in _LITERALS for f in fields):
+        quoted = ["`" + n.replace("`", "``") + "`" for n in names]
+        rows = [[_sql_literal(v, f) for v, f in zip(t, fields)] for t in tuples]
+        first = ", ".join(dict.fromkeys(r[0] for r in rows))
+        relation = spark.sql(f"SELECT * FROM VALUES {first} AS t({quoted[0]})")
+        filters = [F.expr(f"{quoted[0]} IN ({first})")]
+        if len(fields) > 1:
+            values = ", ".join(f"({', '.join(r)})" for r in rows)
+            filters.append(F.expr(f"({', '.join(quoted)}) IN ({values})"))
+        return relation, filters, None
+    relation = spark.createDataFrame(tuples, T.StructType(fields))
+    first = F.col(names[0]).isin(list(dict.fromkeys(t[0] for t in tuples)))
+    return relation, [first], F.broadcast(relation) if len(fields) > 1 else None
+
+
 class LakeTable:
     """Handle to one lake table rooted at a directory."""
 
@@ -1539,7 +1590,6 @@ class LakeTable:
         self,
         keys,
         version: int | None = None,
-        broadcast_keys: bool = True,
         use_bloom: bool = True,
     ) -> DataFrame:
         """Point lookups: the live rows for an explicit key set - the
@@ -1549,22 +1599,17 @@ class LakeTable:
         ``keys`` is a DataFrame carrying the pk columns (extra columns are
         ignored) or a list of tuples/values in pk order. This is
         :meth:`read_prefix` at full pk width plus the file-level bloom
-        consult (``use_bloom``); :meth:`_keyed_read` has the plan."""
+        consult (``use_bloom``); :meth:`_keyed_read` has the plan: one job
+        for a key list, none when the bloom index excludes every key."""
         snap = self.snapshot(version)
-        keys, _ = self._key_prefix(snap, keys)
-        missing = [c for c in snap.pk_fields if c not in keys.columns]
-        if missing:
+        keys, cols = self._key_prefix(snap, keys)
+        if len(cols) < len(snap.pk_fields):
+            have = keys.columns if isinstance(keys, DataFrame) else cols
+            missing = [c for c in snap.pk_fields if c not in have]
             raise ValueError(f"keys relation lacks pk columns {missing}")
-        return self._keyed_read(
-            snap, keys, list(snap.pk_fields), broadcast_keys, use_bloom
-        )
+        return self._keyed_read(snap, keys, cols, use_bloom)
 
-    def read_prefix(
-        self,
-        keys,
-        version: int | None = None,
-        broadcast_keys: bool = True,
-    ) -> DataFrame:
+    def read_prefix(self, keys, version: int | None = None) -> DataFrame:
         """Live rows whose LEADING pk fields match any key in the set -
         "fetch these whole conversations" for a (conv_id, turn_idx) table,
         which :meth:`read_keys` (every pk field) cannot express. The bucket
@@ -1573,20 +1618,21 @@ class LakeTable:
 
         ``keys`` is a DataFrame carrying the first k pk columns (k = the
         longest leading run of pk fields present; other columns are
-        ignored) or a list of scalars/tuples in pk order. The pk bloom
-        index is NOT consulted: its bitmaps hash full pk tuples, so a
-        prefix proves nothing."""
+        ignored) or a list of scalars/tuples in pk order; a list is read
+        in one job (:meth:`_keyed_read`). The pk bloom index is NOT
+        consulted: its bitmaps hash full pk tuples, so a prefix proves
+        nothing."""
         snap = self.snapshot(version)
         keys, cols = self._key_prefix(snap, keys)
         if not cols:
             raise ValueError(
                 f"keys relation lacks the leading pk column {snap.pk_fields[0]!r}"
             )
-        return self._keyed_read(snap, keys, cols, broadcast_keys, False)
+        return self._keyed_read(snap, keys, cols, False)
 
-    def _key_prefix(self, snap: Snapshot, keys) -> tuple[DataFrame, list[str]]:
-        """``keys`` as a DataFrame plus the leading pk fields it carries; a
-        list of scalars/tuples in pk order becomes a frame of that width."""
+    def _key_prefix(self, snap: Snapshot, keys) -> tuple:
+        """``keys`` as a DataFrame or a list of tuples, plus the leading pk
+        fields it carries (a list's scalars become 1-tuples)."""
         pk = list(snap.pk_fields)
         if isinstance(keys, DataFrame):
             k = next((i for i, c in enumerate(pk) if c not in keys.columns), len(pk))
@@ -1598,59 +1644,63 @@ class LakeTable:
         k = widths.pop() if widths else len(pk)
         if not 1 <= k <= len(pk):
             raise ValueError(f"prefix width {k} outside 1..{len(pk)} (pk {pk})")
-        schema = T.StructType([snap.schema[c] for c in pk[:k]])
-        return self.spark.createDataFrame(rows, schema), pk[:k]
+        return rows, pk[:k]
 
     def _keyed_read(
-        self,
-        snap: Snapshot,
-        keys: DataFrame,
-        cols: list[str],
-        broadcast_keys: bool,
-        use_bloom: bool,
+        self, snap: Snapshot, keys, cols: list[str], use_bloom: bool
     ) -> DataFrame:
         """The core of :meth:`read_keys` and :meth:`read_prefix`: live rows
-        whose leading pk fields ``cols`` match a row of ``keys``. Up to
-        ``PUSHDOWN_MAX_KEYS`` keys, ONE capped job collects them, and the
-        buckets, bloom consult, IN(<first pk>) scan filter (row-group
-        pruning) and probe all derive from that sample, so the keys lineage
-        runs once. At width 1 the IN filter is exact and is the whole
-        probe; wider keys semi-join a literal relation of the tuples,
-        broadcast if ``broadcast_keys``. Past the cap, one job counts keys
-        per bucket, a capped pk0 sample feeds the IN filter, and the lazy
-        key relation is the probe, broadcast within BROADCAST_KEYS_MAX."""
-        pk = list(snap.pk_fields)
+        whose leading pk fields ``cols`` match a key of ``keys`` (NULL keys
+        match nothing). Up to ``PUSHDOWN_MAX_KEYS`` distinct keys - a list
+        as given, a DataFrame's with their buckets in ONE capped collect
+        job - become :func:`key_literals`: a list's bucket pick (no job),
+        the bloom consult, the IN(<first pk>) scan filter (row-group pruning) and, at width
+        > 1, the exact tuple IN, with no further job and no join (a pk
+        field neither string nor integral: a broadcast semi-join of the
+        tuples instead). Past the cap, one job counts keys per bucket, a
+        capped pk0 sample feeds the IN filter, and the lazy key relation
+        is the probe, broadcast within BROADCAST_KEYS_MAX."""
+        fields = [snap.schema[c] for c in cols]
+        bucket = bucket_expr(cols[0], snap.num_buckets, key_type=fields[0].dataType)
         cap = self.PUSHDOWN_MAX_KEYS
-        # a NULL key matches nothing; dropping it keeps it out of the
-        # non-nullable literal probe and the IN list
-        keyed = keys.select(
-            *[F.col(c).cast(snap.schema[c].dataType).alias(c) for c in cols]
-        ).dropna(subset=cols).distinct().withColumn(
-            BUCKET_COL,
-            bucket_expr(pk[0], snap.num_buckets, key_type=snap.schema[pk[0]].dataType),
-        )
 
         def capped(df: DataFrame) -> list | None:
             # coalesce(1) makes it one job: a bare limit plans as
             # CollectLimit, whose incremental take runs two
             rows = df.limit(cap + 1).coalesce(1).collect()
-            return rows if len(rows) <= cap else None
+            return None if len(rows) > cap else [tuple(r) for r in rows]
 
-        kdist = capped(keyed.select(BUCKET_COL, *cols))
-        if kdist is not None:
-            buckets = sorted({int(r[0]) for r in kdist})
-            tuples = [tuple(r[1:]) for r in kdist]
-            pk0_vals = sorted({t[0] for t in tuples})
-        else:  # per-bucket key counts: <= num_buckets rows
-            per_bucket = keyed.groupBy(BUCKET_COL).count().collect()
+        buckets = None
+        if isinstance(keys, DataFrame):  # the collect job brings the buckets
+            keyed = keys.select(
+                *[F.col(c).cast(f.dataType).alias(c) for c, f in zip(cols, fields)]
+            ).dropna(subset=cols).distinct()
+            rows = capped(keyed.select(*cols, bucket))
+            tuples = None if rows is None else [r[:-1] for r in rows]
+            buckets = None if rows is None else sorted({r[-1] for r in rows})
+        else:
+            tuples = list(dict.fromkeys(t for t in keys if None not in t))
+            if len(tuples) > cap:
+                keyed = self.spark.createDataFrame(tuples, T.StructType(fields))
+                tuples = None
+        filters, probe = (), None
+        if tuples is None:  # per-bucket key counts: <= num_buckets rows
+            per_bucket = keyed.groupBy(bucket).count().collect()
             buckets = sorted(int(r[0]) for r in per_bucket)
-            n_keys = sum(r[1] for r in per_bucket)
-            pk0_rows = capped(keyed.select(pk[0]).distinct())
-            pk0_vals = [] if pk0_rows is None else sorted(r[0] for r in pk0_rows)
+            pk0 = capped(keyed.select(cols[0]).distinct())
+            if pk0:
+                filters = key_literals(self.spark, fields[:1], pk0)[1]
+            probe = keyed.select(*cols)
+            if sum(r[1] for r in per_bucket) <= self.BROADCAST_KEYS_MAX:
+                probe = F.broadcast(probe)
+        elif tuples:
+            relation, filters, probe = key_literals(self.spark, fields, tuples)
+            if buckets is None:  # a key list
+                buckets = sorted({r[0] for r in relation.select(bucket).collect()})
         if not buckets:
             return self._empty(snap.schema)
         file_map = delta_map = None
-        if use_bloom and kdist is not None:
+        if use_bloom and tuples:
             # file-level bloom skipping (lake/bloom.py): drop candidate
             # files that provably hold none of the keys; unindexed stay
             pruned = self._bloom_prune(snap, buckets, tuples)
@@ -1661,21 +1711,10 @@ class LakeTable:
         df = self._resolved(
             snap, buckets, file_map=file_map, delta_map=delta_map
         ).filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-        if pk0_vals:
-            df = df.filter(F.col(pk[0]).isin(pk0_vals))
-        if kdist is None:
-            probe = keyed.select(*cols)
-            if broadcast_keys and n_keys <= self.BROADCAST_KEYS_MAX:
-                probe = F.broadcast(probe)
+        for cond in filters:
+            df = df.filter(cond)
+        if probe is not None:
             df = df.join(probe, on=cols, how="left_semi")
-        elif len(cols) > 1:  # at width 1 the IN filter is already exact
-            probe = self.spark.createDataFrame(
-                tuples, T.StructType([snap.schema[c] for c in cols])
-            )
-            df = df.join(
-                F.broadcast(probe) if broadcast_keys else probe,
-                on=cols, how="left_semi",
-            )
         return df.select(*[f.name for f in snap.schema.fields])
 
     def _empty(self, schema: T.StructType) -> DataFrame:
@@ -2063,7 +2102,7 @@ class LakeTable:
         snap = self.snapshot(version)
         if col not in {f.name for f in snap.schema.fields}:
             raise ValueError(f"no such column: {col!r}")
-        values = list(values)
+        values = [v for v in values if v is not None]
         if not values:
             return self._empty(snap.schema)
         buckets, file_map = None, None
@@ -2080,9 +2119,15 @@ class LakeTable:
         df = self._resolved(snap, buckets, file_map=file_map).filter(
             ~F.coalesce(F.col(DELETED_COL), F.lit(False))
         )
-        return df.filter(F.col(col).isin(values)).select(
-            *[f.name for f in snap.schema.fields]
-        )
+        field, match = snap.schema[col], None
+        if field.dataType in _LITERALS:  # one parsed IN, not a py4j call per value
+            try:
+                match = key_literals(self.spark, [field], [(v,) for v in values])[1][0]
+            except (TypeError, ValueError):
+                pass  # values of another type: isin casts them, as it always did
+        if match is None:
+            match = F.col(col).isin(values)
+        return df.filter(match).select(*[f.name for f in snap.schema.fields])
 
     def _read_pk_frame(self, rel: str, pk: list[str], renames: dict):
         """pk columns of one data file as a pandas frame in pk order,
@@ -2512,9 +2557,9 @@ class LakeTable:
     # degrade to "no pruning for those files" - never a wrong answer.
     COLLECT_FILE_STATS = True
 
-    # the keyed reads collect up to this many distinct keys to the driver
-    # and push IN(<first pk>) to the scan; beyond it the literal list
-    # costs more than it prunes and the lazy key relation is the probe.
+    # the keyed reads filter by up to this many distinct keys as parsed
+    # literals (key_literals); beyond it planning the literal lists costs
+    # more than they prune and the lazy key relation is the probe.
     PUSHDOWN_MAX_KEYS = 10_000
 
     # past that cap the keyed reads broadcast the key relation only up to

@@ -368,8 +368,10 @@ def test_read_prefix_validates_inputs(spark, tmp_table_dir):
 
 
 def test_point_lookup_broadcast_gated_by_measured_count(spark, tmp_path, monkeypatch):
-    """read_keys/read_prefix broadcast the probe only for key sets
-    within the caps: an explicit hint bypasses
+    """Within the caps read_keys/read_prefix filter by parsed literals:
+    no join and no broadcast, the pk0 IN plus the exact tuple IN. Past
+    them the lazy key relation is the probe, broadcast only within
+    BROADCAST_KEYS_MAX: an explicit hint bypasses
     autoBroadcastJoinThreshold, so a change-volume-sized key relation
     (the sync paths) must shuffle-join instead. Results stay equal."""
     from tests.test_plans import _plan
@@ -386,7 +388,9 @@ def test_point_lookup_broadcast_gated_by_measured_count(spark, tmp_path, monkeyp
     convs = sorted(k[0] for k in keys)
     small = tbl.read_keys(keys)
     smallp = tbl.read_prefix(convs)
-    assert "BroadcastExchange" in _plan(small)
+    plan = _plan(small)
+    assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+    assert "named_struct(conv_id, conv_id" in plan and ") IN ([" in plan, plan
 
     # shrink BOTH caps below the key count: the set is no longer
     # provably small and exceeds the broadcast budget -> no hint

@@ -196,11 +196,12 @@ def test_pruned_changelog_diff_is_one_exchange(spark, tmp_path):
 
 
 def test_keyed_reads_job_budget(spark, tmp_path):
-    """Keyed serving reads run only the jobs that do work: one job for
-    the capped key collect, a broadcast job only for a composite probe,
-    the caller's collect, and none at all for a provably empty answer.
-    The count runs from before each call (the key collect is eager) to
-    after its collect."""
+    """Keyed serving reads of a key list run only the caller's collect:
+    the keys are parsed literals, so the bucket pick, the IN(conv_id)
+    pushdown and the exact tuple IN run no job of their own, and a
+    provably empty answer (no key, or every file bloom-excluded) runs
+    none at all. The count runs from before each call to after its
+    collect."""
     from dataingestion_spark.lake import LakeTable
     from dataingestion_spark.sources.datagen import gen_changes
     from tests.util import TRANSCRIPT_SCHEMA
@@ -241,17 +242,21 @@ def test_keyed_reads_job_budget(spark, tmp_path):
         present = [tuple(r) for r in firsts.limit(6).collect()]
         absent = [("conv_absent_1", 1), ("conv_absent_2", 3)]
         jobs, got = run(lambda: tbl.read_keys(present + absent))
-        assert jobs <= 3, jobs
+        assert jobs <= 1, jobs
         hit = F.struct(*pk).isin([F.struct(F.lit(c), F.lit(t)) for c, t in present])
         assert got == want(state.filter(hit)) and len(got) == len(present)
 
         jobs, got = run(lambda: tbl.read_keys([("conv_absent_1", 1)]))
-        assert jobs <= 1, jobs
+        assert jobs == 0, jobs
+        assert got == []
+
+        jobs, got = run(lambda: tbl.read_keys([]))
+        assert jobs == 0, jobs
         assert got == []
 
         convs = [c for c, _ in present[:2]]
         jobs, got = run(lambda: tbl.read_prefix(convs))
-        assert jobs <= 2, jobs
+        assert jobs <= 1, jobs
         assert got == want(state.filter(F.col("conv_id").isin(convs)))
 
         v = tbl.current_version()
@@ -266,11 +271,13 @@ def test_keyed_reads_job_budget(spark, tmp_path):
 def test_incremental_sync_job_budget(spark, tmp_path):
     """One incremental hop of each diff-driven sync runs a pinned number
     of Spark jobs (2k-event source, 4 shuffle partitions): SCD2 history
-    <= 6, aggregate view <= 4, mirror <= 3 - each hop reads its persisted
-    diff once for all of its consumers. The 600-event tail keeps every
-    hop's COW merge on the union plan (too large a batch for the
-    broadcast arm), so the counts measure the sync, not the merge's plan
-    choice. Every result equals a recompute from the source."""
+    <= 4, aggregate view <= 4, mirror <= 3 - each hop reads its persisted
+    diff once for all of its consumers, and the SCD2 closure lookup
+    filters by the collected keys' literals instead of broadcasting them.
+    The 600-event tail keeps every hop's COW merge on the union plan (too
+    large a batch for the broadcast arm), so the counts measure the sync,
+    not the merge's plan choice. Every result equals a recompute from the
+    source."""
     from dataingestion_spark.lake import LakeTable, sync_incremental
     from dataingestion_spark.lake.sync import sync_aggregate, sync_scd2
     from dataingestion_spark.sources.datagen import gen_changes
@@ -313,7 +320,7 @@ def test_incremental_sync_job_budget(spark, tmp_path):
             before = scheduler.numTotalJobs()
             assert hop() is not None
             jobs[name] = scheduler.numTotalJobs() - before
-        assert jobs["scd2"] <= 6 and jobs["aggregate"] <= 4, jobs
+        assert jobs["scd2"] <= 4 and jobs["aggregate"] <= 4, jobs
         assert jobs["mirror"] <= 3, jobs
 
         state = src.read()
