@@ -10,8 +10,9 @@ Two questions this answers that the replay bench can't:
    Here the table is bootstrapped to many times the epoch size first,
    then timed epochs run in the table >> batch regime - the 100 TB
    shape, where each epoch touches a sliver of a huge table.
-   ``--no-broadcast`` pins the shuffle plans for an A/B on the same
-   staged bytes.
+   The plan follows the counted gate (base rows >= 4x batch events);
+   ``--no-broadcast`` raises the ratio to infinity, so every epoch
+   takes the union plan, for an A/B on the same staged bytes.
 
 2. **Compaction-amortized throughput** (round-4 verdict item #7).
    ``--optimize-every K`` runs the full ``optimize()`` maintenance pass
@@ -22,7 +23,7 @@ Two questions this answers that the replay bench can't:
 Prints one JSON line:
   {"cpus", "bootstrap_rows", "steady_events", "steady_epochs",
    "apply_sec", "events_per_sec", "optimize_passes", "optimize_sec",
-   "merge_plan", "write_mode", "broadcast"}
+   "merge_plan", "plans", "write_mode", "broadcast"}
 
 Methodology matches replay_job.py: byte-identical staged input per
 seed, untimed warm-up + untimed bootstrap, tmpfs-backed table and
@@ -75,12 +76,7 @@ def main() -> int:
     )
     ap.add_argument(
         "--no-broadcast", action="store_true",
-        help="pin the shuffle COW plans (A/B control)",
-    )
-    ap.add_argument(
-        "--pin-broadcast", action="store_true",
-        help="disable the adaptive plan chooser: run the broadcast-probe "
-        "plan on every eligible epoch (A/B control)",
+        help="run the union COW plan on every epoch (A/B control)",
     )
     ap.add_argument("--no-shm", action="store_true")
     a = ap.parse_args()
@@ -123,9 +119,7 @@ def main() -> int:
         num_buckets=a.buckets,
     )
     if a.no_broadcast:
-        tbl.BROADCAST_MERGE_ENABLED = False
-    if a.pin_broadcast:
-        tbl.COW_PLAN_ADAPTIVE = False
+        tbl.BROADCAST_TABLE_BATCH_RATIO = float("inf")
 
     # untimed bootstrap: grow the table (MOR + compact is the fastest
     # loader; the steady phase runs the mode under test)
@@ -163,7 +157,6 @@ def main() -> int:
             opt_passes += 1
     dt = time.time() - t0
     rows = tbl.read().count()
-    plan_rates = tbl.snapshot().properties.get("cow_plan_rates")
     shutil.rmtree(tmp, ignore_errors=True)
     print(
         json.dumps(
@@ -179,10 +172,8 @@ def main() -> int:
                 "optimize_sec": round(opt_sec, 3),
                 "merge_plan": max(set(plans), key=plans.count),
                 "plans": {p: plans.count(p) for p in sorted(set(plans))},
-                "plan_rates": plan_rates,
                 "write_mode": a.write_mode,
                 "broadcast": not a.no_broadcast,
-                "adaptive": not (a.pin_broadcast or a.no_broadcast),
             }
         )
     )

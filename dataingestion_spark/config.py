@@ -12,7 +12,7 @@ we support composite primary keys - (conv_id, turn_idx) for transcripts.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, field, fields, asdict
 from pathlib import Path
 
 
@@ -54,13 +54,6 @@ class DatasetConfig:
     hot_key_threshold: float = 0.05
     hot_key_min_rows: int | None = None
     salt_buckets: int = 8
-    # Adaptive COW plan choice in the steady-state regime (table >> batch):
-    # probe the broadcast-probe and shuffle merge plans once each, persist
-    # their measured events/s in the table properties, exploit the faster
-    # (LakeTable.COW_PLAN_ADAPTIVE). False pins the broadcast plan whenever
-    # eligible - the right call on a network-bound cluster where the avoided
-    # table-side exchange always dominates. None = the LakeTable default.
-    cow_plan_adaptive: bool | None = None
     # Fail the pipeline on breaking schema changes (reference fail-fast,
     # /root/reference/spark/src/main/scala/com/example/core/SchemaEvolution.scala:114-137).
     fail_on_breaking_schema: bool = True
@@ -109,7 +102,14 @@ class DatasetConfig:
 
     @classmethod
     def from_json(cls, text: str) -> "DatasetConfig":
-        return cls(**json.loads(text))
+        d = json.loads(text)
+        # Configs saved before the COW plan became a function of row
+        # counts carry this key; every value it held now means the same.
+        d.pop("cow_plan_adaptive", None)
+        unknown = sorted(set(d) - {f.name for f in fields(cls)})
+        if unknown:
+            raise ValueError(f"unknown DatasetConfig key(s): {unknown}")
+        return cls(**d)
 
     @classmethod
     def load(cls, path: str | Path) -> "DatasetConfig":

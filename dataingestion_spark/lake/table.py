@@ -257,7 +257,6 @@ class LakeTable:
     # slice stays under the budget, so the per-group broadcast is
     # executor-memory-sized at ANY epoch size; a single bucket over
     # budget falls back to the shuffle plans.
-    BROADCAST_MERGE_ENABLED = True
     BROADCAST_GROUP_EVENTS = 1_000_000
 
     # The broadcast-probe plan trades the table-side shuffle for extra
@@ -266,28 +265,10 @@ class LakeTable:
     # ingest regime (measured: ~0.9x at table/batch ~1.3 during a
     # from-scratch replay, >1x once the table outgrows the epoch).
     # Engage only when the touched buckets' base rows (exact, from the
-    # stats sidecars) are at least this multiple of the batch.
+    # stats sidecars) are at least this multiple of the batch; the plan
+    # is a function of these counts alone, never of measured speed.
+    # float("inf") keeps every epoch on the union plan.
     BROADCAST_TABLE_BATCH_RATIO = 4.0
-
-    # Adaptive COW plan choice. Whether the broadcast-probe plan beats
-    # the one-exchange shuffle plan is a property of the TOPOLOGY, not
-    # the data: on a network-bound cluster the avoided table-side
-    # exchange dominates; on a shuffle-cheap single box (tmpfs shuffle,
-    # shared-memory "network") the broadcast plan's extra fixed-latency
-    # jobs + second table scan make it measurably slower (soak A/B at
-    # 4M-row table / 250k-event epochs: 36.8k eps broadcast vs 86.4k
-    # shuffle). No static gate can know which side it is on, so in the
-    # eligible regime the merge PROBES each plan once, records its
-    # measured events/s in the snapshot properties (EWMA, survives
-    # restarts), exploits the faster one, and re-probes the loser every
-    # COW_PLAN_REPROBE_EVERY eligible epochs to track environment drift.
-    # The FIRST eligible epoch always runs the broadcast plan (the
-    # cluster-scale design choice wins ties and keeps the decision
-    # deterministic for tests). Set False to pin the broadcast plan
-    # whenever eligible (the pre-adaptive behavior).
-    COW_PLAN_ADAPTIVE = True
-    COW_PLAN_REPROBE_EVERY = 64
-    COW_PLAN_EWMA = 0.5
 
     # Absolute floor for hot-key salting. Salting exists to split
     # PHYSICALLY oversized shuffle partitions and write files; whether a
@@ -2851,12 +2832,9 @@ class LakeTable:
         summary: dict,
         deltas: dict[str, list[str]] | None = None,
         partial_buckets_add: list[str] | None = None,
-        properties_update: dict | None = None,
     ) -> Snapshot:
         while True:
             props = json.loads(json.dumps(parent.properties))  # deep copy
-            if properties_update:
-                props.update(json.loads(json.dumps(properties_update)))
             if pipeline_id is not None and epoch_id is not None:
                 props.setdefault("pipelines", {})[pipeline_id] = {
                     "last_epoch": int(epoch_id)
@@ -3763,6 +3741,11 @@ class LakeTable:
           6. salted copy-on-write rewrite of touched buckets; atomic
              snapshot commit referencing untouched buckets' old files.
 
+        Steps 5-6 describe the union plan. When the counted gate holds
+        (no hot keys, no widening, no deltas under the touched buckets,
+        base rows >= BROADCAST_TABLE_BATCH_RATIO x batch), the
+        broadcast-probe arm (``_merge_cow_broadcast``) replaces them.
+
         ``update_mode="partial"`` switches UPDATE events from full-row
         replace to the reference replay oracle's dict-merge semantics
         (demo/test_pipeline.sh:244-262: ``user_state[pk].update(data)``):
@@ -3959,8 +3942,13 @@ class LakeTable:
         # summary alongside applied_events: the pair is the per-epoch
         # submitted-vs-won lineage a DLQ requeue or an ops dashboard needs,
         # and it is free - the pre-scan already counted it. The lsn hull and
-        # null-lsn count come from the same rows (see _change_hull).
-        lineage = {
+        # null-lsn count come from the same rows (see _change_hull). Every
+        # arm commits this one summary through _commit_merge.
+        summary = {
+            "touched_buckets": [int(b) for b in touched],
+            "hot_keys": hot,
+            "evolution": evo,
+            "file_stats": file_stats,
             **(lineage or {}),
             "batch_events": int(batch_events),
             "batch_lsn_min": min(
@@ -3986,15 +3974,40 @@ class LakeTable:
             BUCKET_COL, bucket_expr(pk[0], snap.num_buckets)
         )
         obs = Observation(f"merge_applied_{uuid.uuid4().hex[:8]}")
+        mor = write_mode == "mor" and not pk_widened
+
+        # (5-pre) COW broadcast-probe plan - the table side is NEVER
+        # exchanged (the local storage-partitioned-join analog; round-4
+        # verdict item #2). Eligible whenever the epoch is an ordinary
+        # cold full-update COW merge: no hot keys (their salting protects
+        # exchanges this plan doesn't have, but the salted WRITE layout is
+        # the shuffle plans' machinery), no pk widening (needs the full
+        # rebucket join), no unresolved deltas under the touched buckets
+        # (their read-time fold is itself a shuffle), no bucket whose
+        # batch slice exceeds the broadcast budget, and a table side that
+        # dwarfs the batch (BROADCAST_TABLE_BATCH_RATIO, exact sidecar
+        # counts). Counted inputs alone decide the plan.
+        bucket_counts = {int(r[BUCKET_COL]): int(r["_n"]) for r in raw_stats}
+        broadcast = bool(
+            update_mode == "full"
+            and not mor
+            and touched
+            and not hot
+            and not pk_widened
+            and not any(snap.deltas.get(str(b)) for b in touched)
+            and max(bucket_counts.values(), default=0)
+            <= self.BROADCAST_GROUP_EVENTS
+            and (base_rows := self._base_rows(snap, touched)) is not None
+            and base_rows >= self.BROADCAST_TABLE_BATCH_RATIO * batch_events
+        )
 
         if update_mode == "partial":
-            return self._merge_partial(
-                src, snap, schema, schema_version, pk, touched, hot,
-                salt_buckets, "cow" if pk_widened else write_mode,
-                pipeline_id, epoch_id, evo, file_stats, lineage, obs,
+            new_files = self._merge_partial(
+                src, snap, schema, pk, touched, hot, salt_buckets, mor, obs
             )
-
-        if write_mode == "mor" and not pk_widened:
+            operation = "merge-mor-partial" if mor else "merge-partial"
+            plan = None
+        elif mor:
             # (5'/6') in-batch LWW winners appended as delta files - no
             # table read, no join; O(batch) write amplification. Rows are
             # stamped with the committing snapshot version so read-time LWW
@@ -4020,167 +4033,83 @@ class LakeTable:
             new_files = self._write_data_files(
                 winners, target_partitions=target_parts, pre_partitioned=True
             )
-            applied = int(obs.get["applied"]) if touched else 0
-            deltas = {k: list(v) for k, v in snap.deltas.items()}
-            for b, fl in new_files.items():
-                deltas.setdefault(b, [])
-                deltas[b] = deltas[b] + fl
-            return self._commit_write(
-                snap,
-                {k: list(v) for k, v in snap.files.items()},
-                schema,
-                schema_version,
-                "merge-mor",
-                pipeline_id,
-                epoch_id,
-                {
-                    "applied_events": applied,
-                    "touched_buckets": [int(b) for b in touched],
-                    "hot_keys": hot,
-                    "evolution": evo,
-                    "file_stats": file_stats,
-                    "merge_plan": "mor-delta",
-                    **(lineage or {}),
-                },
-                deltas=deltas,
+            operation, plan = "merge-mor", "mor-delta"
+        elif broadcast:
+            new_files, applied = self._merge_cow_broadcast(
+                src, snap, schema, pk, order_fields, touched, bucket_counts
             )
-
-        # (5-pre) COW broadcast-probe plan - the table side is NEVER
-        # exchanged (the local storage-partitioned-join analog; round-4
-        # verdict item #2). Eligible whenever the epoch is an ordinary
-        # cold COW merge: no hot keys (their salting protects exchanges
-        # this plan doesn't have, but the salted WRITE layout is the
-        # shuffle plans' machinery), no pk widening (needs the full
-        # rebucket join), no unresolved deltas under the touched buckets
-        # (their read-time fold is itself a shuffle), and no bucket whose
-        # batch slice exceeds the broadcast budget.
-        bucket_counts = {int(r[BUCKET_COL]): int(r["_n"]) for r in raw_stats}
-        base_rows = (
-            self._base_rows(snap, touched)
-            if self.BROADCAST_MERGE_ENABLED and touched
-            else None
-        )
-        bcast_eligible = (
-            self.BROADCAST_MERGE_ENABLED
-            and touched
-            and not hot
-            and not pk_widened
-            and not any(snap.deltas.get(str(b)) for b in touched)
-            and max(bucket_counts.values(), default=0)
-            <= self.BROADCAST_GROUP_EVENTS
-            and base_rows is not None
-            and base_rows >= self.BROADCAST_TABLE_BATCH_RATIO * batch_events
-        )
-        # Timing context for the adaptive chooser: started at the plan
-        # decision (shared pre-scan excluded), stopped at commit time in
-        # _finish_cow_commit; None when this epoch is regime-ineligible
-        # (its rate would not be comparable).
-        plan_timing = (
-            (time.time(), batch_events) if bcast_eligible else None
-        )
-        if bcast_eligible and self._choose_cow_plan(snap) == "broadcast":
-            return self._merge_cow_broadcast(
-                src, snap, schema, schema_version, pk, order_fields,
-                touched, bucket_counts, pipeline_id, epoch_id, evo,
-                file_stats, lineage, plan_timing=plan_timing,
+            operation, plan = "merge", "cow-broadcast"
+        else:
+            # (5) ONE map-side-combining LWW aggregate over (batch ∪
+            # resolved current rows of touched buckets): in-batch dedup,
+            # batch-vs-table probe and the lsn guard collapse into a single
+            # max_by ordered by (lsn, source-over-table, ts). Equal-lsn ties
+            # go to the batch row (the "s.lsn >= t._lsn" rule of a guarded
+            # MERGE); a DELETE winner IS the tombstone row.
+            current = self._resolved(snap, touched, schema=schema)
+            # Recompute the bucket under the CURRENT schema type (a no-op
+            # whenever the stored-bucket invariant holds; the healing step
+            # of the pk-widening rebucket otherwise) - the union groups by
+            # it, so both sides must agree for every key.
+            current = current.withColumn(
+                BUCKET_COL,
+                bucket_expr(
+                    pk[0], snap.num_buckets, key_type=schema[pk[0]].dataType
+                ),
             )
-
-        # (5) ONE map-side-combining LWW aggregate over (batch ∪ resolved
-        # current rows of touched buckets): in-batch dedup, batch-vs-table
-        # probe and the lsn guard collapse into a single max_by ordered by
-        # (lsn, source-over-table, ts). Equal-lsn ties go to the batch row
-        # (the "s.lsn >= t._lsn" rule of a guarded MERGE); a DELETE winner
-        # IS the tombstone row.
-        current = self._resolved(snap, touched, schema=schema)
-        # Recompute the bucket under the CURRENT schema type (a no-op
-        # whenever the stored-bucket invariant holds; the healing step of
-        # the pk-widening rebucket otherwise) - the union groups by it, so
-        # both sides must agree for every key.
-        current = current.withColumn(
-            BUCKET_COL,
-            bucket_expr(pk[0], snap.num_buckets, key_type=schema[pk[0]].dataType),
+            # SINGLE-exchange plan (round 3): repartition ONCE by the
+            # write-layout keys, then run the LWW aggregate GROUPED BY
+            # (layout keys + pk). Because the partitioning keys are a
+            # subset of the grouping keys, Catalyst proves the exchange
+            # satisfies the aggregate's distribution and inserts no second
+            # shuffle - the same exchange that co-locates keys for the fold
+            # also lays rows out for the per-bucket file write
+            # (pre_partitioned=True). Measured ~1.2x per epoch over the
+            # former agg-exchange + write-repartition pair at 250k-event
+            # epochs. (6) outstanding deltas of the touched buckets are
+            # folded in (the resolved read includes them) and cleared at
+            # commit.
+            union = src.withColumn("_pref", F.lit(1)).unionByName(
+                current.withColumn("_pref", F.lit(0))
+            )
+            union = union.withColumn(
+                "_lsn_ord", F.coalesce(F.col(LSN_COL), F.lit(-1))
+            )
+            union, group_prefix, target_parts = self._single_exchange_layout(
+                union, pk, touched, hot, salt_buckets
+            )
+            merged = lww_dedupe(
+                union,
+                group_prefix + pk,
+                ["_lsn_ord", "_pref"] + list(order_fields[1:]),
+                tiebreak_fields=[],
+            )
+            # applied = keys whose winner came from THIS batch
+            merged = merged.observe(obs, F.sum("_pref").alias("applied"))
+            merged = merged.drop("_pref", "_lsn_ord")
+            new_files = self._write_data_files(
+                merged, target_partitions=target_parts, pre_partitioned=True
+            )
+            operation, plan = "merge", "cow-union"
+        if not broadcast:
+            # observed inside the write job (no extra action)
+            applied = int(obs.get["applied"] or 0) if touched else 0
+        return self._commit_merge(
+            snap, schema, schema_version, operation, touched, new_files,
+            {"applied_events": applied, **summary, "merge_plan": plan},
+            pipeline_id, epoch_id,
         )
-        # SINGLE-exchange plan (round 3): repartition ONCE by the
-        # write-layout keys, then run the LWW aggregate GROUPED BY (layout
-        # keys + pk). Because the partitioning keys are a subset of the
-        # grouping keys, Catalyst proves the exchange satisfies the
-        # aggregate's distribution and inserts no second shuffle - the same
-        # exchange that co-locates keys for the fold also lays rows out for
-        # the per-bucket file write (pre_partitioned=True). Measured ~1.2x
-        # per epoch over the former agg-exchange + write-repartition pair
-        # at 250k-event epochs. (6) outstanding deltas of the touched
-        # buckets are folded in (the resolved read includes them) and
-        # cleared at commit.
-        union = src.withColumn("_pref", F.lit(1)).unionByName(
-            current.withColumn("_pref", F.lit(0))
-        )
-        union = union.withColumn(
-            "_lsn_ord", F.coalesce(F.col(LSN_COL), F.lit(-1))
-        )
-        union, group_prefix, target_parts = self._single_exchange_layout(
-            union, pk, touched, hot, salt_buckets
-        )
-        merged = lww_dedupe(
-            union,
-            group_prefix + pk,
-            ["_lsn_ord", "_pref"] + list(order_fields[1:]),
-            tiebreak_fields=[],
-        )
-        # applied = keys whose winner came from THIS batch, observed inside
-        # the write job (no extra action).
-        merged = merged.observe(obs, F.sum("_pref").alias("applied"))
-        merged = merged.drop("_pref", "_lsn_ord")
-        new_files = self._write_data_files(
-            merged, target_partitions=target_parts, pre_partitioned=True
-        )
-        applied = int(obs.get["applied"] or 0) if touched else 0
-        return self._finish_cow_commit(
-            snap, schema, schema_version, touched, hot, new_files,
-            applied, pipeline_id, epoch_id, evo, file_stats,
-            {**(lineage or {}), "merge_plan": "cow-union"},
-            plan_timing=plan_timing,
-        )
-
-    def _choose_cow_plan(self, snap: Snapshot) -> str:
-        """Pick 'broadcast' or 'shuffle' for an ELIGIBLE steady-state COW
-        epoch from the measured rates in the snapshot properties (see
-        COW_PLAN_ADAPTIVE). Probe order: broadcast first (the
-        cluster-scale design choice, deterministic for the first
-        eligible epoch), then one shuffle probe, then exploit the faster
-        with a periodic re-probe of the loser."""
-        if not self.COW_PLAN_ADAPTIVE:
-            return "broadcast"
-        rates = snap.properties.get("cow_plan_rates", {})
-        b = rates.get("broadcast")
-        s = rates.get("shuffle")
-        if b is None:
-            return "broadcast"
-        if s is None:
-            return "shuffle"
-        fast, slow = ("broadcast", "shuffle") if b >= s else ("shuffle", "broadcast")
-        n = int(rates.get("n", 0))
-        every = self.COW_PLAN_REPROBE_EVERY
-        if every and n % every == every - 1:
-            return slow
-        return fast
 
     def _merge_cow_broadcast(
         self,
         src: DataFrame,
         snap: Snapshot,
         schema: T.StructType,
-        schema_version: int,
         pk: list[str],
         order_fields: list[str],
         touched: list[int],
         bucket_counts: dict[int, int],
-        pipeline_id: str | None,
-        epoch_id: int | None,
-        evo: str | None,
-        file_stats: list | None,
-        lineage: dict | None,
-        plan_timing: tuple[float, int] | None = None,
-    ) -> Snapshot:
+    ) -> tuple[dict[str, list[str]], int]:
         """COW merge with ZERO exchange on the table side - the
         single-box analog of Iceberg's storage-partitioned join
         (SCALE.md: "COW join shuffles the table side every epoch").
@@ -4309,86 +4238,50 @@ class LakeTable:
                 new_files.update(files_g)
         finally:
             winners.unpersist()
-        return self._finish_cow_commit(
-            snap, schema, schema_version, touched, [], new_files, applied,
-            pipeline_id, epoch_id, evo, file_stats,
-            {**(lineage or {}), "merge_plan": "cow-broadcast"},
-            plan_timing=plan_timing,
-        )
+        return new_files, applied
 
-    def _finish_cow_commit(
+    def _commit_merge(
         self,
         snap: Snapshot,
         schema: T.StructType,
         schema_version: int,
+        operation: str,
         touched: list[int],
-        hot: list,
         new_files: dict[str, list[str]],
-        applied: int,
+        summary: dict,
         pipeline_id: str | None,
         epoch_id: int | None,
-        evo: str | None,
-        file_stats: list | None,
-        lineage: dict | None,
-        plan_timing: tuple[float, int] | None = None,
     ) -> Snapshot:
-        """Shared COW commit tail: stray-bucket safety net, manifest
-        bookkeeping (touched buckets replaced, their delta chains cleared),
-        snapshot commit. ``plan_timing`` = (t_start, batch_events) of a
-        regime-ELIGIBLE epoch: the measured events/s is folded (EWMA)
-        into properties["cow_plan_rates"] under 'broadcast'/'shuffle'
-        for the adaptive plan chooser."""
-        props_update = None
-        if plan_timing is not None:
-            t0, batch_events = plan_timing
-            eps = batch_events / max(time.time() - t0, 1e-9)
-            key = (
-                "broadcast"
-                if (lineage or {}).get("merge_plan") == "cow-broadcast"
-                else "shuffle"
-            )
-            rates = dict(snap.properties.get("cow_plan_rates", {}))
-            prev = rates.get(key)
-            rates[key] = round(
-                eps
-                if prev is None
-                else (1 - self.COW_PLAN_EWMA) * prev + self.COW_PLAN_EWMA * eps,
-                1,
-            )
-            rates["n"] = int(rates.get("n", 0)) + 1
-            props_update = {"cow_plan_rates": rates}
-        # Safety net behind the typed pre-scan: a written bucket outside the
-        # touched set means its current rows were NOT joined - committing it
-        # would lose data. Fail loudly instead.
-        stray = set(new_files) - {str(b) for b in touched}
-        if stray:
-            raise RuntimeError(
-                f"merge wrote buckets {sorted(stray)} outside the touched "
-                f"set {touched}; pre-scan/winner bucket assignment diverged"
-            )
+        """The one commit tail of every merge arm. The MOR arms
+        (``merge-mor``, ``merge-mor-partial``) append their files to the
+        buckets' delta chains; the partial one also marks those buckets
+        as holding overlay rows. The COW arms replace the touched buckets'
+        files and clear their delta chains."""
         files = {k: list(v) for k, v in snap.files.items()}
         deltas = {k: list(v) for k, v in snap.deltas.items()}
-        for b in touched:
-            files[str(b)] = new_files.get(str(b), [])
-            deltas.pop(str(b), None)
+        if operation.startswith("merge-mor"):
+            for b, fl in new_files.items():
+                deltas[b] = deltas.get(b, []) + fl
+        else:
+            # Safety net behind the typed pre-scan: a written bucket outside
+            # the touched set means its current rows were NOT joined -
+            # committing it would lose data. Fail loudly instead.
+            stray = set(new_files) - {str(b) for b in touched}
+            if stray:
+                raise RuntimeError(
+                    f"{operation} wrote buckets {sorted(stray)} outside the "
+                    f"touched set {touched}; pre-scan/winner bucket "
+                    "assignment diverged"
+                )
+            for b in touched:
+                files[str(b)] = new_files.get(str(b), [])
+                deltas.pop(str(b), None)
         return self._commit_write(
-            snap,
-            files,
-            schema,
-            schema_version,
-            "merge",
-            pipeline_id,
-            epoch_id,
-            {
-                "applied_events": applied,
-                "touched_buckets": [int(b) for b in touched],
-                "hot_keys": hot,
-                "evolution": evo,
-                "file_stats": file_stats,
-                **(lineage or {}),
-            },
-            deltas=deltas,
-            properties_update=props_update,
+            snap, files, schema, schema_version, operation, pipeline_id,
+            epoch_id, summary, deltas=deltas,
+            partial_buckets_add=(
+                sorted(new_files) if operation == "merge-mor-partial" else None
+            ),
         )
 
     # ------------------------------------------------------------------
@@ -4453,21 +4346,16 @@ class LakeTable:
         src: DataFrame,
         snap: Snapshot,
         schema: T.StructType,
-        schema_version: int,
         pk: list[str],
         touched: list[int],
         hot: list,
         salt_buckets: int,
-        write_mode: str,
-        pipeline_id: str | None,
-        epoch_id: int | None,
-        evo: str | None,
-        file_stats: list | None,
-        lineage: dict | None,
+        mor: bool,
         obs: Observation,
-    ) -> Snapshot:
-        """Apply a folded partial-mode batch (see merge() docstring for the
-        semantics; reference oracle demo/test_pipeline.sh:244-262).
+    ) -> dict[str, list[str]]:
+        """Write a folded partial-mode batch and return its files (see
+        merge() docstring for the semantics; reference oracle
+        demo/test_pipeline.sh:244-262).
 
         COW: fold + full-outer-join against the touched buckets' resolved
         rows - the per-column dict-merge needs per-column values and lsns
@@ -4482,7 +4370,7 @@ class LakeTable:
         has_b = F.col("_b").isNotNull()
         b_deleted = F.coalesce(F.col(f"_b.{DELETED_COL}"), F.lit(False))
 
-        if write_mode == "mor":
+        if mor:
             rows = folded.select(
                 *pk,
                 *[
@@ -4506,134 +4394,76 @@ class LakeTable:
                 (~has_b).alias(PARTIAL_COL),
                 F.lit(snap.version + 1).cast("long").alias(DELTA_SEQ_COL),
             )
-            salted = with_salt(
-                rows, hot, salt_buckets,
-                key=pk[0], sub_key=pk[1] if len(pk) > 1 else pk[0],
+        else:
+            # COW: dict-merge against the current rows of touched buckets
+            current = self._resolved(snap, touched, schema=schema)
+            current = current.withColumn(
+                BUCKET_COL,
+                bucket_expr(
+                    pk[0], snap.num_buckets, key_type=schema[pk[0]].dataType
+                ),
             )
-            target_parts = max(len(touched), 1) * (salt_buckets if hot else 1)
-            new_files = self._write_data_files(
-                salted, target_partitions=target_parts
+            t = current.select(
+                *pk,
+                *[F.col(c).alias(f"_t_{c}") for c in payload_cols],
+                F.col(LSN_COL).alias("_t_lsn"),
+                F.col(DELETED_COL).alias("_t_deleted"),
+                F.col(BUCKET_COL).alias("_t_bucket"),
             )
-            applied = int(obs.get["applied"]) if touched else 0
-            deltas = {k: list(v) for k, v in snap.deltas.items()}
-            for b, fl in new_files.items():
-                deltas.setdefault(b, [])
-                deltas[b] = deltas[b] + fl
-            return self._commit_write(
-                snap,
-                {k: list(v) for k, v in snap.files.items()},
-                schema,
-                schema_version,
-                "merge-mor-partial",
-                pipeline_id,
-                epoch_id,
-                {
-                    "applied_events": applied,
-                    "touched_buckets": [int(b) for b in touched],
-                    "hot_keys": hot,
-                    "evolution": evo,
-                    "file_stats": file_stats,
-                    **(lineage or {}),
-                },
-                deltas=deltas,
-                partial_buckets_add=sorted(new_files),
+            joined = folded.join(t, on=pk, how="full_outer")
+            s_present = F.col(BUCKET_COL).isNotNull()
+            t_present = F.col("_t_bucket").isNotNull()
+            t_live = t_present & ~F.coalesce(
+                F.col("_t_deleted"), F.lit(False)
             )
-
-        # COW: dict-merge against the current rows of touched buckets
-        current = self._resolved(snap, touched, schema=schema)
-        current = current.withColumn(
-            BUCKET_COL,
-            bucket_expr(pk[0], snap.num_buckets, key_type=schema[pk[0]].dataType),
-        )
-        t = current.select(
-            *pk,
-            *[F.col(c).alias(f"_t_{c}") for c in payload_cols],
-            F.col(LSN_COL).alias("_t_lsn"),
-            F.col(DELETED_COL).alias("_t_deleted"),
-            F.col(BUCKET_COL).alias("_t_bucket"),
-        )
-        joined = folded.join(t, on=pk, how="full_outer")
-        s_present = F.col(BUCKET_COL).isNotNull()
-        t_present = F.col("_t_bucket").isNotNull()
-        t_live = t_present & ~F.coalesce(F.col("_t_deleted"), F.lit(False))
-        t_lsn_ord = F.coalesce(F.col("_t_lsn"), F.lit(-1))
-        b_lsn_ord = F.coalesce(F.col(f"_b.{LSN_COL}"), F.lit(-1))
-        # a barrier takes effect unless it is a stale redelivery (older
-        # than the target row); its trailing updates still apply by the
-        # per-column lsn guard below
-        eff_barrier = (
-            s_present & has_b & (~t_present | (b_lsn_ord >= t_lsn_ord))
-        )
-        # update-on-missing-key is dropped (the reference oracle's
-        # `if primary_key in user_state` guard)
-        merged = joined.filter(eff_barrier | t_present).select(
-            *pk,
-            *[
-                F.when(
-                    eff_barrier & b_deleted,
-                    F.lit(None).cast(schema[c].dataType),
-                )
-                .when(
-                    eff_barrier,
-                    F.coalesce(F.col(f"_u_{c}"), F.col(f"_b.{c}")),
-                )
-                .when(
-                    t_live
-                    & F.col(f"_ul_{c}").isNotNull()
-                    & (F.col(f"_ul_{c}") >= t_lsn_ord),
-                    F.col(f"_u_{c}"),
-                )
-                .otherwise(F.col(f"_t_{c}"))
-                .alias(c)
-                for c in payload_cols
-            ],
-            F.when(eff_barrier, F.col("_max_lsn"))
-            .when(t_live, F.greatest(F.col("_t_lsn"), F.col("_max_lsn")))
-            .otherwise(F.col("_t_lsn"))
-            .alias(LSN_COL),
-            F.when(eff_barrier, b_deleted)
-            .otherwise(F.coalesce(F.col("_t_deleted"), F.lit(False)))
-            .alias(DELETED_COL),
-            F.coalesce(F.col(BUCKET_COL), F.col("_t_bucket")).alias(
-                BUCKET_COL
-            ),
-        )
+            t_lsn_ord = F.coalesce(F.col("_t_lsn"), F.lit(-1))
+            b_lsn_ord = F.coalesce(F.col(f"_b.{LSN_COL}"), F.lit(-1))
+            # a barrier takes effect unless it is a stale redelivery (older
+            # than the target row); its trailing updates still apply by the
+            # per-column lsn guard below
+            eff_barrier = (
+                s_present & has_b & (~t_present | (b_lsn_ord >= t_lsn_ord))
+            )
+            # update-on-missing-key is dropped (the reference oracle's
+            # `if primary_key in user_state` guard)
+            rows = joined.filter(eff_barrier | t_present).select(
+                *pk,
+                *[
+                    F.when(
+                        eff_barrier & b_deleted,
+                        F.lit(None).cast(schema[c].dataType),
+                    )
+                    .when(
+                        eff_barrier,
+                        F.coalesce(F.col(f"_u_{c}"), F.col(f"_b.{c}")),
+                    )
+                    .when(
+                        t_live
+                        & F.col(f"_ul_{c}").isNotNull()
+                        & (F.col(f"_ul_{c}") >= t_lsn_ord),
+                        F.col(f"_u_{c}"),
+                    )
+                    .otherwise(F.col(f"_t_{c}"))
+                    .alias(c)
+                    for c in payload_cols
+                ],
+                F.when(eff_barrier, F.col("_max_lsn"))
+                .when(t_live, F.greatest(F.col("_t_lsn"), F.col("_max_lsn")))
+                .otherwise(F.col("_t_lsn"))
+                .alias(LSN_COL),
+                F.when(eff_barrier, b_deleted)
+                .otherwise(F.coalesce(F.col("_t_deleted"), F.lit(False)))
+                .alias(DELETED_COL),
+                F.coalesce(F.col(BUCKET_COL), F.col("_t_bucket")).alias(
+                    BUCKET_COL
+                ),
+            )
         salted = with_salt(
-            merged, hot, salt_buckets,
+            rows, hot, salt_buckets,
             key=pk[0], sub_key=pk[1] if len(pk) > 1 else pk[0],
         )
         target_parts = max(len(touched), 1) * (salt_buckets if hot else 1)
-        new_files = self._write_data_files(salted, target_partitions=target_parts)
-        applied = int(obs.get["applied"] or 0) if touched else 0
-        stray = set(new_files) - {str(b) for b in touched}
-        if stray:
-            raise RuntimeError(
-                f"partial merge wrote buckets {sorted(stray)} outside the "
-                f"touched set {touched}"
-            )
-        files = {k: list(v) for k, v in snap.files.items()}
-        deltas = {k: list(v) for k, v in snap.deltas.items()}
-        for b in touched:
-            files[str(b)] = new_files.get(str(b), [])
-            deltas.pop(str(b), None)
-        return self._commit_write(
-            snap,
-            files,
-            schema,
-            schema_version,
-            "merge-partial",
-            pipeline_id,
-            epoch_id,
-            {
-                "applied_events": applied,
-                "touched_buckets": [int(b) for b in touched],
-                "hot_keys": hot,
-                "evolution": evo,
-                "file_stats": file_stats,
-                **(lineage or {}),
-            },
-            deltas=deltas,
-        )
+        return self._write_data_files(salted, target_partitions=target_parts)
 
     # ------------------------------------------------------------------
     # maintenance

@@ -263,8 +263,6 @@ def apply_changes(
             "sync once after publish_branch)"
         )
     table = LakeTable(spark, config.table_path, branch=branch)
-    if getattr(config, "cow_plan_adaptive", None) is not None:
-        table.COW_PLAN_ADAPTIVE = config.cow_plan_adaptive
     lineage = LineageLog(spark, lineage_path) if lineage_path else None
     # Epoch ids are only meaningful relative to ONE checkpoint lineage -
     # foreachBatch restarts numbering at 0 for a fresh checkpoint dir. The
@@ -528,9 +526,6 @@ def route_changes(
         raise ValueError("route_parallelism must be >= 1")
     _validate_trigger(trigger)
     tables = {name: LakeTable(spark, cfg.table_path) for name, cfg in routes.items()}
-    for name, cfg in routes.items():
-        if getattr(cfg, "cow_plan_adaptive", None) is not None:
-            tables[name].COW_PLAN_ADAPTIVE = cfg.cow_plan_adaptive
     lineage = LineageLog(spark, lineage_path) if lineage_path else None
     import threading
 

@@ -10,7 +10,9 @@ Pins, in order:
   per-group broadcast budget splits the touched buckets;
 - fallback gating: hot keys, MOR deltas under touched buckets, and an
   over-budget bucket all route to the shuffle plans (and still match
-  the oracle).
+  the oracle);
+- plan choice from row counts alone: every eligible epoch takes the
+  broadcast arm, and no merge leaves timing state in the properties.
 """
 
 from __future__ import annotations
@@ -127,18 +129,24 @@ def _replay_equal(spark, tmp_path, name, configure, want_plan=None):
 
 
 def _force_broadcast(t):
-    # ratio 0 makes every epoch eligible; adaptive off pins the
-    # broadcast arm every epoch (the chooser itself is tested in
-    # test_adaptive_plan_chooser_*)
+    # ratio 0 makes every epoch eligible, so every epoch takes the
+    # broadcast arm: the plan follows the counted gate alone
     t.BROADCAST_TABLE_BATCH_RATIO = 0.0
-    t.COW_PLAN_ADAPTIVE = False
+
+
+def _union_only(t):
+    t.BROADCAST_TABLE_BATCH_RATIO = float("inf")
 
 
 def test_broadcast_merge_equals_oracle(spark, tmp_path):
     # every epoch must report the cow-broadcast plan AND match the
-    # replay oracle
-    _replay_equal(spark, tmp_path, "bc", _force_broadcast,
-                  want_plan="cow-broadcast")
+    # replay oracle; the merges write no property but their epoch
+    # markers (no measured-rate state a later epoch could plan from)
+    tbl = _replay_equal(spark, tmp_path, "bc", _force_broadcast,
+                        want_plan="cow-broadcast")
+    first, *rest = tbl.history()
+    for s in rest:
+        assert set(s.properties) == set(first.properties) | {"pipelines"}
 
 
 def test_multi_group_chunking_equals_single_group(spark, tmp_path):
@@ -154,10 +162,8 @@ def test_multi_group_chunking_equals_single_group(spark, tmp_path):
 
     a = _replay_equal(spark, tmp_path, "grp", tiny_budget,
                       want_plan="cow-broadcast")
-    b = _replay_equal(
-        spark, tmp_path, "ref",
-        lambda t: setattr(t, "BROADCAST_MERGE_ENABLED", False),
-    )
+    b = _replay_equal(spark, tmp_path, "ref", _union_only,
+                      want_plan="cow-union")
     pa = a.read().toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     pb = b.read().toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(pa[sorted(pa.columns)], pb[sorted(pb.columns)], check_dtype=False)
@@ -195,9 +201,7 @@ def test_applied_counts_match_shuffle_plan(spark, tmp_path):
 
     def run(path, enabled):
         t = _mk(spark, path, num_buckets=4)
-        t.BROADCAST_MERGE_ENABLED = enabled
-        t.BROADCAST_TABLE_BATCH_RATIO = 0.0
-        t.COW_PLAN_ADAPTIVE = False
+        (_force_broadcast if enabled else _union_only)(t)
         t.merge(changes.filter(F.col("source_file") == f0),
                 hot_key_threshold=1.1)
         s = t.merge(changes.filter(F.col("source_file") == f1),
@@ -225,68 +229,3 @@ def test_ratio_gate_prefers_shuffle_until_table_dwarfs_batch(spark, tmp_path):
     assert s2.summary["merge_plan"] == "cow-broadcast"
     pdf = pd.concat([big.toPandas(), small.toPandas()])
     assert_table_equals_oracle(tbl.read(), oracle.replay(pdf))
-
-
-def test_adaptive_plan_chooser_logic(spark, tmp_path):
-    """Pure chooser policy: broadcast probe first, shuffle probe second,
-    exploit the faster, periodic re-probe of the loser, adaptive-off
-    pins broadcast."""
-    tbl = _mk(spark, tmp_path / "logic", num_buckets=2)
-
-    def snap_with(rates):
-        s = tbl.snapshot()
-        s.properties["cow_plan_rates"] = rates
-        return s
-
-    assert tbl._choose_cow_plan(tbl.snapshot()) == "broadcast"  # probe 1
-    assert tbl._choose_cow_plan(snap_with({"broadcast": 100.0, "n": 1})) == "shuffle"  # probe 2
-    assert tbl._choose_cow_plan(
-        snap_with({"broadcast": 100.0, "shuffle": 50.0, "n": 2})
-    ) == "broadcast"  # exploit
-    assert tbl._choose_cow_plan(
-        snap_with({"broadcast": 50.0, "shuffle": 100.0, "n": 2})
-    ) == "shuffle"  # exploit the other way
-    # periodic re-probe of the loser
-    n = tbl.COW_PLAN_REPROBE_EVERY - 1
-    assert tbl._choose_cow_plan(
-        snap_with({"broadcast": 50.0, "shuffle": 100.0, "n": n})
-    ) == "broadcast"
-    # adaptive off: always the broadcast (cluster-design) arm
-    tbl.COW_PLAN_ADAPTIVE = False
-    assert tbl._choose_cow_plan(
-        snap_with({"broadcast": 50.0, "shuffle": 100.0, "n": 2})
-    ) == "broadcast"
-
-
-def test_adaptive_probe_sequence_and_rate_persistence(spark, tmp_path):
-    """Integration: with every epoch eligible, epoch 0 probes broadcast,
-    epoch 1 probes shuffle, epoch 2 exploits the measured winner; rates
-    persist in snapshot properties (EWMA) and survive a fresh handle;
-    the state stays oracle-equal throughout."""
-    tbl = _mk(spark, tmp_path / "probe", num_buckets=4)
-    tbl.BROADCAST_TABLE_BATCH_RATIO = 0.0
-    changes = gen_changes(spark, n_events=3000, n_convs=60, seed=17, n_files=3)
-    pdf = changes.toPandas()
-    files = sorted(pdf["source_file"].unique())
-    plans = []
-    seen = []
-    for e, fname in enumerate(files):
-        snap = tbl.merge(
-            changes.filter(F.col("source_file") == fname),
-            pipeline_id="p", epoch_id=e, hot_key_threshold=1.1,
-        )
-        plans.append(snap.summary["merge_plan"])
-        seen.append(fname)
-        assert_table_equals_oracle(
-            tbl.read(), oracle.replay(pdf[pdf["source_file"].isin(seen)])
-        )
-    assert plans[0] == "cow-broadcast"  # probe 1: the cluster-design arm
-    assert plans[1] == "cow-union"      # probe 2: the shuffle arm
-    rates = tbl.snapshot().properties["cow_plan_rates"]
-    assert rates["n"] == 3 and "broadcast" in rates and "shuffle" in rates
-    # epoch 2 exploited whichever probe measured faster
-    want = "cow-broadcast" if rates["broadcast"] >= rates["shuffle"] else "cow-union"
-    assert plans[2] == want
-    # a fresh handle reads the same rates (persisted, not in-memory)
-    fresh = LakeTable(spark, str(tmp_path / "probe"))
-    assert fresh.snapshot().properties["cow_plan_rates"] == rates

@@ -87,8 +87,10 @@ def test_null_lsn_rule_small_epoch_union_plan(spark, tmp_path):
 def test_merges_never_write_session_conf(spark, tmp_path, monkeypatch):
     """No merge plan sets or unsets session conf, so a query running
     beside a merge on the same SparkSession plans under the conf it was
-    given: COW (union and broadcast-probe), MOR, partial-update and
-    merge_into."""
+    given: COW (union and broadcast-probe), MOR, COW and MOR
+    partial-update and merge_into. Every arm ends in the one commit
+    tail, so each commit's operation, merge_plan and summary keys are
+    pinned here too."""
     from pyspark.sql.conf import RuntimeConfig
 
     writes: list[tuple] = []
@@ -110,19 +112,48 @@ def test_merges_never_write_session_conf(spark, tmp_path, monkeypatch):
         "lsn", F.col("lsn") + 10**6
     )
     cow = _mk_table(spark, str(tmp_path / "cow"))
-    cow.merge(grow, pipeline_id="p", epoch_id=0)
-    cow.merge(small, pipeline_id="p", epoch_id=1)
-    assert {s.summary.get("merge_plan") for s in cow.history()} >= {
-        "cow-union", "cow-broadcast",
+    commits = {
+        "cow-union": cow.merge(grow, pipeline_id="p", epoch_id=0),
+        "cow-broadcast": cow.merge(small, pipeline_id="p", epoch_id=1),
     }
     mor = _mk_table(spark, str(tmp_path / "mor"))
-    mor.merge(grow, pipeline_id="p", epoch_id=0, write_mode="mor")
+    commits["mor"] = mor.merge(
+        grow, pipeline_id="p", epoch_id=0, write_mode="mor"
+    )
     partial = _mk_table(spark, str(tmp_path / "partial"))
-    partial.merge(grow, pipeline_id="p", epoch_id=0, update_mode="partial")
+    commits["partial"] = partial.merge(
+        grow, pipeline_id="p", epoch_id=0, update_mode="partial"
+    )
+    mor_partial = _mk_table(spark, str(tmp_path / "mor_partial"))
+    commits["mor-partial"] = mor_partial.merge(
+        grow, pipeline_id="p", epoch_id=0, write_mode="mor",
+        update_mode="partial",
+    )
     src = cow.read().limit(5).withColumn("text", F.lit("merged-into"))
-    cow.merge_into(src, when_matched_update=True)
+    commits["merge_into"] = cow.merge_into(src, when_matched_update=True)
     assert cow.read().filter(F.col("text") == "merged-into").count() == 5
     assert writes == []
+
+    base = {
+        "applied_events", "touched_buckets", "hot_keys", "batch_events",
+        "batch_lsn_min", "batch_lsn_max", "batch_lsn_nulls",
+    }
+    want = {
+        "cow-union": ("merge", "cow-union"),
+        "cow-broadcast": ("merge", "cow-broadcast"),
+        "mor": ("merge-mor", "mor-delta"),
+        "partial": ("merge-partial", None),
+        "mor-partial": ("merge-mor-partial", None),
+        "merge_into": ("merge", "cow-broadcast"),
+    }
+    for arm, (operation, plan) in want.items():
+        snap = commits[arm]
+        assert snap.operation == operation, arm
+        assert snap.summary.get("merge_plan") == plan, arm
+        keys = base | {"merge_plan"} if plan else base
+        assert set(snap.summary) == keys, (arm, sorted(snap.summary))
+    assert commits["mor-partial"].properties["partial_delta_buckets"]
+    assert "partial_delta_buckets" not in commits["mor"].properties
 
 
 def test_concurrent_merges_two_tables_one_session(spark, tmp_path):
