@@ -1140,6 +1140,7 @@ def main(argv: list[str] | None = None) -> int:
                     "expired_versions": expired,
                     "removed_data_files": len(removed["data"]),
                     "removed_manifest_files": len(removed["manifests"]),
+                    "removed_key_files": len(removed["keys"]),
                     "dry_run": a.dry_run,
                 }
             )

@@ -730,6 +730,10 @@ class LakeTable:
     def _manifest_dir(self) -> Path:
         return self.root / "_meta" / "manifests"
 
+    @property
+    def _keys_dir(self) -> Path:
+        return self.root / "_meta" / "keys"
+
     # Second-level manifests: a bucket manifest holds SEALED chunk refs
     # plus an inline tail. Appends (MOR delta files, insert-only appends)
     # rewrite only the tail; once the tail reaches this many entries it is
@@ -1153,47 +1157,30 @@ class LakeTable:
             changed.append(int(b))
         return sorted(changed)
 
-    # Commit operations a key-pruned diff may span: every row they change
-    # carries an lsn of the committing batch (merges) or keeps its stored
-    # lsn (compaction). Anything else - DML, append, rollback, rebucket,
-    # renames, fork/publish - sends the diff down the unpruned path.
+    # Commit operations a key-pruned diff may span: a merge changes only
+    # its batch keys' images, a compaction none. Anything else - DML,
+    # append, rollback, rebucket, renames, fork/publish - sends the diff
+    # down the unpruned path.
     _HULL_OPS = frozenset(
         {"merge", "merge-mor", "merge-partial", "merge-mor-partial", "compact"}
     )
 
-    def _change_hull(
-        self, snap_a: Snapshot, snap_b: Snapshot, changed: list[int]
-    ) -> tuple[int, int] | None | bool:
-        """The lsn hull ``(lo, hi)`` of the batches committed in
-        ``(a, b]`` when it provably covers every key whose live image
-        changed, and the range's change volume is small enough that
-        pruning to those keys pays (fewer events than b's base and delta
-        rows in the changed buckets, and within the broadcast key cap);
-        ``None`` otherwise (diff unpruned). ``False`` means the range
-        provably changed no live row (only state-preserving compactions).
-
-        Sound because each range commit is a merge - whose written rows
-        carry their batch's lsns, while carried-over rows keep older ones
-        - or a compaction, which preserves lsns. So a key whose image
-        differs between a and b has a row with an lsn inside the hull in
-        a file b lists and a does not. Bounded because the hull must lie
-        above every lsn stored in a's changed buckets: then no carried-over
-        row falls inside it, every row inside it was written by the range,
-        and K holds at most the range's event count of keys. A re-delivered
-        or late event below a stored lsn therefore sends the diff down the
-        unpruned path (a COW merge carries the rest of its rewritten
-        bucket over with the stored lsns, and K would take them all).
-
-        Requires, per commit metadata and stats sidecars only (no Spark
-        job): b's parent chain reaches a through retained snapshots, every
-        commit is in ``_HULL_OPS``, every merge recorded its hull and had
-        no null lsn (a null-lsn row is invisible to the hull), no
-        compaction purged tombstones at or above the hull's low end (a
-        purged delete would leave no trace in b), and every file a lists
-        in the changed buckets has ``_lsn`` stats below the hull."""
-        lo = hi = None
-        events = 0
-        purges = []
+    def _recorded_keys(
+        self, snap_a: Snapshot, snap_b: Snapshot
+    ) -> list[tuple] | None | bool:
+        """The distinct batch keys the merges in ``(a, b]`` recorded
+        (:meth:`_commit_merge`): a superset of every key whose live image
+        changed, since a merge writes only its batch keys' rows (a batch
+        row that loses LWW changes nothing) and a compaction, purging or
+        not, changes no live image. ``False`` when no commit in the range
+        wrote a batch; ``None`` (diff unpruned) when b's parent chain
+        does not reach a through retained snapshots, a commit is not in
+        ``_HULL_OPS``, a merge with a batch recorded no keys (over the
+        cap, a NULL key field, or written before keys were recorded), or
+        the recorded counts pass ``PUSHDOWN_MAX_KEYS``. The summaries
+        decide before any sidecar is opened."""
+        sidecars = []
+        total = 0
         v = snap_b.version
         while v != snap_a.version:
             path = self._snapshot_path(v)
@@ -1203,39 +1190,25 @@ class LakeTable:
             s = d.get("summary", {})
             if d.get("operation") not in self._HULL_OPS:
                 return None
-            if d["operation"] == "compact":
-                purges.append(s.get("purged_below_lsn"))
-            elif s.get("batch_lsn_nulls", 1) or "batch_events" not in s:
-                return None
-            elif s["batch_events"]:
-                b_lo, b_hi = s["batch_lsn_min"], s["batch_lsn_max"]
-                lo = b_lo if lo is None else min(lo, b_lo)
-                hi = b_hi if hi is None else max(hi, b_hi)
-                events += int(s["batch_events"])
-                if events > self.BROADCAST_KEYS_MAX:
+            if d["operation"] != "compact" and s.get("batch_events", 1):
+                if "changed_keys" not in s:
                     return None
+                total += s["changed_keys"]
+                if total > self.PUSHDOWN_MAX_KEYS:
+                    return None
+                sidecars.append(s["changed_keys_file"])
             v = d.get("parent")
             if v is None:
                 return None
-        if lo is None:
+        if not sidecars:
             return False
-        if any(p is not None and p > lo for p in purges):
-            return None
-        stored = [
-            f
-            for b in changed
-            for m in (snap_a.files, snap_a.deltas)
-            for f in m.get(str(b), [])
-        ]
-        stats = self._stats_for(stored)
-        for rel in stored:
-            s = stats.get(rel, {}).get(LSN_COL)
-            if not s or not isinstance(s[1], (int, float)) or s[1] >= lo:
-                return None
-        rows = self._base_rows(snap_b, changed, with_deltas=True)
-        if rows is None or events >= rows:
-            return None
-        return lo, hi
+        import pyarrow.parquet as pq
+
+        return list(dict.fromkeys(
+            t
+            for rel in sidecars
+            for t in zip(*pq.read_table(self.root / rel).to_pydict().values())
+        ))
 
     def _diff_images(
         self, from_version: int, snap_b: "Snapshot"
@@ -1251,12 +1224,12 @@ class LakeTable:
 
         Plan: the base and delta files of :meth:`changed_buckets` are read
         ONCE, each tagged by which snapshot lists it (a-only, b-only or
-        both); when :meth:`_change_hull` proves a range's change volume
-        small, the rows are first semi-joined to a broadcast candidate-key
-        set K (the pks of b-only rows whose lsn lies in the range's lsn
-        hull; at most the range's event count), so unchanged carried-over
-        rows never reach the exchange. Then one grouped pass per pk
-        computes each side's read-time LWW image - max over
+        both). When the range's merges recorded their batch keys
+        (:meth:`_recorded_keys`), every scan is filtered by them as parsed
+        literals (:func:`key_literals`: a pk0 IN that prunes row groups
+        and an exact tuple IN), so unchanged carried-over rows never reach
+        the exchange and the diff runs as one job. Then one grouped pass
+        per pk computes each side's read-time LWW image - max over
         :func:`_lww_ord`, with partial-update overlays folded after their
         barrier by the same helpers :meth:`_resolve_partial` uses - and the
         insert/update/delete classification follows from the two images."""
@@ -1276,9 +1249,14 @@ class LakeTable:
         )
         if not changed:
             return None
-        hull = self._change_hull(snap_a, snap_b, changed)
-        if hull is False:
+        keys = self._recorded_keys(snap_a, snap_b)
+        if keys is False:
             return None
+        filters, probe = (), None
+        if keys is not None:
+            _, filters, probe = key_literals(
+                self.spark, [schema[c] for c in pk], keys
+            )
         has_partial = any(
             int(b) in changed
             for s in (snap_a, snap_b)
@@ -1307,7 +1285,7 @@ class LakeTable:
                 )
             return df.withColumns(cols).drop(BUCKET_COL, DELTA_SEQ_COL)
 
-        parts = {}
+        parts = []
         for delta, m_a, m_b in (
             (False, snap_a.files, snap_b.files),
             (True, snap_a.deltas, snap_b.deltas),
@@ -1316,24 +1294,16 @@ class LakeTable:
             fb = {f for b in changed for f in m_b.get(str(b), [])}
             for cls, files in (("a", fa - fb), ("b", fb - fa), ("ab", fa & fb)):
                 if files:
-                    parts.setdefault(cls, []).append(
-                        _scan(sorted(files), delta, classes[cls])
-                    )
+                    parts.append(_scan(sorted(files), delta, classes[cls]))
         if not parts:
             return None
-
-        def _union(dfs: list[DataFrame]) -> DataFrame:
-            out = dfs[0]
-            for df in dfs[1:]:
-                out = out.unionByName(df)
-            return out
-
-        rows = _union([df for dfs in parts.values() for df in dfs])
-        if hull is not None:
-            if "b" not in parts:
-                return None
-            keys = _union(parts["b"]).filter(F.col(LSN_COL).between(*hull))
-            rows = rows.join(F.broadcast(keys.select(*pk)), on=pk, how="left_semi")
+        rows = parts[0]
+        for df in parts[1:]:
+            rows = rows.unionByName(df)
+        for cond in filters:  # pushed into every scan by the optimizer
+            rows = rows.filter(cond)
+        if probe is not None:
+            rows = rows.join(probe, on=pk, how="left_semi")
 
         # The ONE exchange ships the rows themselves: a key's rows sit in
         # different files, so a map-side partial aggregate would combine
@@ -1422,21 +1392,20 @@ class LakeTable:
 
         Scale shape: priced by the range's change volume. The changed
         buckets' files (:meth:`changed_buckets`, exact manifest lists) are
-        read once; when every commit in the range is a merge or
-        compaction with a recorded lsn hull (:meth:`_change_hull`), their
-        rows are semi-joined to a broadcast set of the keys the range
-        wrote, so only those keys' rows cross the ONE pk exchange that
-        builds both images - a single-epoch diff on a 100 TB table ships
-        the epoch's keys, not its touched buckets. It falls back to
-        exchanging every row of the changed buckets when the range holds
-        any other commit (DML, append, rollback, rebucket, rename,
-        publish), a null-lsn batch, a tombstone purge inside the hull, an
-        event at or below an lsn the ``from`` side already stores in the
-        changed buckets (a re-delivered or late event), or an expired
-        snapshot; or when its events reach the changed buckets' row
-        count. Schema evolution across the range is handled
-        by reading the ``from`` side under the ``to`` snapshot's (wider)
-        schema, the same
+        read once. Every merge records its batch keys in its commit, so
+        when each commit in the range is a merge or a compaction and the
+        merges' keys number at most ``PUSHDOWN_MAX_KEYS``
+        (:meth:`_recorded_keys`), those keys filter every scan as parsed
+        literals and only their rows cross the ONE pk exchange that
+        builds both images - one Spark job, and a single-epoch diff on a
+        100 TB table ships the epoch's keys, not its touched buckets. It
+        falls back to exchanging every row of the changed buckets when
+        the range holds any other commit (DML, append, rollback,
+        rebucket, rename, publish), a merge over the cap or one that
+        recorded no keys (a NULL key field, or committed before keys were
+        recorded), or an expired snapshot. Schema evolution across the
+        range is handled by reading the ``from`` side under the ``to``
+        snapshot's (wider) schema, the same
         null-fill/widen path time travel uses; a row that differs only in
         a column added after ``from`` diffs as an update whose pre-image
         value for that column is null, matching what a reader of ``from``
@@ -2543,11 +2512,10 @@ class LakeTable:
     # more than they prune and the lazy key relation is the probe.
     PUSHDOWN_MAX_KEYS = 10_000
 
-    # past that cap the keyed reads broadcast the key relation only up to
+    # past that cap _keyed_read broadcasts the key relation only up to
     # this many keys (measured): an explicit hint bypasses
     # autoBroadcastJoinThreshold, and a sync's change-volume key set must
     # shuffle-join instead. 10^6 short key rows is a few tens of MB.
-    # _change_hull caps its broadcast key set at the same size.
     BROADCAST_KEYS_MAX = 1_000_000
 
     @staticmethod
@@ -2646,16 +2614,12 @@ class LakeTable:
                 stats[rel] = cols
         (commit_dir / ".stats.json").write_text(json.dumps(stats))
 
-    def _base_rows(
-        self, snap: Snapshot, buckets: list[int], with_deltas: bool = False
-    ) -> int | None:
-        """Exact row count of the BASE files (plus the MOR delta files with
-        ``with_deltas``) under ``buckets``, from the stats sidecars -
-        driver-side, O(files), cached per commit dir. None when any file
-        predates row-count sidecars (legacy commits): the caller must then
-        assume nothing about table size."""
-        maps = (snap.files, snap.deltas) if with_deltas else (snap.files,)
-        rels = [f for b in buckets for m in maps for f in m.get(str(b), [])]
+    def _base_rows(self, snap: Snapshot, buckets: list[int]) -> int | None:
+        """Exact row count of the BASE files under ``buckets``, from the
+        stats sidecars - driver-side, O(files), cached per commit dir.
+        None when any file predates row-count sidecars (legacy commits):
+        the caller must then assume nothing about table size."""
+        rels = [f for b in buckets for f in snap.files.get(str(b), [])]
         if not rels:
             return 0
         stats = self._stats_for(rels)
@@ -3842,20 +3806,11 @@ class LakeTable:
         # The pre-scan hashes the pk CAST TO THE RESOLVED TABLE TYPE so it
         # agrees with the conformed winners' bucket assignment even across a
         # pk type widening (xxhash64(int) != xxhash64(long) for equal values).
-        # The same aggregate carries the batch's lsn hull and null-lsn count
-        # (the stored _lsn cast) into the commit summary, where
-        # read_changes uses them to key-prune a range's diff.
-        batch_lsn = F.col(lsn_src).cast("long")
         bucket_stats = changes.groupBy(
             bucket_expr(
                 pk[0], snap.num_buckets, key_type=schema[pk[0]].dataType
             ).alias(BUCKET_COL)
-        ).agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.min(batch_lsn).alias("_lo"),
-            F.max(batch_lsn).alias("_hi"),
-            F.count(F.when(batch_lsn.isNull(), 1)).alias("_nulls"),
-        )
+        ).agg(F.count(F.lit(1)).alias("_n"))
         file_stats: list[dict] | None = None
         if collect_file_stats and file_col in changes.columns:
             # Fused into the SAME driver action as the pre-scan: the two
@@ -3872,9 +3827,6 @@ class LakeTable:
                 F.lit("b").alias("_t"),
                 F.col(BUCKET_COL),
                 F.col("_n"),
-                F.col("_lo"),
-                F.col("_hi"),
-                F.col("_nulls"),
                 F.lit(None).cast("string").alias("_f"),
                 F.lit(None).cast("long").alias("_min_lsn"),
                 F.lit(None).cast("long").alias("_max_lsn"),
@@ -3883,9 +3835,6 @@ class LakeTable:
                     F.lit("f").alias("_t"),
                     F.lit(None).cast("int").alias(BUCKET_COL),
                     F.col("_n"),
-                    F.lit(None).cast("long").alias("_lo"),
-                    F.lit(None).cast("long").alias("_hi"),
-                    F.lit(None).cast("long").alias("_nulls"),
                     F.col("_f"),
                     F.col("_min_lsn"),
                     F.col("_max_lsn"),
@@ -3941,9 +3890,8 @@ class LakeTable:
         # batch_events (pre-LWW submitted rows) rides into every commit
         # summary alongside applied_events: the pair is the per-epoch
         # submitted-vs-won lineage a DLQ requeue or an ops dashboard needs,
-        # and it is free - the pre-scan already counted it. The lsn hull and
-        # null-lsn count come from the same rows (see _change_hull). Every
-        # arm commits this one summary through _commit_merge.
+        # and it is free - the pre-scan already counted it. Every arm
+        # commits this one summary through _commit_merge.
         summary = {
             "touched_buckets": [int(b) for b in touched],
             "hot_keys": hot,
@@ -3951,15 +3899,6 @@ class LakeTable:
             "file_stats": file_stats,
             **(lineage or {}),
             "batch_events": int(batch_events),
-            "batch_lsn_min": min(
-                (r["_lo"] for r in raw_stats if r["_lo"] is not None),
-                default=None,
-            ),
-            "batch_lsn_max": max(
-                (r["_hi"] for r in raw_stats if r["_hi"] is not None),
-                default=None,
-            ),
-            "batch_lsn_nulls": int(sum(r["_nulls"] for r in raw_stats)),
         }
 
         # (3) the conformed source relation: op -> tombstone flag, lsn
@@ -3973,6 +3912,13 @@ class LakeTable:
         src = self._conform(src, schema).withColumn(
             BUCKET_COL, bucket_expr(pk[0], snap.num_buckets)
         )
+        # The batch keys, for read_changes: every arm below consumes src
+        # exactly once, so the set arrives with the write job - no job,
+        # no shuffle. Recorded up to PUSHDOWN_MAX_KEYS pre-LWW events.
+        keys_obs = None
+        if 0 < batch_events <= self.PUSHDOWN_MAX_KEYS:
+            keys_obs = Observation(f"merge_keys_{uuid.uuid4().hex[:8]}")
+            src = src.observe(keys_obs, F.collect_set(F.struct(*pk)).alias("k"))
         obs = Observation(f"merge_applied_{uuid.uuid4().hex[:8]}")
         mor = write_mode == "mor" and not pk_widened
 
@@ -4098,6 +4044,7 @@ class LakeTable:
             snap, schema, schema_version, operation, touched, new_files,
             {"applied_events": applied, **summary, "merge_plan": plan},
             pipeline_id, epoch_id,
+            keys=None if keys_obs is None else keys_obs.get["k"],
         )
 
     def _merge_cow_broadcast(
@@ -4224,7 +4171,11 @@ class LakeTable:
                         F.lit(1).alias("_from_batch"),
                     )
                 )
-                out_g = updated.unionByName(inserts)
+                # inserts lead: the written frame then belongs to the
+                # batch's session, whose listener completes the merge's
+                # batch-key Observation on src (a foreachBatch frame lives
+                # in a clone of the table's session)
+                out_g = inserts.unionByName(updated)
                 obs_g = Observation(f"merge_bcast_{uuid.uuid4().hex[:8]}")
                 out_g = out_g.observe(
                     obs_g, F.sum("_from_batch").alias("applied")
@@ -4251,12 +4202,41 @@ class LakeTable:
         summary: dict,
         pipeline_id: str | None,
         epoch_id: int | None,
+        keys: list | None = None,
     ) -> Snapshot:
         """The one commit tail of every merge arm. The MOR arms
         (``merge-mor``, ``merge-mor-partial``) append their files to the
         buckets' delta chains; the partial one also marks those buckets
         as holding overlay rows. The COW arms replace the touched buckets'
-        files and clear their delta chains."""
+        files and clear their delta chains.
+
+        ``keys``, the batch's distinct pk tuples, are written sorted and
+        typed as the pk to one zstd Parquet sidecar under ``_meta/keys/``;
+        the summary names it (``changed_keys_file``) and counts its keys
+        (``changed_keys``) for :meth:`_recorded_keys`. A key with a NULL
+        field records nothing: no literal filter can match it."""
+        rows = [tuple(k) for k in keys or []]  # a Row's `in` reads names
+        if rows and not any(None in r for r in rows):
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            pk = list(snap.pk_fields)
+            rows.sort()
+            table = pa.Table.from_pylist(
+                [dict(zip(pk, r)) for r in rows],
+                schema=to_arrow_schema(
+                    T.StructType([schema[c] for c in pk]), timestamp_utc=False
+                ),
+            )
+            path = self._keys_dir / f"{uuid.uuid4().hex[:12]}.parquet"
+            path.parent.mkdir(parents=True, exist_ok=True)
+            pq.write_table(table, path, compression="zstd")
+            summary = {
+                **summary,
+                "changed_keys": len(rows),
+                "changed_keys_file": str(path.relative_to(self.root)),
+            }
         files = {k: list(v) for k, v in snap.files.items()}
         deltas = {k: list(v) for k, v in snap.deltas.items()}
         if operation.startswith("merge-mor"):
@@ -5219,8 +5199,9 @@ class LakeTable:
     def vacuum(
         self, older_than_s: float = 3600.0, dry_run: bool = False
     ) -> dict[str, list[str]]:
-        """Remove orphan data/manifest/chunk files referenced by NO live
-        snapshot (failed commits, expired versions, replaced COW files).
+        """Remove orphan data/manifest/chunk files and changed-key sidecars
+        referenced by NO live snapshot (failed commits, expired versions,
+        replaced COW files).
         Only files older than ``older_than_s`` seconds are touched: a
         commit writes its data and manifest files BEFORE the O_EXCL
         snapshot publish, so the grace window keeps vacuum safe to run
@@ -5248,8 +5229,9 @@ class LakeTable:
                 referenced.update(fl)
             for fl in (d.get("deltas") or {}).values():
                 referenced.update(fl)
+            referenced.add((d.get("summary") or {}).get("changed_keys_file"))
         cutoff = time.time() - older_than_s
-        removed: dict[str, list[str]] = {"data": [], "manifests": []}
+        removed: dict[str, list[str]] = {"data": [], "manifests": [], "keys": []}
 
         def _sweep(paths, kind):
             for p in paths:
@@ -5268,6 +5250,7 @@ class LakeTable:
         _sweep(self.root.glob("data/*/*/*.parquet"), "data")
         if self._manifest_dir.is_dir():
             _sweep(self._manifest_dir.glob("*.json"), "manifests")
+        _sweep(self._keys_dir.glob("*.parquet"), "keys")
         if not dry_run:
             # drop commit dirs left holding no parquet (only write-marker
             # files like _SUCCESS remain), respecting the same grace window

@@ -229,3 +229,34 @@ def test_ratio_gate_prefers_shuffle_until_table_dwarfs_batch(spark, tmp_path):
     assert s2.summary["merge_plan"] == "cow-broadcast"
     pdf = pd.concat([big.toPandas(), small.toPandas()])
     assert_table_equals_oracle(tbl.read(), oracle.replay(pdf))
+
+
+def test_foreach_batch_frame_records_keys_on_broadcast_arm(spark, tmp_path):
+    """A foreachBatch frame lives in a clone of the table's session, while
+    the broadcast arm scans the table in the table's own. The arm still
+    records the batch's distinct keys: the batch-key Observation completes
+    with the write instead of blocking the commit forever."""
+    tbl = _mk(spark, tmp_path / "t", num_buckets=4)
+    tbl.merge(gen_changes(spark, n_events=2000, n_convs=40, seed=7))
+    batch = gen_changes(spark, n_events=100, n_convs=40, seed=8).withColumn(
+        "lsn", F.col("lsn") + 10**6
+    )
+    batch.write.parquet(str(tmp_path / "land"))
+    snaps = []
+    q = (
+        spark.readStream.schema(batch.schema).parquet(str(tmp_path / "land"))
+        .writeStream.foreachBatch(
+            lambda df, e: snaps.append(tbl.merge(df, pipeline_id="s", epoch_id=e))
+        )
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120), "foreachBatch merge did not finish"
+    finally:
+        q.stop()
+    assert [s.summary["merge_plan"] for s in snaps] == ["cow-broadcast"]
+    assert snaps[0].summary["changed_keys"] == (
+        batch.select("conv_id", "turn_idx").distinct().count()
+    )

@@ -267,8 +267,9 @@ def test_changelog_across_schema_evolution(spark, tmp_table_dir):
 # ---------------------------------------------------------------------
 # The diff core against a pandas net diff of read() at both versions.
 # read_changes key-prunes a range only when every commit in it is a merge
-# or compaction with a recorded lsn hull (LakeTable._change_hull); each
-# case below pins which path it takes, and both must return the same rows.
+# or compaction and every merge recorded its batch keys within the cap
+# (LakeTable._recorded_keys); each case below pins which path it takes,
+# and both must return the same rows.
 # ---------------------------------------------------------------------
 
 PAYLOAD = ["role", "text", "tool", "ts"]
@@ -309,7 +310,8 @@ def _envelope_rows(tbl, v_a, v_b) -> Counter:
         e = json.loads(r["value"])
         img = e["before"] if e["op"] == "d" else e["after"]
         key = json.loads(r["key"])
-        out[(kind[e["op"]], key["conv_id"], key["turn_idx"], img["role"],
+        # the key JSON leaves a NULL pk field out
+        out[(kind[e["op"]], key["conv_id"], key.get("turn_idx"), img["role"],
              img["text"], img["tool"], e["ts_ms"])] += 1
     return out
 
@@ -324,9 +326,8 @@ def _ts_ms(rows: Counter) -> Counter:
 
 
 def _assert_diff(tbl, v_a, v_b, pruned: bool) -> None:
-    snap_a, snap_b = tbl.snapshot(v_a), tbl.snapshot(v_b)
-    hull = tbl._change_hull(snap_a, snap_b, tbl.changed_buckets(v_a, v_b))
-    assert (hull not in (None, False)) == pruned, hull
+    keys = tbl._recorded_keys(tbl.snapshot(v_a), tbl.snapshot(v_b))
+    assert (keys not in (None, False)) == pruned, keys
     want = _net_diff(tbl, v_a, v_b)
     got = tbl.read_changes(v_a, v_b).toPandas()
     got = got.astype(object).where(got.notna(), None)
@@ -418,9 +419,10 @@ def test_diff_partial_update_overlays(spark, tmp_table_dir):
     _assert_diff(tbl, v0, tbl.current_version(), pruned=True)
 
 
-def test_diff_purging_compaction_falls_back(spark, tmp_table_dir):
+def test_diff_purging_compaction_is_pruned(spark, tmp_table_dir):
     """A compaction that purges tombstones the range itself wrote leaves no
-    trace of those deletes in b - the diff must read whole buckets."""
+    trace of those deletes in b, but the merge that wrote them recorded
+    their keys: the pruned diff still emits the deletes."""
     tbl, keys = _grown(spark, tmp_table_dir)
     v0 = tbl.current_version()
     tbl.merge(
@@ -429,9 +431,9 @@ def test_diff_purging_compaction_falls_back(spark, tmp_table_dir):
         pipeline_id="t", epoch_id=1,
     )
     tbl.compact(purge_tombstones_below_lsn=10**6 + 10)
-    _assert_diff(tbl, v0, tbl.current_version(), pruned=False)
-    # a purge watermark at or below the range's lowest lsn purged nothing
-    # the range wrote: still prunable
+    _assert_diff(tbl, v0, tbl.current_version(), pruned=True)
+    # a purge watermark at or below the range's lowest lsn purges nothing
+    # the range wrote
     v2 = tbl.current_version()
     tbl.merge(_upsert(spark, [("DELETE", keys[6], None)], 2 * 10**6),
               pipeline_id="t", epoch_id=2)
@@ -468,12 +470,11 @@ def test_diff_rollback_dml_and_append_fall_back(spark, tmp_table_dir):
     _assert_diff(tbl, v0, tbl.current_version(), pruned=False)
 
 
-def test_diff_null_and_out_of_order_lsns(spark, tmp_table_dir):
-    """A batch with a null lsn falls back (its rows escape any hull);
-    lsns arriving out of order across two merges widen the hull, and a
-    stale update that loses LWW emits nothing. The later merge alone lies
-    below an lsn its range's start already stores, so it reads whole
-    buckets."""
+def test_diff_null_and_out_of_order_lsns_are_pruned(spark, tmp_table_dir):
+    """Recorded keys do not depend on lsns: a batch with a null lsn, lsns
+    arriving out of order across two merges, and the later merge alone
+    (below an lsn its range's start already stores) all take the pruned
+    path, and a stale update that loses LWW emits nothing."""
     tbl, keys = _grown(spark, tmp_table_dir)
     v0 = tbl.current_version()
     tbl.merge(
@@ -488,7 +489,7 @@ def test_diff_null_and_out_of_order_lsns(spark, tmp_table_dir):
     )
     v2 = tbl.current_version()
     _assert_diff(tbl, v0, v2, pruned=True)
-    _assert_diff(tbl, v0 + 1, v2, pruned=False)
+    _assert_diff(tbl, v0 + 1, v2, pruned=True)
     nulls = _batch(
         spark,
         [("UPDATE", keys[10][0], keys[10][1], "user", "nolsn", None, 3000,
@@ -497,15 +498,15 @@ def test_diff_null_and_out_of_order_lsns(spark, tmp_table_dir):
           6 * 10**6, "n")],
     )
     tbl.merge(nulls, pipeline_id="t", epoch_id=3)
-    assert tbl.snapshot().summary["batch_lsn_nulls"] == 1
-    _assert_diff(tbl, v2, tbl.current_version(), pruned=False)
+    assert tbl.snapshot().summary["changed_keys"] == 2
+    _assert_diff(tbl, v2, tbl.current_version(), pruned=True)
 
 
-def test_diff_redelivered_old_lsn_falls_back(spark, tmp_table_dir):
-    """A COW merge whose batch re-delivers one event at an old lsn: the
-    rewritten buckets carry their other rows over with stored lsns inside
-    the range's hull, so a key set drawn from the hull would hold most of
-    the table. The diff must take the unpruned path and stay exact."""
+def test_diff_redelivered_old_lsn_is_pruned(spark, tmp_table_dir):
+    """A COW merge whose batch re-delivers one event at an old lsn carries
+    the rewritten buckets' other rows over with their stored lsns; the
+    recorded keys are the batch's three, so the diff stays pruned to them
+    and exact."""
     tbl, keys = _grown(spark, tmp_table_dir)
     v0 = tbl.current_version()
     stored = tbl.read(include_system=True).agg(F.min("_lsn"), F.max("_lsn")).first()
@@ -516,8 +517,8 @@ def test_diff_redelivered_old_lsn_falls_back(spark, tmp_table_dir):
     )
     tbl.merge(batch, pipeline_id="t", epoch_id=1)
     v1 = tbl.current_version()
-    assert tbl.snapshot(v1).summary["batch_lsn_min"] == stored[0]
-    _assert_diff(tbl, v0, v1, pruned=False)
+    assert tbl.snapshot(v1).summary["changed_keys"] == 3
+    _assert_diff(tbl, v0, v1, pruned=True)
     # the same change at fresh lsns only is key-pruned
     tbl.merge(_upsert(spark, late, 2 * 10**6), pipeline_id="t", epoch_id=2)
     _assert_diff(tbl, v1, tbl.current_version(), pruned=True)
@@ -546,3 +547,75 @@ def test_diff_branch_and_expired_ranges(spark, tmp_table_dir):
     tbl.expire_snapshots(keep_last=1)
     assert tbl.retained_versions() == [v1, tbl.current_version()]
     _assert_diff(tbl, v1, tbl.current_version(), pruned=False)
+
+
+def test_diff_over_cap_merge_falls_back(spark, tmp_table_dir, monkeypatch):
+    """A merge whose batch passes PUSHDOWN_MAX_KEYS records no keys, and a
+    range whose merges' recorded keys together pass it opens no sidecar:
+    both read whole buckets."""
+    tbl, keys = _grown(spark, tmp_table_dir)
+    monkeypatch.setattr(type(tbl), "PUSHDOWN_MAX_KEYS", 3)
+    v0 = tbl.current_version()
+    big = [("UPDATE", keys[i], f"b{i}") for i in range(4)]
+    tbl.merge(_upsert(spark, big, 10**6), pipeline_id="t", epoch_id=1)
+    v1 = tbl.current_version()
+    assert "changed_keys" not in tbl.snapshot(v1).summary
+    _assert_diff(tbl, v0, v1, pruned=False)
+    for e in (2, 3):
+        tbl.merge(
+            _upsert(spark, [("UPDATE", keys[e], "x"), ("DELETE", keys[e + 4], None)],
+                    e * 10**6),
+            pipeline_id="t", epoch_id=e,
+        )
+    v3 = tbl.current_version()
+    assert len(tbl._recorded_keys(tbl.snapshot(v3 - 1), tbl.snapshot(v3))) == 2
+    _assert_diff(tbl, v1, v3, pruned=False)
+
+
+def test_diff_unrecorded_merge_falls_back(spark, tmp_table_dir):
+    """A range crossing a merge committed before merges recorded their
+    keys (its summary names no sidecar), or a merge whose batch holds a
+    key with a NULL field (no literal matches it), reads whole buckets."""
+    tbl, keys = _grown(spark, tmp_table_dir)
+    v0 = tbl.current_version()
+    tbl.merge(_upsert(spark, [("UPDATE", keys[0], "old"),
+                              ("INSERT", ("pre", 0), "p")], 10**6),
+              pipeline_id="t", epoch_id=1)
+    v1 = tbl.current_version()
+    path = tbl._snapshot_path(v1)
+    d = json.loads(path.read_text())
+    (tbl.root / d["summary"].pop("changed_keys_file")).unlink()
+    del d["summary"]["changed_keys"]
+    path.write_text(json.dumps(d))
+    tbl = LakeTable(spark, tbl.root)
+    tbl.merge(_upsert(spark, [("UPDATE", keys[1], "new"),
+                              ("INSERT", (keys[1][0], None), "n")], 2 * 10**6),
+              pipeline_id="t", epoch_id=2)
+    v2 = tbl.current_version()
+    assert "changed_keys" not in tbl.snapshot(v2).summary
+    _assert_diff(tbl, v0, v1, pruned=False)
+    _assert_diff(tbl, v1, v2, pruned=False)
+
+
+def test_diff_rollback_and_dml_amid_recorded_merges_fall_back(
+    spark, tmp_table_dir
+):
+    """Merges that recorded their keys on both sides of a rollback and of
+    a predicate update: the rollback restores rows no recorded key names
+    and the update rewrites rows of keys no merge wrote, so every range
+    holding either reads whole buckets."""
+    tbl, keys = _grown(spark, tmp_table_dir)
+    v0 = tbl.current_version()
+    tbl.merge(_upsert(spark, [("DELETE", keys[0], None),
+                              ("UPDATE", keys[1], "r1")], 10**6),
+              pipeline_id="t", epoch_id=1)
+    tbl.rollback(v0)
+    tbl.merge(_upsert(spark, [("UPDATE", keys[2], "r2")], 2 * 10**6),
+              pipeline_id="t", epoch_id=1)
+    v3 = tbl.current_version()
+    _assert_diff(tbl, v0 + 1, v3, pruned=False)
+    tbl.update_where(f"conv_id = '{keys[-1][0]}'", {"text": "redacted"})
+    tbl.merge(_upsert(spark, [("UPDATE", keys[3], "r3")], 3 * 10**6),
+              pipeline_id="t", epoch_id=2)
+    _assert_diff(tbl, v3, tbl.current_version(), pruned=False)
+    assert tbl._recorded_keys(tbl.snapshot(v3 + 1), tbl.snapshot()) == [keys[3]]

@@ -5,6 +5,8 @@ expire_snapshots / remove_orphan_files pattern)."""
 
 import json
 
+import pytest
+
 from dataingestion_spark.lake import LakeTable
 from dataingestion_spark.sources.datagen import gen_changes
 from tests.util import TRANSCRIPT_SCHEMA
@@ -289,3 +291,56 @@ def test_read_as_of_timestamp_resolves_like_iceberg(spark, tmp_path):
     tbl.expire_snapshots(keep_last=2)
     with pytest.raises(ValueError, match="predates the oldest retained"):
         tbl.version_as_of(hist[versions[0]] - 10.0)
+
+
+def test_vacuum_keeps_named_key_sidecars_and_reclaims_the_rest(
+    spark, tmp_path, monkeypatch
+):
+    """A merge's changed-key sidecar (``_meta/keys/``) lives while a live
+    snapshot's summary names it. Vacuum keeps it, reclaims it once
+    expire_snapshots drops every snapshot naming it, reclaims the sidecar
+    of a commit that failed, and still removes the commit dirs whose data
+    files it swept."""
+    tbl = _make_table(spark, tmp_path / "t", epochs=3, mode="cow")
+    named = [
+        s.summary["changed_keys_file"]
+        for s in tbl.history()
+        if "changed_keys_file" in s.summary
+    ]
+    assert len(named) == 3
+
+    def on_disk():
+        return sorted(str(p.relative_to(tbl.root)) for p in tbl._keys_dir.iterdir())
+
+    assert on_disk() == sorted(named)
+    assert tbl.vacuum(older_than_s=0.0)["keys"] == []
+
+    def lose(*args, **kwargs):
+        raise RuntimeError("commit lost")
+
+    monkeypatch.setattr(tbl, "_commit_write", lose)
+    with pytest.raises(RuntimeError, match="commit lost"):
+        tbl.merge(
+            gen_changes(spark, n_events=50, n_convs=50, seed=99,
+                        lsn_offset=10_000, n_files=1),
+            pipeline_id="p", epoch_id=9,
+        )
+    monkeypatch.undo()
+    orphan = sorted(set(on_disk()) - set(named))
+    assert len(orphan) == 1
+
+    tbl.expire_snapshots(keep_last=2)
+    removed = tbl.vacuum(older_than_s=0.0)
+    assert sorted(removed["keys"]) == sorted([named[0], *orphan])
+    assert on_disk() == sorted(named[1:])
+    assert removed["data"]
+    live_dirs = {
+        rel.split("/")[1]
+        for s in tbl.history()
+        for fl in s.files.values()
+        for rel in fl
+    }
+    assert {p.name for p in tbl.root.glob("data/*")} == live_dirs
+    v = tbl.current_version()
+    assert tbl._recorded_keys(tbl.snapshot(v - 1), tbl.snapshot(v))
+    assert tbl.read_changes(v - 1).count() > 0

@@ -157,8 +157,9 @@ def test_inverted_index_is_two_hash_aggregates(spark):
 
 def test_pruned_changelog_diff_is_one_exchange(spark, tmp_path):
     """A small epoch's diff over a grown table: the changed buckets' rows
-    are semi-joined to ONE broadcast candidate-key set and exchanged ONCE
-    on the pk - no sort-merge join of two whole snapshots."""
+    are filtered by the merge's recorded keys as literals (the pk0 IN
+    pushed into the scan) and exchanged ONCE on the pk - no join, no
+    broadcast, and one Spark job for the whole read."""
     import re
 
     from dataingestion_spark.lake import LakeTable
@@ -181,18 +182,19 @@ def test_pruned_changelog_diff_is_one_exchange(spark, tmp_path):
         ),
         pipeline_id="p", epoch_id=1,
     )
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.numTotalJobs()
     diff = tbl.read_changes(v)
     assert diff.collect()
-    # the executed plan: the pushed-down semi-joins share one broadcast
-    # through exchange reuse
+    assert scheduler.numTotalJobs() - before == 1
     final = diff._sc._jvm.PythonSQLUtils.explainString(
         diff._jdf.queryExecution(), "simple"
     )
-    assert "SortMergeJoin" not in final
+    assert "Join" not in final and "LeftSemi" not in final
+    assert "BroadcastExchange" not in final
     pk_exchange = r"Exchange hashpartitioning\(conv_id#\d+, turn_idx"
     assert len(re.findall(pk_exchange, final)) == 1
-    assert len(re.findall(r"[-:] BroadcastExchange ", final)) == 1
-    assert "LeftSemi" in final
+    assert re.search(r"PushedFilters: \[[^\n]*In\(conv_id", final), final
 
 
 def test_keyed_reads_job_budget(spark, tmp_path):
@@ -271,9 +273,11 @@ def test_keyed_reads_job_budget(spark, tmp_path):
 def test_incremental_sync_job_budget(spark, tmp_path):
     """One incremental hop of each diff-driven sync runs a pinned number
     of Spark jobs (2k-event source, 4 shuffle partitions): SCD2 history
-    <= 4, aggregate view <= 4, mirror <= 3 - each hop reads its persisted
-    diff once for all of its consumers, and the SCD2 closure lookup
-    filters by the collected keys' literals instead of broadcasting them.
+    <= 3, aggregate view <= 3, mirror <= 2 - each hop's diff filters by
+    the source merge's recorded keys with no key job of its own, the hop
+    reads its persisted diff once for all of its consumers, and the SCD2
+    closure lookup filters by the collected keys' literals instead of
+    broadcasting them.
     The 600-event tail keeps every hop's COW merge on the union plan (too
     large a batch for the broadcast arm), so the counts measure the sync,
     not the merge's plan choice. Every result equals a recompute from the
@@ -320,8 +324,8 @@ def test_incremental_sync_job_budget(spark, tmp_path):
             before = scheduler.numTotalJobs()
             assert hop() is not None
             jobs[name] = scheduler.numTotalJobs() - before
-        assert jobs["scd2"] <= 4 and jobs["aggregate"] <= 4, jobs
-        assert jobs["mirror"] <= 3, jobs
+        assert jobs["scd2"] <= 3 and jobs["aggregate"] <= 3, jobs
+        assert jobs["mirror"] <= 2, jobs
 
         state = src.read()
 

@@ -136,7 +136,7 @@ def test_merges_never_write_session_conf(spark, tmp_path, monkeypatch):
 
     base = {
         "applied_events", "touched_buckets", "hot_keys", "batch_events",
-        "batch_lsn_min", "batch_lsn_max", "batch_lsn_nulls",
+        "changed_keys", "changed_keys_file",
     }
     want = {
         "cow-union": ("merge", "cow-union"),
