@@ -22,6 +22,7 @@ Subcommands:
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import sys
 
@@ -38,7 +39,7 @@ from dataingestion_spark.streaming.pipeline import (
     stage_changes,
     subscribe_feed,
 )
-from dataingestion_spark.functions.transformers import build_chain
+from dataingestion_spark.functions.transformers import apply_chain, build_chain
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -1009,8 +1010,8 @@ def main(argv: list[str] | None = None) -> int:
                 if a.reasons
                 else None
             ),
-            constraints=list(getattr(cfg, "constraints", []) or []),
-            write_mode=getattr(cfg, "write_mode", "cow"),
+            constraints=list(cfg.constraints or []),
+            write_mode=cfg.write_mode,
         )
         result["version"] = tbl.current_version()
         print(json.dumps(result))
@@ -1022,7 +1023,7 @@ def main(argv: list[str] | None = None) -> int:
         dst = bootstrap_table(spark, cfg, src.snapshot().schema)
         snap = sync_incremental(
             src, dst, pipeline_id=a.pipeline_id,
-            write_mode=a.write_mode or getattr(cfg, "write_mode", "cow"),
+            write_mode=a.write_mode or cfg.write_mode,
         )
         _print_sync(src, dst, "dst_version", snap)
     elif a.cmd == "detect":
@@ -1097,15 +1098,19 @@ def main(argv: list[str] | None = None) -> int:
     elif a.cmd == "route":
         from dataingestion_spark.streaming.pipeline import route_changes
 
-        routes = {}
+        routes, chains = {}, {}
         for path in (p.strip() for p in a.configs.split(",") if p.strip()):
             cfg = DatasetConfig.load(path)
             routes[cfg.name] = cfg
+            if cfg.transformers:  # the chain `apply` builds, per route
+                chains[cfg.name] = functools.partial(
+                    apply_chain, chain=build_chain(cfg.transformers)
+                )
             bootstrap_table(spark, cfg, TRANSCRIPT_SCHEMA)
         q = route_changes(
             spark, routes, a.source, a.checkpoint,
             table_col=a.table_col, on_unrouted=a.on_unrouted,
-            quarantine_dir=a.quarantine,
+            quarantine_dir=a.quarantine, transformers=chains,
             lineage_path=a.lineage, trigger=a.trigger,
         )
         q.awaitTermination()

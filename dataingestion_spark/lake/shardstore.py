@@ -2,11 +2,11 @@
 file-side index uses - ``spec.json`` head (hash family / precision /
 tracked columns, the one-index-one-spec contract) plus one
 ``bucket-<b>.json`` shard per bucket, every write tmp+rename
-(crash-safe, idempotent re-runs). The bloom index (lake/bloom.py) and
-the NDV sketches (lake/ndv.py) are both instances; a future index
-(secondary bloom, theta sketches) gets the same durability for free
-and the same maintenance discipline: touch only the buckets whose file
-sets changed."""
+(crash-safe, idempotent re-runs). The pk bloom index (lake/bloom.py),
+each secondary bloom (``_meta/bloom-col-<col>/``) and the NDV sketches
+(lake/ndv.py) are instances, listed together by ``LakeTable._indexes``;
+each gets the same durability and the same maintenance discipline:
+touch only the buckets whose file sets changed."""
 
 from __future__ import annotations
 

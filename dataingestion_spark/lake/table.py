@@ -66,6 +66,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dataingestion_spark.lake.shardstore import ShardStore
 from dataingestion_spark.operators.lww import lww_dedupe
 from dataingestion_spark.operators.salting import SALT_COL, with_salt
 from dataingestion_spark.schema.evolution import (
@@ -1485,9 +1486,10 @@ class LakeTable:
         exchange over the changed buckets, then a pure projection - the JSON
         rendering is ``to_json`` (JVM codegen, ``ignoreNullFields=false``
         so the envelope carries explicit ``"before": null`` like Debezium
-        does). Round-trip contract (tested): ``parse_debezium`` over this
-        output recovers op/keys/payload exactly, so a second LakeTable can
-        chain off the feed with the standard adapter."""
+        does, and the key keeps a NULL pk field). Round-trip contract
+        (tested): ``parse_debezium`` over this output recovers
+        op/keys/payload exactly, so a second LakeTable can chain off the
+        feed with the standard adapter."""
         snap_b = self.snapshot(to_version)
         pk = list(snap_b.pk_fields)
         payload = [f.name for f in snap_b.schema.fields if f.name not in pk]
@@ -1532,7 +1534,10 @@ class LakeTable:
             ts_ms.alias("ts_ms"),
         )
         return j.filter(is_insert | is_delete | is_update).select(
-            F.to_json(F.struct(*[F.col(c).alias(c) for c in pk])).alias("key"),
+            F.to_json(
+                F.struct(*[F.col(c).alias(c) for c in pk]),
+                {"ignoreNullFields": "false"},
+            ).alias("key"),
             F.to_json(envelope, {"ignoreNullFields": "false"}).alias("value"),
         )
 
@@ -1811,12 +1816,11 @@ class LakeTable:
         k: int = 7,
         rebuild: bool = False,
     ) -> dict:
-        """Incrementally maintain the file-level bloom index under
-        ``_meta/bloom/`` (see lake/bloom.py): build bitmaps for live data
-        files (base AND merge-on-read delta files) that lack one, drop
-        entries for files no longer live, touch only buckets whose file
-        sets changed. Idempotent: a second call on the same snapshot
-        returns ``applied: False`` and writes nothing.
+        """Incrementally maintain the file-level pk bloom index under
+        ``_meta/bloom/`` (see lake/bloom.py): one bitmap per live data
+        file, base AND merge-on-read delta, kept by
+        :meth:`_update_file_bloom`. Idempotent: a second call on the same
+        snapshot returns ``applied: False`` and writes nothing.
 
         Like the LSH band index (lake/sync.py sync_band_index), ONE index
         has ONE hash-family/sizing spec: a call whose (bits_per_key, k)
@@ -1837,50 +1841,59 @@ class LakeTable:
                 f"bloom index needs string/integer pk columns; table pk "
                 f"{pk} has non-indexable types"
             )
-        store = B.BloomIndexStore(self.root)
+        return self._update_file_bloom(
+            snap, B.BloomIndexStore(self.root), pk, {"pk_fields": pk},
+            "bloom index", bits_per_key, k, rebuild,
+        )
+
+    def _update_file_bloom(
+        self, snap: Snapshot, store: ShardStore, cols: list[str], shape: dict,
+        label: str, bits_per_key: int, k: int, rebuild: bool,
+    ) -> dict:
+        """The upkeep loop of every file-bloom index over ``cols`` (the pk
+        bloom and each secondary bloom): enforce the one spec (hash
+        family, sizing and ``shape``, which names what is indexed),
+        then per bucket keep the entries of live files, build bitmaps
+        for live files without one, drop entries of dead files, and
+        rewrite only the buckets where that changed anything."""
+        from dataingestion_spark.lake import bloom as B
+
         want = {
             "hash": self.BLOOM_SPEC_HASH,
             "bits_per_key": int(bits_per_key),
             "k": int(k),
-            "pk_fields": pk,
+            **shape,
         }
         spec = store.spec()
         if spec is not None and not rebuild:
-            if {key: spec.get(key) for key in want} != want:
+            have = {key: spec.get(key) for key in want}
+            if have != want:
                 raise ValueError(
-                    "bloom index already built with spec "
-                    f"{ {key: spec.get(key) for key in want} }; one index, "
+                    f"{label} already built with spec {have}; one index, "
                     "one hash family - pass rebuild=True to re-create"
                 )
         if spec is None or rebuild:
             if rebuild:
-                for p in store.dir.glob("bucket-*.json"):
-                    p.unlink()
+                for b in store.buckets():
+                    store.drop_bucket(b)
             store.write_spec(want)
         renames = snap.properties.get("renames", {})
         indexed = dropped = covered = 0
-        buckets = sorted(set(snap.files) | set(snap.deltas), key=int)
-        for b in buckets:
-            live = list(snap.files.get(b, [])) + list(snap.deltas.get(b, []))
+        for b in sorted(set(snap.files) | set(snap.deltas), key=int):
             entries = store.load_bucket(b)
             fresh: dict[str, dict] = {}
-            changed = False
-            for rel in live:
+            for rel in [*snap.files.get(b, []), *snap.deltas.get(b, [])]:
                 if rel in entries:
                     fresh[rel] = entries[rel]
                     continue
-                frame = self._read_pk_frame(rel, pk, renames)
+                frame = self._read_pk_frame(rel, cols, renames)
                 if frame is None:
-                    continue  # pre-rename legacy file w/o pk: stays unindexed
+                    continue  # legacy file without the columns: stays unindexed
                 fresh[rel] = B.build_bitmap(frame, bits_per_key, k)
                 indexed += 1
-                changed = True
-            stale = len(entries) - sum(1 for r in entries if r in fresh)
-            if stale:
-                dropped += stale
-                changed = True
+            dropped += sum(1 for r in entries if r not in fresh)
             covered += len(fresh)
-            if changed:
+            if fresh != entries:
                 store.write_bucket(b, fresh)
         return {
             "applied": bool(indexed or dropped),
@@ -1899,12 +1912,43 @@ class LakeTable:
 
     def secondary_index_cols(self) -> list[str]:
         """Columns carrying a secondary bloom index (spec present)."""
-        meta = self.root / "_meta"
-        out = []
-        for p in sorted(meta.glob("bloom-col-*")) if meta.is_dir() else []:
-            if (p / "spec.json").is_file():
-                out.append(p.name[len("bloom-col-"):])
-        return out
+        return [
+            name.split(":", 1)[1]
+            for name, kind, *_ in self._indexes()
+            if kind == "column-bloom"
+        ]
+
+    def _indexes(self) -> list[tuple]:
+        """Every index present on the table (spec written), in report
+        order: ``(name, kind, store, spec, refresh)`` for the pk bloom,
+        the NDV sketches and each secondary bloom by column. ``refresh``
+        re-runs the index's upkeep under ``spec`` and returns its report,
+        or None when there is nothing to refresh (an NDV spec tracking
+        no column). The one list :meth:`optimize`, ``meta('indexes')``
+        and :meth:`verify_integrity` walk."""
+        from dataingestion_spark.lake import bloom as B
+        from dataingestion_spark.lake import ndv as N
+        found = [
+            ("bloom", "pk-bloom", B.BloomIndexStore(self.root),
+             lambda s: self.update_bloom_index(
+                 bits_per_key=s["bits_per_key"], k=s["k"])),
+            ("ndv", "hll-ndv", N.NdvStore(self.root),
+             lambda s: self.update_ndv_sketch(
+                 list(s["cols"]), lg_k=s["lg_k"]) if s.get("cols") else None),
+        ]
+        prefix = self._secondary_store_name("")
+        for p in sorted((self.root / "_meta").glob(prefix + "*")):
+            col = p.name[len(prefix):]
+            found.append((
+                f"secondary:{col}", "column-bloom", ShardStore(self.root, p.name),
+                lambda s, c=col: self.update_secondary_index(
+                    c, bits_per_key=s["bits_per_key"], k=s["k"]),
+            ))
+        return [
+            (name, kind, store, spec, refresh)
+            for name, kind, store, refresh in found
+            if (spec := store.spec()) is not None
+        ]
 
     def update_secondary_index(
         self,
@@ -1916,72 +1960,23 @@ class LakeTable:
         """Incrementally maintain a SECONDARY bloom index over ``col``
         (the Hudi 1.0 secondary-index shape: value -> which part of the
         table can hold it, for columns the bucketing does NOT hash).
-        Same machinery, store layout, freshness discipline and
-        one-index-one-spec contract as the pk bloom index
-        (:meth:`update_bloom_index`); one bitmap per live file under
-        ``_meta/bloom-col-<col>/``. Consumed by :meth:`read_in`, which
-        prunes at BUCKET granularity - the exact-under-MOR rule (see
-        there)."""
+        Same upkeep loop (:meth:`_update_file_bloom`), store layout,
+        freshness discipline and one-index-one-spec contract as the pk
+        bloom index (:meth:`update_bloom_index`); one bitmap per live
+        file under ``_meta/bloom-col-<col>/``. Consumed by
+        :meth:`read_in`, which prunes at BUCKET granularity - the
+        exact-under-MOR rule (see there)."""
         from dataingestion_spark.lake import bloom as B
-        from dataingestion_spark.lake.shardstore import ShardStore
-
         snap = self.snapshot()
         if not B.indexable_pk(snap.schema, [col]):
             raise ValueError(
                 f"secondary index needs a string/integer column; "
                 f"{col!r} is not indexable (or not in the schema)"
             )
-        store = ShardStore(self.root, self._secondary_store_name(col))
-        want = {
-            "hash": self.BLOOM_SPEC_HASH,
-            "bits_per_key": int(bits_per_key),
-            "k": int(k),
-            "col": col,
-        }
-        spec = store.spec()
-        if spec is not None and not rebuild:
-            if {key: spec.get(key) for key in want} != want:
-                raise ValueError(
-                    "secondary index already built with spec "
-                    f"{ {key: spec.get(key) for key in want} }; one index, "
-                    "one hash family - pass rebuild=True to re-create"
-                )
-        if spec is None or rebuild:
-            if rebuild:
-                for b in store.buckets():
-                    store.drop_bucket(b)
-            store.write_spec(want)
-        renames = snap.properties.get("renames", {})
-        indexed = dropped = covered = 0
-        for b in sorted(set(snap.files) | set(snap.deltas), key=int):
-            live = list(snap.files.get(b, [])) + list(snap.deltas.get(b, []))
-            entries = store.load_bucket(b)
-            fresh: dict[str, dict] = {}
-            changed = False
-            for rel in live:
-                if rel in entries:
-                    fresh[rel] = entries[rel]
-                    continue
-                frame = self._read_pk_frame(rel, [col], renames)
-                if frame is None:
-                    continue  # legacy file w/o the column: stays unindexed
-                fresh[rel] = B.build_bitmap(frame, bits_per_key, k)
-                indexed += 1
-                changed = True
-            stale = len(entries) - sum(1 for r in entries if r in fresh)
-            if stale:
-                dropped += stale
-                changed = True
-            covered += len(fresh)
-            if changed:
-                store.write_bucket(b, fresh)
-        return {
-            "applied": bool(indexed or dropped),
-            "version": snap.version,
-            "indexed": indexed,
-            "dropped": dropped,
-            "covered_files": covered,
-        }
+        return self._update_file_bloom(
+            snap, ShardStore(self.root, self._secondary_store_name(col)),
+            [col], {"col": col}, "secondary index", bits_per_key, k, rebuild,
+        )
 
     def _secondary_prune(
         self, snap: Snapshot, col: str, values: list
@@ -2001,36 +1996,25 @@ class LakeTable:
         happens among base rows, so each base file stands alone and a
         file whose bloom provably lacks every requested value is pruned
         INDIVIDUALLY - post-compaction point lookups touch only the
-        files that may match, not the whole bucket."""
-        from dataingestion_spark.lake import bloom as B
-        from dataingestion_spark.lake.shardstore import ShardStore
-
-        store = ShardStore(self.root, self._secondary_store_name(col))
-        if store.spec() is None:
+        files that may match, not the whole bucket. Each file's answer
+        is :meth:`_bloom_prune`'s bloom test."""
+        buckets = sorted(set(snap.files) | set(snap.deltas), key=int)
+        pruned = self._bloom_prune(
+            snap, buckets, [(v,) for v in values],
+            ShardStore(self.root, self._secondary_store_name(col)),
+        )
+        if pruned is None:
             return None
-        h1, h2 = B.key_hashes([(v,) for v in values])
-        kept: list[int] = []
-        kept_files: dict[str, list[str]] = {}
-        for b in sorted(set(snap.files) | set(snap.deltas), key=int):
-            base = list(snap.files.get(b, []))
-            deltas = list(snap.deltas.get(b, []))
-            entries = store.load_bucket(b)
-
-            def may(rel: str) -> bool:
-                e = entries.get(rel)
-                return e is None or B.any_key_maybe_present(e, h1, h2)
-
-            if deltas:
+        fmap, dmap, _ = pruned
+        kept: dict[str, list[str]] = {}
+        for b in buckets:
+            if snap.deltas.get(b):
                 # MOR soundness rule: all-or-nothing per bucket
-                if any(may(rel) for rel in base + deltas):
-                    kept.append(int(b))
-                    kept_files[b] = base
-            else:
-                hits = [rel for rel in base if may(rel)]
-                if hits:
-                    kept.append(int(b))
-                    kept_files[b] = hits
-        return kept, kept_files
+                if fmap[b] or dmap[b]:
+                    kept[b] = list(snap.files.get(b, []))
+            elif fmap[b]:
+                kept[b] = fmap[b]
+        return [int(b) for b in kept], kept
 
     def read_in(
         self,
@@ -2101,19 +2085,23 @@ class LakeTable:
         return frame
 
     def _bloom_prune(
-        self, snap, buckets: list[int], key_tuples: list[tuple]
+        self, snap, buckets: list, key_tuples: list[tuple],
+        store: ShardStore | None = None,
     ) -> tuple[dict, dict, int] | None:
         """Bloom-test the candidate buckets' files against the requested
         keys: returns (file_map, delta_map, skipped) restricted to
-        ``buckets``, or None when no index exists. Files WITHOUT an index
-        entry are always kept, so correctness never depends on index
+        ``buckets``, or None when no index exists. ``store`` is the bloom
+        index to consult: the pk bloom by default, a secondary bloom for
+        :meth:`_secondary_prune` (keys are then 1-tuples of values).
+        Files WITHOUT an index entry are always kept, so correctness
+        never depends on index
         freshness; files with an entry are dropped only when the bitmap
         PROVES none of the keys is present (no false negatives). Sound
         under merge-on-read: key-pruning keeps every file that may hold a
         requested key, so per-key LWW resolution is unchanged."""
         from dataingestion_spark.lake import bloom as B
 
-        store = B.BloomIndexStore(self.root)
+        store = store or B.BloomIndexStore(self.root)
         if store.spec() is None or not key_tuples:
             return None
         h1, h2 = B.key_hashes(key_tuples)
@@ -3329,54 +3317,43 @@ class LakeTable:
         return committed
 
     def _remap_index_specs(self, old: str, new: str) -> None:
-        """Rewrite bloom/NDV index metadata for a column rename. Both
-        indexes key by VALUE (bloom hashes pk values; HLL sketches hash
-        cell values), so a rename only has to move the NAME - no sketch
-        or bitmap is rebuilt."""
-        from dataingestion_spark.lake import bloom as B
-        from dataingestion_spark.lake import ndv as N
-
-        bstore = B.BloomIndexStore(self.root)
-        bspec = bstore.spec()
-        if bspec and old in bspec.get("pk_fields", []):
-            bspec["pk_fields"] = [
-                new if c == old else c for c in bspec["pk_fields"]
-            ]
-            bstore.write_spec(bspec)
-        nstore = N.NdvStore(self.root)
-        nspec = nstore.spec()
-        if nspec and old in nspec.get("cols", []):
-            nspec["cols"] = sorted(
-                new if c == old else c for c in nspec["cols"]
-            )
-            nstore.write_spec(nspec)
-            for b in nstore.buckets():
-                entry = nstore.load_bucket(b)
-                sk = entry.get("sketches", {})
-                if old in sk:
-                    sk[new] = sk.pop(old)
-                    nstore.write_bucket(b, entry)
-        # a secondary bloom index is keyed by the column IN ITS DIR NAME:
-        # move the whole store and restamp the spec (bitmaps hash values,
-        # not names - nothing is rebuilt)
-        from dataingestion_spark.lake.shardstore import ShardStore
-
-        sstore = ShardStore(self.root, self._secondary_store_name(old))
-        if sstore.spec() is not None:
-            target = ShardStore(self.root, self._secondary_store_name(new))
-            # os.replace raises ENOTEMPTY when the target dir already
-            # exists (stale leftovers of a crashed earlier rename, or an
-            # index once built under the new name) - and this runs AFTER
-            # the rename commit succeeded, so failing here would leave
-            # the table renamed but the call raising. The old index is
-            # authoritative for the just-renamed data; clear the stale
-            # target and move over it.
-            if target.dir.exists():
-                shutil.rmtree(target.dir)
-            os.replace(sstore.dir, target.dir)
-            spec = target.spec()
-            spec["col"] = new
-            target.write_spec(spec)
+        """Rewrite index metadata for a column rename. Every index keys
+        by VALUE (blooms hash pk or column values; HLL sketches hash cell
+        values), so a rename only has to move the NAME - no sketch or
+        bitmap is rebuilt."""
+        for name, kind, store, spec, _ in self._indexes():
+            if kind == "pk-bloom" and old in spec.get("pk_fields", []):
+                spec["pk_fields"] = [
+                    new if c == old else c for c in spec["pk_fields"]
+                ]
+                store.write_spec(spec)
+            elif kind == "hll-ndv" and old in spec.get("cols", []):
+                spec["cols"] = sorted(
+                    new if c == old else c for c in spec["cols"]
+                )
+                store.write_spec(spec)
+                for b in store.buckets():
+                    entry = store.load_bucket(b)
+                    sk = entry.get("sketches", {})
+                    if old in sk:
+                        sk[new] = sk.pop(old)
+                        store.write_bucket(b, entry)
+            elif name == f"secondary:{old}":
+                # a secondary bloom is keyed by the column IN ITS DIR
+                # NAME: move the whole store and restamp the spec
+                target = ShardStore(self.root, self._secondary_store_name(new))
+                # os.replace raises ENOTEMPTY when the target dir already
+                # exists (stale leftovers of a crashed earlier rename, or
+                # an index once built under the new name) - and this runs
+                # AFTER the rename commit succeeded, so failing here would
+                # leave the table renamed but the call raising. The old
+                # index is authoritative for the just-renamed data; clear
+                # the stale target and move over it.
+                if target.dir.exists():
+                    shutil.rmtree(target.dir)
+                os.replace(store.dir, target.dir)
+                spec["col"] = new
+                target.write_spec(spec)
 
     def retire_renames(self) -> list[str]:
         """Drop prior-name mappings whose old physical name no longer
@@ -4496,7 +4473,8 @@ class LakeTable:
           * snapshot chain parents resolve within retained history
             (older parents may be legitimately expired);
           * bucket keys in files/deltas are within ``num_buckets``;
-          * index specs (bloom/NDV) agree with the current schema;
+          * index specs (pk bloom, NDV, secondary blooms) agree with
+            the current schema;
           * live rows are pk-unique (data job, optional);
           * orphan count (vacuum dry-run) - informational, not an error.
 
@@ -4531,27 +4509,21 @@ class LakeTable:
                     f"{label} carry out-of-range bucket ids {bad} "
                     f"(num_buckets={snap.num_buckets})"
                 )
-        from dataingestion_spark.lake import bloom as B
-        from dataingestion_spark.lake import ndv as N
-
-        bspec = B.BloomIndexStore(self.root).spec()
-        if bspec is not None and bspec.get("pk_fields") != list(snap.pk_fields):
-            errors.append(
-                f"bloom index built for pk {bspec.get('pk_fields')} but "
-                f"table pk is {list(snap.pk_fields)}"
-            )
-        nspec = N.NdvStore(self.root).spec()
-        if nspec is not None:
-            gone = [
-                c
-                for c in nspec.get("cols", [])
-                if c not in {f.name for f in snap.schema.fields}
-            ]
-            if gone:
-                warnings.append(f"ndv sketches track dropped column(s) {gone}")
         names = {f.name for f in snap.schema.fields}
-        for col in self.secondary_index_cols():
-            if col not in names:
+        for name, kind, _, spec, _ in self._indexes():
+            if kind == "pk-bloom":
+                if spec.get("pk_fields") != list(snap.pk_fields):
+                    errors.append(
+                        f"bloom index built for pk {spec.get('pk_fields')} "
+                        f"but table pk is {list(snap.pk_fields)}"
+                    )
+            elif kind == "hll-ndv":
+                gone = [c for c in spec.get("cols", []) if c not in names]
+                if gone:
+                    warnings.append(
+                        f"ndv sketches track dropped column(s) {gone}"
+                    )
+            elif (col := name.split(":", 1)[1]) not in names:
                 warnings.append(
                     f"secondary index tracks dropped column {col!r}"
                 )
@@ -4654,9 +4626,9 @@ class LakeTable:
              restored automatically by the rewrite),
           2. retire rename mappings the rewrite made obsolete
              (restores predicate pushdown on renamed columns),
-          3. refresh the bloom / NDV indexes IF PRESENT (never creates
-             them - opting into an index is a separate decision; refresh
-             touches only churned buckets),
+          3. refresh every index IF PRESENT - pk bloom, NDV, secondary
+             blooms (never creates one - opting into an index is a
+             separate decision; refresh touches only churned buckets),
           4. expire snapshots beyond ``keep_snapshots`` (tags shielded),
           5. vacuum orphans older than the grace window.
 
@@ -4675,45 +4647,17 @@ class LakeTable:
         report["retired_renames"] = self.retire_renames()
         report["indexes"] = {}
         if refresh_indexes:
-            from dataingestion_spark.lake import bloom as B
-            from dataingestion_spark.lake import ndv as N
-
             # a broken index spec (e.g. stale after a crash mid-rename)
             # must not starve the downstream steps - expiry and vacuum
             # are what keep the table bounded; the error is reported for
             # the operator to repair (fsck names the mismatch)
-            bspec = B.BloomIndexStore(self.root).spec()
-            if bspec is not None:
+            for name, _, _, spec, refresh in self._indexes():
                 try:
-                    report["indexes"]["bloom"] = self.update_bloom_index(
-                        bits_per_key=bspec["bits_per_key"], k=bspec["k"]
-                    )
+                    result = refresh(spec)
                 except ValueError as e:
-                    report["indexes"]["bloom"] = {"error": str(e)}
-            nspec = N.NdvStore(self.root).spec()
-            if nspec is not None and nspec.get("cols"):
-                try:
-                    report["indexes"]["ndv"] = self.update_ndv_sketch(
-                        list(nspec["cols"]), lg_k=nspec["lg_k"]
-                    )
-                except ValueError as e:
-                    report["indexes"]["ndv"] = {"error": str(e)}
-            from dataingestion_spark.lake.shardstore import ShardStore
-
-            for col in self.secondary_index_cols():
-                sspec = ShardStore(
-                    self.root, self._secondary_store_name(col)
-                ).spec()
-                try:
-                    report["indexes"][f"secondary:{col}"] = (
-                        self.update_secondary_index(
-                            col,
-                            bits_per_key=sspec["bits_per_key"],
-                            k=sspec["k"],
-                        )
-                    )
-                except ValueError as e:
-                    report["indexes"][f"secondary:{col}"] = {"error": str(e)}
+                    result = {"error": str(e)}
+                if result is not None:
+                    report["indexes"][name] = result
         report["expired_snapshots"] = self.expire_snapshots(
             keep_last=keep_snapshots
         )
@@ -4819,38 +4763,10 @@ class LakeTable:
                 "bucket int, manifest string, data_files long, delta_files long",
             )
         if kind == "indexes":
-            from dataingestion_spark.lake import bloom as B
-            from dataingestion_spark.lake import ndv as N
-            from dataingestion_spark.lake.shardstore import ShardStore
-
-            rows = []
-            bstore = B.BloomIndexStore(self.root)
-            if bstore.spec() is not None:
-                rows.append(
-                    (
-                        "bloom", "pk-bloom",
-                        json.dumps(bstore.spec(), sort_keys=True),
-                        len(bstore.buckets()),
-                    )
-                )
-            nstore = N.NdvStore(self.root)
-            if nstore.spec() is not None:
-                rows.append(
-                    (
-                        "ndv", "hll-ndv",
-                        json.dumps(nstore.spec(), sort_keys=True),
-                        len(nstore.buckets()),
-                    )
-                )
-            for col in self.secondary_index_cols():
-                s = ShardStore(self.root, self._secondary_store_name(col))
-                rows.append(
-                    (
-                        f"secondary:{col}", "column-bloom",
-                        json.dumps(s.spec(), sort_keys=True),
-                        len(s.buckets()),
-                    )
-                )
+            rows = [
+                (name, ikind, json.dumps(spec, sort_keys=True), len(store.buckets()))
+                for name, ikind, store, spec, _ in self._indexes()
+            ]
             return self.spark.createDataFrame(
                 rows, "name string, kind string, spec string, buckets long"
             )

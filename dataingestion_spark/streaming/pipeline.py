@@ -104,6 +104,101 @@ def _validate_trigger(trigger: str | None) -> None:
         )
 
 
+def _start_batch_stream(
+    spark: SparkSession, process_batch: Callable[[DataFrame, int], None],
+    source_dir: str, checkpoint_dir: str, schema: T.StructType | None,
+    source_format: str, reader_options: dict | None,
+    max_files_per_trigger: int | None, max_bytes_per_trigger: int | str | None,
+    trigger: str | None, available_now: bool,
+) -> StreamingQuery:
+    """Tail ``source_dir`` and hand each micro-batch to ``process_batch``
+    under ``checkpoint_dir`` - the stream start-up of
+    :func:`apply_changes` and :func:`route_changes`. ``schema=None``
+    infers the schema from the parquet files already there."""
+    if schema is None:
+        if source_format != "parquet":
+            raise ValueError(
+                f"schema inference is parquet-only; pass an explicit "
+                f"schema for source_format={source_format!r}"
+            )
+        schema = spark.read.parquet(source_dir).schema
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    if max_bytes_per_trigger:
+        reader = reader.option("maxBytesPerTrigger", max_bytes_per_trigger)
+    for k, v in (reader_options or {}).items():
+        reader = reader.option(k, v)
+    writer = (
+        reader.format(source_format).load(source_dir)
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    return _with_trigger(writer, trigger, available_now).start()
+
+
+def _quarantine(
+    df: DataFrame, config: DatasetConfig, pipeline_id: str, out_dir: str
+) -> tuple[DataFrame, int]:
+    """Split off ``df``'s unmergeable rows (sources/quarantine.py) and
+    write them to ``out_dir``, overwritten so a replayed epoch rewrites
+    the identical set; returns the mergeable rows and the count."""
+    from dataingestion_spark.sources.quarantine import split_invalid
+
+    df, bad = split_invalid(
+        df, list(config.pk_fields), lsn_col=config.order_fields[0],
+        constraints=list(config.constraints or []),
+    )
+    n_quarantined = bad.count()
+    if n_quarantined:
+        bad.withColumn("_q_pipeline", F.lit(pipeline_id)).write.mode(
+            "overwrite"
+        ).parquet(out_dir)
+    return df, n_quarantined
+
+
+def _merge(
+    table: LakeTable, df: DataFrame, config: DatasetConfig,
+    pipeline_id: str, epoch_id: int, lineage: LineageLog | None,
+):
+    """The exactly-once MERGE of one epoch under ``config``'s settings;
+    with lineage on, the merge computes per-file offset ranges from its
+    pinned batch so the lineage row never rescans the source."""
+    return table.merge(
+        df,
+        pipeline_id=pipeline_id,
+        epoch_id=epoch_id,
+        fail_on_breaking=config.fail_on_breaking_schema,
+        evolution_policy=config.evolution_policy,
+        hot_key_threshold=config.hot_key_threshold,
+        hot_key_min_rows=config.hot_key_min_rows,
+        salt_buckets=config.salt_buckets,
+        write_mode=config.write_mode,
+        update_mode=config.update_mode,
+        collect_file_stats=lineage is not None,
+    )
+
+
+def _record_epoch(
+    lineage: LineageLog, pipeline_id: str, epoch_id: int, df: DataFrame,
+    snap, t0: float, n_quarantined: int | None,
+) -> None:
+    """The lineage row of one epoch's merge or append started at ``t0``
+    (``snap`` None: a replayed epoch its marker skipped)."""
+    lineage.record_epoch(
+        pipeline_id=pipeline_id,
+        epoch_id=epoch_id,
+        batch=df if snap is not None else None,
+        applied_events=snap.summary.get("applied_events") if snap else 0,
+        snapshot_version=snap.version if snap else None,
+        duration_ms=int((time.time() - t0) * 1000),
+        status="SUCCESS" if snap is not None else "SKIPPED_DUPLICATE_EPOCH",
+        file_stats=snap.summary.get("file_stats") if snap else None,
+        quarantined_events=n_quarantined,
+    )
+
+
 def stage_changes(
     spark: SparkSession,
     landing_dir: str,
@@ -252,10 +347,7 @@ def apply_changes(
     # every sync, and past it read_changes would diff versions from two
     # DIFFERENT chains - wrong intervals with no error. Audit-stage data
     # also must not leak into published views; fail fast (E3 posture).
-    if branch != "main" and (
-        (getattr(config, "agg_views", []) or [])
-        or getattr(config, "scd2_history", None)
-    ):
+    if branch != "main" and (config.agg_views or config.scd2_history):
         raise ValueError(
             "agg_views / scd2_history cannot run against a WAP branch: "
             "their version cursors are chain-scoped and the branch chain "
@@ -279,38 +371,16 @@ def apply_changes(
             df = fn(df)
         n_quarantined = None
         if quarantine_dir is not None:
-            from dataingestion_spark.sources.quarantine import split_invalid
-
-            df, bad = split_invalid(
-                df, list(config.pk_fields), lsn_col=config.order_fields[0],
-                constraints=list(getattr(config, "constraints", []) or []),
+            df, n_quarantined = _quarantine(
+                df, config, pipeline_id, f"{quarantine_dir}/epoch={epoch_id}"
             )
-            n_quarantined = bad.count()
-            if n_quarantined:
-                bad.withColumn("_q_pipeline", F.lit(pipeline_id)).write.mode(
-                    "overwrite"
-                ).parquet(f"{quarantine_dir}/epoch={epoch_id}")
         if config.mode == "upsert":
-            snap = table.merge(
-                df,
-                pipeline_id=pipeline_id,
-                epoch_id=epoch_id,
-                fail_on_breaking=config.fail_on_breaking_schema,
-                evolution_policy=getattr(config, "evolution_policy", "full"),
-                hot_key_threshold=config.hot_key_threshold,
-                hot_key_min_rows=getattr(config, "hot_key_min_rows", None),
-                salt_buckets=config.salt_buckets,
-                write_mode=getattr(config, "write_mode", "cow"),
-                update_mode=getattr(config, "update_mode", "full"),
-                # the merge computes per-file offset ranges from its pinned
-                # batch so the lineage log below never rescans the source
-                collect_file_stats=lineage is not None,
-            )
-            limit = getattr(config, "compact_delta_files", 0)
+            snap = _merge(table, df, config, pipeline_id, epoch_id, lineage)
+            limit = config.compact_delta_files
             if snap is not None and limit:
                 table.maybe_compact(max_delta_files_per_bucket=limit)
             if snap is not None:
-                for spec in getattr(config, "agg_views", []) or []:
+                for spec in config.agg_views or []:
                     from dataingestion_spark.lake.sync import sync_aggregate
 
                     sync_aggregate(
@@ -322,55 +392,28 @@ def apply_changes(
                         maxs=list(spec.get("maxs", [])),
                         pipeline_id=spec.get("pipeline_id", "aggsync"),
                     )
-                hist_path = getattr(config, "scd2_history", None)
-                if hist_path:
+                if config.scd2_history:
                     from dataingestion_spark.lake.sync import sync_scd2
 
-                    sync_scd2(table, hist_path)
+                    sync_scd2(table, config.scd2_history)
         else:
             snap = table.append(
                 df.drop("op"),
                 pipeline_id=pipeline_id,
                 epoch_id=epoch_id,
                 fail_on_breaking=config.fail_on_breaking_schema,
-                evolution_policy=getattr(config, "evolution_policy", "full"),
+                evolution_policy=config.evolution_policy,
             )
-        duration_ms = int((time.time() - t0) * 1000)
         if lineage is not None:
-            lineage.record_epoch(
-                pipeline_id=pipeline_id,
-                epoch_id=epoch_id,
-                batch=df if snap is not None else None,
-                applied_events=(snap.summary.get("applied_events") if snap else 0),
-                snapshot_version=(snap.version if snap else None),
-                duration_ms=duration_ms,
-                status="SUCCESS" if snap is not None else "SKIPPED_DUPLICATE_EPOCH",
-                file_stats=(snap.summary.get("file_stats") if snap else None),
-                quarantined_events=n_quarantined,
+            _record_epoch(
+                lineage, pipeline_id, epoch_id, df, snap, t0, n_quarantined
             )
 
-    if schema is None:
-        if source_format != "parquet":
-            raise ValueError(
-                f"schema inference is parquet-only; pass an explicit "
-                f"schema for source_format={source_format!r}"
-            )
-        schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if max_bytes_per_trigger:
-        reader = reader.option("maxBytesPerTrigger", max_bytes_per_trigger)
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
-    stream = reader.format(source_format).load(source_dir)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start_batch_stream(
+        spark, process_batch, source_dir, checkpoint_dir, schema,
+        source_format, reader_options, max_files_per_trigger,
+        max_bytes_per_trigger, trigger, available_now,
     )
-    writer = _with_trigger(writer, trigger, available_now)
-    return writer.start()
 
 
 def subscribe_feed(
@@ -511,12 +554,17 @@ def route_changes(
     (overwrite per epoch - idempotent beside the markers), replayable
     per table with ``requeue_quarantine``.
 
+    A route's config is applied as far as its MERGE goes (pk, order,
+    schema policy, write/update mode, constraints, salting); a config
+    that also asks for ``mode="append"``, ``compact_delta_files``,
+    ``agg_views`` or ``scd2_history`` is refused up front - run that
+    table through :func:`apply_changes` instead.
+
     ``route_parallelism`` (default 4) runs the per-route merges as
     CONCURRENT Spark job chains - safe because routes target different
-    tables (no shared commit chain; session-conf mutation inside merge
-    is already lock-guarded for concurrent pipelines) and a win at
-    scale: N small routes keep the cluster busy instead of serializing
-    N job chains through the driver loop. Any route failure fails the
+    tables (no shared commit chain) and a win at scale: N small routes
+    keep the cluster busy instead of serializing N job chains through
+    the driver loop. Any route failure fails the
     whole batch, so the checkpoint replays it and committed routes skip
     via their markers. ``route_parallelism=1`` restores strictly
     sequential (deterministic-order) execution."""
@@ -524,6 +572,19 @@ def route_changes(
         raise ValueError(f"on_unrouted must be fail|ignore, got {on_unrouted!r}")
     if route_parallelism < 1:
         raise ValueError("route_parallelism must be >= 1")
+    for name, cfg in routes.items():
+        for field, value in (
+            ("mode", cfg.mode != "upsert" and cfg.mode),
+            ("compact_delta_files", cfg.compact_delta_files),
+            ("agg_views", cfg.agg_views),
+            ("scd2_history", cfg.scd2_history),
+        ):
+            if value:
+                raise ValueError(
+                    f"route {name!r} sets {field}={value!r}, which "
+                    "route_changes does not apply; run that table "
+                    "through apply_changes"
+                )
     _validate_trigger(trigger)
     tables = {name: LakeTable(spark, cfg.table_path) for name, cfg in routes.items()}
     lineage = LineageLog(spark, lineage_path) if lineage_path else None
@@ -581,24 +642,10 @@ def route_changes(
                 n_quarantined = None
                 pipeline_id = f"route::{name}::{ckpt_tag}"
                 if quarantine_dir is not None:
-                    from dataingestion_spark.sources.quarantine import (
-                        split_invalid,
+                    df, n_quarantined = _quarantine(
+                        df, cfg, pipeline_id,
+                        f"{quarantine_dir}/{name}/epoch={epoch_id}",
                     )
-
-                    df, bad = split_invalid(
-                        df, list(cfg.pk_fields),
-                        lsn_col=cfg.order_fields[0],
-                        constraints=list(
-                            getattr(cfg, "constraints", []) or []
-                        ),
-                    )
-                    n_quarantined = bad.count()
-                    if n_quarantined:
-                        bad.withColumn(
-                            "_q_pipeline", F.lit(pipeline_id)
-                        ).write.mode("overwrite").parquet(
-                            f"{quarantine_dir}/{name}/epoch={epoch_id}"
-                        )
                 declared = {f.name for f in tbl.snapshot().schema.fields}
                 keep = [
                     c
@@ -608,48 +655,15 @@ def route_changes(
                     or c in cfg.order_fields
                 ]
                 df = df.select(*keep)
-                snap = tbl.merge(
-                    df,
-                    pipeline_id=pipeline_id,
-                    epoch_id=epoch_id,
-                    fail_on_breaking=cfg.fail_on_breaking_schema,
-                    evolution_policy=getattr(cfg, "evolution_policy", "full"),
-                    hot_key_threshold=cfg.hot_key_threshold,
-                    hot_key_min_rows=getattr(cfg, "hot_key_min_rows", None),
-                    salt_buckets=cfg.salt_buckets,
-                    write_mode=getattr(cfg, "write_mode", "cow"),
-                    update_mode=getattr(cfg, "update_mode", "full"),
-                    collect_file_stats=lineage is not None,
-                )
+                snap = _merge(tbl, df, cfg, pipeline_id, epoch_id, lineage)
                 if lineage is not None:
                     # two routes' merges finish concurrently; parquet
                     # append from two driver threads to ONE lineage dir
                     # would race the commit protocol - serialize it
                     with lineage_lock:
-                        lineage.record_epoch(
-                            pipeline_id=pipeline_id,
-                            epoch_id=epoch_id,
-                            batch=df if snap is not None else None,
-                            applied_events=(
-                                snap.summary.get("applied_events")
-                                if snap
-                                else 0
-                            ),
-                            snapshot_version=(
-                                snap.version if snap else None
-                            ),
-                            duration_ms=int((time.time() - t0) * 1000),
-                            status=(
-                                "SUCCESS"
-                                if snap is not None
-                                else "SKIPPED_DUPLICATE_EPOCH"
-                            ),
-                            file_stats=(
-                                snap.summary.get("file_stats")
-                                if snap
-                                else None
-                            ),
-                            quarantined_events=n_quarantined,
+                        _record_epoch(
+                            lineage, pipeline_id, epoch_id, df, snap, t0,
+                            n_quarantined,
                         )
 
             routed = [n for n in present if n in routes]
@@ -673,28 +687,11 @@ def route_changes(
         finally:
             batch.unpersist()
 
-    if schema is None:
-        if source_format != "parquet":
-            raise ValueError(
-                f"schema inference is parquet-only; pass an explicit "
-                f"schema for source_format={source_format!r}"
-            )
-        schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if max_bytes_per_trigger:
-        reader = reader.option("maxBytesPerTrigger", max_bytes_per_trigger)
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
-    stream = reader.format(source_format).load(source_dir)
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start_batch_stream(
+        spark, process_batch, source_dir, checkpoint_dir, schema,
+        source_format, reader_options, max_files_per_trigger,
+        max_bytes_per_trigger, trigger, available_now,
     )
-    writer = _with_trigger(writer, trigger, available_now)
-    return writer.start()
 
 
 def bootstrap_table(

@@ -310,8 +310,7 @@ def _envelope_rows(tbl, v_a, v_b) -> Counter:
         e = json.loads(r["value"])
         img = e["before"] if e["op"] == "d" else e["after"]
         key = json.loads(r["key"])
-        # the key JSON leaves a NULL pk field out
-        out[(kind[e["op"]], key["conv_id"], key.get("turn_idx"), img["role"],
+        out[(kind[e["op"]], key["conv_id"], key["turn_idx"], img["role"],
              img["text"], img["tool"], e["ts_ms"])] += 1
     return out
 

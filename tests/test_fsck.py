@@ -4,6 +4,7 @@ sane, bucket ids in range, index specs coherent, live rows pk-unique.
 Read-only by construction."""
 
 import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -87,6 +88,37 @@ def test_fsck_flags_stale_index_specs(spark, tmp_path, capsys):
     rc = main(["fsck", "--config", str(cfg_path)])
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rc == 0 and out["ok"]
+
+    # a secondary index whose column left the schema is a warning too
+    # (a crash between a rename's commit and its store move leaves one)
+    from dataingestion_spark.lake.shardstore import ShardStore
+
+    tbl.update_secondary_index("tool")
+    os.replace(
+        ShardStore(tbl.root, "bloom-col-tool").dir,
+        ShardStore(tbl.root, "bloom-col-gone_column").dir,
+    )
+    report = tbl.verify_integrity(check_data=False)
+    assert report["ok"]
+    assert (
+        "secondary index tracks dropped column 'gone_column'"
+        in report["warnings"]
+    )
+
+    # a pk bloom index built for another pk is an error
+    from dataingestion_spark.lake.bloom import BloomIndexStore
+
+    tbl.update_bloom_index()
+    bstore = BloomIndexStore(tbl.root)
+    bspec = bstore.spec()
+    bspec["pk_fields"] = ["conv_id"]
+    bstore.write_spec(bspec)
+    report = tbl.verify_integrity(check_data=False)
+    assert not report["ok"]
+    assert report["errors"] == [
+        "bloom index built for pk ['conv_id'] but table pk is "
+        "['conv_id', 'turn_idx']"
+    ]
 
 
 def test_fsck_detects_duplicate_base_rows_under_mor_deltas(spark, tmp_path):

@@ -27,6 +27,7 @@ def test_optimize_full_pass(spark, tmp_path):
         )
     tbl.update_bloom_index()
     tbl.update_ndv_sketch(["conv_id"])
+    tbl.update_secondary_index("tool")
     tbl.set_sort_order(["turn_idx", "ts"], mode="zorder")
     tbl.tag("keeper")
     assert tbl.snapshot().deltas
@@ -46,6 +47,8 @@ def test_optimize_full_pass(spark, tmp_path):
     # every compacted bucket, so refresh had real work)
     assert report["indexes"]["bloom"]["applied"]
     assert report["indexes"]["ndv"]["applied"]
+    assert report["indexes"]["secondary:tool"]["applied"]
+    assert list(report["indexes"]) == ["bloom", "ndv", "secondary:tool"]
     # expiry kept the tag, vacuum reclaimed the replaced MOR files
     assert tbl.resolve_tag("keeper") in tbl.retained_versions()
     assert sum(report["vacuumed"].values()) > 0
@@ -63,6 +66,7 @@ def test_optimize_full_pass(spark, tmp_path):
     assert again["compacted"] == []
     assert not again["indexes"]["bloom"]["applied"]
     assert not again["indexes"]["ndv"]["applied"]
+    assert not again["indexes"]["secondary:tool"]["applied"]
     assert sum(again["vacuumed"].values()) == 0
 
 

@@ -222,3 +222,14 @@ def test_router_bad_args_fail_fast(spark, tmp_path):
             spark, {}, str(tmp_path / "x"), str(tmp_path / "c"),
             on_unrouted="quarantine",
         )
+    # a route setting the router would silently skip is refused
+    history = DatasetConfig(
+        name="h", table_path=str(tmp_path / "h"),
+        scd2_history=str(tmp_path / "hist"),
+    )
+    with pytest.raises(
+        ValueError, match="route 'h' sets scd2_history=.*apply_changes"
+    ):
+        route_changes(
+            spark, {"h": history}, str(tmp_path / "x"), str(tmp_path / "c")
+        )
