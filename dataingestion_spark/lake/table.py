@@ -158,9 +158,70 @@ class Snapshot:
     deltas: dict[str, list[str]] = field(default_factory=dict)
     # bucket (as str) -> table-relative manifest path (persisted form)
     manifest_refs: dict[str, str] = field(default_factory=dict)
-    # chain this snapshot belongs to ("main" or a WAP branch name); legacy
+    # chain this snapshot belongs to ("main" or a WAP branch name): a child
+    # inherits it, so every commit on a branch names the branch; legacy
     # snapshot jsons lack the field and load as main
     branch: str = "main"
+
+    def child(
+        self,
+        operation: str,
+        summary: dict,
+        partial_buckets_add: list[str] | None = None,
+        **changes,
+    ) -> "Snapshot":
+        """The snapshot that follows this one: ``version + 1`` with this
+        one as ``parent``, on the same ``branch``, holding a deep copy of
+        this one's fields with ``changes`` applied (the fork alone passes
+        its own ``version`` and ``parent``). ``None`` summary values are
+        dropped. Every snapshot keeps the partial-bucket invariant here:
+        ``properties["partial_delta_buckets"]`` names the buckets whose
+        delta chains hold partial-update overlay rows, which need the
+        partial-aware read. A bucket stays in the set only while it still
+        has deltas, so a COW rewrite, compaction or rebucket that clears a
+        chain drops it; ``partial_buckets_add`` joins the set."""
+        fields = {
+            **self.__dict__,
+            "version": self.version + 1,
+            "parent": self.version,
+            **changes,
+            "operation": operation,
+            "summary": {},
+        }
+        snap = Snapshot(**json.loads(json.dumps(fields)))
+        snap.summary = {k: v for k, v in summary.items() if v is not None}
+        props = snap.properties
+        plist = {
+            b for b in props.get("partial_delta_buckets", [])
+            if snap.deltas.get(str(b))
+        }
+        plist.update(partial_buckets_add or [])
+        if plist:
+            props["partial_delta_buckets"] = sorted(plist, key=int)
+        else:
+            props.pop("partial_delta_buckets", None)
+        return snap
+
+    def state(self) -> dict:
+        """The table this snapshot describes, apart from its place in the
+        history: what a rollback restores and a publish carries across
+        chains, as ``child`` changes."""
+        names = ("schema_json", "schema_version", "num_buckets", "pk_fields",
+                 "order_fields", "files", "deltas", "properties")
+        return {k: getattr(self, k) for k in names}
+
+    def rewritten(
+        self, buckets, new_files: dict[str, list[str]]
+    ) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
+        """This snapshot's files and deltas after a copy-on-write rewrite
+        of ``buckets``: each of them, and each bucket ``new_files`` names,
+        takes its files from ``new_files`` (none when absent) and loses
+        its delta chain."""
+        files, deltas = dict(self.files), dict(self.deltas)
+        for b in {str(b) for b in buckets} | set(new_files):
+            files[b] = new_files.get(b, [])
+            deltas.pop(b, None)
+        return files, deltas
 
     @property
     def schema(self) -> T.StructType:
@@ -603,34 +664,18 @@ class LakeTable:
             if isinstance(at_version, str)
             else at_version
         )
-        props = json.loads(json.dumps(src.properties))
-        props["branch_base"] = {"chain": self.branch_name, "version": src.version}
-        fork = Snapshot(
-            version=src.version,
-            parent=src.parent,
-            schema_json=json.loads(json.dumps(src.schema_json)),
-            schema_version=src.schema_version,
-            num_buckets=src.num_buckets,
-            pk_fields=list(src.pk_fields),
-            order_fields=list(src.order_fields),
-            files={k: list(v) for k, v in src.files.items()},
-            properties=props,
-            operation="fork",
-            summary={"forked_from": f"{self.branch_name}@{src.version}"},
-            deltas={k: list(v) for k, v in src.deltas.items()},
-            manifest_refs=dict(src.manifest_refs),
-            committed_at=time.time(),
-            branch=name,
+        fork = src.child(
+            "fork", {"forked_from": f"{self.branch_name}@{src.version}"},
+            version=src.version, parent=src.parent, branch=name,
         )
+        fork.properties["branch_base"] = {
+            "chain": self.branch_name, "version": src.version
+        }
         bh = LakeTable(self.spark, self.root, branch=name)
-        path = bh._snapshot_path(fork.version)
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError as e:  # raced create_branch(same name)
+        try:  # every bucket is unchanged: the fork shares each manifest
+            bh._commit(fork, parent=src)
+        except CommitConflictError as e:  # raced create_branch(same name)
             raise ValueError(f"branch {name!r} already exists") from e
-        with os.fdopen(fd, "w") as f:
-            f.write(fork.to_json())
-        bh._cache_put(fork.version, fork)
         return bh
 
     def publish_branch(self, name: str) -> Snapshot | None:
@@ -665,27 +710,16 @@ class LakeTable:
                 f"from v{base_v} to v{head.version} since the fork; "
                 "re-create the branch from the new head and re-audit"
             )
-        props = json.loads(json.dumps(staged.properties))
-        props.pop("branch_base", None)
-        snap = Snapshot(
-            version=head.version + 1,
-            parent=head.version,
-            schema_json=json.loads(json.dumps(staged.schema_json)),
-            schema_version=staged.schema_version,
-            num_buckets=staged.num_buckets,
-            pk_fields=list(staged.pk_fields),
-            order_fields=list(staged.order_fields),
-            files={k: list(v) for k, v in staged.files.items()},
-            properties=props,
-            operation="publish",
-            summary={
+        snap = head.child(
+            "publish",
+            {
                 "published_branch": name,
                 "branch_head": staged.version,
                 "staged_commits": staged.version - base_v,
             },
-            deltas={k: list(v) for k, v in staged.deltas.items()},
-            branch=self.branch_name,
+            **staged.state(),
         )
+        snap.properties.pop("branch_base", None)
         # parent=staged shares ALL manifest refs; a concurrent main commit
         # loses the O_EXCL race -> CommitConflictError (no retry: any main
         # advance invalidates the audited base by definition)
@@ -1162,7 +1196,7 @@ class LakeTable:
     # its batch keys' images, a compaction none. Anything else - DML,
     # append, rollback, rebucket, renames, fork/publish - sends the diff
     # down the unpruned path.
-    _HULL_OPS = frozenset(
+    _KEYED_DIFF_OPS = frozenset(
         {"merge", "merge-mor", "merge-partial", "merge-mor-partial", "compact"}
     )
 
@@ -1176,7 +1210,7 @@ class LakeTable:
         not, changes no live image. ``False`` when no commit in the range
         wrote a batch; ``None`` (diff unpruned) when b's parent chain
         does not reach a through retained snapshots, a commit is not in
-        ``_HULL_OPS``, a merge with a batch recorded no keys (over the
+        ``_KEYED_DIFF_OPS``, a merge with a batch recorded no keys (over the
         cap, a NULL key field, or written before keys were recorded), or
         the recorded counts pass ``PUSHDOWN_MAX_KEYS``. The summaries
         decide before any sidecar is opened."""
@@ -1189,7 +1223,7 @@ class LakeTable:
                 return None
             d = json.loads(path.read_text())
             s = d.get("summary", {})
-            if d.get("operation") not in self._HULL_OPS:
+            if d.get("operation") not in self._KEYED_DIFF_OPS:
                 return None
             if d["operation"] != "compact" and s.get("batch_events", 1):
                 if "changed_keys" not in s:
@@ -2763,10 +2797,10 @@ class LakeTable:
             DELETED_COL, F.lit(False)
         )
         new_files = self._write_data_files(data, target_partitions=snap.num_buckets)
-        files = {k: list(v) for k, v in snap.files.items()}
-        for b, fl in new_files.items():
-            files.setdefault(b, [])
-            files[b] = files[b] + fl
+        files = {
+            **snap.files,
+            **{b: snap.files.get(b, []) + fl for b, fl in new_files.items()},
+        }
         return self._commit_write(
             snap, files, schema, schema_version, "append", pipeline_id, epoch_id,
             {"evolution": evo, **(lineage or {})},
@@ -2785,54 +2819,30 @@ class LakeTable:
         deltas: dict[str, list[str]] | None = None,
         partial_buckets_add: list[str] | None = None,
     ) -> Snapshot:
+        """Commit ``parent``'s child holding ``files``, ``deltas`` (None:
+        the parent's) and ``schema``, and mark ``epoch_id`` done for
+        ``pipeline_id``. On a lost snapshot race the computed lists are
+        rebased onto the new head (:meth:`_rebase_onto_head`) and the
+        head's child is committed instead; ``Snapshot.child`` keeps the
+        partial-bucket set on every pass."""
         while True:
-            props = json.loads(json.dumps(parent.properties))  # deep copy
-            if pipeline_id is not None and epoch_id is not None:
-                props.setdefault("pipelines", {})[pipeline_id] = {
-                    "last_epoch": int(epoch_id)
-                }
-            # partial_delta_buckets tracks which buckets' delta chains
-            # contain per-column overlay rows (update_mode='partial' MOR
-            # commits) and therefore need the partial-aware read
-            # resolution. Invariant kept here for EVERY commit: a bucket
-            # leaves the set the moment its delta chain is cleared (COW
-            # rewrite or compaction folds overlays into full rows).
-            eff_deltas = deltas if deltas is not None else parent.deltas
-            plist = {
-                b
-                for b in props.get("partial_delta_buckets", [])
-                if eff_deltas.get(str(b))
-            }
-            plist.update(partial_buckets_add or [])
-            if plist:
-                props["partial_delta_buckets"] = sorted(plist, key=int)
-            else:
-                props.pop("partial_delta_buckets", None)
-            snap = Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
+            snap = parent.child(
+                operation, summary, partial_buckets_add,
+                files=files,
+                deltas=parent.deltas if deltas is None else deltas,
                 schema_json=json.loads(schema.json()),
                 schema_version=schema_version,
-                num_buckets=parent.num_buckets,
-                pk_fields=parent.pk_fields,
-                order_fields=parent.order_fields,
-                files=files,
-                properties=props,
-                operation=operation,
-                summary={k: v for k, v in summary.items() if v is not None},
-                deltas=(
-                    deltas
-                    if deltas is not None
-                    else {k: list(v) for k, v in parent.deltas.items()}
-                ),
             )
+            if pipeline_id is not None and epoch_id is not None:
+                snap.properties.setdefault("pipelines", {})[pipeline_id] = {
+                    "last_epoch": int(epoch_id)
+                }
             try:
                 return self._commit(snap, parent=parent)
             except CommitConflictError:
-                head, files, deltas = self._rebase_onto_head(
+                parent, files, deltas = self._rebase_onto_head(
                     parent, files, deltas, pipeline_id, epoch_id
                 )  # raises the conflict onward when not provably safe
-                parent = head
 
     def _rebase_onto_head(
         self,
@@ -3070,26 +3080,12 @@ class LakeTable:
 
         def _once() -> Snapshot:
             snap = self.snapshot()
-            props = json.loads(json.dumps(snap.properties))
+            out = snap.child("set-sort-order", {})
+            out.properties.pop("sort_order", None)
             if cols:
                 self._validate_cluster_spec(snap, list(cols), mode)
-                props["sort_order"] = {"cols": list(cols), "mode": mode}
-            else:
-                props.pop("sort_order", None)
-            out = Snapshot(
-                version=snap.version + 1,
-                parent=snap.version,
-                schema_json=json.loads(snap.schema.json()),
-                schema_version=snap.schema_version,
-                num_buckets=snap.num_buckets,
-                pk_fields=list(snap.pk_fields),
-                order_fields=list(snap.order_fields),
-                files={k: list(v) for k, v in snap.files.items()},
-                properties=props,
-                operation="set-sort-order",
-                summary={"sort_order": props.get("sort_order")},
-                deltas={k: list(v) for k, v in snap.deltas.items()},
-            )
+                for d in (out.properties, out.summary):
+                    d["sort_order"] = {"cols": list(cols), "mode": mode}
             return self._commit(out, parent=snap)
 
         return self._retry_commit(_once)
@@ -3190,19 +3186,8 @@ class LakeTable:
             cur = self.snapshot()
             if target.version == cur.version:
                 return cur
-            snap = Snapshot(
-                version=cur.version + 1,
-                parent=cur.version,
-                schema_json=json.loads(target.schema.json()),
-                schema_version=target.schema_version,
-                num_buckets=target.num_buckets,
-                pk_fields=target.pk_fields,
-                order_fields=target.order_fields,
-                files={k: list(v) for k, v in target.files.items()},
-                properties=json.loads(json.dumps(target.properties)),
-                operation="rollback",
-                summary={"rolled_back_to": target.version},
-                deltas={k: list(v) for k, v in target.deltas.items()},
+            snap = cur.child(
+                "rollback", {"rolled_back_to": target.version}, **target.state()
             )
             return self._commit(snap, parent=cur)
 
@@ -3284,28 +3269,21 @@ class LakeTable:
                     "schema_json": json.loads(schema.json()),
                 }
             )
-            props = json.loads(json.dumps(snap.properties))
-            props["renames"] = renames
+            out = snap.child(
+                "rename-column",
+                {"renamed_from": old, "renamed_to": new},
+                schema_json=json.loads(schema.json()),
+                schema_version=new_version,
+                pk_fields=[new if c == old else c for c in snap.pk_fields],
+                order_fields=[new if c == old else c for c in snap.order_fields],
+            )
+            out.properties["renames"] = renames
             # the persistent sort order follows the rename atomically in
             # the same commit, or the next compaction would fail on a
             # column that still exists under its new name
-            so = props.get("sort_order")
+            so = out.properties.get("sort_order")
             if so:
                 so["cols"] = [new if c == old else c for c in so["cols"]]
-            out = Snapshot(
-                version=snap.version + 1,
-                parent=snap.version,
-                schema_json=json.loads(schema.json()),
-                schema_version=new_version,
-                num_buckets=snap.num_buckets,
-                pk_fields=[new if c == old else c for c in snap.pk_fields],
-                order_fields=[new if c == old else c for c in snap.order_fields],
-                files={k: list(v) for k, v in snap.files.items()},
-                properties=props,
-                operation="rename-column",
-                summary={"renamed_from": old, "renamed_to": new},
-                deltas={k: list(v) for k, v in snap.deltas.items()},
-            )
             return self._commit(out, parent=snap)
 
         committed = self._retry_commit(_once)
@@ -3399,25 +3377,13 @@ class LakeTable:
                     kept[cur] = live
             if not retired:
                 return []
-            props = json.loads(json.dumps(snap.properties))
-            if kept:
-                props["renames"] = kept
-            else:
-                props.pop("renames", None)
-            out = Snapshot(
-                version=snap.version + 1,
-                parent=snap.version,
-                schema_json=dict(snap.schema_json),
-                schema_version=snap.schema_version,
-                num_buckets=snap.num_buckets,
-                pk_fields=list(snap.pk_fields),
-                order_fields=list(snap.order_fields),
-                files={k: list(v) for k, v in snap.files.items()},
-                properties=props,
-                operation="retire-renames",
-                summary={"retired_prior_names": sorted(retired)},
-                deltas={k: list(v) for k, v in snap.deltas.items()},
+            out = snap.child(
+                "retire-renames", {"retired_prior_names": sorted(retired)}
             )
+            if kept:
+                out.properties["renames"] = kept
+            else:
+                out.properties.pop("renames", None)
             self._commit(out, parent=snap)
             return sorted(retired)
 
@@ -4185,7 +4151,8 @@ class LakeTable:
         (``merge-mor``, ``merge-mor-partial``) append their files to the
         buckets' delta chains; the partial one also marks those buckets
         as holding overlay rows. The COW arms replace the touched buckets'
-        files and clear their delta chains.
+        files and clear their delta chains (``Snapshot.rewritten``), after
+        checking that no bucket outside the touched set was written.
 
         ``keys``, the batch's distinct pk tuples, are written sorted and
         typed as the pk to one zstd Parquet sidecar under ``_meta/keys/``;
@@ -4214,11 +4181,12 @@ class LakeTable:
                 "changed_keys": len(rows),
                 "changed_keys_file": str(path.relative_to(self.root)),
             }
-        files = {k: list(v) for k, v in snap.files.items()}
-        deltas = {k: list(v) for k, v in snap.deltas.items()}
         if operation.startswith("merge-mor"):
-            for b, fl in new_files.items():
-                deltas[b] = deltas.get(b, []) + fl
+            files = snap.files
+            deltas = {
+                **snap.deltas,
+                **{b: snap.deltas.get(b, []) + fl for b, fl in new_files.items()},
+            }
         else:
             # Safety net behind the typed pre-scan: a written bucket outside
             # the touched set means its current rows were NOT joined -
@@ -4230,9 +4198,7 @@ class LakeTable:
                     f"touched set {touched}; pre-scan/winner bucket "
                     "assignment diverged"
                 )
-            for b in touched:
-                files[str(b)] = new_files.get(str(b), [])
-                deltas.pop(str(b), None)
+            files, deltas = snap.rewritten(touched, new_files)
         return self._commit_write(
             snap, files, schema, schema_version, operation, pipeline_id,
             epoch_id, summary, deltas=deltas,
@@ -4860,25 +4826,11 @@ class LakeTable:
         new_files = self._write_data_files(
             df, target_partitions=new_num_buckets, cluster_by=list(pk)
         )
-        props = json.loads(json.dumps(snap.properties))
         # every delta chain was folded into full base rows above
-        props.pop("partial_delta_buckets", None)
-        out = Snapshot(
-            version=snap.version + 1,
-            parent=snap.version,
-            schema_json=json.loads(snap.schema.json()),
-            schema_version=snap.schema_version,
-            num_buckets=new_num_buckets,
-            pk_fields=snap.pk_fields,
-            order_fields=snap.order_fields,
-            files=new_files,
-            properties=props,
-            operation="rebucket",
-            summary={
-                "from_buckets": snap.num_buckets,
-                "to_buckets": new_num_buckets,
-            },
-            deltas={},
+        out = snap.child(
+            "rebucket",
+            {"from_buckets": snap.num_buckets, "to_buckets": new_num_buckets},
+            num_buckets=new_num_buckets, files=new_files, deltas={},
         )
         return self._commit(out, parent=snap)
 
@@ -4959,11 +4911,7 @@ class LakeTable:
             cluster_by=list(snap.pk_fields),
             bloom_cols=list(snap.pk_fields),
         )
-        files = {k: list(v) for k, v in snap.files.items()}
-        deltas = {k: list(v) for k, v in snap.deltas.items()}
-        for b in set(target) | {int(b) for b in new_files}:
-            files[str(b)] = new_files.get(str(b), [])
-            deltas.pop(str(b), None)
+        files, deltas = snap.rewritten(target, new_files)
         return self._commit_write(
             snap, files, snap.schema, snap.schema_version,
             "delete" if assignments is None else "update", None, None,
@@ -5066,11 +5014,7 @@ class LakeTable:
             bloom_cols=list(snap.pk_fields),
             max_records_per_file=max_records_per_file,
         )
-        files = {k: list(v) for k, v in snap.files.items()}
-        deltas = {k: list(v) for k, v in snap.deltas.items()}
-        for b in set(target) | {int(b) for b in new_files}:
-            files[str(b)] = new_files.get(str(b), [])
-            deltas.pop(str(b), None)
+        files, deltas = snap.rewritten(target, new_files)
         return self._commit_write(
             snap, files, snap.schema, snap.schema_version, "compact", None, None,
             {

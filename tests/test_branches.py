@@ -285,6 +285,31 @@ def test_branch_base_survives_branch_expiry(spark, tmp_path):
     assert snap_d["branch"] == "main"
 
 
+def test_every_branch_commit_names_its_branch(spark, tmp_path):
+    """Each commit on a branch chain - fork, merge, compaction, DML,
+    rollback - records the branch it belongs to in its snapshot json;
+    the publish commit lands on main and records main."""
+    tbl = _fresh(spark, tmp_path / "t")
+    tbl.merge(_batch(spark, 1), pipeline_id="p", epoch_id=0)
+    br = tbl.create_branch("audit")
+    fork_v = br.current_version()
+    br.merge(_batch(spark, 2, lsn_offset=10_000), pipeline_id="p", epoch_id=1)
+    br.compact()
+    br.delete_where("role = 'tool'")
+    br.rollback(fork_v + 2)
+    chain = [
+        json.loads(p.read_text())
+        for p in sorted(tbl._snap_dir.glob("B-audit-v*.json"))
+    ]
+    assert [d["operation"] for d in chain] == [
+        "fork", "merge", "compact", "delete", "rollback"
+    ]
+    for d in chain:
+        assert d["branch"] == "audit", (d["version"], d["operation"])
+    pub = tbl.publish_branch("audit")
+    assert json.loads(tbl._snapshot_path(pub.version).read_text())["branch"] == "main"
+
+
 def test_drop_branch_validates_glob_metacharacters(spark, tmp_path):
     """drop_branch('*') must not expand across other branches' snapshot
     files (round-4 ADVICE): same name validation as create_branch."""

@@ -66,7 +66,7 @@ def test_fsck_detects_missing_file_and_cli_exit(spark, tmp_path):
 def test_fsck_flags_stale_index_specs(spark, tmp_path, capsys):
     tbl = _table(spark, tmp_path, name="idx")
     tbl.update_ndv_sketch(["tool"])
-    # rename_column remaps the spec atomically (test_round4_review_fixes);
+    # rename_column remaps the spec atomically (test_rename.py);
     # simulate the crash-between-commit-and-remap window instead
     from dataingestion_spark.lake.ndv import NdvStore
 

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from dataingestion_spark import oracle
 from dataingestion_spark.lake import LakeTable
 from dataingestion_spark.sources.datagen import gen_changes
-from tests.util import TRANSCRIPT_SCHEMA, assert_table_equals_oracle
+from tests.util import TRANSCRIPT_SCHEMA, assert_table_equals_oracle, merged_table
 
 
 def _table(spark, tmp_path, n_events=3_000):
@@ -158,3 +158,24 @@ def test_merge_into_fail_fast(spark, tmp_path):
             src, when_matched_update=True,
             update_assignments={"conv_id": "x"},
         )
+
+
+def test_merge_into_assignment_to_column_absent_from_source(spark, tmp_path):
+    tbl = merged_table(spark, tmp_path, name="t3")
+    src = (
+        tbl.read()
+        .filter("tool IS NOT NULL")
+        .limit(8)
+        .select("conv_id", "turn_idx", "role", "text", "ts")  # no 'tool'
+        .persist()
+    )
+    keys = [(r.conv_id, int(r.turn_idx)) for r in src.collect()]
+    tbl.merge_into(
+        src,
+        when_matched_update=True,
+        update_assignments={"tool": "forced", "text": "[t]"},
+    )
+    kdf = spark.createDataFrame(keys, "conv_id string, turn_idx int")
+    for r in tbl.read_keys(kdf).collect():
+        assert (r.tool, r.text) == ("forced", "[t]")
+    src.unpersist()

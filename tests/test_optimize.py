@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from dataingestion_spark import oracle
 from dataingestion_spark.lake import LakeTable
 from dataingestion_spark.sources.datagen import gen_changes
-from tests.util import TRANSCRIPT_SCHEMA, assert_table_equals_oracle
+from tests.util import TRANSCRIPT_SCHEMA, assert_table_equals_oracle, merged_table
 
 
 def test_optimize_full_pass(spark, tmp_path):
@@ -88,3 +88,24 @@ def test_optimize_skips_absent_indexes(spark, tmp_path):
 
     assert BloomIndexStore(tbl.root).spec() is None
     assert NdvStore(tbl.root).spec() is None
+
+
+def test_optimize_survives_broken_index_spec(spark, tmp_path):
+    """A stale/corrupt index spec must not starve expiry and vacuum."""
+    from dataingestion_spark.lake.ndv import NdvStore
+
+    tbl = merged_table(spark, tmp_path, name="t2")
+    tbl.update_ndv_sketch(["conv_id"])
+    store = NdvStore(tbl.root)
+    spec = store.spec()
+    spec["cols"] = ["gone_column"]  # simulate crash-mid-rename staleness
+    store.write_spec(spec)
+    for _ in range(4):
+        tbl.merge(
+            gen_changes(spark, n_events=200, n_convs=10, seed=7),
+            pipeline_id="x", epoch_id=None,
+        )
+    report = tbl.optimize(keep_snapshots=1, vacuum_older_than_s=0.0)
+    assert "error" in report["indexes"]["ndv"]
+    assert report["expired_snapshots"]  # downstream steps still ran
+    assert sum(report["vacuumed"].values()) >= 0

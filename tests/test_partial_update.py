@@ -109,6 +109,21 @@ def test_partial_mor_compact_folds_overlays(spark, tmp_path):
     _check_against_oracle(spark, tbl, changes)
 
 
+def test_rebucket_folds_partial_overlays(spark, tmp_path):
+    """A rebucket folds every delta chain into full base rows, so the new
+    snapshot names no partial-overlay bucket and reads as the dict
+    replay."""
+    changes = _replay_stream(spark, seed=9, n=3_000)
+    tbl = _mk(spark, tmp_path / "t")
+    _apply_epochs(tbl, changes, 3_000, write_mode="mor")
+    assert tbl.snapshot().properties.get("partial_delta_buckets")
+    tbl.rebucket(8)
+    snap = LakeTable(spark, tbl.root).snapshot()  # as committed on disk
+    assert snap.operation == "rebucket" and not snap.deltas
+    assert "partial_delta_buckets" not in snap.properties
+    _check_against_oracle(spark, tbl, changes)
+
+
 def test_partial_mixed_mor_then_cow_epochs(spark, tmp_path):
     """A COW partial epoch over buckets holding partial deltas must fold
     the overlays (via the partial-aware read) before rewriting."""

@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 
 from dataingestion_spark.lake import LakeTable
 from dataingestion_spark.schema.evolution import SchemaEvolutionError
+from tests.util import merged_table
 
 SCHEMA = T.StructType(
     [
@@ -377,3 +378,37 @@ def test_rename_with_stale_secondary_index_target_dir(spark, tmp_table_dir):
     }
     assert got == want
     assert not (stale.dir / "leftover.json").exists()
+
+
+def test_rename_remaps_sort_order_and_index_specs(spark, tmp_path):
+    """A metadata-only rename must carry every name-keyed piece of table
+    metadata with it, or the next maintenance pass crashes on a column
+    that still exists under its new name."""
+    from dataingestion_spark.lake.bloom import BloomIndexStore
+    from dataingestion_spark.lake.ndv import NdvStore
+
+    tbl = merged_table(spark, tmp_path)
+    tbl.set_sort_order(["ts", "turn_idx"], mode="zorder")
+    tbl.update_bloom_index()
+    tbl.update_ndv_sketch(["tool", "role"])
+    ndv_before = tbl.approx_ndv("tool", refresh=False)
+
+    tbl.rename_column("ts", "event_ts")
+    tbl.rename_column("tool", "tool_name")
+    tbl.rename_column("conv_id", "cid")  # pk rename
+
+    assert tbl.sort_order() == {"cols": ["event_ts", "turn_idx"], "mode": "zorder"}
+    assert BloomIndexStore(tbl.root).spec()["pk_fields"] == ["cid", "turn_idx"]
+    assert NdvStore(tbl.root).spec()["cols"] == ["role", "tool_name"]
+    # bucket sketches moved with the name: the stored estimate survives
+    # without any refresh job
+    assert tbl.approx_ndv("tool_name", refresh=False) == ndv_before
+
+    # the maintenance pass that used to crash now runs end to end
+    report = tbl.optimize(max_delta_files_per_bucket=1, keep_snapshots=2)
+    assert "error" not in report["indexes"].get("bloom", {})
+    assert "error" not in report["indexes"].get("ndv", {})
+    assert tbl.verify_integrity(check_data=False)["ok"]
+    # and compaction under the renamed sort order still works
+    snap = tbl.compact(max_records_per_file=500)
+    assert snap.summary["cluster_cols"] == ["event_ts", "turn_idx"]

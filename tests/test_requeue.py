@@ -140,3 +140,53 @@ def test_cli_requeue_set_exprs(spark, tmp_path, capsys):
     assert report["still_invalid"] == {"null_lsn": int(lost.sum())}
     assert report["version"] == tbl.current_version()
     assert_table_equals_oracle(tbl.read(), oracle.replay(pdf[~lost]))
+
+
+def test_requeue_fresh_pipeline_id_recovers_after_bad_fix(spark, tmp_path):
+    d = {k: str(tmp_path / k) for k in ("landing", "ckpt", "table", "dlq")}
+    changes = gen_changes(spark, n_events=1_500, n_convs=20, seed=51).persist()
+    poisoned = changes.withColumn(
+        "op",
+        F.when(
+            (F.col("lsn") % 7 == 0) & (F.col("op") == "INSERT"), F.lit("XX")
+        ).otherwise(F.col("op")),
+    )
+    write_change_files(poisoned, d["landing"])
+    config = DatasetConfig(
+        name="transcripts", table_path=d["table"], num_buckets=4, salt_buckets=4
+    )
+    bootstrap_table(spark, config, TRANSCRIPT_SCHEMA)
+    q = apply_changes(
+        spark, config, d["landing"], d["ckpt"],
+        schema=poisoned.schema, quarantine_dir=d["dlq"],
+    )
+    q.awaitTermination(240)
+    pdf = changes.toPandas()
+    changes.unpersist()
+    bad = (pdf["lsn"] % 7 == 0) & (pdf["op"] == "INSERT")
+    tbl = LakeTable(spark, d["table"])
+
+    # run 1: a WRONG fix cures nothing; epochs get marked anyway
+    wrong = requeue_quarantine(
+        tbl, d["dlq"], fix=lambda df: df.withColumn("text", F.lit("noop"))
+    )
+    assert wrong["requeued"] == 0 and wrong["still_invalid"]
+    # same (default) cursor: replay skips, rows look stranded
+    again = requeue_quarantine(
+        tbl, d["dlq"],
+        fix=lambda df: df.withColumn(
+            "op", F.when(F.col("op") == "XX", F.lit("INSERT")).otherwise(F.col("op"))
+        ),
+    )
+    assert again["epochs"] == 0 and again["skipped_epochs"] > 0
+
+    # a FRESH pipeline id replays the immutable DLQ with the right fix
+    fixed = requeue_quarantine(
+        tbl, d["dlq"], pipeline_id="requeue::take2",
+        fix=lambda df: df.withColumn(
+            "op", F.when(F.col("op") == "XX", F.lit("INSERT")).otherwise(F.col("op"))
+        ),
+    )
+    assert fixed["pipeline_id"] == "requeue::take2"
+    assert fixed["requeued"] == int(bad.sum())
+    assert_table_equals_oracle(tbl.read(), oracle.replay(pdf))

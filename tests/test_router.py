@@ -13,6 +13,7 @@ from dataingestion_spark import oracle
 from dataingestion_spark.config import DatasetConfig
 from dataingestion_spark.lake import LakeTable
 from dataingestion_spark.sources.datagen import gen_changes, write_change_files
+from dataingestion_spark.streaming.lineage import LineageLog
 from dataingestion_spark.streaming.pipeline import bootstrap_table, route_changes
 from tests.util import TRANSCRIPT_SCHEMA, assert_table_equals_oracle
 
@@ -233,3 +234,44 @@ def test_router_bad_args_fail_fast(spark, tmp_path):
         route_changes(
             spark, {"h": history}, str(tmp_path / "x"), str(tmp_path / "c")
         )
+
+
+def test_router_null_discriminator_fails_fast_and_ignore_counts(spark, tmp_path):
+    d = {k: str(tmp_path / k) for k in ("landing", "ta", "lineage")}
+    changes = gen_changes(spark, n_events=1_000, n_convs=20, seed=61).persist()
+    tagged = changes.withColumn(
+        "table",
+        F.when(F.col("lsn") % 5 == 0, F.lit(None)).otherwise(F.lit("main")),
+    )
+    write_change_files(tagged, d["landing"])
+    pdf = changes.toPandas()
+    changes.unpersist()
+    routes = {
+        "main": DatasetConfig(
+            name="main", table_path=d["ta"], num_buckets=4, salt_buckets=4
+        )
+    }
+    bootstrap_table(spark, routes["main"], TRANSCRIPT_SCHEMA)
+
+    q = route_changes(
+        spark, routes, d["landing"], str(tmp_path / "ckpt_fail")
+    )
+    try:
+        q.awaitTermination(240)
+        err = q.exception()
+    except Exception as e:  # noqa: BLE001
+        err = e
+    assert err is not None and "<NULL>" in str(err)
+
+    q = route_changes(
+        spark, routes, d["landing"], str(tmp_path / "ckpt_ign"),
+        on_unrouted="ignore", lineage_path=d["lineage"],
+    )
+    q.awaitTermination(240)
+    keep = pdf["lsn"] % 5 != 0
+    assert_table_equals_oracle(
+        LakeTable(spark, d["ta"]).read(), oracle.replay(pdf[keep])
+    )
+    lin = LineageLog(spark, d["lineage"]).read().toPandas()
+    dropped = lin[lin.status == "DROPPED_UNROUTED"]
+    assert dropped.event_count.sum() == int((~keep).sum())

@@ -1,9 +1,13 @@
-"""Shared test helpers: the equality check of FIXTURES.md §4."""
+"""Shared test helpers: the equality check of FIXTURES.md §4 and a small
+merged table."""
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, types as T
+
+from dataingestion_spark.lake import LakeTable
+from dataingestion_spark.sources.datagen import gen_changes
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -35,3 +39,18 @@ def assert_table_equals_oracle(
     n_keys = got[["conv_id", "turn_idx"]].drop_duplicates().shape[0]
     assert n_keys == len(got), "duplicate primary keys in table"
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def merged_table(spark, tmp_path, name="t", n_events=2_000):
+    """A 4-bucket transcript table under ``tmp_path / name`` holding one
+    merged epoch of ``n_events`` generated changes (30 conversations)."""
+    tbl = LakeTable.create(
+        spark, str(tmp_path / name), TRANSCRIPT_SCHEMA,
+        pk_fields=["conv_id", "turn_idx"], order_fields=["lsn", "ts"],
+        num_buckets=4,
+    )
+    tbl.merge(
+        gen_changes(spark, n_events=n_events, n_convs=30, seed=41),
+        pipeline_id="p", epoch_id=0,
+    )
+    return tbl
