@@ -5,8 +5,9 @@ in, as opposed to replay_job.py's from-scratch burst.
 Two questions this answers that the replay bench can't:
 
 1. **Steady-state COW cost.** During a from-scratch replay the batch is
-   never small relative to the table, so the broadcast-probe COW plan
-   (zero table-side exchange; round-4 verdict item #2) never engages.
+   never small relative to the table, so the COW broadcast split (one
+   broadcast of the batch keys; only the table rows the batch hits are
+   exchanged) never engages.
    Here the table is bootstrapped to many times the epoch size first,
    then timed epochs run in the table >> batch regime - the 100 TB
    shape, where each epoch touches a sliver of a huge table.

@@ -1492,17 +1492,17 @@ def q_cdc_zorder_prune_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cdc_broadcast_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Steady-state COW broadcast-probe merge (round-4 verdict item #2,
-    lake/table.py _merge_cow_broadcast): replay the flagship binlog in a
-    large bootstrap epoch then a small steady epoch. The second merge
-    sees the table dwarf the batch (base rows >= 4x batch events, exact
-    counts from the stats sidecars), so it folds the batch to per-key
-    winners and streams the table side through broadcast hash joins -
-    ZERO shuffle exchange over current table rows, the single-box analog
-    of Iceberg's storage-partitioned join. The query asserts the plan
-    actually engaged (merge_plan == "cow-broadcast"), so a silent
-    fallback to the shuffle plans fails loudly rather than passing on
-    identical results. Oracle: the portable replay of the full stream -
+    """Steady-state COW broadcast split (lake/table.py ``_merge_once``,
+    plan ``cow-broadcast``): replay the flagship binlog in a large
+    bootstrap epoch then a small steady epoch. The second merge sees the
+    table dwarf the batch (base rows >= 4x batch events, exact counts
+    from the stats sidecars), so one broadcast of the batch keys splits
+    the touched rows: those the batch hits fold with it in one exchange,
+    the rest go from the scan to the write with no exchange - the
+    single-box analog of Iceberg's storage-partitioned join. The query
+    asserts the plan actually engaged (merge_plan == "cow-broadcast"),
+    so a silent fallback to the union plan fails loudly rather than
+    passing on identical results. Oracle: the portable replay of the full stream -
     final state must be indistinguishable from any other plan's."""
     from dataingestion_spark.sources.datagen import gen_changes
 

@@ -60,6 +60,7 @@ import time
 import uuid
 from collections import OrderedDict
 from dataclasses import dataclass, field
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
@@ -310,24 +311,16 @@ def key_literals(
 class LakeTable:
     """Handle to one lake table rooted at a directory."""
 
-    # COW broadcast-probe merge (the local analog of Iceberg's
-    # storage-partitioned join, SCALE.md "COW join shuffles the table
-    # side"): when no bucket's batch slice exceeds this many pre-LWW
-    # rows, the merge streams the table side through broadcast hash
-    # joins instead of shuffling it - zero Exchange over current table
-    # rows. Touched buckets are processed in groups whose combined batch
-    # slice stays under the budget, so the per-group broadcast is
-    # executor-memory-sized at ANY epoch size; a single bucket over
-    # budget falls back to the shuffle plans.
-    BROADCAST_GROUP_EVENTS = 1_000_000
-
-    # The broadcast-probe plan trades the table-side shuffle for extra
-    # fixed-latency jobs (winner broadcast + presence probe), so it pays
-    # exactly when the table side DWARFS the batch - the steady-state
-    # ingest regime (measured: ~0.9x at table/batch ~1.3 during a
-    # from-scratch replay, >1x once the table outgrows the epoch).
-    # Engage only when the touched buckets' base rows (exact, from the
-    # stats sidecars) are at least this multiple of the batch; the plan
+    # The COW broadcast split (merge plan "cow-broadcast", SCALE.md "The
+    # COW table-side shuffle is eliminable"): one broadcast of the
+    # batch's pk tuples splits the touched buckets' rows into the rows
+    # the batch hits, which join the batch in the union plan's one
+    # exchange, and the rest, which stream from the scan to the write
+    # unshuffled. The broadcast is one extra fixed-latency job, so the
+    # split pays when the table side DWARFS the batch - the steady-state
+    # ingest regime. Engage only when the touched buckets' base rows
+    # (exact, from the stats sidecars) are at least this multiple of the
+    # batch, and the batch is at most BROADCAST_KEYS_MAX events; the plan
     # is a function of these counts alone, never of measured speed.
     # float("inf") keeps every epoch on the union plan.
     BROADCAST_TABLE_BATCH_RATIO = 4.0
@@ -337,7 +330,7 @@ class LakeTable:
     # key needs it is a property of its row volume, not its share of the
     # batch. A fractional-only threshold mis-fires on micro-batches: in a
     # 1,000-event steady-state epoch a 5% threshold salts 50-row keys -
-    # pure plan overhead (and it vetoes the broadcast-probe COW plan in
+    # pure plan overhead (and it vetoes the COW broadcast split in
     # exactly the regime that plan targets). 100k transcript rows is
     # single-digit MB - far below any executor partition or file-size
     # budget - so a key is hot only when it holds BOTH >= threshold of
@@ -2535,9 +2528,10 @@ class LakeTable:
     PUSHDOWN_MAX_KEYS = 10_000
 
     # past that cap _keyed_read broadcasts the key relation only up to
-    # this many keys (measured): an explicit hint bypasses
-    # autoBroadcastJoinThreshold, and a sync's change-volume key set must
-    # shuffle-join instead. 10^6 short key rows is a few tens of MB.
+    # this many keys (measured), and the COW merge's broadcast split
+    # only batches of up to this many events: an explicit hint bypasses
+    # autoBroadcastJoinThreshold, and a larger key set must shuffle-join
+    # instead. 10^6 short key rows is a few tens of MB.
     BROADCAST_KEYS_MAX = 1_000_000
 
     @staticmethod
@@ -3650,8 +3644,11 @@ class LakeTable:
 
         Steps 5-6 describe the union plan. When the counted gate holds
         (no hot keys, no widening, no deltas under the touched buckets,
-        base rows >= BROADCAST_TABLE_BATCH_RATIO x batch), the
-        broadcast-probe arm (``_merge_cow_broadcast``) replaces them.
+        batch <= BROADCAST_KEYS_MAX events, base rows >=
+        BROADCAST_TABLE_BATCH_RATIO x batch), the plan is
+        ``cow-broadcast``: one broadcast of the batch's pk tuples splits
+        the touched rows, and only those whose key the batch holds enter
+        step 5; the rest go to the write unshuffled.
 
         ``update_mode="partial"`` switches UPDATE events from full-row
         replace to the reference replay oracle's dict-merge semantics
@@ -3855,6 +3852,10 @@ class LakeTable:
         src = self._conform(src, schema).withColumn(
             BUCKET_COL, bucket_expr(pk[0], snap.num_buckets)
         )
+        # The batch's pk tuples, for the broadcast split below: taken
+        # BEFORE the Observation is attached, so the observed src is
+        # still consumed exactly once.
+        batch_keys = src.select(*[F.col(c).alias(f"_k_{c}") for c in pk])
         # The batch keys, for read_changes: every arm below consumes src
         # exactly once, so the set arrives with the write job - no job,
         # no shuffle. Recorded up to PUSHDOWN_MAX_KEYS pre-LWW events.
@@ -3865,18 +3866,16 @@ class LakeTable:
         obs = Observation(f"merge_applied_{uuid.uuid4().hex[:8]}")
         mor = write_mode == "mor" and not pk_widened
 
-        # (5-pre) COW broadcast-probe plan - the table side is NEVER
-        # exchanged (the local storage-partitioned-join analog; round-4
-        # verdict item #2). Eligible whenever the epoch is an ordinary
-        # cold full-update COW merge: no hot keys (their salting protects
-        # exchanges this plan doesn't have, but the salted WRITE layout is
-        # the shuffle plans' machinery), no pk widening (needs the full
-        # rebucket join), no unresolved deltas under the touched buckets
-        # (their read-time fold is itself a shuffle), no bucket whose
-        # batch slice exceeds the broadcast budget, and a table side that
-        # dwarfs the batch (BROADCAST_TABLE_BATCH_RATIO, exact sidecar
-        # counts). Counted inputs alone decide the plan.
-        bucket_counts = {int(r[BUCKET_COL]): int(r["_n"]) for r in raw_stats}
+        # (5-pre) COW broadcast split - only the table rows the batch hits
+        # are exchanged (the local storage-partitioned-join analog).
+        # Eligible whenever the epoch is an ordinary cold full-update COW
+        # merge: no hot keys (the split's unshuffled rows cannot take the
+        # salted write layout), no pk widening (needs the full rebucket),
+        # no unresolved deltas under the touched buckets (their read-time
+        # fold is itself a shuffle), a batch within the broadcast-key cap,
+        # and a table side that dwarfs the batch
+        # (BROADCAST_TABLE_BATCH_RATIO, exact sidecar counts). Counted
+        # inputs alone decide the plan.
         broadcast = bool(
             update_mode == "full"
             and not mor
@@ -3884,8 +3883,7 @@ class LakeTable:
             and not hot
             and not pk_widened
             and not any(snap.deltas.get(str(b)) for b in touched)
-            and max(bucket_counts.values(), default=0)
-            <= self.BROADCAST_GROUP_EVENTS
+            and batch_events <= self.BROADCAST_KEYS_MAX
             and (base_rows := self._base_rows(snap, touched)) is not None
             and base_rows >= self.BROADCAST_TABLE_BATCH_RATIO * batch_events
         )
@@ -3923,11 +3921,6 @@ class LakeTable:
                 winners, target_partitions=target_parts, pre_partitioned=True
             )
             operation, plan = "merge-mor", "mor-delta"
-        elif broadcast:
-            new_files, applied = self._merge_cow_broadcast(
-                src, snap, schema, pk, order_fields, touched, bucket_counts
-            )
-            operation, plan = "merge", "cow-broadcast"
         else:
             # (5) ONE map-side-combining LWW aggregate over (batch ∪
             # resolved current rows of touched buckets): in-batch dedup,
@@ -3946,6 +3939,20 @@ class LakeTable:
                     pk[0], snap.num_buckets, key_type=schema[pk[0]].dataType
                 ),
             )
+            rest = None
+            if broadcast:
+                # Split the table side by ONE broadcast of the batch keys
+                # (both joins plan the same BroadcastExchange, which Spark
+                # reuses): the hits fold with the batch, the rest keep
+                # their row and skip the exchange. Null-safe, as the fold
+                # groups a NULL pk field with its equal.
+                hit = reduce(
+                    lambda a, b: a & b,
+                    [F.col(c).eqNullSafe(F.col(f"_k_{c}")) for c in pk],
+                )
+                keys = F.broadcast(batch_keys)
+                rest = current.join(keys, hit, "left_anti")
+                current = current.join(keys, hit, "leftsemi")
             # SINGLE-exchange plan (round 3): repartition ONCE by the
             # write-layout keys, then run the LWW aggregate GROUPED BY
             # (layout keys + pk). Because the partitioning keys are a
@@ -3976,163 +3983,21 @@ class LakeTable:
             # applied = keys whose winner came from THIS batch
             merged = merged.observe(obs, F.sum("_pref").alias("applied"))
             merged = merged.drop("_pref", "_lsn_ord")
+            if rest is not None:
+                merged = merged.unionByName(rest)
             new_files = self._write_data_files(
                 merged, target_partitions=target_parts, pre_partitioned=True
             )
-            operation, plan = "merge", "cow-union"
-        if not broadcast:
-            # observed inside the write job (no extra action)
-            applied = int(obs.get["applied"] or 0) if touched else 0
+            operation = "merge"
+            plan = "cow-broadcast" if broadcast else "cow-union"
+        # observed inside the write job (no extra action)
+        applied = int(obs.get["applied"] or 0) if touched else 0
         return self._commit_merge(
             snap, schema, schema_version, operation, touched, new_files,
             {"applied_events": applied, **summary, "merge_plan": plan},
             pipeline_id, epoch_id,
             keys=None if keys_obs is None else keys_obs.get["k"],
         )
-
-    def _merge_cow_broadcast(
-        self,
-        src: DataFrame,
-        snap: Snapshot,
-        schema: T.StructType,
-        pk: list[str],
-        order_fields: list[str],
-        touched: list[int],
-        bucket_counts: dict[int, int],
-    ) -> tuple[dict[str, list[str]], int]:
-        """COW merge with ZERO exchange on the table side - the
-        single-box analog of Iceberg's storage-partitioned join
-        (SCALE.md: "COW join shuffles the table side every epoch").
-
-        The batch is folded to per-key winners (ONE exchange, over the
-        batch only - O(epoch), never O(table)), then each group of
-        touched buckets is rewritten by streaming its base files through
-        broadcast hash joins:
-
-          updated = scan(group)            LEFT JOIN broadcast(winners)
-          present = scan(group, pk-pruned) SEMI JOIN broadcast(winner pks)
-          inserts = winners ANTI JOIN broadcast(present)
-          new     = updated UNION inserts   -> bucket-dir write, no shuffle
-
-        Scan partitions flow straight into the per-bucket dynamic-
-        partition write (pre_partitioned); only the insert sliver - batch
-        rows for keys absent from the table - takes a tiny batch-side
-        repartition for clean file layout. Groups bound each broadcast to
-        BROADCAST_GROUP_EVENTS pre-LWW batch rows, so the plan holds at
-        any epoch size: 100 TB of table behind 10^4 buckets still streams
-        scan->join->write with the day's changes broadcast group by group.
-
-        Semantics are EXACTLY the union plan's: same winners fold
-        (in-batch LWW on coalesced lsn ordinal), same source-wins
-        guard (s.lsn >= t.lsn on -1-coalesced lsns, so a null-lsn batch
-        row loses to any real table lsn), same tombstone carry (a DELETE
-        winner IS the tombstone row; an unmatched DELETE inserts one).
-        ``applied`` counts keys whose winner came from THIS batch, the
-        small-plan rule."""
-        payload_cols = [f.name for f in schema.fields if f.name not in pk]
-        winners = lww_dedupe(
-            src.withColumn(
-                "_lsn_ord", F.coalesce(F.col(LSN_COL), F.lit(-1))
-            ),
-            pk,
-            ["_lsn_ord"] + list(order_fields[1:]),
-            strategy="agg",
-        ).drop("_lsn_ord")
-        # Reused by every group (update probe, presence probe, insert
-        # anti): fold once, keep the winners hot.
-        winners = winners.persist()
-        try:
-            groups: list[list[int]] = []
-            acc: list[int] = []
-            acc_n = 0
-            for b in touched:
-                n = bucket_counts.get(int(b), 0)
-                if acc and acc_n + n > self.BROADCAST_GROUP_EVENTS:
-                    groups.append(acc)
-                    acc, acc_n = [], 0
-                acc.append(int(b))
-                acc_n += n
-            if acc:
-                groups.append(acc)
-
-            new_files: dict[str, list[str]] = {}
-            applied = 0
-            for bs in groups:
-                w_g = (
-                    winners.filter(F.col(BUCKET_COL).isin(bs))
-                    if len(groups) > 1
-                    else winners
-                )
-                s_g = w_g.select(
-                    *pk,
-                    *[F.col(c).alias(f"_s_{c}") for c in payload_cols],
-                    F.col(LSN_COL).alias("_s_lsn"),
-                    F.col(DELETED_COL).alias("_s_deleted"),
-                    F.col(BUCKET_COL).alias("_s_bucket"),
-                )
-                cur = self._read_files(snap, bs, schema)
-                source_wins = F.col("_s_bucket").isNotNull() & (
-                    F.coalesce(F.col("_s_lsn"), F.lit(-1))
-                    >= F.coalesce(F.col(LSN_COL), F.lit(-1))
-                )
-                updated = cur.join(F.broadcast(s_g), on=pk, how="left").select(
-                    *pk,
-                    *[
-                        F.when(source_wins, F.col(f"_s_{c}"))
-                        .otherwise(F.col(c))
-                        .alias(c)
-                        for c in payload_cols
-                    ],
-                    F.when(source_wins, F.col("_s_lsn"))
-                    .otherwise(F.col(LSN_COL))
-                    .alias(LSN_COL),
-                    F.when(source_wins, F.col("_s_deleted"))
-                    .otherwise(F.coalesce(F.col(DELETED_COL), F.lit(False)))
-                    .alias(DELETED_COL),
-                    F.col(BUCKET_COL),
-                    F.when(source_wins, F.lit(1))
-                    .otherwise(F.lit(0))
-                    .alias("_from_batch"),
-                )
-                # Presence probe: a SECOND, pk-pruned pass over the same
-                # files (parquet reads just the key columns - cheap next
-                # to any shuffle of the full rows), semi-joined against
-                # the broadcast winner keys, so `present` is at most
-                # |winners| rows and itself broadcastable.
-                present = cur.select(*pk).join(
-                    F.broadcast(w_g.select(*pk)), on=pk, how="leftsemi"
-                )
-                inserts = (
-                    w_g.join(F.broadcast(present), on=pk, how="left_anti")
-                    .repartition(max(len(bs), 1), F.col(BUCKET_COL))
-                    .select(
-                        *pk,
-                        *payload_cols,
-                        F.col(LSN_COL),
-                        F.col(DELETED_COL),
-                        F.col(BUCKET_COL),
-                        F.lit(1).alias("_from_batch"),
-                    )
-                )
-                # inserts lead: the written frame then belongs to the
-                # batch's session, whose listener completes the merge's
-                # batch-key Observation on src (a foreachBatch frame lives
-                # in a clone of the table's session)
-                out_g = inserts.unionByName(updated)
-                obs_g = Observation(f"merge_bcast_{uuid.uuid4().hex[:8]}")
-                out_g = out_g.observe(
-                    obs_g, F.sum("_from_batch").alias("applied")
-                ).drop("_from_batch")
-                files_g = self._write_data_files(
-                    out_g,
-                    target_partitions=max(len(bs), 1),
-                    pre_partitioned=True,
-                )
-                applied += int(obs_g.get["applied"] or 0)
-                new_files.update(files_g)
-        finally:
-            winners.unpersist()
-        return new_files, applied
 
     def _commit_merge(
         self,

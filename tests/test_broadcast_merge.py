@@ -1,21 +1,28 @@
-"""COW broadcast-probe merge (round-4 verdict item #2): the table side
-of a COW merge is never exchanged - the single-box analog of Iceberg's
-storage-partitioned join (SCALE.md "COW join shuffles the table side").
+"""COW broadcast split (merge plan ``cow-broadcast``): one broadcast of
+the batch's pk tuples splits the touched buckets' rows, so only the rows
+the batch hits are exchanged - the single-box analog of Iceberg's
+storage-partitioned join (SCALE.md "The COW table-side shuffle is
+eliminable").
 
 Pins, in order:
-- plan shape: scan -> BroadcastHashJoin with ZERO shuffle exchange on
-  the table side;
-- result equality: broadcast plan == shuffle plans for a generated
-  stream, epoch by epoch, including a forced multi-group run whose
-  per-group broadcast budget splits the touched buckets;
-- fallback gating: hot keys, MOR deltas under touched buckets, and an
-  over-budget bucket all route to the shuffle plans (and still match
-  the oracle);
+- plan shape of a real merge: one key broadcast, reused by the second
+  join; one hash exchange (batch plus hits); the rest go from the scan
+  to the write with no exchange;
+- NULL pk fields: both arms update such a key in place;
+- result equality: broadcast plan == oracle for a generated stream,
+  epoch by epoch;
+- fallback gating: hot keys and MOR deltas under touched buckets route
+  to the shuffle plans (and still match the oracle);
 - plan choice from row counts alone: every eligible epoch takes the
-  broadcast arm, and no merge leaves timing state in the properties.
+  broadcast arm, and no merge leaves timing state in the properties;
+- a foreachBatch frame still records its batch keys on this arm.
 """
 
 from __future__ import annotations
+
+import datetime
+import itertools
+import re
 
 import pandas as pd
 import pytest
@@ -41,66 +48,87 @@ def _mk(spark, path, **kw):
     )
 
 
-def test_update_probe_has_no_table_side_exchange(spark, tmp_path):
-    """The update probe's physical plan: parquet scan of the touched
-    buckets feeding a BroadcastHashJoin directly - no Exchange
-    hashpartitioning anywhere (the winners here are a local relation, so
-    ANY shuffle exchange in the plan would be a table-side one)."""
-    from dataingestion_spark.lake.table import (
-        BUCKET_COL, DELETED_COL, LSN_COL,
-    )
+def _tree(plan: str) -> list[tuple[int, str]]:
+    """(column where the node starts, node text) for each line of a
+    "simple" physical plan, whole-stage-codegen markers stripped."""
+    out = []
+    for line in plan.split("== Physical Plan ==")[1].strip().splitlines():
+        prefix = re.match(r"[ :+-]*", line).group()
+        out.append((len(prefix), re.sub(r"^\*\(\d+\) ", "", line[len(prefix):])))
+    return out
 
+
+def test_broadcast_arm_plan_splits_table_side(spark, tmp_path, monkeypatch):
+    """The plan a real broadcast-arm merge hands to the file writer: the
+    batch keys are broadcast ONCE (the second join reuses the exchange),
+    the batch and the table rows it hits share the one hash exchange of
+    the fold, and the table rows it misses reach the write through the
+    anti join with no exchange at all."""
     tbl = _mk(spark, tmp_path / "t", num_buckets=4)
-    tbl.merge(gen_changes(spark, n_events=2000, n_convs=40, seed=7))
-    snap = tbl.snapshot()
-    pk = ["conv_id", "turn_idx"]
-    payload = [f.name for f in snap.schema.fields if f.name not in pk]
+    tbl.merge(gen_changes(spark, n_events=4000, n_convs=80, seed=31),
+              hot_key_threshold=1.1)
+    plans = []
+    write = LakeTable._write_data_files
 
-    # winners stand-in: a LOCAL relation, so the only possible shuffle
-    # in the probe plan is a table-side one
-    wrows = [
-        ("c1", 1, "user", "x", None, None, 5, False, 0),
-    ]
-    w = spark.createDataFrame(
-        wrows,
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp, _lsn long, _deleted boolean, _bucket int",
+    def spy(self, df, *args, **kw):
+        plans.append(df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "simple"
+        ))
+        return write(self, df, *args, **kw)
+
+    monkeypatch.setattr(LakeTable, "_write_data_files", spy)
+    s = tbl.merge(
+        gen_changes(spark, n_events=60, n_convs=80, seed=32,
+                    lsn_offset=10_000_000),
+        hot_key_threshold=1.1,
     )
-    s_g = w.select(
-        *pk,
-        *[F.col(c).alias(f"_s_{c}") for c in payload],
-        F.col(LSN_COL).alias("_s_lsn"),
-        F.col(DELETED_COL).alias("_s_deleted"),
-        F.col(BUCKET_COL).alias("_s_bucket"),
+    assert s.summary["merge_plan"] == "cow-broadcast"
+    assert len(plans) == 1
+    tree = _tree(plans[0])
+    names = [text.split(" ")[0] for _, text in tree]
+    assert names.count("BroadcastExchange") == 1, plans[0]
+    assert names.count("ReusedExchange") == 1, plans[0]
+    assert names.count("Exchange") == 1, plans[0]
+    assert sum(t.startswith("Exchange hashpartitioning") for _, t in tree) == 1
+    anti = next(
+        i for i, (_, t) in enumerate(tree)
+        if t.startswith("BroadcastHashJoin") and "LeftAnti" in t
     )
-    cur = tbl._read_files(snap, list(range(4)), snap.schema)
-    source_wins = F.col("_s_bucket").isNotNull() & (
-        F.coalesce(F.col("_s_lsn"), F.lit(-1))
-        >= F.coalesce(F.col(LSN_COL), F.lit(-1))
-    )
-    updated = cur.join(F.broadcast(s_g), on=pk, how="left").select(
-        *pk,
-        *[
-            F.when(source_wins, F.col(f"_s_{c}")).otherwise(F.col(c)).alias(c)
-            for c in payload
-        ],
-        F.when(source_wins, F.col("_s_lsn")).otherwise(F.col(LSN_COL)).alias(LSN_COL),
-    )
-    plan = _plan(updated)
-    assert "BroadcastHashJoin" in plan
-    assert "Exchange hashpartitioning" not in plan, (
-        "table side of the COW broadcast merge must never shuffle"
-    )
-    assert "SortMergeJoin" not in plan
-    # presence probe: pk-pruned scan, semi join, still no table shuffle
-    present = cur.select(*pk).join(
-        F.broadcast(w.select(*pk)), on=pk, how="leftsemi"
-    )
-    pplan = _plan(present)
-    assert "Exchange hashpartitioning" not in pplan
-    assert "ReadSchema" in pplan and "text" not in pplan.split("ReadSchema")[1].split("\n")[0], (
-        "presence probe must prune the scan to the pk columns"
-    )
+    col = tree[anti][0]
+    below = list(itertools.takewhile(lambda n: n[0] > col, tree[anti + 1:]))
+    above = []
+    for c, t in reversed(tree[:anti]):
+        if c < col:
+            above.append(t)
+            col = c
+    assert any(t.startswith("FileScan parquet") for _, t in below), plans[0]
+    branch = above + [t for _, t in below]
+    assert not [t for t in branch if t.startswith("Exchange")], plans[0]
+
+
+def test_null_pk_field_updates_in_place_on_both_arms(spark, tmp_path):
+    """A key with a NULL pk field is one key to every arm: an UPDATE of
+    (c, NULL) replaces the stored row on the broadcast arm as on the
+    union arm (whose fold groups NULL with NULL) - never a second row."""
+    base = gen_changes(spark, n_events=400, n_convs=20, seed=9)
+
+    def event(op, text, lsn):
+        row = (op, "c_null", None, "user", text, None,
+               datetime.datetime(2024, 1, 1), lsn, "f")
+        return spark.createDataFrame([row], base.schema)
+
+    for name, configure, want in (
+        ("bc", _force_broadcast, "cow-broadcast"),
+        ("union", _union_only, "cow-union"),
+    ):
+        t = _mk(spark, tmp_path / name, num_buckets=4)
+        configure(t)
+        t.merge(base.unionByName(event("INSERT", "a", 10**6)),
+                hot_key_threshold=1.1)
+        s = t.merge(event("UPDATE", "b", 10**6 + 1), hot_key_threshold=1.1)
+        assert s.summary["merge_plan"] == want
+        rows = t.read().filter(F.col("conv_id") == "c_null").collect()
+        assert [r["text"] for r in rows] == ["b"], (name, rows)
 
 
 def _replay_equal(spark, tmp_path, name, configure, want_plan=None):
@@ -147,26 +175,6 @@ def test_broadcast_merge_equals_oracle(spark, tmp_path):
     first, *rest = tbl.history()
     for s in rest:
         assert set(s.properties) == set(first.properties) | {"pipelines"}
-
-
-def test_multi_group_chunking_equals_single_group(spark, tmp_path):
-    """A broadcast budget so small every bucket lands in its own group:
-    the chunked rewrite must produce the same state as one group and as
-    the shuffle plans."""
-
-    def tiny_budget(t):
-        # per-group budget just above the largest single-bucket slice:
-        # eligibility holds, but buckets split across multiple groups
-        t.BROADCAST_GROUP_EVENTS = 600
-        _force_broadcast(t)
-
-    a = _replay_equal(spark, tmp_path, "grp", tiny_budget,
-                      want_plan="cow-broadcast")
-    b = _replay_equal(spark, tmp_path, "ref", _union_only,
-                      want_plan="cow-union")
-    pa = a.read().toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    pb = b.read().toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(pa[sorted(pa.columns)], pb[sorted(pb.columns)], check_dtype=False)
 
 
 def test_fallbacks_still_match_oracle(spark, tmp_path):

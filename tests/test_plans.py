@@ -270,6 +270,32 @@ def test_keyed_reads_job_budget(spark, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def test_broadcast_merge_job_budget(spark, tmp_path):
+    """A small epoch against a grown COW table takes the broadcast arm
+    and runs exactly 3 Spark jobs: the pre-scan, the broadcast of the
+    batch keys (built once, reused by both joins of the split) and the
+    write."""
+    from dataingestion_spark.lake import LakeTable
+    from dataingestion_spark.sources.datagen import gen_changes
+    from tests.util import TRANSCRIPT_SCHEMA
+
+    tbl = LakeTable.create(
+        spark, tmp_path / "t", TRANSCRIPT_SCHEMA,
+        pk_fields=["conv_id", "turn_idx"], order_fields=["lsn", "ts"],
+        num_buckets=4,
+    )
+    tbl.merge(gen_changes(spark, n_events=4_000, n_convs=80, seed=31),
+              hot_key_threshold=1.1)
+    batch = gen_changes(
+        spark, n_events=60, n_convs=80, seed=32, lsn_offset=10_000_000
+    )
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.numTotalJobs()
+    snap = tbl.merge(batch, hot_key_threshold=1.1)
+    assert snap.summary["merge_plan"] == "cow-broadcast"
+    assert scheduler.numTotalJobs() - before == 3
+
+
 def test_incremental_sync_job_budget(spark, tmp_path):
     """One incremental hop of each diff-driven sync runs a pinned number
     of Spark jobs (2k-event source, 4 shuffle partitions): SCD2 history

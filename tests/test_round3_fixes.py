@@ -87,7 +87,7 @@ def test_null_lsn_rule_small_epoch_union_plan(spark, tmp_path):
 def test_merges_never_write_session_conf(spark, tmp_path, monkeypatch):
     """No merge plan sets or unsets session conf, so a query running
     beside a merge on the same SparkSession plans under the conf it was
-    given: COW (union and broadcast-probe), MOR, COW and MOR
+    given: COW (union and broadcast split), MOR, COW and MOR
     partial-update and merge_into. Every arm ends in the one commit
     tail, so each commit's operation, merge_plan and summary keys are
     pinned here too."""

@@ -97,7 +97,7 @@ def test_hot_key_absolute_floor_silences_microbatch_salting(spark, tmp_path):
 
 
 def test_hot_floor_lets_broadcast_plan_engage_on_skewed_sliver(spark, tmp_path):
-    """The steady-state regime the broadcast-probe COW plan targets IS
+    """The steady-state regime the COW broadcast split targets IS
     skewed micro-batches against a grown table; the absolute floor stops
     a tiny zipf head from vetoing it (driver query cdc_broadcast_merge)."""
     changes = gen_changes(
