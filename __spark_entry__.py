@@ -2046,10 +2046,11 @@ def q_cdc_rename_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cdc_partial_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """update_mode='partial' end-to-end: $set-style masked UPDATE payloads
-    through the real lake merge - epoch 0 as merge-on-read (overlay delta
-    rows), epoch 1 as copy-on-write (folds the overlays via the
-    partial-aware read) - against the reference oracle's dict-merge
-    semantics in DuckDB (demo/test_pipeline.sh:244-262)."""
+    through the real lake merge - epoch 0 as merge-on-read (its events
+    appended unfolded as delta rows), epoch 1 as copy-on-write (one
+    dict-merge of the base rows, those deltas and the batch, the same
+    fold the partial-aware read runs) - against the reference oracle's
+    dict-merge semantics in DuckDB (demo/test_pipeline.sh:244-262)."""
     import atexit
     import shutil
 

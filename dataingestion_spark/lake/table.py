@@ -84,7 +84,6 @@ LSN_COL = "_lsn"
 DELETED_COL = "_deleted"
 DELTA_SEQ_COL = "_seq"  # commit ordinal stamped into MOR delta files
 PARTIAL_COL = "_partial"  # MOR delta rows that are per-column overlays
-_OP_COL = "_op"  # transient: change op carried through _conform for partial
 _PARTITION_DIR_COL = "_pb"  # physical partition dir; _bucket stays a data column
 SYSTEM_COLS = [LSN_COL, DELETED_COL, BUCKET_COL]
 
@@ -993,6 +992,7 @@ class LakeTable:
         schema: T.StructType | None = None,
         file_map: dict[str, list[str]] | None = None,
         delta_map: dict[str, list[str]] | None = None,
+        batch: DataFrame | None = None,
     ) -> DataFrame:
         """Base ∪ delta rows with read-time LWW resolution (merge-on-read):
         for every pk the winner by (_lsn, delta commit ordinal) survives,
@@ -1002,7 +1002,14 @@ class LakeTable:
         its rows with the committing snapshot's version (DELTA_SEQ_COL),
         and the LWW ranks rows by :func:`_lww_ord` on transient columns;
         stored ``_lsn`` values (incl. nulls from append mode) pass through
-        unchanged."""
+        unchanged.
+
+        ``batch`` (a COW partial merge's conformed events, stamped with
+        DELTA_SEQ_COL and PARTIAL_COL) joins the deltas as the newest
+        delta commit and resolves through :meth:`_resolve_partial`. It
+        leads the union, so the plan runs in the batch's session: a
+        ``foreachBatch`` frame lives in a cloned session, and its
+        Observations report only there."""
         base = self._read_files(snap, buckets, schema, file_map=file_map)
         effective_deltas = snap.deltas if delta_map is None else delta_map
         has_deltas = any(
@@ -1010,18 +1017,20 @@ class LakeTable:
             for b, fl in effective_deltas.items()
             if buckets is None or int(b) in buckets
         )
-        if not has_deltas:
+        if not has_deltas and batch is None:
             return base
         partial_buckets = {
             int(b) for b in snap.properties.get("partial_delta_buckets", [])
         }
-        has_partial = any(
+        has_partial = batch is not None or any(
             buckets is None or b in buckets for b in partial_buckets
         )
         deltas = self._read_files(
             snap, buckets, schema, file_map=effective_deltas, with_seq=True,
             with_partial=has_partial,
         )
+        if batch is not None:
+            deltas = batch.unionByName(deltas)
         if has_partial:
             return self._resolve_partial(snap, base, deltas, schema)
         union = base.withColumn("_pref", _lww_pref(False)).unionByName(
@@ -1042,28 +1051,38 @@ class LakeTable:
         deltas: DataFrame,
         schema: T.StructType | None = None,
     ) -> DataFrame:
-        """Read-time resolution when merge-on-read delta chains contain
-        PARTIAL overlay rows (update_mode='partial' commits): per key,
-        the newest FULL row (base row, full delta row, or tombstone) is the
-        barrier; overlay rows ordered after it contribute their non-null
-        columns, last writer per column. Overlays with no barrier at all
-        (an update that arrived before any insert - the reference's
-        'UPDATE on missing key' case, demo/test_pipeline.sh:256-258) stay
-        invisible until a barrier lands underneath them."""
+        """The one dict-merge of ``update_mode='partial'`` (the reference
+        oracle's ``user_state[pk].update(data)``,
+        demo/test_pipeline.sh:244-262), used by every read of a bucket
+        with PARTIAL overlay rows, by compaction and by the COW partial
+        merge (whose batch arrives as the newest delta commit, see
+        :meth:`_resolved`). Per key, the newest FULL row by
+        :func:`_lww_ord` (base row, full delta row, INSERT, or tombstone)
+        is the barrier; overlay rows (UPDATEs) ranked after it contribute
+        their non-null columns, last writer per column, and raise the
+        key's ``_lsn`` to theirs. Every event keeps its own lsn, so a
+        stale redelivery ranks where it belongs, whichever commit brings
+        it. A tombstone barrier takes no overlay column. Overlays with no
+        barrier at all (an update that arrived before any insert - the
+        reference's 'UPDATE on missing key' case,
+        demo/test_pipeline.sh:256-258) stay invisible until a barrier
+        lands underneath them.
+
+        ``deltas`` leads the union (see :meth:`_resolved`)."""
         payload_cols = [
             f.name for f in (schema or snap.schema).fields
             if f.name not in snap.pk_fields
         ]
         pk = snap.pk_fields
-        union = base.withColumns(
-            {"_pref": _lww_pref(False), PARTIAL_COL: F.lit(False)}
-        ).unionByName(
-            deltas.withColumns(
-                {
-                    "_pref": _lww_pref(True),
-                    PARTIAL_COL: F.coalesce(F.col(PARTIAL_COL), F.lit(False)),
-                }
-            ).drop(DELTA_SEQ_COL)
+        union = deltas.withColumns(
+            {
+                "_pref": _lww_pref(True),
+                PARTIAL_COL: F.coalesce(F.col(PARTIAL_COL), F.lit(False)),
+            }
+        ).drop(DELTA_SEQ_COL).unionByName(
+            base.withColumns(
+                {"_pref": _lww_pref(False), PARTIAL_COL: F.lit(False)}
+            )
         )
         union = union.withColumn("_ord", _lww_ord(F.col("_pref")))
         is_full = ~F.col(PARTIAL_COL)
@@ -2751,7 +2770,7 @@ class LakeTable:
         extra = [
             c
             for c in df.columns
-            if c in (LSN_COL, DELETED_COL, BUCKET_COL, SALT_COL, _OP_COL)
+            if c in (LSN_COL, DELETED_COL, BUCKET_COL, SALT_COL, PARTIAL_COL)
         ]
         return df.select(*cols, *[F.col(c) for c in extra])
 
@@ -3659,12 +3678,16 @@ class LakeTable:
         a full-row replace and DELETE a full-row tombstone. This makes the
         Mongo ``$set`` adapter (sources/cdc_formats.py) honest end-to-end -
         its unwrapped partial documents no longer null-out unset fields.
-        Two caveats, both inherent to the semantics: a partial UPDATE can
-        never set a column back to NULL, and cross-epoch ordering assumes
-        per-key in-order delivery (the binlog guarantee; the reference
-        oracle likewise replays in delivery order). COW partial merges use
-        a fold+join plan - the single-max_by union plan cannot express
-        per-column folds.
+        Both arms keep every event with its own lsn and resolve through
+        the one dict-merge reads use (``_resolve_partial``), with the batch
+        as the table's newest delta commit: MOR appends the events as
+        delta rows, COW rewrites the touched buckets with the resolved
+        rows. ``applied_events`` is the batch's event count. Two caveats:
+        a partial UPDATE can never set a column back to NULL, and a COW
+        partial merge drops an UPDATE whose key is missing or deleted, so
+        an older INSERT of that key delivered in a later epoch does not
+        bring the update back (the oracle, replaying in lsn order, would);
+        under in-order delivery this never shows.
 
         ``write_mode="mor"`` (merge-on-read, the Hudi-MOR analog) replaces
         steps 5-6 with an append of the batch winners as per-bucket DELTA
@@ -3848,7 +3871,7 @@ class LakeTable:
             .withColumn(LSN_COL, F.col(lsn_src).cast("long"))
         )
         if update_mode == "partial":
-            src = src.withColumn(_OP_COL, F.col(op_col))
+            src = src.withColumn(PARTIAL_COL, F.col(op_col) == F.lit("UPDATE"))
         src = self._conform(src, schema).withColumn(
             BUCKET_COL, bucket_expr(pk[0], snap.num_buckets)
         )
@@ -3889,8 +3912,30 @@ class LakeTable:
         )
 
         if update_mode == "partial":
-            new_files = self._merge_partial(
-                src, snap, schema, pk, touched, hot, salt_buckets, mor, obs
+            # The batch's events, unfolded, are the table's newest delta
+            # commit: MOR appends them; COW resolves them with the touched
+            # buckets' rows (_resolve_partial) and rewrites those buckets,
+            # the _bucket recomputed as in the union plan below.
+            rows = src.withColumn(
+                DELTA_SEQ_COL, F.lit(snap.version + 1).cast("long")
+            )
+            if not mor:
+                rows = self._resolved(
+                    snap, touched, schema=schema, batch=rows
+                ).withColumn(
+                    BUCKET_COL,
+                    bucket_expr(
+                        pk[0], snap.num_buckets, key_type=schema[pk[0]].dataType
+                    ),
+                )
+            salted = with_salt(
+                rows, hot, salt_buckets,
+                key=pk[0], sub_key=pk[1] if len(pk) > 1 else pk[0],
+            )
+            new_files = self._write_data_files(
+                salted,
+                target_partitions=max(len(touched), 1)
+                * (salt_buckets if hot else 1),
             )
             operation = "merge-mor-partial" if mor else "merge-partial"
             plan = None
@@ -3990,8 +4035,12 @@ class LakeTable:
             )
             operation = "merge"
             plan = "cow-broadcast" if broadcast else "cow-union"
-        # observed inside the write job (no extra action)
-        applied = int(obs.get["applied"] or 0) if touched else 0
+        # observed inside the write job (no extra action); a partial merge
+        # keeps every event, so it applies the batch's event count
+        if update_mode == "partial":
+            applied = batch_events
+        else:
+            applied = int(obs.get["applied"] or 0) if touched else 0
         return self._commit_merge(
             snap, schema, schema_version, operation, touched, new_files,
             {"applied_events": applied, **summary, "merge_plan": plan},
@@ -4071,187 +4120,6 @@ class LakeTable:
                 sorted(new_files) if operation == "merge-mor-partial" else None
             ),
         )
-
-    # ------------------------------------------------------------------
-    # partial-update (dict-merge) MERGE arm
-    # ------------------------------------------------------------------
-    def _fold_partial(
-        self, src: DataFrame, pk: list[str], payload_cols: list[str]
-    ) -> DataFrame:
-        """Per-key fold of a partial-mode batch in ONE shuffle: a window
-        (max barrier lsn per key) followed by a grouped aggregate on the
-        same keys - Catalyst reuses the window's hash partitioning, so no
-        second exchange. Produces per key:
-
-          _b        the barrier row (latest INSERT/DELETE), null if none
-          _max_lsn  max lsn over ALL of the key's events
-          _u_<c>    last non-null value of column c among UPDATEs ordered
-                    after the barrier (the dict-merge fold)
-          _ul_<c>   that update's lsn (for the cross-epoch staleness guard)
-
-        Scale: state per key is one barrier struct + one scalar per column
-        - bounded by schema width, never by events per key; hot keys
-        collapse map-side like any combinable aggregate... except the
-        window pass, which shuffles all rows of the batch once (same cost
-        class as the full-mode in-batch dedup)."""
-        is_barrier = F.col(_OP_COL) != F.lit("UPDATE")
-        lsn_ord = F.coalesce(F.col(LSN_COL), F.lit(-1))
-        w = Window.partitionBy(*pk)
-        src = src.withColumn(
-            "_b_lsn", F.max(F.when(is_barrier, lsn_ord)).over(w)
-        )
-        after_b = (~is_barrier) & (
-            lsn_ord > F.coalesce(F.col("_b_lsn"), F.lit(-(1 << 62)))
-        )
-        return src.groupBy(*pk).agg(
-            F.max_by(
-                F.struct(
-                    *[F.col(c).alias(c) for c in payload_cols],
-                    F.col(DELETED_COL).alias(DELETED_COL),
-                    F.col(LSN_COL).alias(LSN_COL),
-                ),
-                F.when(is_barrier, lsn_ord),
-            ).alias("_b"),
-            F.max(F.col(LSN_COL)).alias("_max_lsn"),
-            F.max(F.col(BUCKET_COL)).alias(BUCKET_COL),  # constant per key
-            *[
-                F.max_by(
-                    F.col(c),
-                    F.when(after_b & F.col(c).isNotNull(), lsn_ord),
-                ).alias(f"_u_{c}")
-                for c in payload_cols
-            ],
-            *[
-                F.max(
-                    F.when(after_b & F.col(c).isNotNull(), F.col(LSN_COL))
-                ).alias(f"_ul_{c}")
-                for c in payload_cols
-            ],
-        )
-
-    def _merge_partial(
-        self,
-        src: DataFrame,
-        snap: Snapshot,
-        schema: T.StructType,
-        pk: list[str],
-        touched: list[int],
-        hot: list,
-        salt_buckets: int,
-        mor: bool,
-        obs: Observation,
-    ) -> dict[str, list[str]]:
-        """Write a folded partial-mode batch and return its files (see
-        merge() docstring for the semantics; reference oracle
-        demo/test_pipeline.sh:244-262).
-
-        COW: fold + full-outer-join against the touched buckets' resolved
-        rows - the per-column dict-merge needs per-column values and lsns
-        on the probe side, which the single-max_by union plan cannot carry.
-        MOR: the folded rows are appended as delta files; keys WITH an
-        in-batch barrier become full rows, keys with only updates become
-        _partial overlay rows resolved (and guarded against missing keys)
-        at read time by _resolve_partial."""
-        payload_cols = [f.name for f in schema.fields if f.name not in pk]
-        folded = self._fold_partial(src, pk, payload_cols)
-        folded = folded.observe(obs, F.count(F.lit(1)).alias("applied"))
-        has_b = F.col("_b").isNotNull()
-        b_deleted = F.coalesce(F.col(f"_b.{DELETED_COL}"), F.lit(False))
-
-        if mor:
-            rows = folded.select(
-                *pk,
-                *[
-                    F.when(
-                        has_b & b_deleted,
-                        F.lit(None).cast(schema[c].dataType),
-                    )
-                    .when(
-                        has_b,
-                        F.coalesce(F.col(f"_u_{c}"), F.col(f"_b.{c}")),
-                    )
-                    .otherwise(F.col(f"_u_{c}"))
-                    .alias(c)
-                    for c in payload_cols
-                ],
-                F.col("_max_lsn").alias(LSN_COL),
-                F.when(has_b, b_deleted).otherwise(F.lit(False)).alias(
-                    DELETED_COL
-                ),
-                F.col(BUCKET_COL),
-                (~has_b).alias(PARTIAL_COL),
-                F.lit(snap.version + 1).cast("long").alias(DELTA_SEQ_COL),
-            )
-        else:
-            # COW: dict-merge against the current rows of touched buckets
-            current = self._resolved(snap, touched, schema=schema)
-            current = current.withColumn(
-                BUCKET_COL,
-                bucket_expr(
-                    pk[0], snap.num_buckets, key_type=schema[pk[0]].dataType
-                ),
-            )
-            t = current.select(
-                *pk,
-                *[F.col(c).alias(f"_t_{c}") for c in payload_cols],
-                F.col(LSN_COL).alias("_t_lsn"),
-                F.col(DELETED_COL).alias("_t_deleted"),
-                F.col(BUCKET_COL).alias("_t_bucket"),
-            )
-            joined = folded.join(t, on=pk, how="full_outer")
-            s_present = F.col(BUCKET_COL).isNotNull()
-            t_present = F.col("_t_bucket").isNotNull()
-            t_live = t_present & ~F.coalesce(
-                F.col("_t_deleted"), F.lit(False)
-            )
-            t_lsn_ord = F.coalesce(F.col("_t_lsn"), F.lit(-1))
-            b_lsn_ord = F.coalesce(F.col(f"_b.{LSN_COL}"), F.lit(-1))
-            # a barrier takes effect unless it is a stale redelivery (older
-            # than the target row); its trailing updates still apply by the
-            # per-column lsn guard below
-            eff_barrier = (
-                s_present & has_b & (~t_present | (b_lsn_ord >= t_lsn_ord))
-            )
-            # update-on-missing-key is dropped (the reference oracle's
-            # `if primary_key in user_state` guard)
-            rows = joined.filter(eff_barrier | t_present).select(
-                *pk,
-                *[
-                    F.when(
-                        eff_barrier & b_deleted,
-                        F.lit(None).cast(schema[c].dataType),
-                    )
-                    .when(
-                        eff_barrier,
-                        F.coalesce(F.col(f"_u_{c}"), F.col(f"_b.{c}")),
-                    )
-                    .when(
-                        t_live
-                        & F.col(f"_ul_{c}").isNotNull()
-                        & (F.col(f"_ul_{c}") >= t_lsn_ord),
-                        F.col(f"_u_{c}"),
-                    )
-                    .otherwise(F.col(f"_t_{c}"))
-                    .alias(c)
-                    for c in payload_cols
-                ],
-                F.when(eff_barrier, F.col("_max_lsn"))
-                .when(t_live, F.greatest(F.col("_t_lsn"), F.col("_max_lsn")))
-                .otherwise(F.col("_t_lsn"))
-                .alias(LSN_COL),
-                F.when(eff_barrier, b_deleted)
-                .otherwise(F.coalesce(F.col("_t_deleted"), F.lit(False)))
-                .alias(DELETED_COL),
-                F.coalesce(F.col(BUCKET_COL), F.col("_t_bucket")).alias(
-                    BUCKET_COL
-                ),
-            )
-        salted = with_salt(
-            rows, hot, salt_buckets,
-            key=pk[0], sub_key=pk[1] if len(pk) > 1 else pk[0],
-        )
-        target_parts = max(len(touched), 1) * (salt_buckets if hot else 1)
-        return self._write_data_files(salted, target_partitions=target_parts)
 
     # ------------------------------------------------------------------
     # maintenance

@@ -1,9 +1,11 @@
 """update_mode='partial': the reference replay oracle's dict-merge
 semantics (/root/reference/demo/test_pipeline.sh:244-262) through the real
-lake merge - COW (fold+join plan), MOR (overlay delta
-rows + read-time resolution), compaction, and the Mongo $set adapter
-end-to-end. Golden state: oracle.replay_partial (the engine-independent
-Python replay)."""
+lake merge - COW and MOR both resolve through the one dict-merge
+(`_resolve_partial`) with the batch as the newest delta commit (COW
+rewrites the folded rows, MOR appends the events as overlay deltas for the
+read-time fold), compaction, stale at-least-once redelivery, and the Mongo
+$set adapter end-to-end. Golden state: oracle.replay_partial (the
+engine-independent Python replay)."""
 
 from __future__ import annotations
 
@@ -263,3 +265,91 @@ def test_mongo_set_adapter_partial_end_to_end(spark, tmp_path):
     row = tbl.read().collect()[0]
     assert row["city"] == "paris"
     assert row["name"] == "ada", "$set must not null out unnamed fields"
+
+
+# Every write mode a partial epoch can take; "mor+compact" compacts after
+# each epoch, so later epochs resolve against folded base rows.
+WRITE_MODES = ["cow", "mor", "mor+compact"]
+
+
+def _merge_as(tbl, batch, epoch, mode):
+    tbl.merge(batch, pipeline_id="p", epoch_id=epoch,
+              write_mode="cow" if mode == "cow" else "mor",
+              update_mode="partial")
+    if mode == "mor+compact":
+        tbl.compact()
+
+
+def _events(spark, rows):
+    return spark.createDataFrame(
+        [(op, "c0", 0, role, text, tool, TS, lsn, "f")
+         for op, lsn, role, text, tool in rows],
+        CHANGE_COLS,
+    )
+
+
+def _replay_epochs(spark, tmp_path, epochs):
+    """Merge each (mode, [(op, lsn, role, text, tool), ...]) epoch for key
+    (c0, 0), check the table against the dict replay of every event, and
+    return the (role, text, tool) of its rows."""
+    tbl = _mk(spark, tmp_path / "t")
+    for e, (mode, rows) in enumerate(epochs):
+        _merge_as(tbl, _events(spark, rows), e, mode)
+    want = replay_partial(
+        _events(spark, [r for _, rows in epochs for r in rows]).toPandas()
+    )
+    assert_table_equals_oracle(tbl.read(), want)
+    return [(r.role, r.text, r.tool) for r in tbl.read().collect()]
+
+
+@pytest.mark.parametrize("mode", WRITE_MODES)
+def test_stale_insert_redelivered_beside_fresh_update(spark, tmp_path, mode):
+    """An at-least-once redelivery of an older INSERT next to a fresh
+    UPDATE: the table's newer INSERT stays the barrier and only the
+    update lands on it - (A, A, C), not the stale row's (B, B, C)."""
+    assert _replay_epochs(spark, tmp_path, [
+        (mode, [("INSERT", 10, "A", "A", "A")]),
+        (mode, [("INSERT", 5, "B", "B", "B"), ("UPDATE", 12, None, None, "C")]),
+    ]) == [("A", "A", "C")]
+
+
+@pytest.mark.parametrize("mode", WRITE_MODES)
+def test_stale_update_redelivered_beside_fresh_update(spark, tmp_path, mode):
+    """A redelivered UPDATE older than the stored row is a no-op even
+    beside a fresh one in the same batch: each event keeps its own lsn."""
+    assert _replay_epochs(spark, tmp_path, [
+        (mode, [("INSERT", 10, "A", "A", "A")]),
+        (mode, [("UPDATE", 8, None, "B", None), ("UPDATE", 12, None, None, "C")]),
+    ]) == [("A", "A", "C")]
+
+
+def test_cow_insert_below_mor_overlay_keeps_the_overlay(spark, tmp_path):
+    """A MOR overlay UPDATE@12, then a COW INSERT@11 of the same key: in
+    lsn order the INSERT replaces the row and the UPDATE lands on it, so
+    the COW rewrite must fold the overlay after the new barrier."""
+    assert _replay_epochs(spark, tmp_path, [
+        ("cow", [("INSERT", 10, "A", "A", "A")]),
+        ("mor", [("UPDATE", 12, None, None, "C")]),
+        ("cow", [("INSERT", 11, "B", "B", "B")]),
+    ]) == [("B", "B", "C")]
+
+
+@pytest.mark.parametrize("mode", WRITE_MODES)
+def test_redelivered_events_match_dict_replay(spark, tmp_path, mode):
+    """Property: three lsn-ordered epochs, each also re-delivering a
+    seeded 10% of the earlier epochs' events (at-least-once delivery),
+    leave the table equal to the dict replay of the distinct events."""
+    changes = _replay_stream(spark, seed=11, n=3_000).persist()
+    tbl = _mk(spark, tmp_path / "t")
+    bounds = [0, 1_000, 2_000, 3_000]
+    for e in range(3):
+        fresh = changes.filter(
+            (F.col("lsn") >= bounds[e] * 2) & (F.col("lsn") < bounds[e + 1] * 2)
+        )
+        older = changes.filter(F.col("lsn") < bounds[e] * 2)
+        batch = fresh.unionByName(older.sample(fraction=0.1, seed=100 + e))
+        _merge_as(tbl, batch, e, mode)
+    try:
+        _check_against_oracle(spark, tbl, changes)
+    finally:
+        changes.unpersist()

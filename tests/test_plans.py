@@ -87,12 +87,9 @@ def test_merge_read_prunes_to_manifest_files(spark, tmp_path):
     assert pruned.filter(F.col("_bucket") != some_bucket).count() == 0
 
 
-def test_cow_join_plan_shape_no_python_in_hot_path(spark, tmp_path, monkeypatch):
-    """The partial-update COW merge's real plan (the fold + full-outer
-    join that `_merge_partial` hands to the file writer): the in-batch
-    fold keeps its partial (map-side) combine, the batch-vs-table probe
-    is a real join (not a nested loop), and no Python eval appears
-    anywhere in the job."""
+def _partial_merge_plan(spark, tmp_path, monkeypatch, write_mode):
+    """The plan a real partial-update merge hands to the file writer, over
+    a table with one merged epoch (so the COW arm reads base rows)."""
     from dataingestion_spark.lake import LakeTable
     from dataingestion_spark.sources.datagen import gen_changes
     from tests.util import TRANSCRIPT_SCHEMA
@@ -114,19 +111,40 @@ def test_cow_join_plan_shape_no_python_in_hot_path(spark, tmp_path, monkeypatch)
         return write(self, df, *args, **kw)
 
     monkeypatch.setattr(LakeTable, "_write_data_files", spy)
-    tbl.merge(
+    snap = tbl.merge(
         gen_changes(spark, n_events=500, n_convs=10, seed=51).withColumn(
             "lsn", F.col("lsn") + 10**6
         ),
-        pipeline_id="p", epoch_id=1, update_mode="partial",
+        pipeline_id="p", epoch_id=1, write_mode=write_mode,
+        update_mode="partial",
     )
-    assert tbl.snapshot().operation == "merge-partial"
     assert len(plans) == 1
     plan = plans[0]
-    assert "FullOuter" in plan
-    assert "partial_max_by" in plan, "in-batch fold lost map-side combine"
-    assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert "Join" not in plan
+    return snap, plan
+
+
+def test_cow_partial_plan_one_pk_exchange_no_join(spark, tmp_path, monkeypatch):
+    """The COW partial merge resolves the batch with the touched buckets'
+    base and delta rows in ONE dict-merge: one pk hash exchange (the
+    barrier window and the per-key aggregate share it), no join, no
+    Python eval."""
+    snap, plan = _partial_merge_plan(spark, tmp_path, monkeypatch, "cow")
+    assert snap.operation == "merge-partial"
+    assert plan.count("hashpartitioning(") == 1, plan
+    assert plan.count("hashpartitioning(conv_id#") == 1, plan
+    assert "partial_max_by" in plan, "dict-merge lost its aggregate"
+    assert snap.summary["applied_events"] == 500
+
+
+def test_mor_partial_plan_has_no_exchange(spark, tmp_path, monkeypatch):
+    """The MOR partial merge appends the batch's events as delta rows
+    unfolded: nothing is exchanged before the write."""
+    snap, plan = _partial_merge_plan(spark, tmp_path, monkeypatch, "mor")
+    assert snap.operation == "merge-mor-partial"
+    assert "Exchange" not in plan, plan
+    assert snap.summary["applied_events"] == 500
 
 
 def test_dup_spans_no_cartesian_and_combinable_count(spark):

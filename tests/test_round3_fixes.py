@@ -89,8 +89,8 @@ def test_merges_never_write_session_conf(spark, tmp_path, monkeypatch):
     beside a merge on the same SparkSession plans under the conf it was
     given: COW (union and broadcast split), MOR, COW and MOR
     partial-update and merge_into. Every arm ends in the one commit
-    tail, so each commit's operation, merge_plan and summary keys are
-    pinned here too."""
+    tail, so each commit's operation, merge_plan, summary keys and
+    applied_events are pinned here too."""
     from pyspark.sql.conf import RuntimeConfig
 
     writes: list[tuple] = []
@@ -152,6 +152,22 @@ def test_merges_never_write_session_conf(spark, tmp_path, monkeypatch):
         assert snap.summary.get("merge_plan") == plan, arm
         keys = base | {"merge_plan"} if plan else base
         assert set(snap.summary) == keys, (arm, sorted(snap.summary))
+    # applied_events: the keys whose winner came from the batch on the
+    # full-update arms; every event of the batch on the partial arms
+    def n_keys(df):
+        return df.select("conv_id", "turn_idx").distinct().count()
+
+    applied = {
+        "cow-union": n_keys(grow),
+        "cow-broadcast": n_keys(small),
+        "mor": n_keys(grow),
+        "partial": 2_000,
+        "mor-partial": 2_000,
+        "merge_into": 5,
+    }
+    assert {
+        arm: commits[arm].summary["applied_events"] for arm in applied
+    } == applied
     assert commits["mor-partial"].properties["partial_delta_buckets"]
     assert "partial_delta_buckets" not in commits["mor"].properties
 

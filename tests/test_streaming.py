@@ -138,9 +138,10 @@ def test_streaming_apply_partial_update_mode(spark, tmp_path):
     payloads staged and applied through the real streaming path with
     config.update_mode='partial', final state equal to the reference
     oracle's dict-merge replay (demo/test_pipeline.sh:244-262). One
-    availableNow drain: partial semantics assume per-key in-order
-    delivery across epochs (the binlog guarantee); within a batch the
-    fold orders by lsn."""
+    availableNow drain. Each micro-batch is a COW partial merge that
+    resolves its events with the table's rows in the one dict-merge, so
+    the batch leads that plan: its frame lives in the micro-batch's
+    cloned session, where the merge's Observations report."""
     from tests.test_partial_update import _partialize
 
     d = _dirs(tmp_path)
