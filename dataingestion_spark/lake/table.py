@@ -246,10 +246,11 @@ def bucket_expr(key_col: str, num_buckets: int, key_type: T.DataType | None = No
 
     ``key_type`` pins the hashed physical type. xxhash64 hashes int and long
     inputs differently, so every bucket computation over a table's pk MUST
-    cast to the table schema's resolved pk type first - otherwise a batch
-    arriving with a narrower pk type (pre-widening) lands rows in different
-    buckets than the conformed winners, and a copy-on-write commit that
-    trusts the pre-scan would silently drop them."""
+    cast to the table schema's pk type first - otherwise a batch arriving
+    with a narrower pk type (pre-widening) lands rows in different buckets
+    than the conformed winners, and a copy-on-write commit that trusts the
+    pre-scan would silently drop them. For the same reason a write that
+    widens the pk first rebuckets every stored row (``LakeTable._gate``)."""
     col = F.col(key_col)
     if key_type is not None:
         col = col.cast(key_type)
@@ -2195,6 +2196,26 @@ class LakeTable:
         tmp.write_text(json.dumps(ledger, indent=1))
         os.replace(tmp, self._ledger_path)
 
+    def _refuse_schema(
+        self, snap: Snapshot, schema: T.StructType, change_type: ChangeType,
+        detail: str, message: str, fail: bool = True,
+    ) -> tuple[T.StructType, int, None]:
+        """Record a refused ``schema`` as BLOCKED in the ledger, at the
+        table's schema version; raise ``SchemaEvolutionError(message)``
+        when ``fail``, else keep the table's schema (the gate's result)."""
+        self._ledger_append(
+            {
+                "schema_version": snap.schema_version,
+                "status": SchemaStatus.BLOCKED.value,
+                "change_type": change_type.value,
+                "detail": detail,
+                "schema_json": json.loads(schema.json()),
+            }
+        )
+        if fail:
+            raise SchemaEvolutionError(message)
+        return snap.schema, snap.schema_version, None
+
     def _resolve_schema(
         self, snap: Snapshot, batch_schema: T.StructType,
         fail_on_breaking: bool, evolution_policy: str = "full",
@@ -2244,23 +2265,13 @@ class LakeTable:
         # read-time coalesce still resolves). Fail fast with the mapping.
         stale = self._stale_rename_fields(snap, batch_schema)
         if stale:
-            detail = "; ".join(
+            detail = "batch uses pre-rename column names: " + "; ".join(
                 f"column '{old}' was renamed to '{new}'" for old, new in stale
             )
-            self._ledger_append(
-                {
-                    "schema_version": snap.schema_version,
-                    "status": SchemaStatus.BLOCKED.value,
-                    "change_type": ChangeType.BREAKING.value,
-                    "detail": f"batch uses pre-rename column names: {detail}",
-                    "schema_json": json.loads(batch_schema.json()),
-                }
+            return self._refuse_schema(
+                snap, batch_schema, ChangeType.BREAKING, detail, detail,
+                fail_on_breaking,
             )
-            if fail_on_breaking:
-                raise SchemaEvolutionError(
-                    f"batch uses pre-rename column names: {detail}"
-                )
-            return snap.schema, snap.schema_version, None
         if evolution_policy not in ("full", "additive", "frozen"):
             raise ValueError(
                 f"unknown evolution_policy {evolution_policy!r}; "
@@ -2277,33 +2288,16 @@ class LakeTable:
                 f"evolution_policy={evolution_policy} rejects non-breaking "
                 f"change: {cmp.describe()}"
             )
-            self._ledger_append(
-                {
-                    "schema_version": snap.schema_version,
-                    "status": SchemaStatus.BLOCKED.value,
-                    "change_type": cmp.change_type.value,
-                    "detail": detail,
-                    "schema_json": json.loads(batch_schema.json()),
-                }
+            return self._refuse_schema(
+                snap, batch_schema, cmp.change_type, detail, detail,
+                fail_on_breaking,
             )
-            if fail_on_breaking:
-                raise SchemaEvolutionError(detail)
-            return snap.schema, snap.schema_version, None
         if cmp.change_type == ChangeType.BREAKING:
-            self._ledger_append(
-                {
-                    "schema_version": snap.schema_version,
-                    "status": SchemaStatus.BLOCKED.value,
-                    "change_type": cmp.change_type.value,
-                    "detail": cmp.describe(),
-                    "schema_json": json.loads(batch_schema.json()),
-                }
+            return self._refuse_schema(
+                snap, batch_schema, cmp.change_type, cmp.describe(),
+                f"breaking schema change rejected: {cmp.describe()}",
+                fail_on_breaking,
             )
-            if fail_on_breaking:
-                raise SchemaEvolutionError(
-                    f"breaking schema change rejected: {cmp.describe()}"
-                )
-            return snap.schema, snap.schema_version, None
         # NON_BREAKING: evolve - mark old version OBSOLETE, new ACTIVE. If
         # the evolved schema matches an outstanding PENDING proposal
         # (propose_schema), this apply PROMOTES it - the reference's
@@ -2371,17 +2365,9 @@ class LakeTable:
         if cmp.change_type == ChangeType.NO_CHANGE:
             return None
         if cmp.change_type == ChangeType.BREAKING:
-            self._ledger_append(
-                {
-                    "schema_version": snap.schema_version,
-                    "status": SchemaStatus.BLOCKED.value,
-                    "change_type": cmp.change_type.value,
-                    "detail": cmp.describe(),
-                    "schema_json": json.loads(schema.json()),
-                }
-            )
-            raise SchemaEvolutionError(
-                f"breaking schema proposal rejected: {cmp.describe()}"
+            self._refuse_schema(
+                snap, schema, cmp.change_type, cmp.describe(),
+                f"breaking schema proposal rejected: {cmp.describe()}",
             )
         evolved = merge_schemas(snap.schema, schema)
         entry = {
@@ -2774,6 +2760,39 @@ class LakeTable:
         ]
         return df.select(*cols, *[F.col(c) for c in extra])
 
+    def _gate(
+        self,
+        snap: Snapshot,
+        batch: DataFrame,
+        drop: set[str],
+        fail_on_breaking: bool,
+        evolution_policy: str,
+    ) -> tuple[Snapshot, T.StructType, int, str | None]:
+        """The schema gate of merge and append: :meth:`_resolve_schema` on
+        the batch's payload - every column but ``drop`` and the
+        underscore-prefixed system/provenance ones (e.g. the staged
+        changelog's ``_meta``), all nullable, as a batch stricter than the
+        table is no schema change. When pk0's type changes (int->long),
+        every stored bucket is stale (xxhash64 hashes the types apart), so
+        a ``rebucket`` at the same count (:meth:`_rehash`) commits first.
+        Returns the snapshot to write against, schema, version, detail."""
+        payload = T.StructType(
+            [
+                T.StructField(f.name, f.dataType, True)
+                for f in batch.schema.fields
+                if f.name not in drop and not f.name.startswith("_")
+            ]
+        )
+        schema, schema_version, evo = self._resolve_schema(
+            snap, payload, fail_on_breaking, evolution_policy
+        )
+        key = snap.pk_fields[0]
+        if schema[key].dataType != snap.schema[key].dataType:
+            # committed against snap itself: a lost race must reach the
+            # writer's own retry, which re-checks its epoch marker
+            snap = self._rehash(snap, snap.num_buckets, schema, schema_version)
+        return snap, schema, schema_version, evo
+
     def _append_once(
         self,
         df: DataFrame,
@@ -2785,7 +2804,9 @@ class LakeTable:
     ) -> Snapshot | None:
         """Insert-only write (the reference's Parquet append mode,
         /root/reference/spark/src/main/scala/com/example/Phase2Job.scala:131-135),
-        with the same schema gate and epoch idempotency as merge."""
+        with the same schema gate (:meth:`_gate`, which rebuckets the
+        table first when the batch widens the pk) and epoch idempotency
+        as merge."""
         snap = self.snapshot()
         if (
             pipeline_id is not None
@@ -2793,15 +2814,8 @@ class LakeTable:
             and epoch_id <= self.last_applied_epoch(pipeline_id)
         ):
             return None
-        batch_schema = T.StructType(
-            [
-                T.StructField(f.name, f.dataType, True)
-                for f in df.schema.fields
-                if not f.name.startswith("_")
-            ]
-        )
-        schema, schema_version, evo = self._resolve_schema(
-            snap, batch_schema, fail_on_breaking, evolution_policy
+        snap, schema, schema_version, evo = self._gate(
+            snap, df, set(), fail_on_breaking, evolution_policy
         )
         data = self._conform(df, schema)
         key = snap.pk_fields[0]
@@ -3647,7 +3661,9 @@ class LakeTable:
         stale source row never overwrites a newer target row):
 
           1. epoch marker check - re-delivered epochs are skipped whole.
-          2. schema gate - evolve or fail fast (metadata only).
+          2. schema gate (:meth:`_gate`) - evolve or fail fast, metadata
+             only unless the pk's type changes, which commits a rebucket
+             of every row first.
           3. ONE (bucket, key) pre-scan job: touched-bucket set, batch
              size, exact hot-key gate (and, for the rare hot epoch, the
              hot keys themselves from the same shuffle).
@@ -3662,7 +3678,7 @@ class LakeTable:
              snapshot commit referencing untouched buckets' old files.
 
         Steps 5-6 describe the union plan. When the counted gate holds
-        (no hot keys, no widening, no deltas under the touched buckets,
+        (no hot keys, no deltas under the touched buckets,
         batch <= BROADCAST_KEYS_MAX events, base rows >=
         BROADCAST_TABLE_BATCH_RATIO x batch), the plan is
         ``cow-broadcast``: one broadcast of the batch's pk tuples splits
@@ -3715,37 +3731,12 @@ class LakeTable:
         order_fields = snap.order_fields
         lsn_src = order_fields[0]
 
-        # Payload schema of the batch = everything except op/ordering/source
-        # metadata (ts is both ordering tiebreak and payload - kept) and
-        # underscore-prefixed system/provenance columns (e.g. the staged
-        # changelog's _meta struct) - those are pipeline plumbing, never
-        # table columns. Normalized to all-nullable: an incoming batch
-        # being *stricter* than the table is not a schema change.
-        drop_from_schema = {op_col, "source_file", lsn_src}
-        batch_payload_schema = T.StructType(
-            [
-                T.StructField(f.name, f.dataType, True)
-                for f in changes.schema.fields
-                if f.name not in drop_from_schema and not f.name.startswith("_")
-            ]
+        # op/ordering/source metadata is not payload (ts is both ordering
+        # tiebreak and payload - kept)
+        snap, schema, schema_version, evo = self._gate(
+            snap, changes, {op_col, "source_file", lsn_src},
+            fail_on_breaking, evolution_policy,
         )
-        schema, schema_version, evo = self._resolve_schema(
-            snap, batch_payload_schema, fail_on_breaking, evolution_policy
-        )
-        # A pk TYPE widening (int->long) changes every row's xxhash64, so
-        # the stored _bucket values of pre-widening rows no longer match
-        # bucket_expr under the new type. Left alone, a later batch would
-        # probe the NEW bucket of a key whose row still sits in its OLD
-        # bucket - the row isn't read, the merge can't see it, and the key
-        # silently duplicates. The one-time fix: the widening epoch runs a
-        # FULL-TABLE REBUCKET - every bucket is touched, every current
-        # row's bucket is recomputed under the widened type, and the whole
-        # table is rewritten into the new layout (copy-on-write even if
-        # the pipeline runs merge-on-read, since delta files can't move
-        # base rows between buckets). Widenings are rare one-time events;
-        # the invariant "stored bucket == bucket_expr(pk) under the
-        # current schema" holds at every other time.
-        pk_widened = snap.schema[pk[0]].dataType != schema[pk[0]].dataType
 
         # (4) touched-bucket pruning + hot-key detection, cheapest-first:
         # job 1 groups the raw batch by BUCKET only - the map side combines
@@ -3766,9 +3757,9 @@ class LakeTable:
         # column-pruned slice straight from the staged parquet (cheaper than
         # materializing the full batch into executor storage), and the
         # write job below makes exactly one full-width pass.
-        # The pre-scan hashes the pk CAST TO THE RESOLVED TABLE TYPE so it
-        # agrees with the conformed winners' bucket assignment even across a
-        # pk type widening (xxhash64(int) != xxhash64(long) for equal values).
+        # The pre-scan hashes the pk CAST TO THE TABLE TYPE so it agrees
+        # with the conformed winners' bucket assignment when a batch still
+        # carries a narrower pk type (xxhash64(int) != xxhash64(long)).
         bucket_stats = changes.groupBy(
             bucket_expr(
                 pk[0], snap.num_buckets, key_type=schema[pk[0]].dataType
@@ -3819,10 +3810,6 @@ class LakeTable:
             raw_stats = bucket_stats.collect()
         touched = sorted(int(r[BUCKET_COL]) for r in raw_stats)
         batch_events = sum(r["_n"] for r in raw_stats)
-        if pk_widened:
-            # full rebucket: every OLD bucket must be read and every NEW
-            # bucket is a legal write target
-            touched = list(range(snap.num_buckets))
 
         hot: list[str] = []
         min_rows = (
@@ -3887,16 +3874,15 @@ class LakeTable:
             keys_obs = Observation(f"merge_keys_{uuid.uuid4().hex[:8]}")
             src = src.observe(keys_obs, F.collect_set(F.struct(*pk)).alias("k"))
         obs = Observation(f"merge_applied_{uuid.uuid4().hex[:8]}")
-        mor = write_mode == "mor" and not pk_widened
+        mor = write_mode == "mor"
 
         # (5-pre) COW broadcast split - only the table rows the batch hits
         # are exchanged (the local storage-partitioned-join analog).
         # Eligible whenever the epoch is an ordinary cold full-update COW
         # merge: no hot keys (the split's unshuffled rows cannot take the
-        # salted write layout), no pk widening (needs the full rebucket),
-        # no unresolved deltas under the touched buckets (their read-time
-        # fold is itself a shuffle), a batch within the broadcast-key cap,
-        # and a table side that dwarfs the batch
+        # salted write layout), no unresolved deltas under the touched
+        # buckets (their read-time fold is itself a shuffle), a batch within
+        # the broadcast-key cap, and a table side that dwarfs the batch
         # (BROADCAST_TABLE_BATCH_RATIO, exact sidecar counts). Counted
         # inputs alone decide the plan.
         broadcast = bool(
@@ -3904,7 +3890,6 @@ class LakeTable:
             and not mor
             and touched
             and not hot
-            and not pk_widened
             and not any(snap.deltas.get(str(b)) for b in touched)
             and batch_events <= self.BROADCAST_KEYS_MAX
             and (base_rows := self._base_rows(snap, touched)) is not None
@@ -3914,20 +3899,12 @@ class LakeTable:
         if update_mode == "partial":
             # The batch's events, unfolded, are the table's newest delta
             # commit: MOR appends them; COW resolves them with the touched
-            # buckets' rows (_resolve_partial) and rewrites those buckets,
-            # the _bucket recomputed as in the union plan below.
+            # buckets' rows (_resolve_partial) and rewrites those buckets.
             rows = src.withColumn(
                 DELTA_SEQ_COL, F.lit(snap.version + 1).cast("long")
             )
             if not mor:
-                rows = self._resolved(
-                    snap, touched, schema=schema, batch=rows
-                ).withColumn(
-                    BUCKET_COL,
-                    bucket_expr(
-                        pk[0], snap.num_buckets, key_type=schema[pk[0]].dataType
-                    ),
-                )
+                rows = self._resolved(snap, touched, schema=schema, batch=rows)
             salted = with_salt(
                 rows, hot, salt_buckets,
                 key=pk[0], sub_key=pk[1] if len(pk) > 1 else pk[0],
@@ -3974,16 +3951,6 @@ class LakeTable:
             # go to the batch row (the "s.lsn >= t._lsn" rule of a guarded
             # MERGE); a DELETE winner IS the tombstone row.
             current = self._resolved(snap, touched, schema=schema)
-            # Recompute the bucket under the CURRENT schema type (a no-op
-            # whenever the stored-bucket invariant holds; the healing step
-            # of the pk-widening rebucket otherwise) - the union groups by
-            # it, so both sides must agree for every key.
-            current = current.withColumn(
-                BUCKET_COL,
-                bucket_expr(
-                    pk[0], snap.num_buckets, key_type=schema[pk[0]].dataType
-                ),
-            )
             rest = None
             if broadcast:
                 # Split the table side by ONE broadcast of the batch keys
@@ -4110,7 +4077,8 @@ class LakeTable:
                 raise RuntimeError(
                     f"{operation} wrote buckets {sorted(stray)} outside the "
                     f"touched set {touched}; pre-scan/winner bucket "
-                    "assignment diverged"
+                    "assignment diverged (stored rows mis-bucketed? a full "
+                    "compact(), no bucket list, re-hashes every row)"
                 )
             files, deltas = snap.rewritten(touched, new_files)
         return self._commit_write(
@@ -4294,7 +4262,8 @@ class LakeTable:
                     f"mis-bucketed base row (e.g. "
                     f"{ {c: mis[0][c] for c in pk} } stored bucket "
                     f"{mis[0][BUCKET_COL]}, manifest bucket "
-                    f"{mis[0]['_mb']})"
+                    f"{mis[0]['_mb']}); a full compact() (no bucket list) "
+                    "re-hashes every row"
                 )
         orphans = sum(
             len(v) for v in self.vacuum(dry_run=True, older_than_s=0).values()
@@ -4521,9 +4490,8 @@ class LakeTable:
 
     def _rebucket_once(self, new_num_buckets: int) -> Snapshot:
         """Scale the bucket count (Iceberg partition-evolution analog for
-        the hidden ``bucket(N, pk)`` transform): rewrite the table under
-        ``pmod(xxhash64(pk), new_N)`` in one shuffle and commit a snapshot
-        whose ``num_buckets`` is the new count.
+        the hidden ``bucket(N, pk)`` transform): :meth:`_rehash` at the
+        new count, or the head unchanged when the count is the same.
 
         Why it exists: buckets are the unit of merge parallelism, rewrite
         granularity and manifest sharding - a table created at 8 buckets
@@ -4531,39 +4499,54 @@ class LakeTable:
         ``num_buckets`` is frozen at creation (SCALE.md sizing note).
         Iceberg solves growth with spec evolution; the equivalent here is
         a single explicit rewrite, run off the ingest path like
-        compaction.
-
-        Semantics: the full resolved state (MOR delta chains folded,
-        tombstones preserved with their lsns so the LWW redelivery guard
-        survives the rewrite) is re-hashed to new buckets, pk-clustered
-        per file, and committed as operation ``rebucket``. Epoch markers
-        carry over - exactly-once pipelines resume unaffected; subsequent
-        merges read ``num_buckets`` from the new snapshot and just work.
-        Time travel to pre-rebucket versions reads the old layout (each
-        snapshot owns its bucket count). Concurrent writers lose the
-        snapshot race and recompute against the new layout (a rebucket
-        touches every bucket, so the metadata rebase correctly refuses to
-        splice across it)."""
+        compaction."""
         if new_num_buckets < 1:
             raise ValueError(f"num_buckets must be >= 1, got {new_num_buckets}")
         snap = self.snapshot()
         if new_num_buckets == snap.num_buckets:
             return snap
+        return self._rehash(snap, new_num_buckets, snap.schema, snap.schema_version)
+
+    def _rehash(
+        self,
+        snap: Snapshot,
+        num_buckets: int,
+        schema: T.StructType,
+        schema_version: int,
+    ) -> Snapshot:
+        """Rewrite ``snap``'s rows under ``pmod(xxhash64(pk0), num_buckets)``
+        with pk0 typed as in ``schema`` in one shuffle, and commit the
+        result as ``snap``'s child, operation ``rebucket``, holding
+        ``schema``. The one place rows move between buckets besides full
+        compaction's heal: :meth:`rebucket` calls it for a new count, the
+        schema gate (:meth:`_gate`) at the same count when a write changes
+        pk0's type (xxhash64 hashes int and long differently).
+
+        Semantics: the full resolved state (MOR delta chains folded,
+        tombstones preserved with their lsns so the LWW redelivery guard
+        survives the rewrite) is re-hashed, pk-clustered per file. Epoch
+        markers carry over - exactly-once pipelines resume unaffected;
+        subsequent merges read ``num_buckets`` from the new snapshot and
+        just work. Time travel to older versions reads the old layout
+        (each snapshot owns its bucket count). Concurrent writers lose
+        the snapshot race and recompute against the new layout (a
+        rebucket changes the bucket count or the schema version, and the
+        metadata rebase refuses to splice across either); a lost race
+        raises CommitConflictError to the caller's retry."""
         pk = snap.pk_fields
-        df = self._resolved(snap, None).withColumn(
-            BUCKET_COL,
-            bucket_expr(
-                pk[0], new_num_buckets, key_type=snap.schema[pk[0]].dataType
-            ),
+        # read under schema, so pk0 already has the type it hashes as
+        df = self._resolved(snap, None, schema=schema).withColumn(
+            BUCKET_COL, bucket_expr(pk[0], num_buckets)
         )
         new_files = self._write_data_files(
-            df, target_partitions=new_num_buckets, cluster_by=list(pk)
+            df, target_partitions=num_buckets, cluster_by=list(pk)
         )
         # every delta chain was folded into full base rows above
         out = snap.child(
             "rebucket",
-            {"from_buckets": snap.num_buckets, "to_buckets": new_num_buckets},
-            num_buckets=new_num_buckets, files=new_files, deltas={},
+            {"from_buckets": snap.num_buckets, "to_buckets": num_buckets},
+            num_buckets=num_buckets, files=new_files, deltas={},
+            schema_json=json.loads(schema.json()), schema_version=schema_version,
         )
         return self._commit(out, parent=snap)
 
@@ -4706,9 +4689,10 @@ class LakeTable:
         if buckets is None:
             # Full compaction also HEALS stored buckets against the current
             # schema's hashing (no-op under the stored-bucket invariant;
-            # repairs tables written before the pk-widening rebucket
-            # existed). Partial compaction preserves stored buckets - a
-            # healed row could land outside the compacted set.
+            # repairs tables where an append widened the pk before the
+            # schema gate rebucketed such writes). Partial compaction
+            # preserves stored buckets - a healed row could land outside
+            # the compacted set.
             df = df.withColumn(
                 BUCKET_COL,
                 bucket_expr(

@@ -2,13 +2,10 @@
 
 The engine's session runs with AQE off, so nothing splits skewed
 partitions at runtime: hot conversations are *explicitly* salted into
-sub-partitions and reconciled. The mechanism:
+sub-partitions. The merge's pre-scan finds the hot keys (an exact
+per-key count over the buckets that could hold one, see
+``LakeTable._merge_once``) and passes that small list here:
 
-  * ``detect_hot_keys`` - sample-based frequency estimate of per-conv_id
-    event share in a batch (a cheap aggregate over a sample; exact when
-    sample_fraction=1.0). Returns a SMALL driver-side list, which is then
-    broadcast-joined against the stream - never a shuffle of the big side
-    by conv_id alone.
   * ``with_salt`` - adds ``_salt = pmod(xxhash64(turn_idx), k)`` for hot
     conversations (0 for cold ones). Because the salt is a pure function of
     turn_idx, every event of a given (conv_id, turn_idx) key lands in the
@@ -23,35 +20,10 @@ bucket's file writes fan out over k tasks instead of one straggler.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "_salt"
-
-
-def detect_hot_keys(
-    df: DataFrame,
-    key: str = "conv_id",
-    threshold: float = 0.05,
-    sample_fraction: float = 1.0,
-    seed: int = 42,
-    total: int | None = None,
-) -> list[str]:
-    """Keys whose (estimated) share of batch rows exceeds ``threshold``.
-
-    The aggregate benefits from map-side partial combine, and the result is
-    at most 1/threshold keys - bounded and driver-safe by construction.
-    Pass ``total`` when the caller already knows the row count (on a cached
-    batch this saves one Spark job per epoch).
-    """
-    sampled = df if sample_fraction >= 1.0 else df.sample(sample_fraction, seed=seed)
-    counts = sampled.groupBy(key).agg(F.count(F.lit(1)).alias("_n"))
-    if total is None:
-        total = sampled.count()
-    if total == 0:
-        return []
-    hot = counts.filter(F.col("_n") >= threshold * total)
-    return [r[0] for r in hot.select(key).collect()]
 
 
 def with_salt(

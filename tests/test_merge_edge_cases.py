@@ -4,6 +4,9 @@
   pre-scan hashes the pk under the RESOLVED table type, so a batch arriving
   with a narrower pk type (int before the table widened to long) buckets
   identically to the conformed winners (xxhash64(int) != xxhash64(long)).
+* an APPEND that widens the pk rebuckets every stored row first, exactly
+  as a widening merge does: the schema gate of both writers commits the
+  ``rebucket`` before the write.
 * equal-lsn rows for one key written in DIFFERENT MOR delta commits must
   resolve deterministically to the newest commit - the same tie rule the
   COW join applies (s.lsn >= t._lsn).
@@ -215,7 +218,8 @@ def test_pk_widening_partial_batch_rebuckets_whole_table(spark, tmp_path):
 
 def test_pk_widening_mor_falls_back_to_rebucket(spark, tmp_path):
     """A widening epoch under write_mode='mor' must still rebucket (delta
-    files cannot move base rows between buckets), then resume MOR."""
+    files cannot move base rows between buckets): the schema gate commits
+    the rebucket first, and the epoch itself stays MOR."""
     tbl = LakeTable.create(
         spark, tmp_path / "t", INT_PK_SCHEMA,
         pk_fields=["item_id"], order_fields=["lsn", "ts"], num_buckets=8,
@@ -235,7 +239,12 @@ def test_pk_widening_mor_falls_back_to_rebucket(spark, tmp_path):
         ),
         pipeline_id="p", epoch_id=1, write_mode="mor",
     )
-    assert tbl.snapshot().operation == "merge", "widening epoch must be COW"
+    snap = tbl.snapshot()
+    assert snap.operation == "merge-mor", "a widening epoch stays MOR"
+    parent = tbl.snapshot(snap.parent)
+    assert parent.operation == "rebucket" and not parent.deltas, (
+        "the schema gate rebuckets every row before the widening epoch"
+    )
     tbl.merge(
         _change_df(
             spark, [("UPDATE", 17, "v3-17", "2024-01-01 02:00:00", 2000)],
@@ -246,3 +255,77 @@ def test_pk_widening_mor_falls_back_to_rebucket(spark, tmp_path):
     got = tbl.read().toPandas()
     assert len(got) == n
     assert got.set_index("item_id").loc[17, "payload"] == "v3-17"
+
+
+def _widened_by_append(spark, tmp_path, n=64):
+    """n int keys appended to an 8-bucket table, then one append whose pk
+    arrives as LONG (key n): the widening happens on the append path."""
+    tbl = LakeTable.create(
+        spark, tmp_path / "t", INT_PK_SCHEMA,
+        pk_fields=["item_id"], order_fields=["lsn", "ts"], num_buckets=8,
+    )
+    tbl.append(
+        spark.createDataFrame(
+            [(i, f"a-{i}", None) for i in range(n)],
+            "item_id int, payload string, ts timestamp",
+        )
+    )
+    tbl.append(
+        spark.createDataFrame(
+            [(n, f"a-{n}", None)], "item_id long, payload string, ts timestamp"
+        )
+    )
+    assert tbl.snapshot().schema["item_id"].dataType == T.LongType()
+    return tbl
+
+
+def test_pk_widening_append_keeps_every_key_findable(spark, tmp_path):
+    """A widening append rebuckets the old rows: fsck is clean and every
+    single-key lookup finds its row (before the schema gate rebucketed,
+    57 of these 64 old keys were missed and fsck reported mis-bucketing)."""
+    n = 64
+    tbl = _widened_by_append(spark, tmp_path, n)
+    report = tbl.verify_integrity()
+    assert report["ok"], report["errors"]
+    missed = [i for i in range(n + 1) if tbl.read_keys([i]).count() != 1]
+    assert missed == []
+    snap = tbl.snapshot()
+    assert snap.operation == "append"
+    assert tbl.snapshot(snap.parent).operation == "rebucket"
+
+
+def test_pk_widening_append_then_cow_merge_of_old_key(spark, tmp_path):
+    """A COW merge of a pre-widening key after a widening append commits
+    (it raised the stray-bucket RuntimeError while the old rows kept
+    their int-hash buckets) and updates the one row."""
+    n = 64
+    tbl = _widened_by_append(spark, tmp_path, n)
+    tbl.merge(
+        _change_df(
+            spark, [("UPDATE", 5, "m-5", "2024-01-01 00:00:00", 10)],
+            pk_type="long",
+        ),
+        pipeline_id="p", epoch_id=0,
+    )
+    got = tbl.read().toPandas()
+    assert len(got) == n + 1
+    assert got.set_index("item_id").loc[5, "payload"] == "m-5"
+
+
+def test_pk_widening_append_then_mor_merge_and_compact(spark, tmp_path):
+    """The same key merged under MOR, then its touched bucket compacted:
+    one row per key (65 for 65 keys; the misplaced base row made it 66)."""
+    n = 64
+    tbl = _widened_by_append(spark, tmp_path, n)
+    snap = tbl.merge(
+        _change_df(
+            spark, [("UPDATE", 5, "m-5", "2024-01-01 00:00:00", 10)],
+            pk_type="long",
+        ),
+        pipeline_id="p", epoch_id=0, write_mode="mor",
+    )
+    tbl.compact(buckets=snap.summary["touched_buckets"])
+    got = tbl.read().toPandas()
+    assert len(got) == n + 1
+    assert got["item_id"].nunique() == n + 1
+    assert got.set_index("item_id").loc[5, "payload"] == "m-5"
