@@ -132,14 +132,18 @@ def _sync(
     src: LakeTable, open_dst: Callable[[Snapshot], LakeTable],
     pipeline_id: str, kind: str, write_mode: str,
     seed: Callable[[LakeTable, Snapshot, DataFrame], DataFrame],
-    step: Callable[[LakeTable, Snapshot, DataFrame], DataFrame],
+    step: Callable[[LakeTable, Snapshot, DataFrame, "list | None"], DataFrame],
     preimages: bool = False,
 ) -> Snapshot | None:
     """The sync protocol (module docstring): pin the source head
     ``snap``, ``open_dst(snap)``, and merge ``seed(dst, snap, state)`` or
-    ``step(dst, snap, diff)`` - both return batches stamped ``kind`` - with
-    the source version as epoch id and ``{kind}_from``/``{kind}_to``
-    lineage. ``preimages`` asks the diff for update pre-images."""
+    ``step(dst, snap, diff, keys)`` - both return batches stamped ``kind``
+    - with the source version as epoch id and ``{kind}_from``/``{kind}_to``
+    lineage. ``keys`` are the source pk tuples the range's merges recorded
+    (``LakeTable._recorded_keys``, a superset of the diff's keys; ``[]``
+    when no merge in the range wrote a batch, None when unrecorded), read
+    on the driver with no Spark job. ``preimages`` asks the diff for
+    update pre-images."""
     cur = src.current_version()
     snap = src.snapshot(cur)
     dst = open_dst(snap)
@@ -169,8 +173,9 @@ def _sync(
     diff = src.read_changes(last, cur, include_preimages=preimages).persist(
         StorageLevel.MEMORY_AND_DISK
     )
+    keys = src._recorded_keys(src.snapshot(last), snap)
     try:
-        return _merge(step(dst, snap, diff))
+        return _merge(step(dst, snap, diff, [] if keys is False else keys))
     finally:
         diff.unpersist()
 
@@ -202,7 +207,7 @@ def sync_incremental(
         rows = state.select(F.lit("INSERT").alias("op"), "*")
         return finish(_stamp(rows, snap.version, "sync"))
 
-    def step(_dst, snap, diff):
+    def step(_dst, snap, diff, _keys):
         return finish(changes_to_batch(diff, lsn=snap.version))
 
     return _sync(src, lambda snap: dst, pipeline_id, "sync", write_mode, seed, step)
@@ -271,7 +276,11 @@ def sync_aggregate(
     affected groups' current values (``read_keys`` - priced by the
     touched groups, never the view), and one MERGE writing the new
     totals; groups whose count reaches zero are deleted. Cost scales with
-    the CHANGE volume, not the source size.
+    the CHANGE volume, not the source size. When ``group_cols`` is a
+    leading pk prefix and the source merges of the range recorded their
+    batch keys (``LakeTable._recorded_keys``), the lookup reads those
+    keys' distinct prefixes as a literal list, so it runs no Spark job of
+    its own; otherwise it collects the delta groups first (one job).
 
     COUNT and SUM are self-maintainable under deletes (subtract the
     preimage). MIN/MAX are the classic IVM hard case: a delete can evict
@@ -342,7 +351,7 @@ def sync_aggregate(
         )
         return totals_batch(snap, totals)
 
-    def step(view, snap, diff):
+    def step(view, snap, diff, keys):
         diff = diff.filter(key_ok)
         sign = F.when(
             F.col("change_type").isin("insert", "update_postimage"), F.lit(1)
@@ -376,14 +385,25 @@ def sync_aggregate(
         # no-op) flows through as an EMPTY batch, and the merge's existing
         # empty-batch path commits the epoch marker - the take(1) probe would
         # re-run the whole delta aggregate once per sync just to decide this.
-        old = view.read_keys(deltas.select(*group_cols))
-        joined = old.join(deltas, on=list(group_cols), how="full_outer")
+        #
+        # The affected groups' stored totals: under a pk-prefix grouping the
+        # source merges' recorded keys name them as a literal list (no job),
+        # else a DataFrame of the delta groups does (one collect job). The
+        # recorded groups are a superset, so ``deltas`` drives the join, and
+        # the hint keeps it a shuffle join: a broadcast of ``old`` would run
+        # again in each of the view merge's jobs.
+        width = len(group_cols)
+        by_prefix = list(group_cols) == list(snap.pk_fields)[:width]
+        if keys is not None and by_prefix:
+            old = view.read_keys(list(dict.fromkeys(k[:width] for k in keys)))
+        else:
+            old = view.read_keys(deltas.select(*group_cols))
+        joined = deltas.join(old.hint("merge"), on=list(group_cols), how="left")
         totals = joined.select(
             *group_cols,
-            (
-                F.coalesce(F.col(count_col), F.lit(0))
-                + F.coalesce(F.col("_d_count"), F.lit(0))
-            ).alias(count_col),
+            (F.coalesce(F.col(count_col), F.lit(0)) + F.col("_d_count")).alias(
+                count_col
+            ),
             *[
                 (
                     F.coalesce(F.col(f"sum_{c}"), F.lit(0))
@@ -402,16 +422,11 @@ def sync_aggregate(
                 F.greatest(F.col(f"max_{c}"), F.col(f"_a_max_{c}")).alias(f"max_{c}")
                 for c in maxs
             ],
-            *(
-                [F.coalesce(F.col("_dirty"), F.lit(0)).alias("_dirty")]
-                if (mins or maxs)
-                else []
-            ),
+            *(["_dirty"] if (mins or maxs) else []),
         )
         if mins or maxs:
             dirty = totals.filter(F.col("_dirty") == 1).select(*group_cols)
-            pk_prefix = list(snap.pk_fields)[: len(group_cols)]
-            if list(group_cols) == pk_prefix:
+            if by_prefix:
                 # the bucket transform hashes the first pk field, so the
                 # recompute is pruned to exactly the dirty groups' buckets
                 rows = src.read_prefix(dirty, version=snap.version)
@@ -547,7 +562,7 @@ def sync_scd2(
     def seed(_hist, snap, state):
         return _stamp(opens(snap, state), snap.version, "scd2sync")
 
-    def step(hist, snap, diff):
+    def step(hist, snap, diff, _keys):
         # CLOSE the superseded versions: the changed keys' current rows,
         # found via a bucket-pruned prefix lookup (the history pk leads
         # with the source pk), rewritten with the closing interval bound.
@@ -659,7 +674,7 @@ def sync_band_index(
         rows = bands(state).select(F.lit("INSERT").alias("op"), "*")
         return _stamp(rows, snap.version, "lshsync")
 
-    def step(_index, snap, diff):
+    def step(_index, snap, diff, _keys):
         new_bands = bands(diff.filter(F.col("change_type") != "delete"))
         # Changed keys with no new band rows (deleted, or text degraded to
         # null/short): retire ALL their band keys. num_bands is a small

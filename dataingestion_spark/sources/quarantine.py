@@ -23,7 +23,10 @@ canonical change relation:
 
 Scale shape: the classifier is a single whole-stage-codegen projection
 over the already-staged batch; the quarantine write touches only the
-(normally tiny) invalid subset. Nothing here shuffles.
+(normally tiny) invalid subset, and it is the split's one Spark job -
+``apply_changes`` counts the dead letters with an ``Observation`` on that
+write, not with a count of its own, and removes the schema-only file a
+clean epoch's write leaves. Nothing here shuffles.
 """
 
 from __future__ import annotations

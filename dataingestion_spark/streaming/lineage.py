@@ -11,18 +11,28 @@ into an append-only Parquet lineage table next to the lake table:
 one row per (epoch, source file) carrying the applied offset range -
 resumability evidence - plus one EPOCH_SUMMARY row per epoch carrying the
 commit snapshot version, applied-event count, duration and throughput.
+
+An epoch's rows are a few hundred bytes, so the driver writes them as one
+Parquet file with pyarrow - no Spark job, the way the lake table writes
+its key and stats sidecars. The file lands under a dot-prefixed name and
+is renamed into place, and Spark's reader skips dot files, so a reader
+never sees a half-written file. Files Spark wrote into the same
+directory read back alongside them under ``LINEAGE_SCHEMA``.
 """
 
 from __future__ import annotations
 
-import json
+import os
 import time
 import uuid
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -62,11 +72,12 @@ class LineageLog:
         file_stats: list[dict] | None = None,
         quarantined_events: int | None = None,
     ) -> None:
-        """Write lineage rows for one epoch. Per-source offset ranges come
-        from ``file_stats`` when the merge already computed them from its
-        pinned batch (LakeTable.merge(collect_file_stats=True) - saves a
-        rescan of the batch), else from a tiny aggregate over ``batch``
-        (one row per source file)."""
+        """Write lineage rows for one epoch as one driver-written Parquet
+        file (module docstring). Per-source offset ranges come from
+        ``file_stats`` when the merge already computed them from its
+        pinned batch (LakeTable.merge(collect_file_stats=True) - no Spark
+        job at all), else from a tiny aggregate over ``batch`` (one row
+        per source file, one job)."""
         now = time.time()
         rows: list[dict] = []
         total = 0
@@ -143,12 +154,15 @@ class LineageLog:
                 "committed_at": now,
             }
         )
-        (
-            self.spark.createDataFrame(rows, LINEAGE_SCHEMA)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(str(self.path))
+        table = pa.Table.from_pylist(rows, schema=to_arrow_schema(LINEAGE_SCHEMA))
+        name = f"part-{uuid.uuid4()}.parquet"
+        self.path.mkdir(parents=True, exist_ok=True)
+        # no Arrow schema in the footer (Spark reads LINEAGE_SCHEMA anyway)
+        # and no dictionary pages, which outweigh the few rows they encode
+        pq.write_table(
+            table, self.path / f".{name}", store_schema=False, use_dictionary=False
         )
+        os.replace(self.path / f".{name}", self.path / name)
 
     def read(self) -> DataFrame:
         return self.spark.read.schema(LINEAGE_SCHEMA).parquet(str(self.path))

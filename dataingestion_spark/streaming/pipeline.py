@@ -25,12 +25,14 @@ same checkpoint dir continues from the last committed source offset.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
+import shutil
 import time
 from pathlib import Path
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -143,18 +145,29 @@ def _quarantine(
 ) -> tuple[DataFrame, int]:
     """Split off ``df``'s unmergeable rows (sources/quarantine.py) and
     write them to ``out_dir``, overwritten so a replayed epoch rewrites
-    the identical set; returns the mergeable rows and the count."""
+    the identical set; returns the mergeable rows and the count. The
+    write is the one Spark job: an ``Observation`` on it counts the rows.
+    Spark writes a schema-only file for zero rows, so a clean epoch then
+    removes ``out_dir`` and the parents the write created - it leaves no
+    directory, and ``requeue_quarantine`` finds no epoch to merge."""
     from dataingestion_spark.sources.quarantine import split_invalid
 
     df, bad = split_invalid(
         df, list(config.pk_fields), lsn_col=config.order_fields[0],
         constraints=list(config.constraints or []),
     )
-    n_quarantined = bad.count()
-    if n_quarantined:
-        bad.withColumn("_q_pipeline", F.lit(pipeline_id)).write.mode(
-            "overwrite"
-        ).parquet(out_dir)
+    created = [p for p in Path(out_dir).parents if not p.exists()]
+    obs = Observation()
+    bad.withColumn("_q_pipeline", F.lit(pipeline_id)).observe(
+        obs, F.count(F.lit(1)).alias("n")
+    ).write.mode("overwrite").parquet(out_dir)
+    n_quarantined = obs.get["n"]
+    if not n_quarantined:
+        shutil.rmtree(out_dir)
+        # innermost first; a parent another route wrote into stays
+        with contextlib.suppress(OSError):
+            for p in created:
+                p.rmdir()
     return df, n_quarantined
 
 
@@ -330,7 +343,9 @@ def apply_changes(
     lsn, unknown op) are split off BEFORE the merge, written as parquet
     under ``<dir>/epoch=<n>`` (overwrite per epoch, so a replayed epoch
     rewrites the identical dead-letter set - idempotent alongside the
-    merge's epoch markers), and counted in a QUARANTINE lineage row.
+    merge's epoch markers), and counted in a QUARANTINE lineage row. The
+    write is the split's one Spark job and also counts the rows; a clean
+    epoch leaves no ``epoch=<n>`` directory.
     Without it the merge sees whatever the adapters produced, nulls and
     all - fine for trusted streams, fatal at 10^10 events of real CDC.
 
@@ -588,9 +603,6 @@ def route_changes(
     _validate_trigger(trigger)
     tables = {name: LakeTable(spark, cfg.table_path) for name, cfg in routes.items()}
     lineage = LineageLog(spark, lineage_path) if lineage_path else None
-    import threading
-
-    lineage_lock = threading.Lock()
     ckpt_tag = hashlib.md5(
         str(Path(checkpoint_dir).resolve()).encode()
     ).hexdigest()[:8]
@@ -657,14 +669,11 @@ def route_changes(
                 df = df.select(*keep)
                 snap = _merge(tbl, df, cfg, pipeline_id, epoch_id, lineage)
                 if lineage is not None:
-                    # two routes' merges finish concurrently; parquet
-                    # append from two driver threads to ONE lineage dir
-                    # would race the commit protocol - serialize it
-                    with lineage_lock:
-                        _record_epoch(
-                            lineage, pipeline_id, epoch_id, df, snap, t0,
-                            n_quarantined,
-                        )
+                    # concurrent routes each write their own lineage file
+                    _record_epoch(
+                        lineage, pipeline_id, epoch_id, df, snap, t0,
+                        n_quarantined,
+                    )
 
             routed = [n for n in present if n in routes]
             # Routes target DIFFERENT tables, so their merges share no

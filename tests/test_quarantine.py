@@ -6,6 +6,8 @@ paths only). Covers the classifier, the split, the apply_changes wiring
 (idempotent per-epoch dead-letter dir + QUARANTINE lineage row), and the
 Mongo null-lsn envelope that motivated gating it at the source."""
 
+from pathlib import Path
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -17,10 +19,15 @@ from dataingestion_spark.sources.datagen import gen_changes, write_change_files
 from dataingestion_spark.sources.quarantine import (
     REASON_COL,
     invalid_reason,
+    requeue_quarantine,
     split_invalid,
 )
 from dataingestion_spark.streaming.lineage import LineageLog
-from dataingestion_spark.streaming.pipeline import apply_changes, bootstrap_table
+from dataingestion_spark.streaming.pipeline import (
+    _quarantine,
+    apply_changes,
+    bootstrap_table,
+)
 from tests.util import TRANSCRIPT_SCHEMA, assert_table_equals_oracle
 
 CHANGE_DDL = (
@@ -206,3 +213,92 @@ def test_constraints_e2e_from_config(spark, tmp_path):
     dlq = spark.read.parquet(d["dlq"]).toPandas()
     assert len(dlq) == int(viol.sum())
     assert (dlq[REASON_COL] == "constraint:length(text) < 40").all()
+
+
+def test_quarantine_runs_one_job(spark, tmp_path):
+    """The dead-letter write is the split's only Spark job, with or
+    without invalid rows: an Observation on the write counts them. A clean
+    batch leaves no directory, not even the parents its write made."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    config = DatasetConfig(name="transcripts", table_path=str(tmp_path / "t"))
+    ok = ("INSERT", "c1", 0, "user", "ok", None, 100, 10, "f")
+    batches = {
+        "dirty": [ok, ("INSERT", None, 1, "user", "x", None, 100, 11, "f"),
+                  ("NOPE", "c2", 0, "user", "x", None, 100, 12, "f")],
+        "clean": [ok],
+    }
+    for name, rows in batches.items():
+        out = tmp_path / name / "dlq" / "epoch=0"
+        before = scheduler.numTotalJobs()
+        valid, n = _quarantine(_rows(spark, rows), config, "p", str(out))
+        assert scheduler.numTotalJobs() - before == 1, name
+        assert n == len(rows) - 1
+        assert [r["turn_idx"] for r in valid.collect()] == [0]
+    dlq = spark.read.parquet(str(tmp_path / "dirty" / "dlq" / "epoch=0"))
+    assert sorted(r[REASON_COL] for r in dlq.collect()) == ["bad_op", "null_pk"]
+    assert not (tmp_path / "clean").exists()
+
+
+def test_clean_epoch_leaves_no_dead_letter_epoch(spark, tmp_path):
+    """A clean epoch writes a QUARANTINE lineage row of 0 and no
+    ``epoch=<n>`` directory, so requeue finds only the dirty epoch; a
+    replay of the dirty epoch (its commit dropped from the checkpoint)
+    rewrites the identical dead-letter set and commits nothing."""
+    d = {k: str(tmp_path / k) for k in ("landing", "ckpt", "table",
+                                        "lineage", "dlq")}
+    changes = gen_changes(spark, n_events=600, n_convs=10, n_files=2, seed=13)
+    # only the second file (epoch 1) carries garbled ops
+    first = min(r[0] for r in changes.select("source_file").distinct().collect())
+    garbled = (F.col("source_file") != first) & (F.col("lsn") % 7 == 0)
+    changes = changes.withColumn(
+        "op", F.when(garbled, F.lit("GARBAGE")).otherwise(F.col("op"))
+    ).persist()
+    n_bad = changes.filter(garbled).count()
+    assert n_bad > 0
+    write_change_files(changes, d["landing"])
+    config = DatasetConfig(
+        name="transcripts", table_path=d["table"], num_buckets=4, salt_buckets=4
+    )
+    bootstrap_table(spark, config, TRANSCRIPT_SCHEMA)
+
+    def run(lineage_path=None):
+        q = apply_changes(
+            spark, config, d["landing"], d["ckpt"], schema=changes.schema,
+            lineage_path=lineage_path, max_files_per_trigger=1,
+            quarantine_dir=d["dlq"],
+        )
+        q.awaitTermination(240)
+
+    run(d["lineage"])
+    dlq = Path(d["dlq"])
+    assert sorted(p.name for p in dlq.iterdir()) == ["epoch=1"]
+    qrows = (
+        LineageLog(spark, d["lineage"]).read()
+        .filter(F.col("kind") == "QUARANTINE").toPandas()
+    )
+    assert dict(zip(qrows["epoch_id"], qrows["event_count"])) == {0: 0, 1: n_bad}
+
+    def dead_letters():
+        return sorted(map(tuple, spark.read.parquet(d["dlq"]).collect()), key=repr)
+
+    def parts():
+        return {p.name for p in (dlq / "epoch=1").glob("part-*")}
+
+    before, written = dead_letters(), parts()
+    assert len(before) == n_bad
+    tbl = LakeTable(spark, d["table"])
+    v = tbl.current_version()
+    for name in ("1", ".1.crc"):
+        (Path(d["ckpt"]) / "commits" / name).unlink(missing_ok=True)
+    run()
+    assert parts() != written  # the replay rewrote the epoch
+    assert tbl.current_version() == v
+    assert dead_letters() == before
+
+    report = requeue_quarantine(
+        tbl, d["dlq"],
+        fix=lambda df: df.withColumn("op", F.lit("UPSERT")),
+    )
+    assert report["epochs"] == 1 and report["skipped_epochs"] == 0
+    assert report["requeued"] == n_bad
+    changes.unpersist()

@@ -463,3 +463,38 @@ def test_sync_aggregate_runs_no_take_probe(spark, tmp_path, monkeypatch):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
+
+
+def test_prefix_view_lookup_takes_recorded_keys(spark, tmp_path):
+    """Grouped by the leading pk field, the view's lookup reads the groups
+    the source merges recorded, a superset of the changed ones: a stale
+    redelivery (its key recorded, its row unchanged) leaves its group's
+    totals alone, a new group and an emptied group are written, and a
+    compaction-only range (no recorded keys) moves the cursor. The view
+    equals a fresh recompute after every sync."""
+    src = _make_table(spark, str(tmp_path / "src"))
+    view_path = str(tmp_path / "view")
+    src.merge(_batch(spark, [
+        ("INSERT", "c1", 0, "user", "a", None, 1, 10, "f"),
+        ("INSERT", "c1", 1, "assistant", "b", None, 2, 11, "f"),
+        ("INSERT", "c2", 0, "user", "c", None, 3, 12, "f"),
+        ("INSERT", "c3", 0, "user", "d", None, 4, 13, "f"),
+    ]), pipeline_id="p", epoch_id=0)
+    sync_aggregate(src, view_path, ["conv_id"], sums=["turn_idx"])
+    view = LakeTable(spark, view_path)
+
+    snap = src.merge(_batch(spark, [
+        ("UPDATE", "c1", 1, "assistant", "stale", None, 2, 5, "f"),  # loses LWW
+        ("DELETE", "c2", 0, None, None, None, 5, 20, "f"),
+        ("INSERT", "c4", 3, "user", "e", None, 6, 21, "f"),
+    ]), pipeline_id="p", epoch_id=1)
+    assert snap.summary["changed_keys"] == 3
+    assert sync_aggregate(src, view, ["conv_id"], sums=["turn_idx"]) is not None
+    _assert_view_matches_recompute(src, view, "conv_id")
+    assert sorted(r["conv_id"] for r in view.read().collect()) == ["c1", "c3", "c4"]
+
+    before = view.last_applied_epoch("aggsync")
+    assert src.compact() is not None
+    assert sync_aggregate(src, view, ["conv_id"], sums=["turn_idx"]) is not None
+    assert view.last_applied_epoch("aggsync") > before
+    _assert_view_matches_recompute(src, view, "conv_id")
