@@ -4690,17 +4690,25 @@ class LakeTable:
             # Full compaction also HEALS stored buckets against the current
             # schema's hashing (no-op under the stored-bucket invariant;
             # repairs tables where an append widened the pk before the
-            # schema gate rebucketed such writes). Partial compaction
+            # schema gate rebucketed such writes). A key stored in two
+            # buckets meets itself once re-hashed; with no deltas
+            # _resolved returns the base rows unfolded, so they are
+            # LWW-folded per (bucket, key) after the write's own bucket
+            # repartition: no second exchange. Partial compaction
             # preserves stored buckets - a healed row could land outside
             # the compacted set.
+            pk = snap.pk_fields
             df = df.withColumn(
                 BUCKET_COL,
                 bucket_expr(
-                    snap.pk_fields[0],
-                    snap.num_buckets,
-                    key_type=snap.schema[snap.pk_fields[0]].dataType,
+                    pk[0], snap.num_buckets, key_type=snap.schema[pk[0]].dataType
                 ),
-            )
+            ).repartition(max(len(target), 1), F.col(BUCKET_COL))
+            if not any(snap.deltas.values()):
+                df = lww_dedupe(
+                    df.withColumn("_ord", _lww_ord(_lww_pref(False))),
+                    [BUCKET_COL, *pk], ["_ord"], tiebreak_fields=[],
+                ).drop("_ord")
         if purge_tombstones_below_lsn is not None:
             df = df.filter(
                 ~(
@@ -4727,6 +4735,7 @@ class LakeTable:
         new_files = self._write_data_files(
             df,
             target_partitions=max(len(target), 1),
+            pre_partitioned=buckets is None,
             cluster_by=cluster_by,
             bloom_cols=list(snap.pk_fields),
             max_records_per_file=max_records_per_file,

@@ -8,6 +8,17 @@ merge exchanges explicitly and handles skew by salting, so it does not
 rely on AQE's runtime re-planning, which costs a job per query stage.
 Also: Arrow for pandas UDFs, UTC session timezone for deterministic
 cross-engine comparison.
+
+Bytes are zstd-compressed everywhere the engine encodes them: every
+Parquet file the lake writes (data, MOR delta and dead-letter files) and
+every shuffle, broadcast and spill. zstd is Iceberg's default Parquet
+codec since 1.4; both stay at the default levels (parquet-mr 3, Spark
+1). Against snappy files and lz4 shuffle blocks, on the 4-CPU
+``perfbench`` (medians of ten runs each), ``steady`` went from 625 to
+367 shuffle B/event and from 495 to 401 written B/event, and ``serve``
+from 162 to 93 and from 91.7 to 84.7, with the same jobs and plans.
+Parquet names its codec per column chunk, so files written under the
+old snappy setting stay readable beside new ones, with no migration.
 """
 
 from __future__ import annotations
@@ -37,8 +48,13 @@ def build_session(
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # Deterministic timestamps across Spark / DuckDB / pandas.
         "spark.sql.session.timeZone": "UTC",
-        # Lake files are immutable once committed; cheap listing.
-        "spark.sql.parquet.compression.codec": "snappy",
+        # zstd (level 3) for every lake Parquet file and zstd (level 1)
+        # for shuffle, broadcast and spill blocks: about 42% fewer shuffle
+        # bytes and 8-19% fewer written bytes than snappy/lz4 on
+        # perfbench at the same jobs (SCALE.md "The engine's codec").
+        # Older snappy files read as they are; the codec is per chunk.
+        "spark.sql.parquet.compression.codec": "zstd",
+        "spark.io.compression.codec": "zstd",
         # INT96 (the legacy default) writes NO column statistics and
         # disables parquet predicate pushdown on timestamps; MICROS gives
         # both - required for file-level ts data skipping and row-group

@@ -171,3 +171,41 @@ def test_fsck_detects_mis_bucketed_base_rows(spark, tmp_path):
     report = tbl.verify_integrity()
     assert not report["ok"]
     assert any("mis-bucketed" in e for e in report["errors"])
+
+
+def test_full_compact_heals_a_key_stored_in_two_buckets(spark, tmp_path):
+    """The remedy fsck's mis-bucketed error names: a key whose stale copy
+    sits under another bucket (what a pk-widening append left before the
+    schema gate) comes out of a full compact() once, as its newest row."""
+    tbl = _table(spark, tmp_path, "heal")
+    old = tbl.snapshot()
+    b0, b1 = [b for b, fl in sorted(old.files.items()) if fl][:2]
+    key = tuple(
+        tbl.read(include_system=True)
+        .filter(F.col("_bucket") == int(b0))
+        .select("conv_id", "turn_idx")
+        .first()
+    )
+    upd = spark.createDataFrame(
+        [("UPDATE", *key, "user", "newest", None, 10**7, 10**7, "h")],
+        "op string, conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts long, lsn long, source_file string",
+    ).withColumn("ts", F.timestamp_seconds("ts"))
+    tbl.merge(upd, pipeline_id="p", epoch_id=2)
+    snap = tbl.snapshot()
+    want = tbl.read().count()
+    # list b0's superseded file (the key at its old lsn) under b1 as well
+    files = {k: list(v) for k, v in snap.files.items()}
+    files[b1] = files[b1] + old.files[b0]
+    tbl._commit_write(
+        snap, files, snap.schema, snap.schema_version, "corrupt-test",
+        None, None, {}, deltas={},
+    )
+    assert not tbl.verify_integrity()["ok"]
+
+    tbl.compact()
+    report = tbl.verify_integrity()
+    assert report["ok"], report["errors"]
+    rows = tbl.read_keys([key], use_bloom=False).collect()
+    assert [r["text"] for r in rows] == ["newest"]
+    assert tbl.read().count() == want

@@ -233,3 +233,140 @@ def test_apply_changes_auto_compaction(spark, tmp_path):
     expected = oracle.replay(changes.toPandas())
     assert_table_equals_oracle(tbl.read(), expected)
     changes.unpersist()
+
+
+# ---------------------------------------------------------------------
+# The engine's codec: build_session writes every lake Parquet file with
+# zstd and compresses shuffle blocks with zstd. Parquet names its codec
+# per column chunk, so files written under the older snappy setting read
+# beside zstd ones with no migration.
+# ---------------------------------------------------------------------
+
+PARQUET_CODEC = "spark.sql.parquet.compression.codec"
+
+
+def _codecs(tbl, files) -> set[str]:
+    """Every column chunk's codec in ``files`` (bucket -> relative paths),
+    from the Parquet footers."""
+    import pyarrow.parquet as pq
+
+    out = set()
+    for rels in files.values():
+        for rel in rels:
+            md = pq.ParquetFile(str(tbl.root / rel)).metadata
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                out |= {rg.column(i).compression for i in range(rg.num_columns)}
+    return out
+
+
+def test_lake_files_and_shuffle_are_zstd(spark, tmp_path):
+    assert spark.sparkContext.getConf().get("spark.io.compression.codec") == "zstd"
+    assert spark.conf.get(PARQUET_CODEC) == "zstd"
+    changes = gen_changes(spark, n_events=1_000, n_convs=20, n_files=2, seed=26)
+    first, second = _epochs(changes, 2)
+    tbl = _mk(spark, tmp_path / "t")
+    tbl.merge(first, pipeline_id="m", epoch_id=0, write_mode="cow")
+    assert _codecs(tbl, tbl.snapshot().files) == {"ZSTD"}
+    tbl.merge(second, pipeline_id="m", epoch_id=1, write_mode="mor")
+    deltas = tbl.snapshot().deltas
+    assert any(deltas.values())
+    assert _codecs(tbl, deltas) == {"ZSTD"}
+
+
+def _as_rows(pdf: pd.DataFrame, cols: list[str]) -> list[tuple]:
+    pdf = pdf[cols].astype(object)
+    return sorted(
+        tuple(r) for r in pdf.where(pdf.notna(), None).itertuples(index=False)
+    )
+
+
+def _oracle_diff(a: pd.DataFrame, b: pd.DataFrame) -> list[tuple]:
+    """The net diff between two oracle states as read_changes rows:
+    (change_type, pk..., payload...), deletes carrying the older image."""
+    pk, payload = ["conv_id", "turn_idx"], ["role", "text", "tool", "ts"]
+    j = a.merge(b, on=pk, how="outer", suffixes=("_a", "_b"), indicator=True)
+    j = j.astype(object).where(j.notna(), None)
+    out = []
+    for r in j.to_dict("records"):
+        img_a = tuple(r[f"{c}_a"] for c in payload)
+        img_b = tuple(r[f"{c}_b"] for c in payload)
+        k = (r["conv_id"], r["turn_idx"])
+        if r["_merge"] == "right_only":
+            out.append(("insert", *k, *img_b))
+        elif r["_merge"] == "left_only":
+            out.append(("delete", *k, *img_a))
+        elif img_a != img_b:
+            out.append(("update", *k, *img_b))
+    return sorted(out)
+
+
+def test_table_written_under_both_codecs(spark, tmp_path):
+    """A table whose first commits are snappy and whose later ones are
+    zstd answers every read, the changelog, the bloom upkeep and the
+    maintenance path like the LWW oracle."""
+    changes = gen_changes(
+        spark, n_events=4_000, n_convs=40, n_files=4, seed=27, dup_frac=0.1
+    )
+    changes.persist()
+    parts = _epochs(changes, 4)
+    pdfs = [p.toPandas() for p in parts]
+    states = [oracle.replay(pd.concat(pdfs[: i + 1])) for i in range(4)]
+    tbl = _mk(spark, tmp_path / "t")
+    prior = spark.conf.get(PARQUET_CODEC)
+    spark.conf.set(PARQUET_CODEC, "snappy")
+    try:
+        tbl.merge(parts[0], pipeline_id="m", epoch_id=0, write_mode="cow")
+        v_first = tbl.current_version()
+        tbl.merge(parts[1], pipeline_id="m", epoch_id=1, write_mode="mor")
+    finally:
+        spark.conf.set(PARQUET_CODEC, prior)
+    v_snappy = tbl.current_version()
+    tbl.merge(parts[2], pipeline_id="m", epoch_id=2, write_mode="mor")
+    snap = tbl.snapshot()
+    assert _codecs(tbl, snap.files) == {"SNAPPY"}
+    assert _codecs(tbl, snap.deltas) == {"SNAPPY", "ZSTD"}
+    live = [f for fl in (*snap.files.values(), *snap.deltas.values()) for f in fl]
+    assert tbl.update_bloom_index()["covered_files"] == len(live)
+    # the stats-sidecar footer pass read the files of both codecs
+    stats = tbl._stats_for(live)
+    assert all("turn_idx" in stats.get(f, {}) for f in live)
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+
+    assert_table_equals_oracle(tbl.read(), states[2])
+    keys = [tuple(k) for k in states[2][["conv_id", "turn_idx"]].values[::7]]
+    keys += [("absent", 0), ("absent", 1)]
+    hit = states[2].merge(
+        pd.DataFrame(keys, columns=["conv_id", "turn_idx"]),
+        on=["conv_id", "turn_idx"],
+    )
+    for use_bloom in (True, False):
+        got = tbl.read_keys(keys, use_bloom=use_bloom).toPandas()
+        assert _as_rows(got, cols) == _as_rows(hit, cols)
+    convs = sorted(states[2]["conv_id"].unique())[::5] + ["absent"]
+    got = tbl.read_prefix(convs).toPandas()
+    want = states[2][states[2]["conv_id"].isin(convs)]
+    assert _as_rows(got, cols) == _as_rows(want, cols)
+
+    def changes_rows(v_a, v_b):
+        got = tbl.read_changes(v_a, v_b).toPandas()
+        return _as_rows(got, ["change_type", *cols])
+
+    assert changes_rows(v_snappy, snap.version) == _oracle_diff(
+        states[1], states[2]
+    )
+    assert changes_rows(v_first, snap.version) == _oracle_diff(states[0], states[2])
+
+    tbl.merge(parts[3], pipeline_id="m", epoch_id=3, write_mode="cow")
+    assert_table_equals_oracle(tbl.read(), states[3])
+    assert changes_rows(v_first, tbl.current_version()) == _oracle_diff(
+        states[0], states[3]
+    )
+    tbl.merge(parts[3], pipeline_id="m2", epoch_id=0, write_mode="mor")
+    out = tbl.compact()
+    assert not any(out.deltas.values())
+    assert _codecs(tbl, out.files) == {"ZSTD"}
+    assert_table_equals_oracle(tbl.read(), states[3])
+    report = tbl.verify_integrity()
+    assert report["ok"], report["errors"]
+    changes.unpersist()
